@@ -538,10 +538,14 @@ object Similarity {
     * the interpreted quantize transform risked the same via projection
     * collapse). Same `graft_dot` fold on the same integral values, so
     * every downstream distance is bit-identical. Column names derive
-    * from the id prefix ("q"/"c") so two sides can join. */
+    * from the id prefix ("q"/"c") so two sides can join; [[exactD2]]
+    * reads exactly those names, so any other prefix is refused. */
   private def quantSide(df: DataFrame, id: String, vec: String,
                         scale: Double): DataFrame = {
     val p = id.take(1)
+    require(p == "q" || p == "c",
+      s"quantSide id column must start with 'q' (query side) or 'c' " +
+        s"(corpus side), got '$id': exactD2 reads _qq/_qq2/_cq/_cq2")
     df.select(col(id), transform(col(vec),
         x => floor(x.cast("double") * scale + lit(0.5)).cast("double"))
         .as(s"_${p}q"))

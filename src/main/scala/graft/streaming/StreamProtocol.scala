@@ -375,10 +375,13 @@ private[streaming] object StreamProtocol {
   /** Validated read of a persisted partition-pruned streaming index —
     * the layout/ingest_batch guard shared by [[StreamingDedup]] and
     * [[StreamingSimilarity]] (previously two hand-synced copies):
-    *  - a LEGACY UNPARTITIONED index (parquet files at the root, no
-    *    `<partitionPrefix>=*` directories) reads back NULL partition
-    *    columns, so every indexed row silently stops matching — fail
-    *    loudly with the remedy;
+    *  - data outside `<partitionPrefix>=*` directories — a LEGACY
+    *    UNPARTITIONED index (parquet files at the root) or one keyed
+    *    by another column (`band_idx=*` under an `ingest_batch`
+    *    reader) — reads back NULL or empty, so every indexed row
+    *    silently stops matching — fail loudly with the remedy. Data is
+    *    any entry not prefixed `_` or `.` (markers, `_SUCCESS`,
+    *    checksums and write staging dirs are not);
     *  - a directory with markers but no partition data yet is an
     *    EMPTY index, not an error — None;
     *  - a pre-`ingest_batch` index would have the replay fence
@@ -397,18 +400,21 @@ private[streaming] object StreamProtocol {
       ingestBatchValidated.remove(dir.toString)
       return None
     }
-    val entries = fs.listStatus(dir)
-    val partitioned = entries.exists(e =>
-      e.isDirectory && e.getPath.getName.startsWith(partitionPrefix + "="))
-    val rootFiles = entries.exists(e =>
-      e.isFile && e.getPath.getName.endsWith(".parquet"))
-    if (rootFiles && !partitioned)
+    val (partitions, foreign) = fs.listStatus(dir).toSeq
+      .filterNot { e =>
+        val n = e.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }
+      .partition(e =>
+        e.isDirectory && e.getPath.getName.startsWith(partitionPrefix + "="))
+    if (foreign.nonEmpty)
       throw new IllegalStateException(
-        s"$streamName: $dir holds a legacy UNPARTITIONED index (parquet " +
-          s"files at the root, no $partitionPrefix=* directories). Matches " +
-          "against it would be silently dropped. Delete the directory and " +
-          s"re-ingest, or rewrite it $rebuildHint.")
-    if (!partitioned) { ingestBatchValidated.remove(dir.toString); None }
+        s"$streamName: $dir holds data outside $partitionPrefix=* " +
+          s"directories (${foreign.map(_.getPath.getName).sorted.take(3)
+            .mkString(", ")}) — a legacy UNPARTITIONED index or one of " +
+          "another layout. Matches against it would be silently dropped. " +
+          s"Delete the directory and re-ingest, or rewrite it $rebuildHint.")
+    if (partitions.isEmpty) { ingestBatchValidated.remove(dir.toString); None }
     else {
       val key = dir.toString
       val gen = generationToken(fs, dir)

@@ -43,8 +43,10 @@ import org.apache.spark.sql.types._
   * on a fresh checkpoint over retained state or a changed regime. */
 object StreamingCuration {
 
-  /** Digest-hash partition fan-out for the persisted keeper index —
-    * same rationale as [[StreamingDedup.BucketCount]]. */
+  /** Digest-hash partition fan-out for the persisted keeper index:
+    * xxhash64(digest) mod 64 — enough selectivity that a small batch
+    * prunes most of a large index, few enough directories that listing
+    * stays cheap. */
   val BucketCount = 64
 
   val DigestSchema: StructType = StructType(Seq(

@@ -20,38 +20,37 @@ import graft.operators.Dedup
   *  3. confirmed dup (new_id, indexed_id) pairs OVERWRITE
   *     `dupDir/batch=<id>` (retry-safe: a replayed batch rewrites its
   *     own directory instead of appending duplicates);
-  *  4. non-duplicate docs' band rows append to `indexDir` tagged with
-  *     their `ingest_batch`, and a marker file commits the batch LAST
-  *     — the same at-least-once protocol as [[StreamingSimilarity]]:
-  *     the marker skips a fully committed replay, the
-  *     `ingest_batch < batchId` read filter keeps a half-committed
-  *     attempt of the same batch from self-matching, and a
-  *     run-identity file plus a committed-marker bound fail fast when
-  *     a fresh checkpoint replays over a retained index (batch ids
-  *     restarting at 0 would otherwise silently swallow batches).
+  *  4. non-duplicate docs' band rows OVERWRITE the index's own
+  *     `ingest_batch=<id>` partition (dynamic partition overwrite: the
+  *     same replay rule as step 3, and every other batch's partition
+  *     and the marker files stay untouched), and a marker file commits
+  *     the batch LAST — the same at-least-once protocol as
+  *     [[StreamingSimilarity]]: the marker skips a fully committed
+  *     replay, the `ingest_batch < batchId` partition filter keeps a
+  *     half-committed attempt of the same batch from self-matching,
+  *     and a run-identity file plus a committed-marker bound fail fast
+  *     when a fresh checkpoint replays over a retained index (batch
+  *     ids restarting at 0 would otherwise silently swallow batches).
   *
-  * Scale: the index parquet is PARTITIONED by (band_idx, band_bucket)
-  * — band_bucket = band_hash mod [[BucketCount]] — and each batch
-  * reads ONLY the partitions its own band keys touch (the touched key
-  * set is tiny and driver-known: at most bands × BucketCount values),
-  * so per-batch work scales with the batch, not with the accumulated
-  * index. State grows with unique docs only. All filesystem probes go
-  * through the Hadoop FileSystem API, so the same code runs on local
-  * disk, HDFS, or object stores. Intra-batch duplicates are both
-  * admitted (checked only against the index); run the batch dedup
-  * inside the micro-batch first if that matters.
+  * Scale: the index parquet is PARTITIONED by `ingest_batch` — one
+  * directory per micro-batch, one file per write task — so a batch
+  * writes a handful of files whatever its band keys. The trade-off:
+  * every batch scans the WHOLE index except its own partition, so
+  * per-batch read work grows with the accumulated index (state grows
+  * with unique docs only). Keying the directories by band hash instead
+  * prunes only for tiny batches: a batch of B documents touches
+  * 1 − (63/64)^B of a band's 64 hash buckets, ≥ 99% from B ≥ 300, while
+  * each write task fans out into up to bands × 64 one-row files. All
+  * filesystem probes go through the Hadoop FileSystem API, so the same
+  * code runs on local disk, HDFS, or object stores. Intra-batch
+  * duplicates are both admitted (checked only against the index); run
+  * the batch dedup inside the micro-batch first if that matters.
   */
 object StreamingDedup {
-
-  /** Partition fan-out per band for the persisted index: band_hash mod
-    * 64 — enough selectivity that a batch prunes most of a large
-    * index, few enough directories that listing stays cheap. */
-  val BucketCount = 64
 
   val IndexSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("band_idx", IntegerType),
-    StructField("band_bucket", IntegerType),
     StructField("band_hash", LongType),
     StructField("minhash", ArrayType(LongType)),
     StructField("ingest_batch", LongType)))
@@ -73,19 +72,12 @@ object StreamingDedup {
         // keys: resuming with different values would band-join
         // incompatible hash spaces and silently stop matching — the
         // config guard fails fast instead. minAgreement only filters
-        // results and is deliberately NOT pinned.
-        // bucketMod: band_bucket = band_hash mod BucketCount is BAKED
-        // into the persisted partition values — resuming with a
-        // different modulus would prune against mismatched buckets and
-        // silently stop flagging roughly (1 - 1/mod) of true candidates
-        // legacy: the pre-bucketMod fingerprint — BucketCount is a
-        // compile-time constant that has never changed value, so state
-        // claimed under the old rendering is byte-compatible
-        val dedupCfg = s"k=$k;bands=$bands;shingleN=$shingleN;bucketMod=$BucketCount"
-        val dedupLegacy = Seq(s"k=$k;bands=$bands;shingleN=$shingleN")
+        // results and is deliberately NOT pinned. layout names the
+        // directory keying, so state of an older layout is refused
+        // here rather than read as an empty index.
+        val dedupCfg = s"k=$k;bands=$bands;shingleN=$shingleN;layout=ingest_batch"
         val done = StreamProtocol.replayGuards(fs, indexPath, checkpoint,
-          dedupCfg, batchId, "_batch_", "StreamingDedup",
-          legacyConfigs = dedupLegacy)
+          dedupCfg, batchId, "_batch_", "StreamingDedup")
         if (done) ()
         else {
         // the per-batch verdict output is AUXILIARY state committed
@@ -96,48 +88,27 @@ object StreamingDedup {
         val dupPath = new Path(dupDir)
         StreamProtocol.claimAuxiliary(
           dupPath.getFileSystem(spark.sessionState.newHadoopConf()),
-          dupPath, checkpoint, dedupCfg, "StreamingDedup (dup output)",
-          legacyConfigs = dedupLegacy)
+          dupPath, checkpoint, dedupCfg, "StreamingDedup (dup output)")
         val banded = Dedup.withLshBands(
             Dedup.withMinHash(batch, col(textCol), k, shingleN), k, bands)
           // shingle-less documents band to NULL hashes: they can match
-          // nothing, would write useless null partitions, and a null
-          // band_bucket would NPE the driver-side prune collect below
+          // nothing and would only add useless index rows
           .filter(col("band_hash").isNotNull)
           .select(col(idCol).cast("long").as("doc_id"),
-            col("band_idx"),
-            pmod(col("band_hash"), lit(BucketCount.toLong)).cast("int")
-              .as("band_bucket"),
-            col("band_hash"), col("minhash"))
+            col("band_idx"), col("band_hash"), col("minhash"))
           .withColumn("ingest_batch", lit(batchId))
           .cache()
         try {
           // layout + ingest_batch validation is the shared
-          // StreamProtocol guard; the prune below is this stream's own:
-          // the touched (band_idx, band_bucket) set is at most
-          // bands × BucketCount values — a tiny, bounded driver-side
-          // collect
+          // StreamProtocol guard. The fence is a partition filter:
+          // rows a half-committed earlier attempt of THIS batch wrote
+          // are never listed, let alone matched
           val index = StreamProtocol.validatedIndex(spark, fs, indexPath,
-              "band_idx", IndexSchema, "StreamingDedup",
-              "partitioned by (band_idx, band_bucket)") match {
+              "ingest_batch", IndexSchema, "StreamingDedup",
+              "partitioned by ingest_batch") match {
             case None =>
               spark.createDataFrame(spark.sparkContext.emptyRDD[Row], IndexSchema)
-            case Some(reader) =>
-              val touched = banded
-                .select(col("band_idx"), col("band_bucket")).distinct()
-                .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
-              val prune = touched
-                .map { case (bi, bb) =>
-                  col("band_idx") === bi && col("band_bucket") === bb }
-                .reduceOption(_ || _).getOrElse(lit(false))
-              reader.filter(prune)
-                // replay guard: rows a half-committed earlier attempt
-                // of THIS batch appended must never match. (A crash
-                // between index append and marker can leave the
-                // replay double-appending; the duplicate band rows
-                // only duplicate candidates, which the dups distinct
-                // collapses — wasted bytes, never wrong answers.)
-                .filter(col("ingest_batch") < batchId)
+            case Some(reader) => reader.filter(col("ingest_batch") < batchId)
           }
 
           val dups = banded.alias("n")
@@ -156,11 +127,15 @@ object StreamingDedup {
           try {
             dups.write.mode(SaveMode.Overwrite)
               .parquet(s"$dupDir/batch=$batchId")
+            // dynamic overwrite replaces only the partitions this write
+            // produces — ingest_batch=<batchId> — so a replay after a
+            // crash before the marker rewrites its own rows once
             banded
-              .join(dups.select(col("new_id")).distinct(),
+              .join(dups.select(col("new_id")),
                 col("doc_id") === col("new_id"), "left_anti")
-              .write.mode(SaveMode.Append)
-              .partitionBy("band_idx", "band_bucket")
+              .write.mode(SaveMode.Overwrite)
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("ingest_batch")
               .parquet(indexDir)
             StreamProtocol.commit(fs, indexPath, "_batch_", batchId)
           } finally dups.unpersist()   // a failed write must not leak the cache

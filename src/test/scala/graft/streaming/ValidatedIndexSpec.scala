@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * micro-batch, but a state dir deleted and recreated at the same path
   * (tests, re-ingest tooling) is a new generation — a legacy index
   * planted there must be re-probed, not silently passed on the old
-  * memo entry. */
+  * memo entry. Also its layout probe: data outside the reader's
+  * partition directories is refused, never read as an empty index. */
 class ValidatedIndexSpec extends graft.SparkSpec {
 
   private val Schema = StructType(Seq(
@@ -83,5 +84,42 @@ class ValidatedIndexSpec extends graft.SparkSpec {
     }
     assert(e.getMessage.contains("ingest_batch"))
     fs.delete(dir, true)
+  }
+
+  test("data outside <prefix>=* directories (a foreign layout) fails " +
+      "loudly instead of reading as an empty index") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_vidx_foreign_").toString
+    val dir = new Path(tmp, "index")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    def refused(): IllegalStateException =
+      intercept[IllegalStateException] {
+        StreamProtocol.validatedIndex(spark, fs, dir, "ingest_batch", Schema,
+          "S", "partitioned by ingest_batch")
+      }
+
+    // an index keyed by another column: no ingest_batch=* directory at
+    // all, so a prefix-only probe would call it EMPTY and drop it
+    Seq((1L, 0L, 0L)).toDF("doc_id", "bucket", "ingest_batch")
+      .write.partitionBy("bucket").parquet(dir.toString)
+    // markers, checksums and _SUCCESS are not data
+    StreamProtocol.replayGuards(fs, dir, s"$tmp/ckpt", "w=1", 0L, "_b_", "S")
+    StreamProtocol.commit(fs, dir, "_b_", 0L)
+    val e = refused()
+    assert(e.getMessage.contains("ingest_batch=*") &&
+      e.getMessage.contains("bucket=0") &&
+      e.getMessage.contains("partitioned by ingest_batch"), e.getMessage)
+
+    // a valid partition beside the stray layout is refused too
+    Seq((2L, 0L, 1L)).toDF("doc_id", "bucket", "ingest_batch")
+      .write.mode("append").partitionBy("ingest_batch").parquet(dir.toString)
+    assert(refused().getMessage.contains("bucket=0"))
+
+    // only the valid layout (plus markers and _SUCCESS) reads back
+    fs.delete(new Path(dir, "bucket=0"), true)
+    val idx = StreamProtocol.validatedIndex(spark, fs, dir, "ingest_batch",
+      Schema, "S", "partitioned by ingest_batch")
+    assert(idx.map(_.select("doc_id").as[Long].collect().toSeq) === Some(Seq(2L)))
+    fs.delete(new Path(tmp), true)
   }
 }
