@@ -1,11 +1,16 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.IOException
+
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** The shared at-least-once replay protocol of the persistent-state
-  * streams (StreamingDedup / StreamingSimilarity / StreamingCorpusStats):
+/** The shared at-least-once replay protocol of the ten persistent-state
+  * streams (StreamingDedup, StreamingSimilarity, StreamingCorpusStats,
+  * StreamingCuration, StreamingDecontam, StreamingWinnow, StreamingGraph,
+  * StreamingEngagement, StreamingDrift and StreamingQuantile through
+  * `StreamingDrift.monitor`):
   *
   *  1. a `_stream_checkpoint` RUN-IDENTITY file records the owning
   *     checkpoint INSTANCE (path + the unique id Structured Streaming
@@ -26,6 +31,13 @@ import org.apache.spark.sql.types.StructType
   *  4. the batch's own marker, written LAST by the caller via
   *     [[commit]], makes a fully-committed replay a no-op.
   *
+  * Old state is refused, never upgraded: a state directory is either
+  * claimed fresh or its stored identity and fingerprint must equal the
+  * running stream's byte for byte. A claim written by older code (a
+  * bare-path identity, an older fingerprint rendering) fails loudly
+  * with the delete-and-re-ingest remedy, and the markers are published
+  * once and never rewritten.
+  *
   * All probes are driver-side filesystem metadata — no data scan. */
 private[streaming] object StreamProtocol {
 
@@ -44,90 +56,28 @@ private[streaming] object StreamProtocol {
     finally in.close()
   }
 
-  /** Publish a marker file atomically-enough: write a temp sibling,
-    * then rename OVER the target in one step. A plain
-    * truncate-and-write (`fs.create(p, true)`) has a crash window
-    * that leaves a TRUNCATED marker — for the legacy-upgrade rewrites
-    * that would brick a perfectly valid state dir on restart (the
-    * partial string matches neither the current nor any legacy
-    * rendering, so the guard fails loudly until hand-repaired). With
-    * an overwriting rename every crash window leaves either the OLD
-    * file or the NEW file — never an absent one, which matters for
-    * the RUN-IDENTITY marker: a vanished identity file is not merely
-    * "re-claimed by the rightful owner later" but claimable by ANY
-    * stream pointed at the dir (including one with a foreign
-    * checkpoint), silently transferring ownership for that window.
-    *
-    * The rename that actually IS atomic depends on the scheme:
-    *  - `file://` → `java.nio.Files.move(ATOMIC_MOVE|REPLACE_
-    *    EXISTING)`, the real POSIX rename(2). The Hadoop route is NOT
-    *    atomic here: `RawLocalFs` never overrides
-    *    `renameInternal(src, dst, overwrite)`, so
-    *    `FileContext.rename(..., OVERWRITE)` falls through to
-    *    `AbstractFileSystem`'s default delete-then-rename — exactly
-    *    the absent-marker window this method exists to close;
-    *  - schemes with a native `AbstractFileSystem` overwrite (HDFS) →
-    *    `FileContext.rename(..., Options.Rename.OVERWRITE)`;
-    *  - a scheme with NO `AbstractFileSystem` binding (bare test
-    *    doubles) → the old delete-then-rename, whose
-    *    crash-between-delete-and-rename window CAN lose the marker as
-    *    described above; that residual risk is confined to
-    *    filesystems that cannot do better. */
-  private def writeFile(fs: FileSystem, p: Path, content: String): Unit = {
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val qTmp = fs.makeQualified(tmp)
-    val qP = fs.makeQualified(p)
-    if (qP.toUri.getScheme == "file") {
-      // bypass the checksum layer for the marker bytes: LocalFileSystem
-      // would pair the data file with a .crc sidecar, and no two-file
-      // publish can be atomic — a crash between moving the data file
-      // and its sidecar leaves a mismatched pair that bricks every
-      // subsequent read with ChecksumException (worse than the absent-
-      // marker window this method closes). Markers are guarded by
-      // content equality checks, not checksums.
-      val raw = fs match {
-        case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-        case other => other
-      }
-      val out = raw.create(tmp, true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-      // a stale sidecar from a pre-nio write of p (or a test seeding
-      // the marker through the checksummed fs) would fail reads of the
-      // new content; deleting it first is safe — a crash here leaves
-      // the OLD data file intact, merely unverified
-      val crc = new Path(p.getParent, "." + p.getName + ".crc")
-      if (raw.exists(crc)) raw.delete(crc, false)
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(qTmp.toUri.getPath),
-        java.nio.file.Paths.get(qP.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      return
-    }
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    val overwrote =
-      try {
-        org.apache.hadoop.fs.FileContext
-          .getFileContext(qP.toUri, fs.getConf)
-          .rename(qTmp, qP, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException => false
-      }
-    if (!overwrote) {
-      if (fs.exists(p)) fs.delete(p, false)
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"could not publish $tmp -> $p")
-    }
-  }
-
-  /** The atomic publish above, for sibling modules' own marker files
-    * (e.g. [[StreamingDecontam]]'s eval-index config) — the same
-    * crash-window rationale. */
+  /** Publish a marker that does not exist yet: write `<name>.tmp`, then
+    * rename it onto the absent target, so a reader never sees a partial
+    * marker. An existing target is an `IOException` — markers are never
+    * overwritten, whichever way the scheme's rename treats an existing
+    * destination. On a checksummed filesystem (`file://`) the bytes go
+    * through the raw one: markers are guarded by content equality, and
+    * a `.crc` sidecar would turn any later edit of the marker into a
+    * `ChecksumException`. */
   private[streaming] def publishFile(fs: FileSystem, p: Path,
-                                     content: String): Unit =
-    writeFile(fs, p, content)
+                                     content: String): Unit = {
+    val raw = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+    if (raw.exists(p))
+      throw new IOException(s"$p already exists; a marker is never overwritten")
+    val tmp = new Path(p.getParent, p.getName + ".tmp")
+    val out = raw.create(tmp, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    if (!raw.rename(tmp, p))
+      throw new IOException(s"could not publish $tmp -> $p")
+  }
 
   /** The checkpoint INSTANCE identity: its path plus the unique id
     * Structured Streaming writes into `<checkpoint>/metadata` at query
@@ -135,11 +85,13 @@ private[streaming] object StreamProtocol {
     * a new id — which is what distinguishes "replay of an already-
     * committed batch 0" from "a new run whose batch 0 would be
     * swallowed by the old `_batch_0` marker" (defense 3 only catches
-    * recreation once ≥ 2 batches had committed). Falls back to the bare
-    * path when the metadata file is unreadable (non-SS test drivers, or
-    * a checkpoint on a filesystem `fs` cannot reach). */
+    * recreation once ≥ 2 batches had committed). The metadata is read
+    * through the checkpoint's OWN filesystem, which may differ from the
+    * state directory's `fs`. Falls back to the bare path when the
+    * metadata file is absent (non-SS test drivers). */
   private def checkpointIdentity(fs: FileSystem, checkpoint: String): String = {
     val meta = new Path(new Path(checkpoint), "metadata")
+    val metaFs = meta.getFileSystem(fs.getConf)
     // ABSENT metadata is the legitimate fallback (non-SS test drivers,
     // first write); a metadata file that EXISTS but cannot be read is
     // a transient filesystem error and must NOT degrade the identity —
@@ -147,8 +99,8 @@ private[streaming] object StreamProtocol {
     // and the fresh-checkpoint guard would then tell the operator to
     // delete perfectly valid state over a retryable read blip
     val exists =
-      try fs.exists(meta)
-      catch { case e: java.io.IOException =>
+      try metaFs.exists(meta)
+      catch { case e: IOException =>
         throw new IllegalStateException(
           s"could not probe checkpoint metadata at $meta — transient " +
             "filesystem error? Retry the batch; do NOT delete state.", e)
@@ -156,8 +108,8 @@ private[streaming] object StreamProtocol {
     if (!exists) checkpoint
     else {
       val content =
-        try readFile(fs, meta)
-        catch { case e: java.io.IOException =>
+        try readFile(metaFs, meta)
+        catch { case e: IOException =>
           throw new IllegalStateException(
             s"could not read checkpoint metadata at $meta — transient " +
               "filesystem error? Retry the batch; do NOT delete state.", e)
@@ -170,48 +122,23 @@ private[streaming] object StreamProtocol {
 
   /** Run guards 1-4; returns true when this batch is ALREADY fully
     * committed (replay of a finished batch → caller skips). On the
-    * first batch the identity and config files are claimed. A stored
-    * legacy identity (bare path, pre-instance-id format) is accepted
-    * once and upgraded in place; `legacyConfigs` lists older config
-    * renderings that are SEMANTICALLY IDENTICAL to `config` (fields
-    * added later whose current values match what the old code did) —
-    * a stored one is accepted and rewritten to the current format,
-    * so state built before a fingerprint gained a field still
-    * resumes. */
+    * first batch the identity and config files are claimed. */
   def replayGuards(fs: FileSystem, dir: Path, checkpoint: String,
                    config: String, batchId: Long, markerPrefix: String,
-                   streamName: String,
-                   legacyConfigs: Seq[String] = Nil): Boolean =
+                   streamName: String): Boolean =
     replayGuardsWithCommitted(fs, dir, checkpoint, config, batchId,
-      markerPrefix, streamName, legacyConfigs)._1
+      markerPrefix, streamName)._1
 
-  /** [[replayGuards]] plus the committed batch ids from the SAME
-    * directory listing — for streams whose batch body needs the
-    * committed set anyway (it decides the empty-state / previous-
-    * version path): one `listStatus` per batch instead of two. The
-    * listing is driver-side metadata, but on object stores it walks a
-    * directory whose marker count grows with every batch. */
   /** The identity + config claim shared by [[replayGuardsWithCommitted]]
-    * and [[claimAuxiliary]]. */
+    * and [[claimAuxiliary]]: claim both markers fresh, or require both
+    * to equal this stream's. */
   private def claimIdentityAndConfig(fs: FileSystem, dir: Path,
-      checkpoint: String, config: String, streamName: String,
-      legacyConfigs: Seq[String],
-      precomputedIdentity: Option[String] = None): Unit = {
-    val identity =
-      precomputedIdentity.getOrElse(checkpointIdentity(fs, checkpoint))
+      config: String, streamName: String, identity: String): Unit = {
     val runMarker = new Path(dir, RunFile)
     val runExisted = fs.exists(runMarker)
-    // a LEGACY bare-path run claim marks a dir written before the
-    // instance-id (and config-marker) era: an absent config there is
-    // the expected pre-config state, not a crash artifact
-    var legacyRunClaim = false
     if (runExisted) {
       val owner = readFile(fs, runMarker)
-      if (owner == checkpoint && identity != checkpoint) {
-        legacyRunClaim = true
-        writeFile(fs, runMarker, identity)          // legacy claim: upgrade
-      }
-      else if (owner != identity)
+      if (owner != identity)
         throw new IllegalStateException(
           s"$streamName: $dir is owned by checkpoint '$owner' but this " +
             s"stream runs from '$identity' — a fresh checkpoint (even " +
@@ -223,13 +150,11 @@ private[streaming] object StreamProtocol {
             "state directory and re-ingest. (Moved the checkpoint " +
             s"directory on purpose? Update the $RunFile file to the new " +
             "identity.)")
-    } else writeFile(fs, runMarker, identity)
+    } else publishFile(fs, runMarker, identity)
     val cfgMarker = new Path(dir, ConfigFile)
     if (fs.exists(cfgMarker)) {
       val owner = readFile(fs, cfgMarker)
-      if (owner != config && legacyConfigs.contains(owner))
-        writeFile(fs, cfgMarker, config)            // legacy claim: upgrade
-      else if (owner != config)
+      if (owner != config)
         throw new IllegalStateException(
           s"$streamName: $dir was built with state-shaping parameters " +
             s"[$owner] but this stream runs with [$config] — merging or " +
@@ -237,16 +162,13 @@ private[streaming] object StreamProtocol {
             "corrupts the persisted state (it cannot fail checksums; it " +
             "just answers wrongly). Resume with the original parameters, " +
             "or delete the state directory and re-ingest.")
-    } else if (runExisted && !legacyRunClaim)
-      // writeFile's delete+rename crash window can leave a CLAIMED dir
-      // with NO config marker (old file deleted, rename never ran).
+    } else if (runExisted)
+      // a crash between the first claim's two publishes (or a config
+      // marker deleted by hand) leaves a CLAIMED dir with NO config.
       // Re-claiming blind would record whatever parameters THIS stream
       // happens to run with — turning the loud config-mismatch guard
       // into silent state corruption for a resume with different
-      // state-shaping params. A MODERN (instance-id) claim proves the
-      // config marker once existed, so its absence is a crash
-      // artifact; a legacy bare-path claim predates the config era
-      // and claims fresh above instead.
+      // state-shaping params.
       throw new IllegalStateException(
         s"$streamName: $dir carries a run-identity claim but no " +
           s"$ConfigFile — a crash during a marker rewrite left the " +
@@ -256,7 +178,7 @@ private[streaming] object StreamProtocol {
           "with, or delete the state directory and re-ingest (a dir " +
           "holding only marker files and no committed batches is safe " +
           "to delete).")
-    else writeFile(fs, cfgMarker, config)
+    else publishFile(fs, cfgMarker, config)
   }
 
   /** Identity + config fencing for an AUXILIARY directory of a stream
@@ -270,8 +192,7 @@ private[streaming] object StreamProtocol {
     * different run or regime fails fast with the same remedies as the
     * primary guard. */
   def claimAuxiliary(fs: FileSystem, dir: Path, checkpoint: String,
-                     config: String, streamName: String,
-                     legacyConfigs: Seq[String] = Nil): Unit = {
+                     config: String, streamName: String): Unit = {
     if (!fs.exists(dir)) { auxClaimed.remove(dir.toString); fs.mkdirs(dir) }
     // the claim is immutable for the run's life once written, so one
     // successful probe per (JVM, aux-dir generation, checkpoint
@@ -291,7 +212,7 @@ private[streaming] object StreamProtocol {
       // batch outputs into this run (the exact corruption the fence
       // exists to refuse; StreamingCuration documents the same policy
       // for its digest index)
-      // marker .tmp siblings are writeFile crash artifacts, not data —
+      // marker .tmp siblings are publishFile crash artifacts, not data —
       // counting them would permanently refuse a dir whose FIRST claim
       // crashed mid-publish (no run file yet, one orphaned tmp)
       val markers = Set(RunFile, ConfigFile,
@@ -307,8 +228,7 @@ private[streaming] object StreamProtocol {
             "the auxiliary directory (with the primary state and " +
             "checkpoint, if resuming is not intended) and re-ingest.")
     }
-    claimIdentityAndConfig(fs, dir, checkpoint, config, streamName,
-      legacyConfigs, precomputedIdentity = Some(identity))
+    claimIdentityAndConfig(fs, dir, config, streamName, identity)
     memoValue match {
       case Some(v) => auxClaimed.put(key, v)
       case None => auxClaimed.remove(key)
@@ -327,12 +247,17 @@ private[streaming] object StreamProtocol {
   def hasClaim(fs: FileSystem, dir: Path): Boolean =
     fs.exists(new Path(dir, RunFile))
 
+  /** [[replayGuards]] plus the committed batch ids from the SAME
+    * directory listing — for streams whose batch body needs the
+    * committed set anyway (it decides the empty-state / previous-
+    * version path): one `listStatus` per batch instead of two. The
+    * listing is driver-side metadata, but on object stores it walks a
+    * directory whose marker count grows with every batch. */
   def replayGuardsWithCommitted(fs: FileSystem, dir: Path, checkpoint: String,
                    config: String, batchId: Long, markerPrefix: String,
-                   streamName: String,
-                   legacyConfigs: Seq[String] = Nil): (Boolean, Seq[Long]) = {
-    claimIdentityAndConfig(fs, dir, checkpoint, config, streamName,
-      legacyConfigs)
+                   streamName: String): (Boolean, Seq[Long]) = {
+    claimIdentityAndConfig(fs, dir, config, streamName,
+      checkpointIdentity(fs, checkpoint))
     val committed = committedIds(fs, dir, markerPrefix)
     if (committed.nonEmpty && committed.max > batchId)
       throw new IllegalStateException(

@@ -40,22 +40,14 @@ import graft.operators.{CorpusQuality, EventAnalytics, Sketches}
   *  - `hll`:    (grp, bucket, r) — per-source HLL registers over the
   *              same shingle hashes (the constant-size distinct twin
   *              of `kmv`; merge = cell-wise MAX, the simplest algebra
-  *              in the family). NOTE: adding this table changed the
-  *              config fingerprint WITHOUT a legacy upgrade path —
-  *              deliberately: a pre-hll state dir has no register
-  *              table and registers are NOT reconstructible from the
-  *              other bounded tables (bottom-k keeps k hashes, not
-  *              the corpus), so "upgrading" would silently lose every
-  *              previously-ingested document's distinct mass. Loud
-  *              delete-and-re-ingest is the only honest resume.
+  *              in the family). A pre-hll state dir is refused like
+  *              all old state ([[StreamProtocol]]).
   *  - `quality`: (source, n_docs_q, n_keep) — Gopher keep-gate tally
   *              ([[graft.operators.CorpusQuality.gopherKeep]], the
   *              three-valued law: NULL text counts evaluated, never
   *              kept); merge is cell-wise SUM, so the running
-  *              keep-rate per source is exact at every version. Added
-  *              after `hll` under the same NO-LEGACY-UPGRADE policy:
-  *              past batches' keep tallies are not reconstructible
-  *              from the other bounded tables.
+  *              keep-rate per source is exact at every version. A
+  *              pre-quality state dir is refused the same way.
   *  - `qs`:     (h, k_str, v) — bottom-k sample of per-doc token
   *              counts, keyed by the text's own portable hash (stable
   *              across replays and batch boundaries, so the merged
@@ -91,16 +83,6 @@ object StreamingCorpusStats {
       s"kmvK=${cfg.kmvK};shingleN=${cfg.shingleN};sampleK=${cfg.sampleK};" +
       s"hllB=${cfg.hllB};" +
       s"qualityMinWords=${cfg.qualityMinWords}"
-
-  /** The round-10 rendering joined the last two fields with ',' where
-    * every other field uses ';' — same fields, same values, so a state
-    * dir claimed under it is semantically identical and upgrades in
-    * place via the legacy-config path. */
-  private def legacyFingerprints(cfg: Config): Seq[String] = Seq(
-    s"cmsWidth=${cfg.cmsWidth};cmsDepth=${cfg.cmsDepth};" +
-      s"kmvK=${cfg.kmvK};shingleN=${cfg.shingleN};sampleK=${cfg.sampleK};" +
-      s"hllB=${cfg.hllB}," +
-      s"qualityMinWords=${cfg.qualityMinWords}")
 
   private def readVersion(spark: SparkSession, statsDir: String, v: Long): Snapshot =
     Snapshot(
@@ -338,7 +320,7 @@ object StreamingCorpusStats {
         val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
         val (done, committed) = StreamProtocol.replayGuardsWithCommitted(
           fs, dirPath, checkpoint, fingerprint(cfg), batchId, "_v_",
-          "StreamingCorpusStats", legacyConfigs = legacyFingerprints(cfg))
+          "StreamingCorpusStats")
         if (!done) {
           // the six snapshot writes are six jobs: cache the
           // projected batch so the source micro-batch is read once,

@@ -82,20 +82,12 @@ object StreamingCuration {
           shingleN, "StreamingCuration")
         // digestBucketMod is baked into the digest index's partition
         // values; excludeSameId shapes every contamination verdict
-        // legacy: the fingerprint before digestBucketMod/excludeSameId
-        // were pinned — BucketCount is an unchanged compile-time
-        // constant and old code always excluded same-id pairs, so the
-        // legacy claim is only valid when this run keeps that behavior
         val cfg = s"gate=${gate.toString};evalIndex=$evalIndexDir;" +
           s"shingleN=$shingleN;minOverlap=$minOverlap;" +
           s"digestBucketMod=$BucketCount;excludeSameId=$excludeSameId"
-        val legacyCfg = if (excludeSameId)
-          Seq(s"gate=${gate.toString};evalIndex=$evalIndexDir;" +
-            s"shingleN=$shingleN;minOverlap=$minOverlap")
-        else Nil
         val (done, committed) = StreamProtocol.replayGuardsWithCommitted(
           fs, keptPath, checkpoint, cfg, batchId, "_batch_",
-          "StreamingCuration", legacyConfigs = legacyCfg)
+          "StreamingCuration")
         if (!done) {
           // the digest index is the OTHER HALF of this stream's state
           // (markers commit through keptDir): fence it with the same
@@ -116,7 +108,7 @@ object StreamingCuration {
                 "directories; delete kept output, digest index, and " +
                 "checkpoint together and re-ingest.")
           StreamProtocol.claimAuxiliary(digestFs, digestPath, checkpoint,
-            cfg, "StreamingCuration (digest index)", legacyConfigs = legacyCfg)
+            cfg, "StreamingCuration (digest index)")
           // one source read for the whole batch: the gated projection
           // feeds the decontam posts, the digest probe, and the final
           // keeper semi-join

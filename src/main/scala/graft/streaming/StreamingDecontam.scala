@@ -60,24 +60,28 @@ object StreamingDecontam {
   /** Materialize the eval set's inverted shingle index, partitioned
     * for per-batch pruning. Run ONCE per eval-set release; `start`
     * reads it immutably. Overwrite semantics: a re-prepare replaces
-    * the index atomically enough for a stopped stream (do not
-    * re-prepare under a live one). The index records its shingleN —
+    * the whole index, whatever the session's partitionOverwriteMode,
+    * atomically enough for a stopped stream (do not re-prepare under a
+    * live one). The index records its shingleN —
     * a stream probing with a DIFFERENT n would silently match nothing
     * (3-gram strings never equal 4-gram strings), so `start` verifies
     * it and fails fast on mismatch. */
   def prepareEvalIndex(evalSet: DataFrame, id: Column, text: Column,
                        indexDir: String, shingleN: Int = 3): Unit = {
+    // static overwrite deletes the whole directory: under a session-
+    // wide dynamic default, a smaller re-prepare would keep the retired
+    // set's buckets and the old _index_config
     posts(evalSet, id, text, "e_id", shingleN)
       .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "static")
       .partitionBy("bucket").parquet(indexDir)
     val p = new Path(indexDir, "_index_config")
     val fs = p.getFileSystem(
       evalSet.sparkSession.sessionState.newHadoopConf())
-    // atomic publish (temp+rename): the parquet Overwrite above just
-    // DELETED the old config with the rest of the dir, so a crash
-    // during a truncate-and-write here would leave an index with no
-    // (or a partial) config — verifyEvalIndex refuses that state
-    // loudly, and this write must not be able to create it silently
+    // publish (temp+rename) into the directory the Overwrite above just
+    // emptied: a crash during a truncate-and-write here would leave a
+    // partial config, which verifyEvalIndex could not tell from a real
+    // one; an absent config it refuses loudly
     StreamProtocol.publishFile(fs, p,
       s"shingleN=$shingleN;bucketMod=$BucketCount")
   }
@@ -178,16 +182,10 @@ object StreamingDecontam {
         // batch replay skip its recompute entirely.
         val flaggedPath = new Path(flaggedDir)
         val flaggedFs = flaggedPath.getFileSystem(conf)
-        // legacy: the pre-excludeSameId fingerprint — old code always
-        // excluded same-id pairs, so the legacy claim is only valid
-        // when this run keeps that behavior
         val done = StreamProtocol.replayGuards(flaggedFs, flaggedPath, checkpoint,
           s"index=$indexDir;shingleN=$shingleN;minOverlap=$minOverlap;" +
             s"excludeSameId=$excludeSameId",
-          batchId, "_batch_", "StreamingDecontam",
-          legacyConfigs = if (excludeSameId)
-            Seq(s"index=$indexDir;shingleN=$shingleN;minOverlap=$minOverlap")
-          else Nil)
+          batchId, "_batch_", "StreamingDecontam")
         if (!done) {
         val batchPosts = posts(batch, col(idCol), col(textCol), "c_id",
           shingleN).cache()

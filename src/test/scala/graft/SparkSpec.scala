@@ -6,14 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession per suite (lazy — one JVM-wide session is
   * reused across suites via getOrCreate). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   def sf(name: String) = s"/root/testdata/$name"
 }

@@ -178,7 +178,7 @@ class StreamingCorpusStatsSpec extends SparkSpec {
     }
   }
 
-  test("round-10 ','-joined config rendering resumes and upgrades in place") {
+  test("round-10 ','-joined config rendering is refused, markers untouched") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_scs_lc_").toString
@@ -199,18 +199,27 @@ class StreamingCorpusStatsSpec extends SparkSpec {
     val cfgMarker = java.nio.file.Paths.get(s"$base/stats/_stream_config")
     def marker = new String(
       java.nio.file.Files.readAllBytes(cfgMarker), "UTF-8")
+    def markers = Seq("_stream_checkpoint", "_stream_config").map(n =>
+      java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$base/stats/$n")).toSeq)
     try {
       run(Seq(("web", "alpha beta gamma delta epsilon")))
       val current = marker
       assert(current.endsWith(";qualityMinWords=30"), current)
       // rewrite the marker to the round-10 rendering: same fields and
-      // values, last two joined with ',' — a state dir claimed by the
-      // round-10 code must still resume, and the marker must upgrade
+      // values, last two joined with ',' — old state is refused, never
+      // upgraded, so the resume fails loudly and leaves both markers
       java.nio.file.Files.write(cfgMarker, current
         .replace(";qualityMinWords=", ",qualityMinWords=")
         .getBytes("UTF-8"))
-      run(Seq(("web", "zeta eta theta iota kappa")), adds = 2)
-      assert(marker === current, "legacy rendering must upgrade in place")
+      val before = markers
+      val ex = intercept[Exception] {
+        run(Seq(("web", "zeta eta theta iota kappa")), adds = 2)
+      }
+      val msgs = Iterator.iterate(ex: Throwable)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      assert(msgs.contains("state-shaping"), msgs)
+      assert(markers === before)
     } finally {
       import scala.jdk.CollectionConverters._
       val p = java.nio.file.Paths.get(base)

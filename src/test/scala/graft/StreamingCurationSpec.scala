@@ -201,35 +201,29 @@ class StreamingCurationSpec extends SparkSpec {
     val evalSet = Seq((9999L, "zz yy xx ww vv uu tt")).toDF("doc_id", "text")
     StreamingDecontam.prepareEvalIndex(
       evalSet, col("doc_id"), col("text"), s"$base/evalIndex")
-    def run(g: org.apache.spark.sql.Column, ckpt: String,
-            rows: Seq[(Long, String)]): Unit = {
+    // a resumed run gets TWO adds: a fresh MemoryStream restarts its
+    // offsets at 0, and the checkpoint has already committed offset 0 —
+    // only the second add starts a batch
+    def run(g: org.apache.spark.sql.Column, rows: Seq[(Long, String)],
+            adds: Int = 1): Unit = {
       val input = MemoryStream[(Long, String)]
       val q = StreamingCuration.start(
         input.toDS().toDF("doc_id", "text"),
         idCol = "doc_id", textCol = "text", gate = g,
         evalIndexDir = s"$base/evalIndex", digestDir = s"$base/digests",
-        keptDir = s"$base/kept", checkpoint = ckpt)
+        keptDir = s"$base/kept", checkpoint = s"$base/ckpt")
       try {
-        input.addData(rows: _*)
+        (1 to adds).foreach(_ => input.addData(rows: _*))
         q.processAllAvailable()
       } finally q.stop()
     }
     try {
-      run(gate, s"$base/ckpt",
-        Seq((1L, "alpha beta gamma delta epsilon zeta")))
-      // a NEW checkpoint alone trips the run-identity guard; follow the
-      // protocol's documented escape hatch (update the run file to the
-      // new path) so what fires is the GATE fingerprint specifically
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$base/kept/_stream_checkpoint"),
-        s"$base/ckpt2".getBytes("UTF-8"))
-      // drop the Hadoop checksum sidecar of the file just rewritten
-      // out-of-band, or the guarded read fails on the checksum instead
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(s"$base/kept/._stream_checkpoint.crc"))
+      run(gate, Seq((1L, "alpha beta gamma delta epsilon zeta")))
+      // resume from the SAME checkpoint, so the run-identity guard
+      // passes and what fires is the GATE fingerprint specifically
       val ex = intercept[Exception] {
-        run(size(tokens(col("text"))) >= 2, s"$base/ckpt2",
-          Seq((2L, "eta theta iota kappa")))
+        run(size(tokens(col("text"))) >= 2,
+          Seq((2L, "eta theta iota kappa")), adds = 2)
       }
       val msgs = Iterator.iterate(ex: Throwable)(_.getCause)
         .takeWhile(_ != null).map(_.getMessage).mkString("\n")

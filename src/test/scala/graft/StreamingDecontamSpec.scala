@@ -128,4 +128,37 @@ class StreamingDecontamSpec extends SparkSpec {
         .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
+
+  test("a re-prepare under a session-wide dynamic overwrite keeps only the new set") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val saved = spark.conf.getOption(key)
+    val base = java.nio.file.Files.createTempDirectory("graft_sdecon_dyn_").toString
+    val index = s"$base/index"
+    def bucketDirs = new java.io.File(index).listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    spark.conf.set(key, "dynamic")
+    try {
+      val retired = (1L to 8L).map(i => (i, s"retired eval doc $i with words w$i x$i y$i"))
+      StreamingDecontam.prepareEvalIndex(retired.toDF("doc_id", "text"),
+        col("doc_id"), col("text"), index)
+      val fresh = Seq((100L, "one small fresh eval doc"))
+      StreamingDecontam.prepareEvalIndex(fresh.toDF("doc_id", "text"),
+        col("doc_id"), col("text"), index, shingleN = 4)
+      // a retired set's bucket left behind would read back its e_ids
+      val rows = spark.read.parquet(index).select("e_id", "bucket")
+        .as[(Long, Int)].collect()
+      assert(rows.nonEmpty && rows.map(_._1).toSet === Set(100L), rows.toSeq)
+      assert(bucketDirs === rows.map(r => s"bucket=${r._2}").toSet)
+      assert(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$index/_index_config")), "UTF-8") ===
+        s"shingleN=4;bucketMod=${StreamingDecontam.BucketCount}")
+    } finally {
+      saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      import scala.jdk.CollectionConverters._
+      val p = java.nio.file.Paths.get(base)
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
 }

@@ -78,25 +78,33 @@ class StreamProtocolSpec extends AnyFunSuite {
     }
   }
 
-  test("legacy bare-path identity is accepted once and upgraded in place") {
+  /** The bytes of both claim markers (None when absent), to show a
+    * refusal left them as they were. */
+  private def markers(dir: Path): Seq[Option[Seq[Byte]]] =
+    Seq("_stream_checkpoint", "_stream_config").map { n =>
+      val p = java.nio.file.Paths.get(dir.toUri.getPath, n)
+      if (java.nio.file.Files.exists(p))
+        Some(java.nio.file.Files.readAllBytes(p).toSeq)
+      else None
+    }
+
+  test("a bare-path identity claim is refused, markers left untouched") {
     withDir { (fs, dir) =>
       withDir { (_, ckDir) =>
         val ck = ckDir.toString
-        // legacy claim: the run file holds the bare path (no metadata
-        // existed when it was written)
+        // a claim written by older code: the run file holds the bare
+        // path (no metadata existed when it was written)
         val out = fs.create(new Path(dir, "_stream_checkpoint"), true)
         try out.write(ck.getBytes("UTF-8")) finally out.close()
         val meta = fs.create(new Path(ckDir, "metadata"), true)
         try meta.write("""{"id":"run-A"}""".getBytes("UTF-8")) finally meta.close()
-        // accepted + upgraded...
-        assert(!StreamProtocol.replayGuards(fs, dir, ck, "w=2", 1L, "_b_", "S"))
-        // ...so a recreated instance now fails
-        val meta2 = fs.create(new Path(ckDir, "metadata"), true)
-        try meta2.write("""{"id":"run-B"}""".getBytes("UTF-8")) finally meta2.close()
+        val before = markers(dir)
+        // old state is refused, never upgraded
         val e = intercept[IllegalStateException] {
-          StreamProtocol.replayGuards(fs, dir, ck, "w=2", 0L, "_b_", "S")
+          StreamProtocol.replayGuards(fs, dir, ck, "w=2", 1L, "_b_", "S")
         }
-        assert(e.getMessage.contains("fresh checkpoint"))
+        assert(e.getMessage.contains(s"owned by checkpoint '$ck'"), e.getMessage)
+        assert(markers(dir) === before)
       }
     }
   }
@@ -104,8 +112,8 @@ class StreamProtocolSpec extends AnyFunSuite {
   test("a crash mid-publish leaves an orphan .tmp and no marker — the next " +
       "batch re-claims cleanly and the orphan never shadows the real file") {
     withDir { (fs, dir) =>
-      // the worst crash window of the atomic publish: tmp written,
-      // target deleted, rename not yet executed
+      // the crash window of the first claim's publish: tmp written,
+      // rename not yet executed
       val out = fs.create(new Path(dir, "_stream_checkpoint.tmp"), true)
       try out.write("half-writ".getBytes("UTF-8")) finally out.close()
       // an absent run file is simply re-claimed by the rightful owner;
@@ -122,27 +130,58 @@ class StreamProtocolSpec extends AnyFunSuite {
     }
   }
 
-  test("a legacy config rendering is accepted once and upgraded in place") {
+  test("an older config rendering is refused, markers left untouched") {
     withDir { (fs, dir) =>
       // state claimed before the fingerprint gained a field (the old
       // code's rendering, semantically identical values)
       StreamProtocol.replayGuards(fs, dir, "ck", "k=9;bands=3", 0L, "_b_", "S")
       StreamProtocol.commit(fs, dir, "_b_", 0L)
-      // the new code resumes: legacy string listed -> accepted, file
-      // rewritten to the current format, committed batch still skips
-      assert(StreamProtocol.replayGuards(fs, dir, "ck",
-        "k=9;bands=3;bucketMod=64", 0L, "_b_", "S",
-        legacyConfigs = Seq("k=9;bands=3")))
-      // upgrade persisted: the next batch needs no legacy list
-      assert(!StreamProtocol.replayGuards(fs, dir, "ck",
-        "k=9;bands=3;bucketMod=64", 1L, "_b_", "S"))
-      // a legacy string whose values DIFFER still fails fast
-      val e = intercept[IllegalStateException] {
-        StreamProtocol.replayGuards(fs, dir, "ck",
-          "k=5;bands=2;bucketMod=64", 1L, "_b_", "S",
-          legacyConfigs = Seq("k=5;bands=2"))
+      val before = markers(dir)
+      // old state is refused, never upgraded — even the replay of the
+      // committed batch
+      for (batch <- Seq(0L, 1L)) {
+        val e = intercept[IllegalStateException] {
+          StreamProtocol.replayGuards(fs, dir, "ck",
+            "k=9;bands=3;bucketMod=64", batch, "_b_", "S")
+        }
+        assert(e.getMessage.contains("state-shaping"), e.getMessage)
+        assert(markers(dir) === before)
       }
-      assert(e.getMessage.contains("state-shaping"))
+    }
+  }
+
+  test("publishing a marker over an existing file raises an IOException") {
+    withDir { (fs, dir) =>
+      val p = new Path(dir, "_marker")
+      StreamProtocol.publishFile(fs, p, "first")
+      intercept[java.io.IOException] {
+        StreamProtocol.publishFile(fs, p, "second")
+      }
+      assert(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(p.toUri.getPath)), "UTF-8") === "first")
+      // no checksum sidecar: markers are edited and compared as bytes
+      assert(!fs.exists(new Path(dir, "._marker.crc")))
+    }
+  }
+
+  test("a checkpoint on another filesystem than the state dir claims its instance id") {
+    withDir { (_, dir) =>
+      withDir { (_, ckDir) =>
+        val conf = new Configuration()
+        conf.set(s"fs.${OtherLocalFs.Scheme}.impl", classOf[OtherLocalFs].getName)
+        // the state dir's fs must carry this conf (the cached local fs
+        // may have been built from another one)
+        val fs = org.apache.hadoop.fs.FileSystem.newInstance(dir.toUri, conf)
+        try {
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(ckDir.toUri.getPath, "metadata"),
+            """{"id":"run-A"}""".getBytes("UTF-8"))
+          val ck = s"${OtherLocalFs.Scheme}://${ckDir.toUri.getPath}"
+          assert(!StreamProtocol.replayGuards(fs, dir, ck, "w=2", 0L, "_b_", "S"))
+          assert(markers(dir).head.map(b => new String(b.toArray, "UTF-8")) ===
+            Some(s"$ck#run-A"))
+        } finally fs.close()
+      }
     }
   }
 
@@ -173,9 +212,18 @@ class StreamProtocolSpec extends AnyFunSuite {
           StreamProtocol.replayGuards(fs, dir, ck, "w=3", 1L, "_b_", "S")
         }
         assert(e.getMessage.contains("no _stream_config"), e.getMessage)
-        // a LEGACY bare-path claim predates the config era: its absent
-        // config claims fresh (pinned by the legacy-identity test too)
+        // a bare-path claim written by older code is refused before
+        // the config is looked at (pinned by the bare-path identity test)
       }
     }
   }
 }
+
+/** A second local scheme, so a path on it is on another `FileSystem`
+  * than the plain local state directory. */
+class OtherLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${OtherLocalFs.Scheme}:///")
+  override def getScheme: String = OtherLocalFs.Scheme
+}
+
+object OtherLocalFs { val Scheme = "otherlocal" }
