@@ -3300,8 +3300,8 @@ object Queries {
     * order-independent-exact, so the full iterative algorithm — init,
     * two assignment+update rounds, final assignment — reproduces
     * bit-for-bit in DuckDB (the unrolled CTE below IS the algorithm).
-    * Assignment is a narrow per-row argmin over broadcast centroid
-    * literals: the corpus never shuffles, any iteration, at any scale. */
+    * Assignment is a narrow per-row argmin over one nested centroid
+    * literal: the corpus never shuffles, any iteration, at any scale. */
   private val q108 = Q("q108_kmeans_embeddings",
     (s, d) => Clustering.kMeans(
         // kMeans REFUSES null vectors by contract -> the caller's null law
@@ -7009,9 +7009,10 @@ object Queries {
     * mass per label — the label-quality gate before training on weak
     * labels (q166 says which label centroids are close; this counts
     * the points that closeness confuses). Centroids are exact
-    * quantized-long sum vectors collected as driver literals (the
-    * kMeans tiny-metadata contract), so scoring is a narrow per-row
-    * projection — k fused graft_dot cosines, no join. */
+    * quantized-long sum vectors collected to the driver and carried
+    * as ONE label-ordered nested literal (the kMeans tiny-metadata
+    * contract), so scoring is a narrow per-row projection — one array
+    * of k graft_dot cosines, no join. */
   private val q208 = Q("q208_label_coherence",
     (s, d) => graft.operators.Clustering.labelCoherenceMargin(
         emb(s, d), col("embedding"), col("label"), dim = EmbeddingDim)

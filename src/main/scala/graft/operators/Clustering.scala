@@ -29,12 +29,13 @@ import graft.functions.GraftFunctions._
   * computes the identical assignment every iteration; ties break to
   * the lowest cluster id.
   *
-  * Scale shape (better than spark.ml's loop): centroids are k·dim
-  * driver literals (the same tiny-metadata contract as
-  * [[Similarity.ivfTopK]]'s cluster centers), so the assignment step
-  * is a NARROW per-row expression — k codegen'd `graft_dot` calls and
-  * an argmin over a k-element struct array, no join, no shuffle of
-  * the corpus, ever. Per iteration the only exchange is the
+  * Scale shape (better than spark.ml's loop): the final centroids are
+  * k·dim driver numbers (the same tiny-metadata contract as
+  * [[Similarity.ivfTopK]]'s cluster centers) carried as ONE nested
+  * data literal ([[centroidLit]]), so the assignment step is a NARROW
+  * per-row expression — one `graft_dot` distance per array element
+  * and a (dist², cid) struct min ([[nearest]]), no join, no shuffle
+  * of the corpus, ever. Per iteration the only exchange is the
   * map-side-combined (cluster, dim) partial-sum aggregation:
   * k·dim·partitions tiny rows. Empty clusters keep their previous
   * centroid (the standard Lloyd fallback, and the only deterministic
@@ -52,22 +53,6 @@ import graft.functions.GraftFunctions._
   */
 object Clustering {
 
-  /** Lloyd's k-means, engine-portable (see class doc).
-    *
-    * @param df    input with `id` and `vec` (array&lt;float|double&gt;)
-    * @param scale quantization factor (coordinates become
-    *              `floor(x·scale + 0.5)`); 10000 keeps 4 decimals of
-    *              a unit-scale embedding, far inside the 2^53 window
-    * @return one row per DISTINCT id — exact-duplicate (id, vector)
-    *         replays collapse idempotently; same-id CONFLICTING
-    *         vectors refuse loudly (see buildXq): (id, cluster_id,
-    *         dist2) where
-    *         `cluster_id` ∈ [0, k) is the seed rank and `dist2` the
-    *         quantized-space squared distance to the final centroid.
-    *         With 0 &lt; n &lt; k input rows the seeding yields n
-    *         clusters (the standard Lloyd degradation); an EMPTY
-    *         input refuses loudly.
-    */
   /** Pairwise cosine similarity between per-group embedding CENTROIDS
     * (every ordered group pair grp_a < grp_b) — embedding-SPACE drift,
     * the geometric twin of the token-level JS matrix
@@ -142,10 +127,12 @@ object Clustering {
     * quantized-long SUM vectors (order-independent-exact; cosine is
     * scale-invariant so the sum stands in for the mean, and the own
     * centroid includes the point itself — the standard simplified
-    * silhouette). The k·dim sums collect to driver literals (the
+    * silhouette). The k·dim sums collect to the driver and travel as
+    * ONE label-ordered centroid literal ([[centroidLit]], the
     * [[kMeans]] tiny-metadata contract), so scoring is a NARROW
-    * per-row projection: k fused `graft_dot` cosines and two
-    * when-chains — no join, no corpus shuffle; the only exchanges are
+    * per-row projection: one array of k `graft_dot` cosines, `a` its
+    * element at the row's label position and `b` the `array_max` of
+    * the others — no join, no corpus shuffle; the only exchanges are
     * the (label, dim) cell aggregation and the final label-bounded
     * groupBy. The margin SIGN test (≤ 0) compares two identically-
     * derived doubles — engine-exact; the means are r(6)-masked float
@@ -154,7 +141,7 @@ object Clustering {
     * Needs ≥ 2 labels (a margin against no rival is undefined —
     * loud). NULL labels/vectors drop (the family law); a RAGGED
     * vector is refused in-plan by [[GraftFunctions.vectorDimGuard]]
-    * (the buildXq/kMeans dim contract — without it the native dot
+    * (the kMeans dim contract — without it the native dot
     * folds to the shorter length and each label's centroid dim would
     * be inferred from whatever that label happened to contain, a
     * silently wrong margin). NULL ELEMENTS inside a kept vector
@@ -166,7 +153,7 @@ object Clustering {
                            scale: Double = 10000.0,
                            reliableCheckpoint: Boolean = false): DataFrame = {
     val r = graft.functions.GraftFunctions.r _
-    // barrier BEFORE the centroid collect (the buildXq contract): the
+    // barrier BEFORE the centroid collect (the lloydInput contract): the
     // collect pass and the scoring pass must read the SAME rows — an
     // unbarriered source re-read between the two jobs (refreshed
     // view, appended directory, non-deterministic sample) would score
@@ -193,20 +180,18 @@ object Clustering {
     require(cents.size >= 2,
       s"labelCoherenceMargin needs >= 2 labels, got ${cents.size}")
     val labels = cents.keys.toSeq.sorted
-    val cos: Map[Long, Column] = labels.map(l =>
-      l -> graft.functions.GraftFunctions.cosine(
-        col("_v"), typedLit(cents(l)))).toMap
-    def ownOf(sel: Long => Column): Column =
-      labels.foldRight(lit(null).cast("double")) { (l, tail) =>
-        when(col("_l") === l, sel(l)).otherwise(tail)
-      }
-    val a = ownOf(cos)
-    // greatest() requires >= 2 args — a 2-label corpus has ONE rival
-    def best(cs: Seq[Column]): Column =
-      if (cs.size == 1) cs.head else greatest(cs: _*)
-    val b = ownOf(l => best(labels.filterNot(_ == l).map(cos)))
+    // array_max skips NULLs and ranks NaN highest — the order of the
+    // k−1-way greatest() it stands for and of the oracle's
+    // max(CASE WHEN m <> l …)
     base
-      .withColumn("_a", a).withColumn("_b", b)
+      .withColumn("_cos", transform(
+        centroidLit(labels.zipWithIndex.map { case (l, i) => (i, cents(l)) }),
+        c => graft.functions.GraftFunctions.cosine(col("_v"), c)))
+      .withColumn("_pos",
+        array_position(array(labels.map(lit): _*), col("_l")).cast("int"))
+      .withColumn("_a", element_at(col("_cos"), col("_pos")))
+      .withColumn("_b",
+        array_max(filter(col("_cos"), (_, i) => i + 1 =!= col("_pos"))))
       .groupBy(col("_l"))
       .agg(count(lit(1)).as("n"),
         r(avg(col("_a")), 6).as("mean_own_cos"),
@@ -218,11 +203,27 @@ object Clustering {
       .withColumnRenamed("_l", "label")
   }
 
+  /** Lloyd's k-means, engine-portable (see class doc).
+    *
+    * @param df    input with `id` and `vec` (array&lt;float|double&gt;)
+    * @param scale quantization factor (coordinates become
+    *              `floor(x·scale + 0.5)`); 10000 keeps 4 decimals of
+    *              a unit-scale embedding, far inside the 2^53 window
+    * @return one row per DISTINCT id — exact-duplicate (id, vector)
+    *         replays collapse idempotently; same-id CONFLICTING
+    *         vectors refuse loudly (see lloydInput): (id, cluster_id,
+    *         dist2) where
+    *         `cluster_id` ∈ [0, k) is the seed rank and `dist2` the
+    *         quantized-space squared distance to the final centroid.
+    *         With 0 &lt; n &lt; k input rows the seeding yields n
+    *         clusters (the standard Lloyd degradation); an EMPTY
+    *         input refuses loudly.
+    */
   def kMeans(df: DataFrame, id: Column, vec: Column, k: Int, iters: Int,
              seed: String, dim: Int, scale: Long = 10000L): DataFrame = {
-    val xq = buildXq(df, id, vec, dim, scale)
-    val centroids = lloydLoop(xq, k, iters, seed)
-    assigned(xq, centroids)
+    val xq = lloydInput(df, id, vec, slices = 1, sliceLen = dim, scale,
+      dedup = true)
+    assigned(xq, lloydLoop(xq, k, iters, seed))
       .select(col("_id").as("id"), col("_cid").as("cluster_id"),
         col("_dist2").as("dist2"))
   }
@@ -230,83 +231,17 @@ object Clustering {
   /** The Lloyd loop alone — final centroids (cid → mean vector in the
     * quantized space), no assignment pass. The building block for
     * operators that need the CODEBOOK rather than the clustering
-    * ([[Similarity.pqTopK]]'s per-subspace product-quantization
-    * codebooks). Same seeding, update rule, and empty-cluster
-    * fallback as [[kMeans]] — one shared core, so the SQL oracles'
-    * unrolled replay covers both. */
+    * ([[Similarity]]'s integer IVF coarse quantizer). Same seeding,
+    * update rule, and empty-cluster fallback as [[kMeans]] — one
+    * shared core, so the SQL oracles' unrolled replay covers both.
+    * Input contract (the [[Similarity]] prepSides contract): ids
+    * deduped upstream. */
   private[operators] def kMeansCentroids(
       df: DataFrame, id: Column, vec: Column, k: Int, iters: Int,
-      seed: String, dim: Int, scale: Long = 10000L,
-      assumeUnique: Boolean = false): Seq[(Int, Seq[Double])] =
-    lloydLoop(buildXq(df, id, vec, dim, scale, assumeUnique), k, iters, seed)
-
-  private def buildXq(df: DataFrame, id: Column, vec: Column,
-                      dim: Int, scale: Long,
-                      assumeUnique: Boolean = false): DataFrame = {
-    // quantize once; integral doubles make every downstream sum exact.
-    // x·x is per-row constant across iterations — compute it behind the
-    // same barrier. `dim` is ENFORCED in-plan: a ragged vector would
-    // silently fold to its short length in the min-length dot product
-    // and corrupt the assignment with no error.
-    // ONE in-plan assert with a case-selected message: separate
-    // null-vec / null-id / dim filters could be reordered by the
-    // optimizer, and then a NULL row would die on the dim assert with
-    // a misleading ragged-vector diagnosis (size(NULL) is NULL and
-    // assert_true(NULL) raises).
-    val rowOk =
-      when(col("_id").isNull || col("_xq").isNull, lit(false))
-        .otherwise(size(col("_xq")) === dim)
-    val rowMsg =
-      when(col("_id").isNull,
-        lit("Clustering.kMeans: NULL id — ids must be non-null (they " +
-          "key the deterministic seeding and the output rows)"))
-      .when(col("_xq").isNull,
-        lit("Clustering.kMeans: NULL vector — filter or impute " +
-          "upstream; a NULL row cannot be assigned to any cluster"))
-      .otherwise(lit(s"Clustering.kMeans: vector length must equal dim=$dim"))
-    // exact-replica idempotence (the id-keyed family law, PLANS.md
-    // round 14): a replayed producer re-emitting the SAME (id, vector)
-    // row must not re-weight any centroid mean — replicas collapse in
-    // ONE map-side-combinable hash aggregation (the only exchange this
-    // operator ever runs on the corpus). An id carrying CONFLICTING
-    // vectors has no deterministic resolution here (no version column)
-    // and refuses loudly — resolve upstream (e.g. the CDC merge) —
-    // detected as min ≠ max of the quantized vector's hash (collision
-    // risk 2^-64 per id, the xxhash64 tie-break precedent above).
-    //
-    // `assumeUnique = true` is the caller's CONTRACT that ids are
-    // already distinct (Similarity's trained-index entry points dedup
-    // and checkpoint both sides ONCE via the same law before slicing
-    // subspaces) — it skips this aggregation, removing a redundant
-    // corpus exchange per codebook training (r14 bench: the PQ family
-    // paid it 9× per query). The dedup groupBy (or the pre-deduped,
-    // already-spread checkpoint input) is the parallelism spread, so
-    // no extra repartition is needed in either mode; the lazy
-    // localCheckpoint stores the quantized rows so the per-iteration
-    // consumers never re-evaluate the transform.
-    val quant = df.select(
-        id.as("_id"),
-        transform(vec, x =>
-          floor(x.cast("double") * lit(scale.toDouble) + lit(0.5)).cast("double"))
-          .as("_xq"))
-      .filter(coalesce(assert_true(rowOk, rowMsg), lit(true)))
-    val deduped =
-      if (assumeUnique) quant
-      else quant
-        .groupBy(col("_id"))
-        .agg(first(col("_xq")).as("_xq"),
-          min(xxhash64(col("_xq"))).as("_h1"),
-          max(xxhash64(col("_xq"))).as("_h2"))
-        .filter(coalesce(assert_true(col("_h1") === col("_h2"),
-          lit("Clustering.kMeans: duplicate id with CONFLICTING " +
-            "vectors — exact replays collapse idempotently, but " +
-            "same-id different-vector rows need a resolution pass " +
-            "(e.g. CDC merge / latest-version filter) upstream")),
-          lit(true)))
-        .select(col("_id"), col("_xq"))
-    deduped.withColumn("_xx", dotProduct(col("_xq"), col("_xq")))
-      .localCheckpoint(false) // consumed once per iteration + final pass
-  }
+      seed: String, dim: Int,
+      scale: Long = 10000L): Seq[(Int, Seq[Double])] =
+    lloydLoop(lloydInput(df, id, vec, slices = 1, sliceLen = dim, scale,
+      dedup = false), k, iters, seed)
 
   /** ALL `slices` per-slice Lloyd loops fused into ONE driver loop —
     * the PQ-codebook shape ([[Similarity]] trains m independent
@@ -323,27 +258,57 @@ object Clustering {
     * per-slice literal the sequential loop hashes), the same
     * integral-double sums (associative-exact in any order), the same
     * empty-cluster fallback — so the returned codebooks are
-    * bit-identical to `slices` separate [[kMeansCentroids]] calls and
-    * the unrolled per-subspace SQL oracles still replay them.
+    * bit-identical to `slices` separate single-slice loops and the
+    * unrolled per-subspace SQL oracles still replay them.
     *
-    * Input contract (the [[Similarity]] prepKeyed contract): ids
-    * deduped upstream; NULL ids and ragged vectors refuse loudly with
-    * the kMeans family messages. Returns codebooks slice-ascending. */
+    * Input contract (the [[Similarity]] prepSides contract): ids
+    * deduped upstream; NULL ids and vectors of any length but
+    * slices·sliceLen refuse loudly with the kMeans family messages.
+    * Returns codebooks slice-ascending. */
   private[operators] def kMeansCentroidsFused(
       df: DataFrame, id: Column, vec: Column, k: Int, iters: Int,
       seedPrefix: String, slices: Int, sliceLen: Int,
       scale: Long = 10000L): Seq[Seq[(Int, Seq[Double])]] = {
-    require(k >= 1 && iters >= 1,
-      s"need k >= 1 and iters >= 1, got k=$k iters=$iters")
     require(slices >= 1 && sliceLen >= 1,
       s"need slices, sliceLen >= 1: $slices/$sliceLen")
-    val sliceCols = (0 until slices).map { s =>
-      transform(slice(vec, s * sliceLen + 1, sliceLen), x =>
-        floor(x.cast("double") * lit(scale.toDouble) + lit(0.5)).cast("double"))
-    }
+    lloydCentsInPlan(
+      lloydInput(df, id, vec, slices, sliceLen, scale, dedup = false),
+      concat(lit(seedPrefix), col("_s").cast("string"),
+        col("_id").cast("string"), lit("#graft-kmeans")),
+      k, iters, slices).toSeq
+  }
+
+  /** The one prep of every Lloyd input — (_id, _s, _xq, _xx), one row
+    * per (id, slice), lazily checkpointed (consumed by the seed pass,
+    * every update pass, and kMeans' final assignment; the checkpoint
+    * stores the quantized rows so no consumer re-evaluates the
+    * transform):
+    *  - quantize the whole vector once ([[quantize]]; integral doubles
+    *    make every downstream sum exact);
+    *  - check each row ONCE, in-plan: a non-NULL id, a non-NULL
+    *    vector, and exactly slices·sliceLen elements (a ragged vector
+    *    would silently fold to its short length in the min-length dot
+    *    and corrupt the assignment with no error). One assert with a
+    *    case-selected message: separate filters could be reordered by
+    *    the optimizer, and then a NULL row would die on the length
+    *    assert with a misleading ragged-vector diagnosis (size(NULL)
+    *    is NULL and assert_true(NULL) raises);
+    *  - `dedup`: the exact-replica law ([[dedupKeyed]] on the quantized
+    *    vector) — a replayed producer re-emitting the SAME (id, vector)
+    *    row must not re-weight any centroid mean, and an id carrying
+    *    CONFLICTING vectors refuses loudly. The groupBy is the
+    *    parallelism spread. `dedup = false` is the caller's CONTRACT
+    *    that ids are already distinct (Similarity's trained-index entry
+    *    points dedup and spread both sides ONCE before any training —
+    *    r14 bench: the PQ family paid this exchange 9× per query);
+    *  - posexplode the slices with their self-dots ([[slicedRows]]). */
+  private def lloydInput(df: DataFrame, id: Column, vec: Column,
+                         slices: Int, sliceLen: Int, scale: Long,
+                         dedup: Boolean): DataFrame = {
+    val dim = slices * sliceLen
     val rowOk =
       when(col("_id").isNull || col("_xq").isNull, lit(false))
-        .otherwise(size(col("_xq")) === sliceLen)
+        .otherwise(size(col("_xq")) === dim)
     val rowMsg =
       when(col("_id").isNull,
         lit("Clustering.kMeans: NULL id — ids must be non-null (they " +
@@ -351,42 +316,34 @@ object Clustering {
       .when(col("_xq").isNull,
         lit("Clustering.kMeans: NULL vector — filter or impute " +
           "upstream; a NULL row cannot be assigned to any cluster"))
-      .otherwise(lit(s"Clustering.kMeans: vector length must equal dim=$sliceLen"))
-    val xqm = df
-      .select(id.as("_id"), posexplode(array(sliceCols: _*)).as(Seq("_s", "_xq")))
+      .otherwise(lit(s"Clustering.kMeans: vector length must equal dim=$dim"))
+    val quant = df.select(id.as("_id"), quantize(vec, scale.toDouble).as("_xq"))
       .filter(coalesce(assert_true(rowOk, rowMsg), lit(true)))
-      .withColumn("_xx", dotProduct(col("_xq"), col("_xq")))
-      .localCheckpoint(false) // shared by the seed pass + every update pass
-    lloydCentsInPlan(xqm,
-      concat(lit(seedPrefix), col("_s").cast("string"),
-        col("_id").cast("string"), lit("#graft-kmeans")),
-      k, iters, slices).toSeq
+    val rows =
+      if (dedup) dedupKeyed(quant, "_id", "_xq", "Clustering.kMeans: duplicate id")
+      else quant
+    slicedRows(rows, slices, sliceLen).localCheckpoint(false)
   }
 
   /** The Lloyd loop as ONE Spark action (r15): seeds, every update
     * pass, and the empty-cluster fallback are chained lazily through
     * tiny (slice, cid, cvec) frames — the driver collects ONLY the
     * final centroids, instead of one blocking collect per pass with a
-    * freshly planned k·dim-literal assignment chain each time (r14's
-    * remaining PQ cost: ~3 driver round-trips + literal-churn codegen
-    * per training). Each intermediate frame is pinned with a lazy
-    * `localCheckpoint`, so both of its consumers (the broadcast
-    * assignment side and the fallback join's left side) share ONE
-    * computed RDD — evaluation stays linear in `iters`, never
-    * re-expanding the lineage.
+    * freshly planned assignment chain each time. Each intermediate
+    * frame is pinned with a lazy `localCheckpoint`, so both of its
+    * consumers (the broadcast assignment side and the fallback join's
+    * left side) share ONE computed RDD — evaluation stays linear in
+    * `iters`, never re-expanding the lineage. Those `iters + 1`
+    * centroid checkpoints hold slices·k rows each and stay cached
+    * until the driver garbage-collects their frames; the only
+    * corpus-sized checkpoint is the input `xqm` itself.
     *
     * Per-slice arithmetic is UNCHANGED from the sequential loop:
     *  - seeds: per slice the k smallest (portable hash, id, vec-hash)
     *    rows, cid = rank − 1 — the exact key and order the collected
-    *    zipWithIndex produced;
-    *  - assignment: lexicographic (dist², cid) struct min where
-    *    dist² = x·x − 2·x·c + c·c; c·c is `graft_dot(c, c)` — the
-    *    SAME sequential multiply-add fold the driver's
-    *    `foldLeft(0.0)((a,v) => a + v*v)` ran, so every distance is
-    *    bit-identical whether c arrives as a literal or a column (the
-    *    argmin is order-independent: (dist², cid) is a total order,
-    *    so the collect_list order into the codebook array is
-    *    irrelevant);
+    *    zipWithIndex produced, and dense, so a cid-sorted codebook
+    *    array has position = cid;
+    *  - assignment: [[nearest]] over the row's OWN slice's codebook;
     *  - update: the same (slice, cid, pos) integral sums and exact
     *    per-coordinate division; empty clusters keep their previous
     *    centroid via the left-join coalesce.
@@ -396,6 +353,8 @@ object Clustering {
   private def lloydCentsInPlan(xqm: DataFrame, seedKey: Column, k: Int,
                                iters: Int, slices: Int)
       : Array[Seq[(Int, Seq[Double])]] = {
+    require(k >= 1 && iters >= 1,
+      s"need k >= 1 and iters >= 1, got k=$k iters=$iters")
     val seeds = xqm
       .withColumn("_h", pmod(polyHash(seedKey), lit(10000L)))
       .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(
@@ -407,21 +366,12 @@ object Clustering {
         col("_xq").as("_cvec"))
     var cents = seeds.localCheckpoint(false)
     for (_ <- 1 to iters) {
-      // per-slice codebook array, broadcast onto the corpus rows; the
-      // per-row argmin is the same (dist², cid) struct min as the
-      // literal form, over the row's OWN slice's centroids
       val cb = cents.groupBy(col("_s"))
-        .agg(collect_list(struct(col("_cid"), col("_cvec"))).as("_cb"))
-      val best = array_sort(transform(col("_cb"), c =>
-        struct(
-          (col("_xx")
-            - lit(2.0) * dotProduct(col("_xq"), c.getField("_cvec"))
-            + dotProduct(c.getField("_cvec"), c.getField("_cvec")))
-            .as("_dist2"),
-          c.getField("_cid").as("_cid"))))
-        .getItem(0).getField("_cid")
+        .agg(transform(array_sort(collect_list(struct(col("_cid"), col("_cvec")))),
+          t => t.getField("_cvec")).as("_cb"))
       val updated = xqm.join(broadcast(cb), Seq("_s"))
-        .withColumn("_cid", best)
+        .withColumn("_cid",
+          nearest(col("_xq"), col("_xx"), col("_cb")).getField("_cid"))
         .select(col("_s"), col("_cid"), posexplode(col("_xq")).as(Seq("_pos", "_v")))
         .groupBy(col("_s"), col("_cid"), col("_pos"))
         .agg(sum(col("_v")).as("_sm"), count(lit(1)).as("_n"))
@@ -443,40 +393,107 @@ object Clustering {
     }
   }
 
+  /** The slices = 1 loop of [[kMeans]] and [[kMeansCentroids]]. Its
+    * seed key has NO slice component — exactly the string the q108,
+    * q116 and q209 oracles (and the IVF coarse-quantizer oracles)
+    * hash. The vector-hash third seed-order key only disambiguates
+    * DUPLICATE ids; with unique ids, the contract, it never engages. */
   private def lloydLoop(xq: DataFrame, k: Int, iters: Int,
-                        seed: String): Seq[(Int, Seq[Double])] = {
-    require(k >= 1 && iters >= 1, s"need k >= 1 and iters >= 1, got k=$k iters=$iters")
-    // the slices = 1 instance of the fused in-plan loop (ONE Spark
-    // action for seeds + every update — r15): the seed key is the
-    // portable (hash, id, vec-hash) order the SQL oracle replays — a
-    // single-slice window rank ≤ k IS the old global orderBy+limit(k),
-    // and cid = rank − 1 the old zipWithIndex. The vector-hash third
-    // key only disambiguates DUPLICATE ids (two rows sharing (_h, _id)
-    // would otherwise seed nondeterministically run to run) — with
-    // unique ids, the contract, it never engages, so oracle parity is
-    // untouched. Update rule, integral-exact sums, and empty-cluster
-    // fallback all live in [[lloydCentsInPlan]].
-    lloydCentsInPlan(xq.withColumn("_s", lit(0)),
+                        seed: String): Seq[(Int, Seq[Double])] =
+    lloydCentsInPlan(xq,
       concat(lit(seed), col("_id").cast("string"), lit("#graft-kmeans")),
       k, iters, slices = 1).head
-  }
 
-  // narrow argmin: k distances per row from centroid LITERALS, best =
-  // lexicographic min of (dist2, cid) structs — no join, no shuffle.
+  /** kMeans' final assignment: every row's [[nearest]] centroid from
+    * the one centroid literal — (_id, _cid, _dist2). */
   private def assigned(xq: DataFrame,
-                       cents: Seq[(Int, Seq[Double])]): DataFrame = {
-    val distCols = cents.map { case (cid, cv) =>
-      // c·c on the driver with the SAME left fold over products the
-      // engines' sequential dot uses — one canonical value everywhere
-      val cc = cv.foldLeft(0.0)((a, v) => a + v * v)
-      struct(
-        (col("_xx") - lit(2.0) * dotProduct(col("_xq"), typedLit(cv)) + lit(cc))
-          .as("_dist2"),
-        lit(cid).as("_cid"))
-    }
-    xq.withColumn("_best", array_sort(array(distCols: _*)).getItem(0))
-      .select(col("_id"), col("_xq"),
+                       cents: Seq[(Int, Seq[Double])]): DataFrame =
+    xq.withColumn("_best", nearest(col("_xq"), col("_xx"), centroidLit(cents)))
+      .select(col("_id"),
         col("_best").getField("_cid").as("_cid"),
-        col("_best").getField("_dist2").as("_dist2"))
-  }
+        col("_best").getField("_d").as("_dist2"))
+
+  // ---- the trained-centroid path shared with Similarity's PQ/IVF ---- //
+
+  /** The one vector quantizer of the trained family: every element to
+    * the INTEGRAL double `floor(x·scale + 0.5)` (exact for
+    * |x·scale| < 2^53 — see the class doc). */
+  private[operators] def quantize(vec: Column, scale: Double): Column =
+    transform(vec,
+      x => floor(x.cast("double") * lit(scale) + lit(0.5)).cast("double"))
+
+  /** (_id, _s, _xq, _xx) from (_id, _xq): each quantized vector split
+    * into `slices` contiguous `sliceLen` sub-vectors, one row per
+    * slice, with the sub-vector's self-dot `_xx`. Behind the Lloyd
+    * input's checkpoint `_xx` is stored once per row; over an
+    * uncheckpointed side CollapseProject inlines it into the
+    * [[candStructs]] lambda, once per centroid (same values). */
+  private[operators] def slicedRows(rows: DataFrame, slices: Int,
+                                    sliceLen: Int): DataFrame =
+    rows.select(col("_id"),
+        posexplode(array((0 until slices).map(s =>
+          slice(col("_xq"), s * sliceLen + 1, sliceLen)): _*))
+          .as(Seq("_s", "_xq")))
+      .withColumn("_xx", dotProduct(col("_xq"), col("_xq")))
+
+  /** The one way trained centroids enter a plan: a single `typedLit`
+    * array of centroid vectors ordered by cid (cids are dense 0..k−1
+    * by the seeding contract, so an element's position IS its cid —
+    * [[candStructs]] reads it back that way). PQ nests one per slice.
+    * One literal node carries the doubles as plain data: per-centroid
+    * literal expression trees put k·dim numbers into the plan once per
+    * use, and every pass re-plans and re-codegens them. */
+  private[operators] def centroidLit(cents: Seq[(Int, Seq[Double])]): Column =
+    typedLit(cents.sortBy(_._1).map(_._2))
+
+  /** dist²(x, c) = x·x − 2·x·c + c·c, every dot the sequential
+    * `graft_dot` fold — c·c through `graft_dot(c, c)` runs the same
+    * multiply-add order as a driver-side `foldLeft(0.0)((a, v) =>
+    * a + v*v)` and the SQL oracles' fold, so every distance is
+    * bit-identical whether `c` arrives as a literal element or a
+    * column. `xx` arrives precomputed ([[slicedRows]]). */
+  private[operators] def distTo(x: Column, xx: Column, c: Column): Column =
+    xx - lit(2.0) * dotProduct(x, c) + dotProduct(c, c)
+
+  /** (_d, _cid) per centroid of a cid-ordered centroid array. */
+  private[operators] def candStructs(x: Column, xx: Column,
+                                     cents: Column): Column =
+    transform(cents, (c, i) => struct(distTo(x, xx, c).as("_d"), i.as("_cid")))
+
+  /** The one argmin: the lexicographic (dist², cid) struct min — ties
+    * break to the lowest cid, and the order is total, so the pick is
+    * independent of evaluation order. */
+  private[operators] def nearest(x: Column, xx: Column, cents: Column): Column =
+    array_min(candStructs(x, xx, cents))
+
+  /** Exact-replica idempotence for the id-keyed trained family
+    * ([[kMeans]] and the quantized [[Similarity]] operators — pqTopK /
+    * ivfPqTopK / ivfTopKQuant / the recall tables / pqRerankTopK, whose
+    * id-grouped sums and id-joins a duplicate row silently CORRUPTS: a
+    * replayed member re-weights a centroid mean, a replayed candidate
+    * doubles its ADC sum, a replayed ground-truth row fans out the
+    * recall join): a replayed producer re-emitting the SAME (id,
+    * vector) row collapses in ONE map-side-combinable hash
+    * aggregation; an id carrying CONFLICTING vectors has no
+    * deterministic resolution here (no version column) and refuses
+    * loudly — resolve upstream (e.g. the CDC merge) — detected as
+    * min ≠ max of the vector's xxhash64 (collision risk 2^-64 per id).
+    * `subject` opens the message ("<operator>: duplicate <id>"). The
+    * per-row scorers (brute force / LSH / multi-probe / int8) are NOT
+    * deduped: with no id-grouped math, a replica is just another
+    * candidate row with an identical score — visible, harmless, and
+    * replayed identically by their oracles (the per-row law the event
+    * family established in round 13). */
+  private[operators] def dedupKeyed(df: DataFrame, id: String, vec: String,
+                                    subject: String): DataFrame =
+    df.groupBy(col(id))
+      .agg(first(col(vec)).as(vec),
+        min(xxhash64(col(vec))).as("_h1"),
+        max(xxhash64(col(vec))).as("_h2"))
+      .filter(coalesce(assert_true(col("_h1") === col("_h2"),
+        lit(s"$subject with CONFLICTING vectors — exact replays " +
+          "collapse idempotently, but same-id different-vector rows " +
+          "need a resolution pass (e.g. CDC merge / latest-version " +
+          "filter) upstream")), lit(true)))
+      .select(col(id), col(vec))
 }

@@ -36,6 +36,8 @@ import graft.functions.GraftFunctions._
   */
 object Similarity {
 
+  import Clustering.{candStructs, centroidLit, distTo, nearest, quantize,
+    slicedRows}
   import OpUtils.{cosFromNorms, materialize}
 
   /** The candidate-scoring step every ANN variant shares: optionally
@@ -74,43 +76,18 @@ object Similarity {
       .withColumn("bucket", lshBucket(col(vecCol), planes, dim))
       .withColumn(normCol, l2Norm(col(vecCol))))
 
-  /** Exact-replica idempotence for the id-keyed QUANTIZED/trained ANN
-    * family (pqTopK / ivfPqTopK / ivfTopKQuant / the recall tables /
-    * pqRerankTopK — the operators whose id-grouped sums and id-joins a
-    * duplicate row silently CORRUPTS: a replayed candidate doubles its
-    * ADC sum, a replayed ground-truth row fans out the recall join):
-    * a replayed producer re-emitting the SAME (id, vector) row
-    * collapses in ONE map-side-combinable hash aggregation; an id
-    * carrying CONFLICTING vectors has no deterministic resolution here
-    * and refuses loudly (resolve upstream — e.g. the CDC merge). The
-    * per-row scorers (brute force / LSH / multi-probe / int8) are NOT
-    * deduped: with no id-grouped math, a replica is just another
-    * candidate row with an identical score — visible, harmless, and
-    * replayed identically by their oracles (the per-row law the event
-    * family established in round 13). One extra exchange per side;
-    * the Clustering.buildXq twin carries the same law for the
-    * codebook/coarse-centroid training passes. */
-  private def dedupKeyed(df: DataFrame, id: String, vec: String,
-                         op: String): DataFrame =
-    df.groupBy(col(id))
-      .agg(first(col(vec)).as(vec),
-        min(xxhash64(col(vec))).as("_h1"),
-        max(xxhash64(col(vec))).as("_h2"))
-      .filter(coalesce(assert_true(col("_h1") === col("_h2"),
-        lit(s"Similarity.$op: duplicate $id with CONFLICTING vectors " +
-          "— exact replays collapse idempotently, but same-id " +
-          "different-vector rows need a resolution pass (e.g. CDC " +
-          "merge / latest-version filter) upstream")), lit(true)))
-      .select(col(id), col(vec))
-
-  /** [[dedupKeyed]] + an EAGER local checkpoint — the prep every
-    * trained-index entry point runs ONCE per side. NOTE the API
-    * consequence for every public caller (pqTopK / ivfPqTopK /
-    * ivfTopKQuant / pqRecall / ivfRecall / pqRerankTopK): building
-    * their DataFrame runs Spark jobs — and fires the
-    * conflicting-vector assert — at CONSTRUCTION time, not at the
-    * first action (the training collects were always eager; the
-    * checkpoint joins them). The trained family
+  /** The prep every trained-index entry point runs ONCE per side
+    * before any training or scoring: NULL vectors drop (the family
+    * law); a vector of any length but `dim` refuses in-plan
+    * ([[GraftFunctions.vectorDimGuard]] — the native dot would
+    * otherwise fold it to the shorter length, on the corpus AND the
+    * query side); exact replicas collapse and CONFLICTING same-id
+    * vectors refuse ([[Clustering.dedupKeyed]]); then an EAGER local
+    * checkpoint. NOTE the API consequence for every public caller
+    * (pqTopK / ivfPqTopK / ivfTopKQuant / pqRecall / ivfRecall /
+    * pqRerankTopK): building their DataFrame runs Spark jobs — and
+    * fires the guard and the conflicting-vector assert — at
+    * CONSTRUCTION time, not at the first action. The trained family
     * consumes each side many times (m codebook trainings + the coarse
     * quantizer + codes/LUT/rerank/ground-truth passes); without the
     * barrier every consumer replans the scan + dedup exchange from
@@ -118,20 +95,29 @@ object Similarity {
     * after). Eager, not lazy: the codebook trainings run CONCURRENTLY
     * (see [[pqCodebooksAsync]]) and a lazy checkpoint would let the
     * first concurrent wave compute the same partitions redundantly
-    * before the cache fills. The materialize spread matters here: AQE
-    * coalesces the small dedup shuffle to very few partitions, and the
-    * checkpoint would pin that width for every downstream
-    * compute-heavy stage (the PQ encode ran near-single-task on it —
-    * the OpUtils.materialize reason-1 law). `spread = false` (r15) is
-    * for the QUERY side only — small by the family contract (it
-    * broadcasts into every join): spreading ~20 rows over the session
-    * parallelism pinned 32 near-empty partitions under every
-    * query-side consumer stage, one extra exchange plus a fleet of
-    * no-op tasks per pass; the corpus side keeps the spread. */
-  private def prepKeyed(df: DataFrame, id: String, vec: String,
-                        op: String, spread: Boolean = true): DataFrame = {
-    val deduped = dedupKeyed(df, id, vec, op)
-    (if (spread) materialize(deduped) else deduped).localCheckpoint()
+    * before the cache fills.
+    *
+    * The corpus side is spread by [[OpUtils.materialize]]: AQE
+    * coalesces the small dedup shuffle to very few partitions, and
+    * the checkpoint would pin that width for every downstream
+    * compute-heavy stage (the PQ encode ran near-single-task on it).
+    * The QUERY side is not spread: it is small by the family contract
+    * (a sample or a serving batch — it broadcasts into every join),
+    * and spreading ~20 rows over the session parallelism pinned 32
+    * near-empty partitions under every query-side consumer stage. A
+    * large query side therefore keeps the few partitions the dedup
+    * shuffle leaves. Returns (queries, corpus). */
+  private def prepSides(queries: DataFrame, corpus: DataFrame, op: String,
+                        dim: Int): (DataFrame, DataFrame) = {
+    def prep(df: DataFrame, id: String, vec: String,
+             spread: Boolean): DataFrame = {
+      val deduped = Clustering.dedupKeyed(
+        df.filter(col(vec).isNotNull).filter(vectorDimGuard(col(vec), dim)),
+        id, vec, s"Similarity.$op: duplicate $id")
+      (if (spread) materialize(deduped) else deduped).localCheckpoint()
+    }
+    val corp = prep(corpus, "c_id", "c_vec", spread = true)
+    (prep(queries, "q_id", "q_vec", spread = false), corp)
   }
 
   /** The execution context for concurrent codebook/coarse trainings:
@@ -163,9 +149,6 @@ object Similarity {
       .filter(col(rankCol) <= k)
   }
 
-  /** Exact top-k cosine neighbors for each query vector.
-    * `queries`/`corpus` need (id, vec) columns; result: one row per
-    * (query, rank ≤ k). */
   /** Product-quantization ANN with asymmetric-distance (ADC) scoring
     * (Jégou, Douze & Schmid 2011): the corpus compresses to `m`
     * small-int codes per vector (the 32×-memory move that makes
@@ -173,13 +156,14 @@ object Similarity {
     * and distance is the sum of per-subspace lookup-table entries.
     *
     *  1. codebooks: per subspace `s`, Lloyd on the QUANTIZED slice
-    *     ([[Clustering.kMeansCentroids]] — same seeding/update/
+    *     ([[Clustering.kMeansCentroidsFused]] — same seeding/update/
     *     empty-cluster law as q108's oracle-replayed k-means), final
     *     centroids rounded half-up to INTEGERS. Driver traffic =
     *     m·k·subDim numbers.
-    *  2. encode: per corpus vector per subspace, argmin over the
-    *     integer codebook LITERALS — lexicographic (dist², cid) min
-    *     in one projection, no join, no shuffle. All quantities are
+    *  2. encode: per corpus vector per subspace, the
+    *     [[Clustering.nearest]] argmin over its slice of the ONE
+    *     nested integer codebook literal — lexicographic (dist², cid)
+    *     min in one projection, no join, no shuffle. All quantities are
     *     integral doubles, so every distance is exact and every tie
     *     deterministic.
     *  3. LUT: per query per subspace, the k distances to the integer
@@ -197,8 +181,11 @@ object Similarity {
     * join, and the per-pair aggregation map-side-combines down to
     * |Q|·|C| partials before the per-query bounded-heap top-k cut.
     * Compose with IVF coarse lists ([[ivfTopK]]) to prune the scan
-    * itself. NULL vectors drop (the family law); self-matches are
-    * excluded.
+    * itself. Self-matches are excluded.
+    *
+    * Both sides are prepped at construction: NULL vectors drop, any
+    * length but m·subDim refuses loudly on EITHER side, and the query side
+    * must be SMALL (checkpointed unspread, broadcast into every join).
     *
     * Returns (q_id, rank, c_id, adc_dist2) — adc_dist2 a LONG in the
     * quantized space. */
@@ -206,10 +193,7 @@ object Similarity {
              m: Int = 8, subDim: Int = 8, codebookK: Int = 16,
              iters: Int = 2, seed: String = "pq",
              scale: Double = 10000.0): DataFrame = {
-    val corp = prepKeyed(corpus.filter(col("c_vec").isNotNull),
-      "c_id", "c_vec", "pqTopK")
-    val qs = dedupKeyed(queries.filter(col("q_vec").isNotNull),
-      "q_id", "q_vec", "pqTopK")
+    val (qs, corp) = prepSides(queries, corpus, "pqTopK", m * subDim)
     pqTopKPrepped(qs, corp, k, m, subDim, codebookK, iters, seed, scale)
   }
 
@@ -242,6 +226,10 @@ object Similarity {
     * under an unprobed list is unreachable); rank ties and probe
     * ties all break lexicographically, so the cut is engine-stable.
     *
+    * Both sides are prepped at construction: NULL vectors drop, any
+    * length but m·subDim refuses loudly on EITHER side, and the query side
+    * must be SMALL (checkpointed unspread, broadcast into every join).
+    *
     * Returns (q_id, rank, c_id, adc_dist2). */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                 nLists: Int = 8, nProbe: Int = 2,
@@ -250,11 +238,8 @@ object Similarity {
                 scale: Double = 10000.0): DataFrame = {
     require(nLists >= 2 && nProbe >= 1 && nProbe <= nLists,
       s"need 2 <= nLists and 1 <= nProbe <= nLists: $nLists/$nProbe")
-    val corp = prepKeyed(corpus.filter(col("c_vec").isNotNull),
-      "c_id", "c_vec", "ivfPqTopK")
-    val qs = prepKeyed(queries.filter(col("q_vec").isNotNull),
-      "q_id", "q_vec", "ivfPqTopK", spread = false)
     val dim = m * subDim
+    val (qs, corp) = prepSides(queries, corpus, "ivfPqTopK", dim)
     // the m codebook trainings and the coarse-quantizer training are
     // mutually independent Lloyd loops over the SAME checkpointed
     // corpus — kick the codebooks off on the pool, train the coarse
@@ -279,41 +264,25 @@ object Similarity {
     * ([[Clustering.kMeansCentroids]], centroids rounded half-up to
     * INTEGERS) files every corpus vector under its nearest list and
     * gives every query its `nProbe` nearest lists — all argmins over
-    * centroid LITERALS (narrow projections, no join), all ties
-    * lexicographic on the list id, so filing and probing hash-replay
-    * in SQL. Driver traffic = nLists·dim longs (the kMeans
+    * the ONE coarse centroid literal (narrow projections, no join),
+    * all ties lexicographic on the list id, so filing and probing
+    * hash-replay in SQL. Driver traffic = nLists·dim longs (the kMeans
     * tiny-metadata contract). Returns (docLists: (c_id, list_id),
     * probes: (q_id, list_id)). */
   private def quantCoarseLists(corp: DataFrame, qs: DataFrame,
                                nLists: Int, nProbe: Int, iters: Int,
                                seed: String, dim: Int, scale: Double)
       : (DataFrame, DataFrame) = {
-    val coarse = Clustering.kMeansCentroids(
-      corp.select(col("c_id"), col("c_vec")),
-      col("c_id"), col("c_vec"), nLists, iters, s"$seed-coarse", dim,
-      assumeUnique = true)
-      .map { case (cid, c) => (cid, c.map(x => math.floor(x + 0.5))) }
-    val qv = (v: Column) => transform(v,
-      x => floor(x.cast("double") * scale + lit(0.5)).cast("double"))
-    // one nested literal for the coarse centroids too (coarse cids are
-    // dense 0..nLists−1 and cid-ascending — position = cid, exactly
-    // the old zipWithIndex pairing); same narrow no-join shape, ~1/k
-    // the plan text
-    val coarseLit = typedLit(coarse.sortBy(_._1).map(_._2))
-    // the quantized vector and its self-dot are their own projection:
-    // their nLists uses in the argmin keep CollapseProject from
-    // inlining (and so re-evaluating) the interpreted quantize
-    // transform and the self-dot per centroid
-    def withSub(df: DataFrame, id: String, vec: String): DataFrame =
-      df.select(col(id), qv(col(vec)).as("_sub"))
-        .withColumn("_xx", dotProduct(col("_sub"), col("_sub")))
-    def coarseCands: Column =
-      array_sort(candStructs(col("_sub"), col("_xx"), coarseLit))
-    val docLists = withSub(corp, "c_id", "c_vec").select(col("c_id"),
-      coarseCands.getItem(0).getField("_cid").as("list_id"))
-    val probes = withSub(qs, "q_id", "q_vec").select(col("q_id"),
-      explode(transform(slice(coarseCands, 1, nProbe),
-        s => s.getField("_cid"))).as("list_id"))
+    val coarse = centroidLit(rounded(Clustering.kMeansCentroids(
+      corp, col("c_id"), col("c_vec"), nLists, iters, s"$seed-coarse", dim)))
+    val docLists = subvectors(corp, "c_id", "c_vec", 1, dim, scale)
+      .select(col("_id").as("c_id"),
+        nearest(col("_xq"), col("_xx"), coarse).getField("_cid").as("list_id"))
+    val probes = subvectors(qs, "q_id", "q_vec", 1, dim, scale)
+      .select(col("_id").as("q_id"),
+        explode(transform(
+          slice(array_sort(candStructs(col("_xq"), col("_xx"), coarse)), 1, nProbe),
+          c => c.getField("_cid"))).as("list_id"))
     (docLists, probes)
   }
 
@@ -333,8 +302,12 @@ object Similarity {
     * for probed lists only (~nProbe/nLists of the corpus per query);
     * the query side broadcasts (queries are the small side by
     * contract); distance is one fused dot-product chain per pair; the
-    * per-query cut rides the bounded-heap top-k. NULL vectors drop;
-    * self-matches are excluded.
+    * per-query cut rides the bounded-heap top-k. Self-matches are
+    * excluded.
+    *
+    * Both sides are prepped at construction: NULL vectors drop, any
+    * length but `dim` refuses loudly on EITHER side, and the query side
+    * must be SMALL (checkpointed unspread, broadcast into every join).
     *
     * Returns (q_id, rank, c_id, dist2) — dist2 the exact quantized
     * L2², a LONG. */
@@ -344,10 +317,7 @@ object Similarity {
                    scale: Double = 10000.0): DataFrame = {
     require(nLists >= 2 && nProbe >= 1 && nProbe <= nLists,
       s"need 2 <= nLists and 1 <= nProbe <= nLists: $nLists/$nProbe")
-    val corp = prepKeyed(corpus.filter(col("c_vec").isNotNull),
-      "c_id", "c_vec", "ivfTopKQuant")
-    val qs = prepKeyed(queries.filter(col("q_vec").isNotNull),
-      "q_id", "q_vec", "ivfTopKQuant", spread = false)
+    val (qs, corp) = prepSides(queries, corpus, "ivfTopKQuant", dim)
     ivfTopKQuantPrepped(qs, corp, k, nLists, nProbe, dim, iters, seed,
       scale)
   }
@@ -389,15 +359,16 @@ object Similarity {
     * path); the PQ side is [[pqTopK]]. One k-row-per-query join
     * computes the overlap. Returns (q_id, n_hit, recall); the mean
     * over queries is one trivial aggregation away for callers that
-    * want the single-number summary. */
+    * want the single-number summary.
+    *
+    * Both sides are prepped at construction: NULL vectors drop, any
+    * length but m·subDim refuses loudly on EITHER side, and the query side
+    * must be SMALL (checkpointed unspread, broadcast into every join). */
   def pqRecall(queries: DataFrame, corpus: DataFrame, k: Int,
                m: Int = 8, subDim: Int = 8, codebookK: Int = 16,
                iters: Int = 2, seed: String = "pq",
                scale: Double = 10000.0): DataFrame = {
-    val corp = prepKeyed(corpus.filter(col("c_vec").isNotNull),
-      "c_id", "c_vec", "pqRecall")
-    val qs = prepKeyed(queries.filter(col("q_vec").isNotNull),
-      "q_id", "q_vec", "pqRecall", spread = false)
+    val (qs, corp) = prepSides(queries, corpus, "pqRecall", m * subDim)
     recallVsExactL2(
       pqTopKPrepped(qs, corp, k, m, subDim, codebookK, iters, seed, scale),
       qs, corp, k, scale)
@@ -411,15 +382,16 @@ object Similarity {
     * so this recall TABLE hash-replays too — the published honesty
     * artifact the float IVF could only enforce as an in-plan
     * assert. Same evaluation-op caveat as [[pqRecall]]: ground truth
-    * is the definitionally-linear brute scan, run on a query SAMPLE. */
+    * is the definitionally-linear brute scan, run on a query SAMPLE.
+    *
+    * Both sides are prepped at construction: NULL vectors drop, any
+    * length but `dim` refuses loudly on EITHER side, and the query side
+    * must be SMALL (checkpointed unspread, broadcast into every join). */
   def ivfRecall(queries: DataFrame, corpus: DataFrame, k: Int,
                 nLists: Int = 8, nProbe: Int = 2, dim: Int = 64,
                 iters: Int = 2, seed: String = "ivf",
                 scale: Double = 10000.0): DataFrame = {
-    val corp = prepKeyed(corpus.filter(col("c_vec").isNotNull),
-      "c_id", "c_vec", "ivfRecall")
-    val qs = prepKeyed(queries.filter(col("q_vec").isNotNull),
-      "q_id", "q_vec", "ivfRecall", spread = false)
+    val (qs, corp) = prepSides(queries, corpus, "ivfRecall", dim)
     recallVsExactL2(
       ivfTopKQuantPrepped(qs, corp, k, nLists, nProbe, dim, iters, seed,
         scale),
@@ -469,6 +441,10 @@ object Similarity {
     * candidate stage (a true neighbor ADC misses stays missed — the
     * standard two-stage trade, tuned by candK).
     *
+    * Both sides are prepped at construction: NULL vectors drop, any
+    * length but m·subDim refuses loudly on EITHER side, and the query side
+    * must be SMALL (checkpointed unspread, broadcast into every join).
+    *
     * Returns (q_id, rank, c_id, dist2) — dist2 the EXACT quantized
     * L2², a LONG. */
   def pqRerankTopK(queries: DataFrame, corpus: DataFrame, k: Int,
@@ -477,10 +453,7 @@ object Similarity {
                    seed: String = "pq",
                    scale: Double = 10000.0): DataFrame = {
     require(candK >= k, s"candK must be >= k: $candK < $k")
-    val corp = prepKeyed(corpus.filter(col("c_vec").isNotNull),
-      "c_id", "c_vec", "pqRerankTopK")
-    val qs = prepKeyed(queries.filter(col("q_vec").isNotNull),
-      "q_id", "q_vec", "pqRerankTopK", spread = false)
+    val (qs, corp) = prepSides(queries, corpus, "pqRerankTopK", m * subDim)
     val cand = pqTopKPrepped(qs, corp, candK, m, subDim, codebookK,
       iters, seed, scale).select(col("q_id"), col("c_id"))
     cand
@@ -502,7 +475,7 @@ object Similarity {
     * is unchanged, so the codebooks are bit-identical to m sequential
     * loops). Concurrency with OTHER trainings (the coarse quantizer)
     * lives in [[pqCodebooksAsync]]/[[ivfPqTopK]], not here. The input
-    * arrives pre-deduped and checkpointed (the [[prepKeyed]]
+    * arrives pre-deduped and checkpointed (the [[prepSides]]
     * contract), so no per-training dedup exchange runs. */
   private def pqCodebooksAsync(corp: DataFrame, m: Int, subDim: Int,
                                codebookK: Int, iters: Int, seed: String,
@@ -524,13 +497,21 @@ object Similarity {
     Clustering.kMeansCentroidsFused(
       corp, col("c_id"), col("c_vec"), codebookK, iters, s"$seed-",
       slices = m, sliceLen = subDim, scale = scale.toLong)
-      .map(_.map { case (cid, c) => (cid, c.map(x => math.floor(x + 0.5))) })
+      .map(rounded)
   }
 
-  private def quantSub(vec: Column, s: Int, subDim: Int,
-                       scale: Double): Column =
-    transform(slice(vec, s * subDim + 1, subDim),
-      x => floor(x.cast("double") * scale + lit(0.5)).cast("double"))
+  /** Trained centroids rounded half-up to INTEGERS — the integral
+    * space in which every PQ/IVF distance below is exact. */
+  private def rounded(cents: Seq[(Int, Seq[Double])]): Seq[(Int, Seq[Double])] =
+    cents.map { case (cid, c) => (cid, c.map(x => math.floor(x + 0.5))) }
+
+  /** (_id, _s, _xq, _xx): a prepped side's quantized vectors as
+    * `slices` sub-vectors of `sliceLen` ([[Clustering.slicedRows]]). */
+  private def subvectors(side: DataFrame, id: String, vec: String,
+                         slices: Int, sliceLen: Int,
+                         scale: Double): DataFrame =
+    slicedRows(side.select(col(id).as("_id"),
+      quantize(col(vec), scale).as("_xq")), slices, sliceLen)
 
   /** One side of an exact quantized-L2 join: (id, quantized vector,
     * its self-dot), computed ONCE per row on the pre-join side — the
@@ -546,9 +527,7 @@ object Similarity {
     require(p == "q" || p == "c",
       s"quantSide id column must start with 'q' (query side) or 'c' " +
         s"(corpus side), got '$id': exactD2 reads _qq/_qq2/_cq/_cq2")
-    df.select(col(id), transform(col(vec),
-        x => floor(x.cast("double") * scale + lit(0.5)).cast("double"))
-        .as(s"_${p}q"))
+    df.select(col(id), quantize(col(vec), scale).as(s"_${p}q"))
       .withColumn(s"_${p}q2", dotProduct(col(s"_${p}q"), col(s"_${p}q")))
   }
 
@@ -559,67 +538,28 @@ object Similarity {
     col("_qq2") - lit(2.0) * dotProduct(col("_qq"), col("_cq")) +
       col("_cq2")
 
-  /** The whole codebook family as ONE nested array literal, indexed
-    * `[slice][cid]` (cids are dense 0..k−1 by the seeding contract, so
-    * the position IS the cid) — r15: the per-codeword expression trees
-    * (m·k dotProduct calls against per-codeword `typedLit`s) made the
-    * PQ plans ~150 KB of literals, re-planned and re-codegen'd on
-    * every pass (q179 profile: ~0.9 s driver gap before the final
-    * job). One `typedLit` node carries the same doubles as plain data. */
-  private def cbLit(cbs: Seq[Seq[(Int, Seq[Double])]]): Column =
-    typedLit(cbs.map(_.sortBy(_._1).map(_._2)))
+  /** The row's own slice's codebook: the per-slice centroid literals
+    * nested into one `[slice][cid]` array, indexed by `_s`. */
+  private def ownCodebook(cbs: Seq[Seq[(Int, Seq[Double])]]): Column =
+    element_at(array(cbs.map(centroidLit): _*), col("_s") + 1)
 
-  /** dist²(sub, cv) with the SAME op sequence as the old per-codeword
-    * literal form: x·x − 2·x·c + c·c, every dot the sequential
-    * `graft_dot` fold — c·c through `graft_dot(cv, cv)` runs the
-    * identical multiply-add order the driver's
-    * `foldLeft(0.0)((a,v) => a + v*v)` did, so every distance (and
-    * therefore every code, LUT entry, and rank) is bit-identical.
-    * `xx` arrives PRECOMPUTED (one self-dot per row instead of one
-    * per codeword — the old literal form re-ran `graft_dot(sub, sub)`
-    * k times per row; the value, and hence every distance, is
-    * unchanged). */
-  private def distTo(sub: Column, xx: Column, cv: Column): Column =
-    xx - lit(2.0) * dotProduct(sub, cv) + dotProduct(cv, cv)
-
-  /** (dist², cid) candidate structs for a row's sub-vector against one
-    * slice's codebook array — the shared argmin/LUT kernel; the
-    * lexicographic struct sort is order-independent, so the array
-    * layout of the literal cannot affect any pick. */
-  private def candStructs(sub: Column, xx: Column, cb: Column): Column =
-    transform(cb, (cv, i) =>
-      struct(distTo(sub, xx, cv).as("_d"), i.as("_cid")))
-
-  /** (c_id, s, code): the m sub-vectors posexplode once, each row
-    * argmins against ITS slice's codebook from the single literal;
-    * code = lexicographic (dist², cid) min. The self-dot `_xx` is a
-    * separate projection: its 2k uses in the argmin keep
-    * CollapseProject from inlining (and so re-evaluating) it. */
+  /** (c_id, s, code): each corpus sub-vector's [[Clustering.nearest]]
+    * codeword in its slice's codebook. */
   private def pqCodes(corp: DataFrame, cbs: Seq[Seq[(Int, Seq[Double])]],
                       subDim: Int, scale: Double): DataFrame =
-    corp.select(col("c_id"),
-        posexplode(array(cbs.indices.map { s =>
-          quantSub(col("c_vec"), s, subDim, scale)
-        }: _*)).as(Seq("s", "sub")))
-      .withColumn("_xx", dotProduct(col("sub"), col("sub")))
-      .select(col("c_id"), col("s"),
-        array_sort(candStructs(col("sub"), col("_xx"),
-          element_at(cbLit(cbs), col("s") + 1)))
-          .getItem(0).getField("_cid").as("code"))
+    subvectors(corp, "c_id", "c_vec", cbs.size, subDim, scale)
+      .select(col("_id").as("c_id"), col("_s").as("s"),
+        nearest(col("_xq"), col("_xx"), ownCodebook(cbs))
+          .getField("_cid").as("code"))
 
   /** (q_id, s, code, d2): the Q·m·k asymmetric-distance lookup table —
-    * the code is the codeword's position (= cid), exactly the old
-    * cid-ascending posexplode order. */
+    * the code is the codeword's position (= cid). */
   private def pqLut(qs: DataFrame, cbs: Seq[Seq[(Int, Seq[Double])]],
                     subDim: Int, scale: Double): DataFrame =
-    qs.select(col("q_id"),
-        posexplode(array(cbs.indices.map { s =>
-          quantSub(col("q_vec"), s, subDim, scale)
-        }: _*)).as(Seq("s", "sub")))
-      .withColumn("_xx", dotProduct(col("sub"), col("sub")))
-      .select(col("q_id"), col("s"),
-        posexplode(transform(element_at(cbLit(cbs), col("s") + 1),
-          cv => distTo(col("sub"), col("_xx"), cv))).as(Seq("code", "d2")))
+    subvectors(qs, "q_id", "q_vec", cbs.size, subDim, scale)
+      .select(col("_id").as("q_id"), col("_s").as("s"),
+        posexplode(transform(ownCodebook(cbs),
+          c => distTo(col("_xq"), col("_xx"), c))).as(Seq("code", "d2")))
 
   /** Σ over the m joined lookup terms → per-query (dist, id) rank cut.
     * The terms are integer-valued doubles, so the sum is
@@ -635,6 +575,9 @@ object Similarity {
       .select(col("q_id"), col("rank"), col("c_id"),
         col("_adc").cast("long").as("adc_dist2"))
 
+  /** Exact top-k cosine neighbors for each query vector.
+    * `queries`/`corpus` need (id, vec) columns; result: one row per
+    * (query, rank ≤ k). */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                      qId: String = "q_id", cId: String = "c_id",
                      excludeSameId: Boolean = true): DataFrame = {

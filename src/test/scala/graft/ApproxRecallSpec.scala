@@ -288,4 +288,40 @@ class ApproxRecallSpec extends SparkSpec {
     // query's own quantization residual — the minimum any doc can score
     assert(top._3 === 999L, top)
   }
+
+  // the native dot folds a ragged pair to the shorter length, so a
+  // wrong-length vector on either side must refuse, not score
+  private def lcgVecs(n: Int, dim: Int): Seq[(Long, Seq[Float])] = {
+    def lcg(x: Long) = x * 6364136223846793005L + 1442695040888963407L
+    (1L to n.toLong).map { i =>
+      (i, Iterator.iterate(lcg(i))(lcg).take(dim)
+        .map(h => (math.floorMod(h, 2000) - 1000) / 1000.0f).toSeq)
+    }
+  }
+
+  private def msgs(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+
+  test("pqTopK refuses a corpus vector longer than m·subDim (its tail " +
+      "would be ignored)") {
+    val c = (lcgVecs(20, 64) :+ ((99L, lcgVecs(1, 72).head._2)))
+      .toDF("c_id", "c_vec")
+    val q = lcgVecs(2, 64).toDF("q_id", "q_vec")
+    val e = intercept[Exception] {
+      Similarity.pqTopK(q, c, k = 3, m = 8, subDim = 8, codebookK = 4,
+        iters = 1, seed = "len").collect()
+    }
+    assert(msgs(e).exists(_.contains("vector dimension guard")), e.toString)
+  }
+
+  test("ivfTopKQuant refuses a query vector shorter than dim (it would " +
+      "be probed and scored on a min-length fold)") {
+    val c = lcgVecs(20, 64).toDF("c_id", "c_vec")
+    val q = Seq((1L, lcgVecs(1, 60).head._2)).toDF("q_id", "q_vec")
+    val e = intercept[Exception] {
+      Similarity.ivfTopKQuant(q, c, k = 3, nLists = 2, nProbe = 1,
+        dim = 64, iters = 1, seed = "len").collect()
+    }
+    assert(msgs(e).exists(_.contains("vector dimension guard")), e.toString)
+  }
 }

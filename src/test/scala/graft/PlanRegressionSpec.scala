@@ -521,4 +521,27 @@ class PlanRegressionSpec extends SparkSpec {
       s"the IVF serving path must never plan a cross product (that is " +
         s"q212's evaluation-side brute scan, not this query):\n$p")
   }
+
+  test("q108/q208 trained centroids: ONE nested centroid literal, no " +
+      "per-centroid literals") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    Seq("q108_kmeans_embeddings", "q208_label_coherence").foreach { name =>
+      val plan = Queries.queries(name)(spark, sf("sf0.001"))
+        .queryExecution.optimizedPlan
+      val lits = plan.flatMap(_.expressions.flatMap(
+        _.collect { case l: Literal => l.dataType }))
+      val nested = lits.count {
+        case ArrayType(ArrayType(DoubleType, _), _) => true
+        case _ => false
+      }
+      val flat = lits.count {
+        case ArrayType(DoubleType, _) => true
+        case _ => false
+      }
+      assert(nested === 1 && flat === 0,
+        s"$name must carry its centroids as exactly one array<array<double>> " +
+          s"literal (got $nested) and no array<double> literal (got $flat):\n$plan")
+    }
+  }
 }
