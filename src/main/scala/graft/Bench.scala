@@ -133,24 +133,31 @@ object Bench {
     // (BENCH_r07 `parsed: null`). So: full-precision detail goes to a
     // file + an early line (greppable in full logs), and the LAST line
     // is guaranteed to fit the tail window — per-query mins at 3dp
-    // when that fits in ~1800 chars, totals-only otherwise.
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "/root/repo/BENCH_DETAIL.json")
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(detailPath),
-      (detail + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }                // bench must not fail on a write
+    // when that fits in ~1800 chars, totals-only otherwise. A full run
+    // writes BENCH_DETAIL.json in the working directory; a subset run
+    // writes only where SPARK_GRAFT_BENCH_DETAIL names a path, so it
+    // never overwrites a full run's detail file.
+    val detailPath = sys.env.get("SPARK_GRAFT_BENCH_DETAIL")
+      .orElse(Option.when(benchOnly.isEmpty)("BENCH_DETAIL.json"))
+      .map(p => java.nio.file.Paths.get(p).toAbsolutePath)
+    detailPath.foreach { p =>
+      try java.nio.file.Files.write(p, (detail + "\n").getBytes("UTF-8"))
+      catch { case _: Throwable => () }              // bench must not fail on a write
+    }
     println(detail)
 
     // degradation ladder: per-query mins at 3 dp, then 2 dp (57 names
     // at 3 dp outgrow the budget; 2 dp still fits and sub-10ms
     // precision is noise at these magnitudes), then totals-only
+    val detailField =
+      detailPath.fold("")(p => s""","detail":"${js(p.toString)}"""")
     def summaryLine(queryDp: Int): String = {
       val q = if (queryDp > 0) {
         val m = results.map { case (k, v) => "\"" + k + "\":" + rd(v.min, queryDp) }
           .mkString("{", ",", "}")
         s""","queries":$m"""
       } else ""
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_med":${r3(totalMed)},"n_queries":${results.size}$q,"failed":$fs,"sf":"${js(sfDir)}"$subsetField,"detail":"${js(detailPath)}"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_med":${r3(totalMed)},"n_queries":${results.size}$q,"failed":$fs,"sf":"${js(sfDir)}"$subsetField$detailField}"""
     }
     // lazy ladder: stop serializing at the first rung that fits (the
     // dp=0 rung always fits in practice; if even it overflows — an

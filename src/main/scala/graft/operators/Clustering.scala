@@ -19,8 +19,8 @@ import graft.functions.GraftFunctions._
   * engines — disagree in the last ulps, and near-boundary points then
   * flip clusters. We remove the order dependence instead of rounding
   * it away: coordinates are quantized once to INTEGRAL doubles
-  * (`floor(x·scale + 0.5)`, exact in IEEE for |x·scale| < 2^53), so
-  * per-dimension member sums are integer-valued and therefore
+  * (`floor(x·QuantScale + 0.5)`, exact in IEEE for
+  * |x·QuantScale| < 2^53), so per-dimension member sums are integer-valued and therefore
   * associative-exact in ANY summation order, and each centroid
   * coordinate `sum/count` is a single exact division. Distances on
   * (integral member, rational centroid) pairs use one fixed op
@@ -62,7 +62,7 @@ object Clustering {
     * centroids mean the labels don't separate).
     *
     * Bit-portable by the same move as [[kMeans]]: components quantize
-    * to LONGS (`floor(x·scale + 0.5) cast long`), so the per-(group,
+    * to LONGS (`floor(x·QuantScale + 0.5) cast long`), so the per-(group,
     * dim) sums and the dot/norm product sums are integer-exact in any
     * shuffle order — and past their range they fail LOUDLY (ANSI long
     * overflow) rather than silently drifting, the way double
@@ -72,7 +72,7 @@ object Clustering {
     * sqrt is exactly rounded by IEEE, and whose one division is
     * deterministic. The whole matrix hash-replays in the SQL oracle
     * with zero float-order caveats (unlike the ln-based JS, which
-    * leans on r(·)). Range: unit-scale embeddings at scale=10⁴ give
+    * leans on r(·)). Range: unit-scale embeddings at QuantScale=10⁴ give
     * |s| ≤ 10⁴·n_grp, so s·s sums stay under 2^63 while
     * dim·(10⁴·n_grp)² < 9.2e18 — ~10⁸ docs per group at dim 64; the
     * loud overflow marks the ceiling instead of a wrong matrix.
@@ -87,13 +87,12 @@ object Clustering {
     * zero-NORM centroids score 0.0 against everything (the
     * [[GraftFunctions.cosine]] convention). Returns
     * (grp_a, grp_b, cos). */
-  def groupCentroidCosine(df: DataFrame, group: Column, vec: Column,
-                          scale: Double = 10000.0): DataFrame = {
+  def groupCentroidCosine(df: DataFrame, group: Column, vec: Column): DataFrame = {
     val comp = OpUtils.barrier(
       df.filter(group.isNotNull && vec.isNotNull)
         .select(group.as("grp"), posexplode(vec).as(Seq("d", "x")))
         .groupBy(col("grp"), col("d"))
-        .agg(sum(floor(col("x") * scale + lit(0.5)).cast("long")).as("s")),
+        .agg(sum(floor(col("x") * QuantScale + lit(0.5)).cast("long")).as("s")),
       reliable = false)
     val norms = comp.groupBy(col("grp"))
       .agg(sum(col("s") * col("s")).as("n2"))
@@ -150,7 +149,6 @@ object Clustering {
     * the native dot/norm fold's null-as-0.0 law on the scoring side. */
   def labelCoherenceMargin(df: DataFrame, vec: Column, label: Column,
                            dim: Int,
-                           scale: Double = 10000.0,
                            reliableCheckpoint: Boolean = false): DataFrame = {
     val r = graft.functions.GraftFunctions.r _
     // barrier BEFORE the centroid collect (the lloydInput contract): the
@@ -168,7 +166,7 @@ object Clustering {
       .select(col("_l"), posexplode(col("_v")).as(Seq("_d", "_x")))
       .groupBy(col("_l"), col("_d"))
       .agg(coalesce(
-        sum(floor(col("_x") * scale + lit(0.5)).cast("long")), lit(0L))
+        sum(floor(col("_x") * QuantScale + lit(0.5)).cast("long")), lit(0L))
         .as("_s"))
       .collect()
     val cents: Map[Long, Seq[Double]] = comps.groupBy(_.getLong(0)).map {
@@ -205,10 +203,8 @@ object Clustering {
 
   /** Lloyd's k-means, engine-portable (see class doc).
     *
-    * @param df    input with `id` and `vec` (array&lt;float|double&gt;)
-    * @param scale quantization factor (coordinates become
-    *              `floor(x·scale + 0.5)`); 10000 keeps 4 decimals of
-    *              a unit-scale embedding, far inside the 2^53 window
+    * @param df    input with `id` and `vec` (array&lt;float|double&gt;),
+    *              quantized at [[QuantScale]]
     * @return one row per DISTINCT id — exact-duplicate (id, vector)
     *         replays collapse idempotently; same-id CONFLICTING
     *         vectors refuse loudly (see lloydInput): (id, cluster_id,
@@ -220,9 +216,8 @@ object Clustering {
     *         input refuses loudly.
     */
   def kMeans(df: DataFrame, id: Column, vec: Column, k: Int, iters: Int,
-             seed: String, dim: Int, scale: Long = 10000L): DataFrame = {
-    val xq = lloydInput(df, id, vec, slices = 1, sliceLen = dim, scale,
-      dedup = true)
+             seed: String, dim: Int): DataFrame = {
+    val xq = lloydInput(df, id, vec, slices = 1, sliceLen = dim, dedup = true)
     assigned(xq, lloydLoop(xq, k, iters, seed))
       .select(col("_id").as("id"), col("_cid").as("cluster_id"),
         col("_dist2").as("dist2"))
@@ -238,9 +233,8 @@ object Clustering {
     * deduped upstream. */
   private[operators] def kMeansCentroids(
       df: DataFrame, id: Column, vec: Column, k: Int, iters: Int,
-      seed: String, dim: Int,
-      scale: Long = 10000L): Seq[(Int, Seq[Double])] =
-    lloydLoop(lloydInput(df, id, vec, slices = 1, sliceLen = dim, scale,
+      seed: String, dim: Int): Seq[(Int, Seq[Double])] =
+    lloydLoop(lloydInput(df, id, vec, slices = 1, sliceLen = dim,
       dedup = false), k, iters, seed)
 
   /** ALL `slices` per-slice Lloyd loops fused into ONE driver loop —
@@ -267,12 +261,12 @@ object Clustering {
     * Returns codebooks slice-ascending. */
   private[operators] def kMeansCentroidsFused(
       df: DataFrame, id: Column, vec: Column, k: Int, iters: Int,
-      seedPrefix: String, slices: Int, sliceLen: Int,
-      scale: Long = 10000L): Seq[Seq[(Int, Seq[Double])]] = {
+      seedPrefix: String, slices: Int,
+      sliceLen: Int): Seq[Seq[(Int, Seq[Double])]] = {
     require(slices >= 1 && sliceLen >= 1,
       s"need slices, sliceLen >= 1: $slices/$sliceLen")
     lloydCentsInPlan(
-      lloydInput(df, id, vec, slices, sliceLen, scale, dedup = false),
+      lloydInput(df, id, vec, slices, sliceLen, dedup = false),
       concat(lit(seedPrefix), col("_s").cast("string"),
         col("_id").cast("string"), lit("#graft-kmeans")),
       k, iters, slices).toSeq
@@ -303,7 +297,7 @@ object Clustering {
     *    r14 bench: the PQ family paid this exchange 9× per query);
     *  - posexplode the slices with their self-dots ([[slicedRows]]). */
   private def lloydInput(df: DataFrame, id: Column, vec: Column,
-                         slices: Int, sliceLen: Int, scale: Long,
+                         slices: Int, sliceLen: Int,
                          dedup: Boolean): DataFrame = {
     val dim = slices * sliceLen
     val rowOk =
@@ -317,7 +311,7 @@ object Clustering {
         lit("Clustering.kMeans: NULL vector — filter or impute " +
           "upstream; a NULL row cannot be assigned to any cluster"))
       .otherwise(lit(s"Clustering.kMeans: vector length must equal dim=$dim"))
-    val quant = df.select(id.as("_id"), quantize(vec, scale.toDouble).as("_xq"))
+    val quant = df.select(id.as("_id"), quantize(vec).as("_xq"))
       .filter(coalesce(assert_true(rowOk, rowMsg), lit(true)))
     val rows =
       if (dedup) dedupKeyed(quant, "_id", "_xq", "Clustering.kMeans: duplicate id")
@@ -415,12 +409,20 @@ object Clustering {
 
   // ---- the trained-centroid path shared with Similarity's PQ/IVF ---- //
 
+  /** The one quantization factor of the trained family and of the
+    * centroid cosines: coordinates become `floor(x·QuantScale + 0.5)`.
+    * 10000 keeps 4 decimals of a unit-scale embedding, far inside the
+    * 2^53 window, and is the factor the SQL oracles replay. One
+    * constant, so no quantizer can be trained in one space and filed
+    * or probed in another. */
+  private[operators] val QuantScale = 10000.0
+
   /** The one vector quantizer of the trained family: every element to
-    * the INTEGRAL double `floor(x·scale + 0.5)` (exact for
-    * |x·scale| < 2^53 — see the class doc). */
-  private[operators] def quantize(vec: Column, scale: Double): Column =
+    * the INTEGRAL double `floor(x·QuantScale + 0.5)` (exact for
+    * |x·QuantScale| < 2^53 — see the class doc). */
+  private[operators] def quantize(vec: Column): Column =
     transform(vec,
-      x => floor(x.cast("double") * lit(scale) + lit(0.5)).cast("double"))
+      x => floor(x.cast("double") * lit(QuantScale) + lit(0.5)).cast("double"))
 
   /** (_id, _s, _xq, _xx) from (_id, _xq): each quantized vector split
     * into `slices` contiguous `sliceLen` sub-vectors, one row per

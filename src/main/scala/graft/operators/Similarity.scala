@@ -191,10 +191,9 @@ object Similarity {
     * quantized space. */
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
              m: Int = 8, subDim: Int = 8, codebookK: Int = 16,
-             iters: Int = 2, seed: String = "pq",
-             scale: Double = 10000.0): DataFrame = {
+             iters: Int = 2, seed: String = "pq"): DataFrame = {
     val (qs, corp) = prepSides(queries, corpus, "pqTopK", m * subDim)
-    pqTopKPrepped(qs, corp, k, m, subDim, codebookK, iters, seed, scale)
+    pqTopKPrepped(qs, corp, k, m, subDim, codebookK, iters, seed)
   }
 
   /** [[pqTopK]] over PRE-DEDUPED sides (corp checkpointed) — the body
@@ -202,12 +201,11 @@ object Similarity {
     * the scan + dedup prep runs once per side, not once per stage. */
   private def pqTopKPrepped(qs: DataFrame, corp: DataFrame, k: Int,
                             m: Int, subDim: Int, codebookK: Int,
-                            iters: Int, seed: String,
-                            scale: Double): DataFrame = {
-    val cbs = pqCodebooks(corp, m, subDim, codebookK, iters, seed, scale)
+                            iters: Int, seed: String): DataFrame = {
+    val cbs = pqCodebooks(corp, m, subDim, codebookK, iters, seed)
     rankAdc(
-      pqCodes(corp, cbs, subDim, scale)
-        .join(broadcast(pqLut(qs, cbs, subDim, scale)), Seq("s", "code")),
+      pqCodes(corp, cbs, subDim)
+        .join(broadcast(pqLut(qs, cbs, subDim)), Seq("s", "code")),
       k)
   }
 
@@ -234,8 +232,7 @@ object Similarity {
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                 nLists: Int = 8, nProbe: Int = 2,
                 m: Int = 8, subDim: Int = 8, codebookK: Int = 16,
-                iters: Int = 2, seed: String = "pq",
-                scale: Double = 10000.0): DataFrame = {
+                iters: Int = 2, seed: String = "pq"): DataFrame = {
     require(nLists >= 2 && nProbe >= 1 && nProbe <= nLists,
       s"need 2 <= nLists and 1 <= nProbe <= nLists: $nLists/$nProbe")
     val dim = m * subDim
@@ -244,17 +241,16 @@ object Similarity {
     // mutually independent Lloyd loops over the SAME checkpointed
     // corpus — kick the codebooks off on the pool, train the coarse
     // quantizer on this thread, await the codebooks after
-    val cbsF = pqCodebooksAsync(corp, m, subDim, codebookK, iters, seed,
-      scale)
+    val cbsF = pqCodebooksAsync(corp, m, subDim, codebookK, iters, seed)
     val (docLists, probes) =
-      quantCoarseLists(corp, qs, nLists, nProbe, iters, seed, dim, scale)
+      quantCoarseLists(corp, qs, nLists, nProbe, iters, seed, dim)
     val cbs = awaitAll(cbsF)
     val pairs = docLists.join(broadcast(probes), Seq("list_id"))
       .select(col("q_id"), col("c_id"))
     rankAdc(
       pairs
-        .join(pqCodes(corp, cbs, subDim, scale), Seq("c_id"))
-        .join(broadcast(pqLut(qs, cbs, subDim, scale)),
+        .join(pqCodes(corp, cbs, subDim), Seq("c_id"))
+        .join(broadcast(pqLut(qs, cbs, subDim)),
           Seq("q_id", "s", "code")),
       k)
   }
@@ -271,14 +267,14 @@ object Similarity {
     * probes: (q_id, list_id)). */
   private def quantCoarseLists(corp: DataFrame, qs: DataFrame,
                                nLists: Int, nProbe: Int, iters: Int,
-                               seed: String, dim: Int, scale: Double)
+                               seed: String, dim: Int)
       : (DataFrame, DataFrame) = {
     val coarse = centroidLit(rounded(Clustering.kMeansCentroids(
       corp, col("c_id"), col("c_vec"), nLists, iters, s"$seed-coarse", dim)))
-    val docLists = subvectors(corp, "c_id", "c_vec", 1, dim, scale)
+    val docLists = subvectors(corp, "c_id", "c_vec", 1, dim)
       .select(col("_id").as("c_id"),
         nearest(col("_xq"), col("_xx"), coarse).getField("_cid").as("list_id"))
-    val probes = subvectors(qs, "q_id", "q_vec", 1, dim, scale)
+    val probes = subvectors(qs, "q_id", "q_vec", 1, dim)
       .select(col("_id").as("q_id"),
         explode(transform(
           slice(array_sort(candStructs(col("_xq"), col("_xx"), coarse)), 1, nProbe),
@@ -313,27 +309,24 @@ object Similarity {
     * L2², a LONG. */
   def ivfTopKQuant(queries: DataFrame, corpus: DataFrame, k: Int,
                    nLists: Int = 8, nProbe: Int = 2, dim: Int = 64,
-                   iters: Int = 2, seed: String = "ivf",
-                   scale: Double = 10000.0): DataFrame = {
+                   iters: Int = 2, seed: String = "ivf"): DataFrame = {
     require(nLists >= 2 && nProbe >= 1 && nProbe <= nLists,
       s"need 2 <= nLists and 1 <= nProbe <= nLists: $nLists/$nProbe")
     val (qs, corp) = prepSides(queries, corpus, "ivfTopKQuant", dim)
-    ivfTopKQuantPrepped(qs, corp, k, nLists, nProbe, dim, iters, seed,
-      scale)
+    ivfTopKQuantPrepped(qs, corp, k, nLists, nProbe, dim, iters, seed)
   }
 
   /** [[ivfTopKQuant]] over PRE-DEDUPED, checkpointed sides — the body
     * [[ivfRecall]] calls so the prep runs once per side. */
   private def ivfTopKQuantPrepped(qs: DataFrame, corp: DataFrame, k: Int,
                                   nLists: Int, nProbe: Int, dim: Int,
-                                  iters: Int, seed: String,
-                                  scale: Double): DataFrame = {
+                                  iters: Int, seed: String): DataFrame = {
     val (docLists, probes) =
-      quantCoarseLists(corp, qs, nLists, nProbe, iters, seed, dim, scale)
+      quantCoarseLists(corp, qs, nLists, nProbe, iters, seed, dim)
     val scored = docLists.join(broadcast(probes), Seq("list_id"))
       .filter(col("q_id") =!= col("c_id"))
-      .join(quantSide(corp, "c_id", "c_vec", scale), Seq("c_id"))
-      .join(broadcast(quantSide(qs, "q_id", "q_vec", scale)), Seq("q_id"))
+      .join(quantSide(corp, "c_id", "c_vec"), Seq("c_id"))
+      .join(broadcast(quantSide(qs, "q_id", "q_vec")), Seq("q_id"))
       .select(col("q_id"), col("c_id"), exactD2.cast("long").as("dist2"))
     scored
       .withColumn("rank", row_number().over(
@@ -366,12 +359,11 @@ object Similarity {
     * must be SMALL (checkpointed unspread, broadcast into every join). */
   def pqRecall(queries: DataFrame, corpus: DataFrame, k: Int,
                m: Int = 8, subDim: Int = 8, codebookK: Int = 16,
-               iters: Int = 2, seed: String = "pq",
-               scale: Double = 10000.0): DataFrame = {
+               iters: Int = 2, seed: String = "pq"): DataFrame = {
     val (qs, corp) = prepSides(queries, corpus, "pqRecall", m * subDim)
     recallVsExactL2(
-      pqTopKPrepped(qs, corp, k, m, subDim, codebookK, iters, seed, scale),
-      qs, corp, k, scale)
+      pqTopKPrepped(qs, corp, k, m, subDim, codebookK, iters, seed),
+      qs, corp, k)
   }
 
   /** Recall@k of the quant-IVF ranking ([[ivfTopKQuant]] — q38's
@@ -389,13 +381,11 @@ object Similarity {
     * must be SMALL (checkpointed unspread, broadcast into every join). */
   def ivfRecall(queries: DataFrame, corpus: DataFrame, k: Int,
                 nLists: Int = 8, nProbe: Int = 2, dim: Int = 64,
-                iters: Int = 2, seed: String = "ivf",
-                scale: Double = 10000.0): DataFrame = {
+                iters: Int = 2, seed: String = "ivf"): DataFrame = {
     val (qs, corp) = prepSides(queries, corpus, "ivfRecall", dim)
     recallVsExactL2(
-      ivfTopKQuantPrepped(qs, corp, k, nLists, nProbe, dim, iters, seed,
-        scale),
-      qs, corp, k, scale)
+      ivfTopKQuantPrepped(qs, corp, k, nLists, nProbe, dim, iters, seed),
+      qs, corp, k)
   }
 
   /** The shared evaluation core of [[pqRecall]] and [[ivfRecall]]:
@@ -405,15 +395,14 @@ object Similarity {
     * on the exact side, so a query the approx index strands entirely
     * still emits its row with recall 0. */
   private def recallVsExactL2(approx: DataFrame, qs: DataFrame,
-                              corp: DataFrame, k: Int,
-                              scale: Double): DataFrame = {
+                              corp: DataFrame, k: Int): DataFrame = {
     // the ground-truth side shares the family's replica idempotence
     // (a replayed candidate would otherwise occupy two of the true
     // top-k slots and fan out the overlap join): both sides arrive
     // PRE-DEDUPED and checkpointed from the public entry points, so
     // the prep runs once per side, not once per stage
-    val exact = quantSide(qs, "q_id", "q_vec", scale)
-      .crossJoin(quantSide(corp, "c_id", "c_vec", scale))
+    val exact = quantSide(qs, "q_id", "q_vec")
+      .crossJoin(quantSide(corp, "c_id", "c_vec"))
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"), exactD2.as("_d2"))
       .withColumn("rank", row_number().over(
@@ -450,15 +439,14 @@ object Similarity {
   def pqRerankTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                    candK: Int, m: Int = 8, subDim: Int = 8,
                    codebookK: Int = 16, iters: Int = 2,
-                   seed: String = "pq",
-                   scale: Double = 10000.0): DataFrame = {
+                   seed: String = "pq"): DataFrame = {
     require(candK >= k, s"candK must be >= k: $candK < $k")
     val (qs, corp) = prepSides(queries, corpus, "pqRerankTopK", m * subDim)
     val cand = pqTopKPrepped(qs, corp, candK, m, subDim, codebookK,
-      iters, seed, scale).select(col("q_id"), col("c_id"))
+      iters, seed).select(col("q_id"), col("c_id"))
     cand
-      .join(quantSide(qs, "q_id", "q_vec", scale), Seq("q_id"))
-      .join(quantSide(corp, "c_id", "c_vec", scale), Seq("c_id"))
+      .join(quantSide(qs, "q_id", "q_vec"), Seq("q_id"))
+      .join(quantSide(corp, "c_id", "c_vec"), Seq("c_id"))
       .select(col("q_id"), col("c_id"), exactD2.as("_d2"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("_d2"), col("c_id"))))
@@ -478,11 +466,10 @@ object Similarity {
     * arrives pre-deduped and checkpointed (the [[prepSides]]
     * contract), so no per-training dedup exchange runs. */
   private def pqCodebooksAsync(corp: DataFrame, m: Int, subDim: Int,
-                               codebookK: Int, iters: Int, seed: String,
-                               scale: Double)
+                               codebookK: Int, iters: Int, seed: String)
       : scala.concurrent.Future[Seq[Seq[(Int, Seq[Double])]]] =
     scala.concurrent.Future {
-      pqCodebooks(corp, m, subDim, codebookK, iters, seed, scale)
+      pqCodebooks(corp, m, subDim, codebookK, iters, seed)
     }(trainPool)
 
   private def awaitAll[T](f: scala.concurrent.Future[T]): T =
@@ -490,13 +477,13 @@ object Similarity {
       f, scala.concurrent.duration.Duration.Inf)
 
   private def pqCodebooks(corp: DataFrame, m: Int, subDim: Int,
-                          codebookK: Int, iters: Int, seed: String,
-                          scale: Double): Seq[Seq[(Int, Seq[Double])]] = {
+                          codebookK: Int, iters: Int,
+                          seed: String): Seq[Seq[(Int, Seq[Double])]] = {
     require(m >= 1 && subDim >= 1, s"need m, subDim >= 1: m=$m subDim=$subDim")
     require(codebookK >= 2, s"a 1-word codebook cannot rank: k=$codebookK")
     Clustering.kMeansCentroidsFused(
       corp, col("c_id"), col("c_vec"), codebookK, iters, s"$seed-",
-      slices = m, sliceLen = subDim, scale = scale.toLong)
+      slices = m, sliceLen = subDim)
       .map(rounded)
   }
 
@@ -508,10 +495,9 @@ object Similarity {
   /** (_id, _s, _xq, _xx): a prepped side's quantized vectors as
     * `slices` sub-vectors of `sliceLen` ([[Clustering.slicedRows]]). */
   private def subvectors(side: DataFrame, id: String, vec: String,
-                         slices: Int, sliceLen: Int,
-                         scale: Double): DataFrame =
+                         slices: Int, sliceLen: Int): DataFrame =
     slicedRows(side.select(col(id).as("_id"),
-      quantize(col(vec), scale).as("_xq")), slices, sliceLen)
+      quantize(col(vec)).as("_xq")), slices, sliceLen)
 
   /** One side of an exact quantized-L2 join: (id, quantized vector,
     * its self-dot), computed ONCE per row on the pre-join side — the
@@ -521,13 +507,12 @@ object Similarity {
     * every downstream distance is bit-identical. Column names derive
     * from the id prefix ("q"/"c") so two sides can join; [[exactD2]]
     * reads exactly those names, so any other prefix is refused. */
-  private def quantSide(df: DataFrame, id: String, vec: String,
-                        scale: Double): DataFrame = {
+  private def quantSide(df: DataFrame, id: String, vec: String): DataFrame = {
     val p = id.take(1)
     require(p == "q" || p == "c",
       s"quantSide id column must start with 'q' (query side) or 'c' " +
         s"(corpus side), got '$id': exactD2 reads _qq/_qq2/_cq/_cq2")
-    df.select(col(id), quantize(col(vec), scale).as(s"_${p}q"))
+    df.select(col(id), quantize(col(vec)).as(s"_${p}q"))
       .withColumn(s"_${p}q2", dotProduct(col(s"_${p}q"), col(s"_${p}q")))
   }
 
@@ -546,8 +531,8 @@ object Similarity {
   /** (c_id, s, code): each corpus sub-vector's [[Clustering.nearest]]
     * codeword in its slice's codebook. */
   private def pqCodes(corp: DataFrame, cbs: Seq[Seq[(Int, Seq[Double])]],
-                      subDim: Int, scale: Double): DataFrame =
-    subvectors(corp, "c_id", "c_vec", cbs.size, subDim, scale)
+                      subDim: Int): DataFrame =
+    subvectors(corp, "c_id", "c_vec", cbs.size, subDim)
       .select(col("_id").as("c_id"), col("_s").as("s"),
         nearest(col("_xq"), col("_xx"), ownCodebook(cbs))
           .getField("_cid").as("code"))
@@ -555,8 +540,8 @@ object Similarity {
   /** (q_id, s, code, d2): the Q·m·k asymmetric-distance lookup table —
     * the code is the codeword's position (= cid). */
   private def pqLut(qs: DataFrame, cbs: Seq[Seq[(Int, Seq[Double])]],
-                    subDim: Int, scale: Double): DataFrame =
-    subvectors(qs, "q_id", "q_vec", cbs.size, subDim, scale)
+                    subDim: Int): DataFrame =
+    subvectors(qs, "q_id", "q_vec", cbs.size, subDim)
       .select(col("_id").as("q_id"), col("_s").as("s"),
         posexplode(transform(ownCodebook(cbs),
           c => distTo(col("_xq"), col("_xx"), c))).as(Seq("code", "d2")))

@@ -4,10 +4,12 @@ import java.io.IOException
 
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** The shared at-least-once replay protocol of the ten persistent-state
-  * streams (StreamingDedup, StreamingSimilarity, StreamingCorpusStats,
+  * streams, every one of which writes through [[sink]]
+  * (StreamingDedup, StreamingSimilarity, StreamingCorpusStats,
   * StreamingCuration, StreamingDecontam, StreamingWinnow, StreamingGraph,
   * StreamingEngagement, StreamingDrift and StreamingQuantile through
   * `StreamingDrift.monitor`):
@@ -28,8 +30,9 @@ import org.apache.spark.sql.types.StructType
   *  3. a committed per-batch marker with an id BEYOND the current
   *     batch catches a checkpoint deleted and recreated at the same
   *     path (which defense 1 cannot);
-  *  4. the batch's own marker, written LAST by the caller via
-  *     [[commit]], makes a fully-committed replay a no-op.
+  *  4. the batch's own marker, written LAST by [[sink]] once the
+  *     stream's batch body returned, makes a fully-committed replay a
+  *     no-op.
   *
   * Old state is refused, never upgraded: a state directory is either
   * claimed fresh or its stored identity and fingerprint must equal the
@@ -44,11 +47,54 @@ private[streaming] object StreamProtocol {
   private val RunFile = "_stream_checkpoint"
   private val ConfigFile = "_stream_config"
 
-  def committedIds(fs: FileSystem, dir: Path, markerPrefix: String): Seq[Long] =
+  /** One micro-batch of a [[sink]]: the batch, its id, the state
+    * directory's FileSystem and the batch ids committed in it (from
+    * the guard's one listing). */
+  final case class Batch(df: DataFrame, id: Long, fs: FileSystem,
+                         committed: Seq[Long]) {
+    def spark: SparkSession = df.sparkSession
+  }
+
+  /** The one committed-batch sink: sets the checkpoint, resolves the
+    * state directory's FileSystem, runs `preClaim` (a check that must
+    * refuse before anything is claimed), then guards 1-3; a committed
+    * replay skips, any other batch runs `body` and publishes its marker
+    * only after `body` returned normally. */
+  def sink(df: DataFrame, dir: String, checkpoint: String, config: String,
+           streamName: String, markerPrefix: String = "_batch_",
+           preClaim: SparkSession => Unit = _ => ())
+          (body: Batch => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val spark = batch.sparkSession
+        preClaim(spark)
+        // Hadoop FS probe — java.io.File would always miss on HDFS/S3
+        val path = new Path(dir)
+        val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+        val (done, committed) = guard(fs, path, checkpoint, config,
+          batchId, markerPrefix, streamName)
+        if (!done) {
+          body(Batch(batch, batchId, fs, committed))
+          commit(fs, path, markerPrefix, batchId)
+        }
+        ()
+      }
+      .start()
+
+  private def committedIds(fs: FileSystem, dir: Path, markerPrefix: String): Seq[Long] =
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq.map(_.getPath.getName)
       .filter(_.startsWith(markerPrefix))
       .flatMap(n => scala.util.Try(n.stripPrefix(markerPrefix).toLong).toOption)
+
+  /** The batch ids committed in `dir` — the readers' view of a state
+    * directory (empty for a missing one). */
+  def committed(spark: SparkSession, dir: String, markerPrefix: String): Seq[Long] = {
+    val p = new Path(dir)
+    committedIds(p.getFileSystem(spark.sessionState.newHadoopConf()), p,
+      markerPrefix)
+  }
 
   private def readFile(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
@@ -120,18 +166,9 @@ private[streaming] object StreamProtocol {
     }
   }
 
-  /** Run guards 1-4; returns true when this batch is ALREADY fully
-    * committed (replay of a finished batch → caller skips). On the
-    * first batch the identity and config files are claimed. */
-  def replayGuards(fs: FileSystem, dir: Path, checkpoint: String,
-                   config: String, batchId: Long, markerPrefix: String,
-                   streamName: String): Boolean =
-    replayGuardsWithCommitted(fs, dir, checkpoint, config, batchId,
-      markerPrefix, streamName)._1
-
-  /** The identity + config claim shared by [[replayGuardsWithCommitted]]
-    * and [[claimAuxiliary]]: claim both markers fresh, or require both
-    * to equal this stream's. */
+  /** The identity + config claim shared by [[guard]] and
+    * [[claimAuxiliary]]: claim both markers fresh, or require both to
+    * equal this stream's. */
   private def claimIdentityAndConfig(fs: FileSystem, dir: Path,
       config: String, streamName: String, identity: String): Unit = {
     val runMarker = new Path(dir, RunFile)
@@ -191,8 +228,10 @@ private[streaming] object StreamProtocol {
     * With the claim, resuming against an auxiliary owned by a
     * different run or regime fails fast with the same remedies as the
     * primary guard. */
-  def claimAuxiliary(fs: FileSystem, dir: Path, checkpoint: String,
+  def claimAuxiliary(spark: SparkSession, auxDir: String, checkpoint: String,
                      config: String, streamName: String): Unit = {
+    val dir = new Path(auxDir)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(dir)) { auxClaimed.remove(dir.toString); fs.mkdirs(dir) }
     // the claim is immutable for the run's life once written, so one
     // successful probe per (JVM, aux-dir generation, checkpoint
@@ -247,15 +286,17 @@ private[streaming] object StreamProtocol {
   def hasClaim(fs: FileSystem, dir: Path): Boolean =
     fs.exists(new Path(dir, RunFile))
 
-  /** [[replayGuards]] plus the committed batch ids from the SAME
-    * directory listing — for streams whose batch body needs the
-    * committed set anyway (it decides the empty-state / previous-
-    * version path): one `listStatus` per batch instead of two. The
-    * listing is driver-side metadata, but on object stores it walks a
-    * directory whose marker count grows with every batch. */
-  def replayGuardsWithCommitted(fs: FileSystem, dir: Path, checkpoint: String,
-                   config: String, batchId: Long, markerPrefix: String,
-                   streamName: String): (Boolean, Seq[Long]) = {
+  /** Run guards 1-3 and report whether this batch is ALREADY fully
+    * committed (defense 4: a replay of a finished batch skips), with the
+    * committed batch ids from the SAME directory listing — batch
+    * bodies that need the committed set (the empty-state / previous-
+    * version path) get it without a second `listStatus`, which on
+    * object stores walks a directory whose marker count grows with
+    * every batch. On the first batch the identity and config files are
+    * claimed. */
+  def guard(fs: FileSystem, dir: Path, checkpoint: String,
+            config: String, batchId: Long, markerPrefix: String,
+            streamName: String): (Boolean, Seq[Long]) = {
     claimIdentityAndConfig(fs, dir, config, streamName,
       checkpointIdentity(fs, checkpoint))
     val committed = committedIds(fs, dir, markerPrefix)
@@ -269,9 +310,9 @@ private[streaming] object StreamProtocol {
     (committed.contains(batchId), committed)
   }
 
-  /** Commit point: the batch's marker, written LAST. */
-  def commit(fs: FileSystem, dir: Path, markerPrefix: String,
-             batchId: Long): Unit =
+  /** Commit point: the batch's marker, written LAST by [[sink]]. */
+  private[streaming] def commit(fs: FileSystem, dir: Path, markerPrefix: String,
+                                batchId: Long): Unit =
     fs.create(new Path(dir, s"$markerPrefix$batchId"), true).close()
 
   /** The ingest_batch column probe memo: the run-identity + config

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -72,11 +71,8 @@ object StreamingCorpusStats {
     * same draw in every batch or the merge law breaks. */
   private val SampleSeed = "corpus_len"
 
-  private def committedVersions(spark: SparkSession, statsDir: String): Seq[Long] = {
-    val p = new Path(statsDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    StreamProtocol.committedIds(fs, p, "_v_")
-  }
+  private def committedVersions(spark: SparkSession, statsDir: String): Seq[Long] =
+    StreamProtocol.committed(spark, statsDir, "_v_")
 
   private def fingerprint(cfg: Config): String =
     s"cmsWidth=${cfg.cmsWidth};cmsDepth=${cfg.cmsDepth};" +
@@ -312,47 +308,29 @@ object StreamingCorpusStats {
   def start(docs: DataFrame, sourceCol: String, textCol: String,
             statsDir: String, checkpoint: String,
             cfg: Config = Config()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val dirPath = new Path(statsDir)
-        val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val (done, committed) = StreamProtocol.replayGuardsWithCommitted(
-          fs, dirPath, checkpoint, fingerprint(cfg), batchId, "_v_",
-          "StreamingCorpusStats")
-        if (!done) {
-          // the six snapshot writes are six jobs: cache the
-          // projected batch so the source micro-batch is read once,
-          // not once per table
-          val projected = batch
-            .select(col(sourceCol).as("source"), col(textCol).as("text"))
-            .cache()
-          try {
-            val fresh = summarize(projected, cfg)
-            val merged = committed.filter(_ < batchId).maxOption match {
-              case None => fresh
-              case Some(prev) =>
-                merge(readVersion(spark, statsDir, prev), fresh, cfg)
-            }
-            // full snapshot, Overwrite into this batch's own version
-            // dir: a replay rewrites it; the marker commits LAST
-            merged.counts.write.mode(SaveMode.Overwrite)
-              .parquet(s"$statsDir/v=$batchId/counts")
-            merged.cms.write.mode(SaveMode.Overwrite)
-              .parquet(s"$statsDir/v=$batchId/cms")
-            merged.kmv.write.mode(SaveMode.Overwrite)
-              .parquet(s"$statsDir/v=$batchId/kmv")
-            merged.qs.write.mode(SaveMode.Overwrite)
-              .parquet(s"$statsDir/v=$batchId/qs")
-            merged.hll.write.mode(SaveMode.Overwrite)
-              .parquet(s"$statsDir/v=$batchId/hll")
-            merged.quality.write.mode(SaveMode.Overwrite)
-              .parquet(s"$statsDir/v=$batchId/quality")
-            StreamProtocol.commit(fs, dirPath, "_v_", batchId)
-          } finally projected.unpersist()
+    StreamProtocol.sink(docs, statsDir, checkpoint, fingerprint(cfg),
+        "StreamingCorpusStats", markerPrefix = "_v_") { b =>
+      // the six snapshot writes are six jobs: cache the projected batch
+      // so the source micro-batch is read once, not once per table
+      val projected = b.df
+        .select(col(sourceCol).as("source"), col(textCol).as("text"))
+        .cache()
+      try {
+        val fresh = summarize(projected, cfg)
+        val merged = b.committed.filter(_ < b.id).maxOption match {
+          case None => fresh
+          case Some(prev) =>
+            merge(readVersion(b.spark, statsDir, prev), fresh, cfg)
         }
-        ()
-      }
-      .start()
+        // full snapshot, Overwrite into this batch's own version dir: a
+        // replay rewrites it; the sink's marker commits LAST
+        val v = s"$statsDir/v=${b.id}"
+        merged.counts.write.mode(SaveMode.Overwrite).parquet(s"$v/counts")
+        merged.cms.write.mode(SaveMode.Overwrite).parquet(s"$v/cms")
+        merged.kmv.write.mode(SaveMode.Overwrite).parquet(s"$v/kmv")
+        merged.qs.write.mode(SaveMode.Overwrite).parquet(s"$v/qs")
+        merged.hll.write.mode(SaveMode.Overwrite).parquet(s"$v/hll")
+        merged.quality.write.mode(SaveMode.Overwrite).parquet(s"$v/quality")
+      } finally projected.unpersist()
+    }
 }

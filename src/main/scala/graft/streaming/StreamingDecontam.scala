@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -87,14 +87,19 @@ object StreamingDecontam {
   }
 
   /** Fail-fast checks shared by every consumer of the eval index
-    * ([[start]], [[StreamingCuration]]): the index must exist (an
-    * absent index must not silently flag nothing) and its recorded
-    * shingleN must match the probe's — 3-gram strings never equal
-    * 4-gram strings, so a mismatch silently flags NOTHING. */
-  private[streaming] def verifyEvalIndex(
-      fs: org.apache.hadoop.fs.FileSystem, indexDir: String,
-      shingleN: Int, caller: String): Unit = {
-    if (!fs.exists(new Path(indexDir)))
+    * ([[start]], [[StreamingCuration]]), run before the stream claims
+    * anything: the index must exist (an absent index must not silently
+    * flag nothing) and its recorded shingleN must match the probe's —
+    * 3-gram strings never equal 4-gram strings, so a mismatch silently
+    * flags NOTHING. The index resolves its OWN FileSystem: it may live
+    * on another store than the stream's state (s3a:// eval index,
+    * hdfs:// results), and a handle from one throws "Wrong FS" probing
+    * the other. */
+  private[streaming] def verifyEvalIndex(spark: SparkSession,
+      indexDir: String, shingleN: Int, caller: String): Unit = {
+    val dir = new Path(indexDir)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(dir))
       throw new IllegalStateException(
         s"$caller: eval index $indexDir does not exist — " +
           "run prepareEvalIndex over the eval set first (an absent " +
@@ -119,11 +124,10 @@ object StreamingDecontam {
       finally in.close()
     // bucketMod is baked into the index's partition values; a probe
     // computed with a different modulus prunes against mismatched
-    // buckets and silently skips most true candidates. The pre-
-    // bucketMod rendering is accepted (the constant never changed
-    // value) and left for the next prepare to rewrite.
-    if (owner != s"shingleN=$shingleN;bucketMod=$BucketCount" &&
-        owner != s"shingleN=$shingleN")
+    // buckets and silently skips most true candidates. Like stream
+    // state, an index recorded in an older rendering is refused, not
+    // upgraded: re-prepare it.
+    if (owner != s"shingleN=$shingleN;bucketMod=$BucketCount")
       throw new IllegalStateException(
         s"$caller: $indexDir was prepared with [$owner] " +
           s"but this stream probes with [shingleN=$shingleN;" +
@@ -162,45 +166,29 @@ object StreamingDecontam {
             indexDir: String, flaggedDir: String, checkpoint: String,
             shingleN: Int = 3, minOverlap: Int = 3,
             excludeSameId: Boolean = true): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // each directory resolves its OWN FileSystem: indexDir and
-        // flaggedDir may live on different stores (s3a:// eval index,
-        // hdfs:// results) and a handle from one throws "Wrong FS"
-        // probing the other
-        val conf = spark.sessionState.newHadoopConf()
-        val indexPath = new Path(indexDir)
-        val indexFs = indexPath.getFileSystem(conf)
-        verifyEvalIndex(indexFs, indexDir, shingleN, "StreamingDecontam")
-        // run-identity + config guards on the RESULTS dir: a fresh
-        // checkpoint restarting batch ids at 0 would overwrite old
-        // batch directories with different data, silently mixing two
-        // runs' verdicts; a changed minOverlap/index would mix regimes
-        // within one results dir. Markers also let a fully-committed
-        // batch replay skip its recompute entirely.
-        val flaggedPath = new Path(flaggedDir)
-        val flaggedFs = flaggedPath.getFileSystem(conf)
-        val done = StreamProtocol.replayGuards(flaggedFs, flaggedPath, checkpoint,
-          s"index=$indexDir;shingleN=$shingleN;minOverlap=$minOverlap;" +
-            s"excludeSameId=$excludeSameId",
-          batchId, "_batch_", "StreamingDecontam")
-        if (!done) {
-        val batchPosts = posts(batch, col(idCol), col(textCol), "c_id",
-          shingleN).cache()
-        try {
-          val flagged = flaggedPairs(batchPosts, indexDir, minOverlap,
-            excludeSameId)
-          // per-batch Overwrite directory: a replay recomputes the same
-          // verdicts (immutable index) and rewrites the same files; the
-          // marker then lets the NEXT replay skip the recompute
-          flagged.write.mode(SaveMode.Overwrite)
-            .parquet(s"$flaggedDir/batch=$batchId")
-          StreamProtocol.commit(flaggedFs, flaggedPath, "_batch_", batchId)
-        } finally batchPosts.unpersist()
-        }
-        ()
-      }
-      .start()
+    // the eval index is verified BEFORE the results dir is claimed, so
+    // a missing or mismatched index never strands a claimed config.
+    // The guards on the RESULTS dir: a fresh checkpoint restarting
+    // batch ids at 0 would overwrite old batch directories with
+    // different data, silently mixing two runs' verdicts; a changed
+    // minOverlap/index would mix regimes within one results dir.
+    // Markers also let a fully-committed batch replay skip its
+    // recompute entirely.
+    StreamProtocol.sink(docs, flaggedDir, checkpoint,
+        s"index=$indexDir;shingleN=$shingleN;minOverlap=$minOverlap;" +
+          s"excludeSameId=$excludeSameId",
+        "StreamingDecontam",
+        preClaim = verifyEvalIndex(_, indexDir, shingleN, "StreamingDecontam")) { b =>
+      val batchPosts = posts(b.df, col(idCol), col(textCol), "c_id",
+        shingleN).cache()
+      try {
+        val flagged = flaggedPairs(batchPosts, indexDir, minOverlap,
+          excludeSameId)
+        // per-batch Overwrite directory: a replay recomputes the same
+        // verdicts (immutable index) and rewrites the same files; the
+        // marker then lets the NEXT replay skip the recompute
+        flagged.write.mode(SaveMode.Overwrite)
+          .parquet(s"$flaggedDir/batch=${b.id}")
+      } finally batchPosts.unpersist()
+    }
 }

@@ -58,90 +58,74 @@ object StreamingDedup {
   def start(docs: DataFrame, textCol: String, idCol: String,
             indexDir: String, dupDir: String, checkpoint: String,
             k: Int = 16, bands: Int = 4, shingleN: Int = 3,
-            minAgreement: Double = 0.8): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // Hadoop FS probe — java.io.File would always miss on HDFS/S3
-        // and silently disable cross-batch detection
-        val indexPath = new Path(indexDir)
-        val fs = indexPath.getFileSystem(spark.sessionState.newHadoopConf())
-        // ---- replay guards (StreamProtocol, BEFORE any work) -------
-        // k/bands/shingleN shape the persisted signatures and band
-        // keys: resuming with different values would band-join
-        // incompatible hash spaces and silently stop matching — the
-        // config guard fails fast instead. minAgreement only filters
-        // results and is deliberately NOT pinned. layout names the
-        // directory keying, so state of an older layout is refused
-        // here rather than read as an empty index.
-        val dedupCfg = s"k=$k;bands=$bands;shingleN=$shingleN;layout=ingest_batch"
-        val done = StreamProtocol.replayGuards(fs, indexPath, checkpoint,
-          dedupCfg, batchId, "_batch_", "StreamingDedup")
-        if (done) ()
-        else {
-        // the per-batch verdict output is AUXILIARY state committed
-        // through indexDir's markers: fence it too, or a re-ingest
-        // that wiped index+checkpoint but kept dupDir silently mixes
-        // the dead run's higher-numbered batch=N verdicts into the new
-        // run's output until the new run passes them
-        val dupPath = new Path(dupDir)
-        StreamProtocol.claimAuxiliary(
-          dupPath.getFileSystem(spark.sessionState.newHadoopConf()),
-          dupPath, checkpoint, dedupCfg, "StreamingDedup (dup output)")
-        val banded = Dedup.withLshBands(
-            Dedup.withMinHash(batch, col(textCol), k, shingleN), k, bands)
-          // shingle-less documents band to NULL hashes: they can match
-          // nothing and would only add useless index rows
-          .filter(col("band_hash").isNotNull)
-          .select(col(idCol).cast("long").as("doc_id"),
-            col("band_idx"), col("band_hash"), col("minhash"))
-          .withColumn("ingest_batch", lit(batchId))
-          .cache()
-        try {
-          // layout + ingest_batch validation is the shared
-          // StreamProtocol guard. The fence is a partition filter:
-          // rows a half-committed earlier attempt of THIS batch wrote
-          // are never listed, let alone matched
-          val index = StreamProtocol.validatedIndex(spark, fs, indexPath,
-              "ingest_batch", IndexSchema, "StreamingDedup",
-              "partitioned by ingest_batch") match {
-            case None =>
-              spark.createDataFrame(spark.sparkContext.emptyRDD[Row], IndexSchema)
-            case Some(reader) => reader.filter(col("ingest_batch") < batchId)
-          }
-
-          val dups = banded.alias("n")
-            .join(index.alias("i"), Seq("band_idx", "band_hash"))
-            .filter(col("n.doc_id") =!= col("i.doc_id"))
-            .withColumn("agreement",
-              graft.functions.HashExpressions
-                .arrayEqCountNative(col("n.minhash"), col("i.minhash"))
-                .cast("double") / k.toDouble)
-            .filter(col("agreement") >= minAgreement)
-            .select(col("n.doc_id").as("new_id"),
-              col("i.doc_id").as("matched_id"), col("agreement"))
-            .distinct()
-            .cache()
-
-          try {
-            dups.write.mode(SaveMode.Overwrite)
-              .parquet(s"$dupDir/batch=$batchId")
-            // dynamic overwrite replaces only the partitions this write
-            // produces — ingest_batch=<batchId> — so a replay after a
-            // crash before the marker rewrites its own rows once
-            banded
-              .join(dups.select(col("new_id")),
-                col("doc_id") === col("new_id"), "left_anti")
-              .write.mode(SaveMode.Overwrite)
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("ingest_batch")
-              .parquet(indexDir)
-            StreamProtocol.commit(fs, indexPath, "_batch_", batchId)
-          } finally dups.unpersist()   // a failed write must not leak the cache
-        } finally banded.unpersist()
+            minAgreement: Double = 0.8): StreamingQuery = {
+    // k/bands/shingleN shape the persisted signatures and band keys:
+    // resuming with different values would band-join incompatible hash
+    // spaces and silently stop matching — the config guard fails fast
+    // instead. minAgreement only filters results and is deliberately
+    // NOT pinned. layout names the directory keying, so state of an
+    // older layout is refused rather than read as an empty index.
+    val dedupCfg = s"k=$k;bands=$bands;shingleN=$shingleN;layout=ingest_batch"
+    StreamProtocol.sink(docs, indexDir, checkpoint, dedupCfg,
+        "StreamingDedup") { b =>
+      val spark = b.spark
+      // the per-batch verdict output is AUXILIARY state committed
+      // through indexDir's markers: fence it too, or a re-ingest that
+      // wiped index+checkpoint but kept dupDir silently mixes the dead
+      // run's higher-numbered batch=N verdicts into the new run's
+      // output until the new run passes them
+      StreamProtocol.claimAuxiliary(spark, dupDir, checkpoint, dedupCfg,
+        "StreamingDedup (dup output)")
+      val banded = Dedup.withLshBands(
+          Dedup.withMinHash(b.df, col(textCol), k, shingleN), k, bands)
+        // shingle-less documents band to NULL hashes: they can match
+        // nothing and would only add useless index rows
+        .filter(col("band_hash").isNotNull)
+        .select(col(idCol).cast("long").as("doc_id"),
+          col("band_idx"), col("band_hash"), col("minhash"))
+        .withColumn("ingest_batch", lit(b.id))
+        .cache()
+      try {
+        // layout + ingest_batch validation is the shared StreamProtocol
+        // guard. The fence is a partition filter: rows a half-committed
+        // earlier attempt of THIS batch wrote are never listed, let
+        // alone matched
+        val index = StreamProtocol.validatedIndex(spark, b.fs,
+            new Path(indexDir), "ingest_batch", IndexSchema, "StreamingDedup",
+            "partitioned by ingest_batch") match {
+          case None =>
+            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], IndexSchema)
+          case Some(reader) => reader.filter(col("ingest_batch") < b.id)
         }
-        ()
-      }
-      .start()
+
+        val dups = banded.alias("n")
+          .join(index.alias("i"), Seq("band_idx", "band_hash"))
+          .filter(col("n.doc_id") =!= col("i.doc_id"))
+          .withColumn("agreement",
+            graft.functions.HashExpressions
+              .arrayEqCountNative(col("n.minhash"), col("i.minhash"))
+              .cast("double") / k.toDouble)
+          .filter(col("agreement") >= minAgreement)
+          .select(col("n.doc_id").as("new_id"),
+            col("i.doc_id").as("matched_id"), col("agreement"))
+          .distinct()
+          .cache()
+
+        try {
+          dups.write.mode(SaveMode.Overwrite)
+            .parquet(s"$dupDir/batch=${b.id}")
+          // dynamic overwrite replaces only the partitions this write
+          // produces — ingest_batch=<batchId> — so a replay after a
+          // crash before the marker rewrites its own rows once
+          banded
+            .join(dups.select(col("new_id")),
+              col("doc_id") === col("new_id"), "left_anti")
+            .write.mode(SaveMode.Overwrite)
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("ingest_batch")
+            .parquet(indexDir)
+        } finally dups.unpersist()   // a failed write must not leak the cache
+      } finally banded.unpersist()
+    }
+  }
 }

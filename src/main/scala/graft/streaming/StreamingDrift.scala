@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -59,9 +58,7 @@ object StreamingDrift {
   private[streaming] def readCells(spark: SparkSession, dir: String,
                                    schema: StructType, keys: Seq[String],
                                    sums: Seq[String]): DataFrame = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val committed = StreamProtocol.committedIds(fs, p, "_batch_")
+    val committed = StreamProtocol.committed(spark, dir, "_batch_")
     if (committed.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -75,31 +72,16 @@ object StreamingDrift {
     }
   }
 
-  /** One micro-batch sink on the committed-delta protocol: replay
-    * guards (run identity, config fingerprint, batchId regression,
-    * already-committed skip), then the batch's cell reduction
-    * OVERWRITES its own delta directory and the marker publishes
-    * last. */
+  /** One micro-batch sink on the committed-delta protocol
+    * ([[StreamProtocol.sink]]): the batch's cell reduction OVERWRITES
+    * its own delta directory; the sink publishes the marker last. */
   private[streaming] def monitor(df: DataFrame, dir: String, checkpoint: String,
                                  configFingerprint: String, label: String)
                                 (reduce: DataFrame => DataFrame): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val dirPath = new Path(dir)
-        val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val (done, _) = StreamProtocol.replayGuardsWithCommitted(
-          fs, dirPath, checkpoint, configFingerprint, batchId, "_batch_",
-          label)
-        if (!done) {
-          reduce(batch).write.mode(SaveMode.Overwrite)
-            .parquet(s"$dir/ingest_batch=$batchId")
-          StreamProtocol.commit(fs, dirPath, "_batch_", batchId)
-        }
-        ()
-      }
-      .start()
+    StreamProtocol.sink(df, dir, checkpoint, configFingerprint, label) { b =>
+      reduce(b.df).write.mode(SaveMode.Overwrite)
+        .parquet(s"$dir/ingest_batch=${b.id}")
+    }
 
   private def longs(names: String*): StructType =
     StructType(names.map(n => StructField(n, LongType)) :+

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -83,11 +82,9 @@ object StreamingEngagement {
     *    see an arbitrary partial subset of that batch, numbers that
     *    correspond to no committed prefix of the stream. */
   def pairs(spark: SparkSession, pairsDir: String): DataFrame = {
-    val p = new Path(pairsDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // committedIds returns empty for a missing dir — no separate
-    // fs.exists probe (one driver RPC per read on object stores)
-    val committed = StreamProtocol.committedIds(fs, p, "_batch_")
+    // empty for a missing dir — no separate fs.exists probe (one
+    // driver RPC per read on object stores)
+    val committed = StreamProtocol.committed(spark, pairsDir, "_batch_")
     if (committed.isEmpty)
       emptyPairs(spark)
     else
@@ -120,55 +117,43 @@ object StreamingEngagement {
 
   def start(events: DataFrame, keyCol: String, tsCol: String,
             pairsDir: String, checkpoint: String, cfg: Config): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val dirPath = new Path(pairsDir)
-        val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val (done, committed) = StreamProtocol.replayGuardsWithCommitted(
-          fs, dirPath, checkpoint, fingerprint(cfg), batchId, "_batch_",
-          "StreamingEngagement")
-        if (!done) {
-          val batchPairs = batch
-            .select(col(keyCol).cast("string").as("key"),
-              graft.functions.GraftFunctions
-                .longDiv(col(tsCol) - cfg.epoch0Us, cfg.dayUs).as("day"))
-            .distinct()
-            .cache()
-          try {
-            // touched-day list: driver-known and bounded (a micro-batch
-            // spans a bounded wall-clock window, so a handful of days —
-            // never corpus history); it prunes the state read to those
-            // days' partitions
-            // (null days — null ts — can't prune via isin and never
-            // equal in the anti-join; they re-append and the readers'
-            // distinct collapses them, matching the batch operators'
-            // null-day group semantics)
-            val touched = batchPairs.select(col("day"))
-              .filter(col("day").isNotNull).distinct()
-              .collect().map(_.getLong(0)).toSeq
-            val existing =
-              if (touched.isEmpty || committed.isEmpty)
-                emptyPairs(spark)
-              else spark.read.schema(PairsSchema).parquet(pairsDir)
-                .filter(col("day").isin(touched: _*))
-                // a half-committed earlier attempt of THIS batch may
-                // have appended only part of its pairs — ignore those
-                // rows, re-append the full set, and let the readers'
-                // distinct collapse the overlap
-                .filter(col("ingest_batch") < batchId)
-                .select(col("key"), col("day"))
-            batchPairs
-              .join(existing, Seq("key", "day"), "left_anti")
-              .withColumn("ingest_batch", lit(batchId))
-              .write.mode(SaveMode.Append)
-              .partitionBy("day")
-              .parquet(pairsDir)
-            StreamProtocol.commit(fs, dirPath, "_batch_", batchId)
-          } finally batchPairs.unpersist()
-        }
-        ()
-      }
-      .start()
+    StreamProtocol.sink(events, pairsDir, checkpoint, fingerprint(cfg),
+        "StreamingEngagement") { b =>
+      val batchPairs = b.df
+        .select(col(keyCol).cast("string").as("key"),
+          graft.functions.GraftFunctions
+            .longDiv(col(tsCol) - cfg.epoch0Us, cfg.dayUs).as("day"))
+        .distinct()
+        .cache()
+      try {
+        // touched-day list: driver-known and bounded (a micro-batch
+        // spans a bounded wall-clock window, so a handful of days —
+        // never corpus history); it prunes the state read to those
+        // days' partitions
+        // (null days — null ts — can't prune via isin and never equal
+        // in the anti-join; they re-append and the readers' distinct
+        // collapses them, matching the batch operators' null-day group
+        // semantics)
+        val touched = batchPairs.select(col("day"))
+          .filter(col("day").isNotNull).distinct()
+          .collect().map(_.getLong(0)).toSeq
+        val existing =
+          if (touched.isEmpty || b.committed.isEmpty)
+            emptyPairs(b.spark)
+          else b.spark.read.schema(PairsSchema).parquet(pairsDir)
+            .filter(col("day").isin(touched: _*))
+            // a half-committed earlier attempt of THIS batch may have
+            // appended only part of its pairs — ignore those rows,
+            // re-append the full set, and let the readers' distinct
+            // collapse the overlap
+            .filter(col("ingest_batch") < b.id)
+            .select(col("key"), col("day"))
+        batchPairs
+          .join(existing, Seq("key", "day"), "left_anti")
+          .withColumn("ingest_batch", lit(b.id))
+          .write.mode(SaveMode.Append)
+          .partitionBy("day")
+          .parquet(pairsDir)
+      } finally batchPairs.unpersist()
+    }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -77,9 +76,7 @@ object StreamingGraph {
     * replay's double-append; the committed-prefix filter excludes a
     * batch that appended files but crashed before its marker. */
   def edges(spark: SparkSession, dir: String): DataFrame = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val committed = StreamProtocol.committedIds(fs, p, "_batch_")
+    val committed = StreamProtocol.committed(spark, dir, "_batch_")
     if (committed.isEmpty)
       emptyEdges(spark)
     else
@@ -131,46 +128,33 @@ object StreamingGraph {
   def start(df: DataFrame, srcCol: String, dstCol: String,
             dir: String, checkpoint: String,
             cfg: Config = Config()): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val dirPath = new Path(dir)
-        val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val (done, committed) = StreamProtocol.replayGuardsWithCommitted(
-          fs, dirPath, checkpoint, fingerprint(cfg), batchId, "_batch_",
-          "StreamingGraph")
-        if (!done) {
-          val batchEdges = Graph.canonicalEdges(
-              batch, col(srcCol), col(dstCol))
-            .withColumn("bucket", pmod(col("a"), lit(cfg.bucketMod.toLong)))
-            .cache()
-          try {
-            // touched-bucket list: driver-known and ≤ bucketMod — it
-            // prunes the state read to those buckets' partitions
-            val touched = batchEdges.select(col("bucket")).distinct()
-              .collect().map(_.getLong(0)).toSeq
-            val existing =
-              if (touched.isEmpty || committed.isEmpty)
-                emptyEdges(spark)
-              else spark.read.schema(EdgesSchema).parquet(dir)
-                .filter(col("bucket").isin(touched: _*))
-                // a half-committed earlier attempt of THIS batch may
-                // have appended part of its edges — ignore those rows,
-                // re-append the full set, and let the readers'
-                // distinct collapse the overlap
-                .filter(col("ingest_batch") < batchId)
-                .select(col("a"), col("b"))
-            batchEdges
-              .join(existing, Seq("a", "b"), "left_anti")
-              .withColumn("ingest_batch", lit(batchId))
-              .write.mode(SaveMode.Append)
-              .partitionBy("bucket")
-              .parquet(dir)
-            StreamProtocol.commit(fs, dirPath, "_batch_", batchId)
-          } finally batchEdges.unpersist()
-        }
-        ()
-      }
-      .start()
+    StreamProtocol.sink(df, dir, checkpoint, fingerprint(cfg),
+        "StreamingGraph") { b =>
+      val batchEdges = Graph.canonicalEdges(b.df, col(srcCol), col(dstCol))
+        .withColumn("bucket", pmod(col("a"), lit(cfg.bucketMod.toLong)))
+        .cache()
+      try {
+        // touched-bucket list: driver-known and ≤ bucketMod — it prunes
+        // the state read to those buckets' partitions
+        val touched = batchEdges.select(col("bucket")).distinct()
+          .collect().map(_.getLong(0)).toSeq
+        val existing =
+          if (touched.isEmpty || b.committed.isEmpty)
+            emptyEdges(b.spark)
+          else b.spark.read.schema(EdgesSchema).parquet(dir)
+            .filter(col("bucket").isin(touched: _*))
+            // a half-committed earlier attempt of THIS batch may have
+            // appended part of its edges — ignore those rows, re-append
+            // the full set, and let the readers' distinct collapse the
+            // overlap
+            .filter(col("ingest_batch") < b.id)
+            .select(col("a"), col("b"))
+        batchEdges
+          .join(existing, Seq("a", "b"), "left_anti")
+          .withColumn("ingest_batch", lit(b.id))
+          .write.mode(SaveMode.Append)
+          .partitionBy("bucket")
+          .parquet(dir)
+      } finally batchEdges.unpersist()
+    }
 }

@@ -85,97 +85,79 @@ object StreamingSimilarity {
 
   def start(vectors: DataFrame, idCol: String, vecCol: String,
             indexDir: String, resultDir: String, checkpoint: String,
-            k: Int = 5, planes: Int = 4, dim: Int = 64): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val indexPath = new Path(indexDir)
-        val fs = indexPath.getFileSystem(spark.sessionState.newHadoopConf())
-        // ---- idempotent micro-batch protocol -----------------------
-        // foreachBatch offers at-least-once: a crash between the two
-        // writes and the checkpoint commit REPLAYS this batchId. Three
-        // defenses make the replay harmless:
-        //  1. results write into a per-batch partition directory with
-        //     Overwrite — a retry rewrites the same directory instead
-        //     of appending duplicates;
-        //  2. index rows carry `ingest_batch`; matching reads filter
-        //     ingest_batch < batchId, so rows a half-committed earlier
-        //     attempt of THIS batch appended can never self-match, and
-        //     a latest-ingest-wins collapse absorbs double-appends;
-        //  3. a marker file commits the batch LAST — if it exists the
-        //     whole batch is done and the replay skips entirely.
-        // ---- replay guards (StreamProtocol, BEFORE any work) -------
-        // run identity + state-shaping config fingerprint + committed-
-        // marker bound + this batch's own marker. planes/dim shape the
-        // persisted buckets: resuming with different values would
-        // bucket-join incompatible hash spaces and silently match
-        // nothing (or wrongly) — the config guard fails fast instead.
-        // k is result-shaping only and deliberately NOT pinned.
-        val simCfg = s"planes=$planes;dim=$dim"
-        val done = StreamProtocol.replayGuards(fs, new Path(indexDir),
-          checkpoint, simCfg, batchId, "_batch_",
-          "StreamingSimilarity")
-        if (done) ()
-        else {
-        // per-batch results are AUXILIARY state committed through
-        // indexDir's markers — same re-ingest stale-mix fence as
-        // StreamingDedup's dup output
-        val resultPath = new Path(resultDir)
-        StreamProtocol.claimAuxiliary(
-          resultPath.getFileSystem(spark.sessionState.newHadoopConf()),
-          resultPath, checkpoint, simCfg,
-          "StreamingSimilarity (result output)")
-        val banded = batch
-          // a NULL vector buckets to 0 but cannot score; drop it here
-          // rather than index dead rows
-          .filter(col(vecCol).isNotNull)
-          .select(col(idCol).cast("long").as("vec_id"),
-            Similarity.lshBucket(col(vecCol), planes, dim).as("bucket"),
-            col(vecCol).cast(ArrayType(FloatType)).as("vec"))
-          .withColumn("norm", sqrt(dotProduct(col("vec"), col("vec"))))
-          .withColumn("ingest_batch", lit(batchId))
-          .cache()
-        try {
-          // layout + ingest_batch validation is the shared
-          // StreamProtocol guard; the prune below is this stream's
-          // own — the touched bucket set is bounded by
-          // min(batch, 2^planes) values, driver-known
-          val index = StreamProtocol.validatedIndex(spark, fs, indexPath,
-              "bucket", IndexSchema, "StreamingSimilarity",
-              "partitioned by bucket") match {
-            case None =>
-              spark.createDataFrame(spark.sparkContext.emptyRDD[Row], IndexSchema)
-            case Some(reader) =>
-              val touched = banded.select(col("bucket")).distinct()
-                .collect().map(_.getLong(0)).toIndexedSeq
-              latestPerId(reader.filter(col("bucket").isin(touched: _*)),
-                batchId)
-          }
-
-          val results = banded.alias("q")
-            .join(index.alias("i"), Seq("bucket"))
-            .filter(col("q.vec_id") =!= col("i.vec_id"))
-            // zero-norm-guarded cosine, same spec as the batch path
-            .withColumn("_nn", col("q.norm") * col("i.norm"))
-            .withColumn("cos", when(col("_nn") === 0.0, 0.0)
-              .otherwise(dotProduct(col("q.vec"), col("i.vec")) / col("_nn")))
-            .withColumn("rank", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col("q.vec_id"))
-                .orderBy(col("cos").desc, col("i.vec_id"))).cast("long"))
-            .filter(col("rank") <= k)
-            .select(col("q.vec_id").as("q_id"), col("rank"),
-              col("i.vec_id").as("c_id"), r(col("cos"), 4).as("cos"))
-
-          results.write.mode(SaveMode.Overwrite)
-            .parquet(s"$resultDir/batch=$batchId")
-          banded.write.mode(SaveMode.Append)
-            .partitionBy("bucket").parquet(indexDir)
-          StreamProtocol.commit(fs, new Path(indexDir), "_batch_", batchId)
-        } finally banded.unpersist()
+            k: Int = 5, planes: Int = 4, dim: Int = 64): StreamingQuery = {
+    // ---- idempotent micro-batch protocol ---------------------------
+    // foreachBatch offers at-least-once: a crash between the two writes
+    // and the checkpoint commit REPLAYS this batchId. Three defenses
+    // make the replay harmless:
+    //  1. results write into a per-batch partition directory with
+    //     Overwrite — a retry rewrites the same directory instead of
+    //     appending duplicates;
+    //  2. index rows carry `ingest_batch`; matching reads filter
+    //     ingest_batch < batchId, so rows a half-committed earlier
+    //     attempt of THIS batch appended can never self-match, and a
+    //     latest-ingest-wins collapse absorbs double-appends;
+    //  3. the sink's marker commits the batch LAST — if it exists the
+    //     whole batch is done and the replay skips entirely.
+    // planes/dim shape the persisted buckets: resuming with different
+    // values would bucket-join incompatible hash spaces and silently
+    // match nothing (or wrongly) — the config guard fails fast instead.
+    // k is result-shaping only and deliberately NOT pinned.
+    val simCfg = s"planes=$planes;dim=$dim"
+    StreamProtocol.sink(vectors, indexDir, checkpoint, simCfg,
+        "StreamingSimilarity") { b =>
+      val spark = b.spark
+      // per-batch results are AUXILIARY state committed through
+      // indexDir's markers — same re-ingest stale-mix fence as
+      // StreamingDedup's dup output
+      StreamProtocol.claimAuxiliary(spark, resultDir, checkpoint, simCfg,
+        "StreamingSimilarity (result output)")
+      val banded = b.df
+        // a NULL vector buckets to 0 but cannot score; drop it here
+        // rather than index dead rows
+        .filter(col(vecCol).isNotNull)
+        .select(col(idCol).cast("long").as("vec_id"),
+          Similarity.lshBucket(col(vecCol), planes, dim).as("bucket"),
+          col(vecCol).cast(ArrayType(FloatType)).as("vec"))
+        .withColumn("norm", sqrt(dotProduct(col("vec"), col("vec"))))
+        .withColumn("ingest_batch", lit(b.id))
+        .cache()
+      try {
+        // layout + ingest_batch validation is the shared StreamProtocol
+        // guard; the prune below is this stream's own — the touched
+        // bucket set is bounded by min(batch, 2^planes) values,
+        // driver-known
+        val index = StreamProtocol.validatedIndex(spark, b.fs,
+            new Path(indexDir), "bucket", IndexSchema, "StreamingSimilarity",
+            "partitioned by bucket") match {
+          case None =>
+            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], IndexSchema)
+          case Some(reader) =>
+            val touched = banded.select(col("bucket")).distinct()
+              .collect().map(_.getLong(0)).toIndexedSeq
+            latestPerId(reader.filter(col("bucket").isin(touched: _*)), b.id)
         }
-        ()
-      }
-      .start()
+
+        val results = banded.alias("q")
+          .join(index.alias("i"), Seq("bucket"))
+          .filter(col("q.vec_id") =!= col("i.vec_id"))
+          // zero-norm-guarded cosine, same spec as the batch path
+          .withColumn("_nn", col("q.norm") * col("i.norm"))
+          .withColumn("cos", when(col("_nn") === 0.0, 0.0)
+            .otherwise(dotProduct(col("q.vec"), col("i.vec")) / col("_nn")))
+          .withColumn("rank", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy(col("q.vec_id"))
+              .orderBy(col("cos").desc, col("i.vec_id"))).cast("long"))
+          .filter(col("rank") <= k)
+          .select(col("q.vec_id").as("q_id"), col("rank"),
+            col("i.vec_id").as("c_id"), r(col("cos"), 4).as("cos"))
+
+        results.write.mode(SaveMode.Overwrite)
+          .parquet(s"$resultDir/batch=${b.id}")
+        banded.write.mode(SaveMode.Append)
+          .partitionBy("bucket").parquet(indexDir)
+      } finally banded.unpersist()
+    }
+  }
 }

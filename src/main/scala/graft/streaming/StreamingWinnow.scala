@@ -76,88 +76,76 @@ object StreamingWinnow {
   def start(docs: DataFrame, textCol: String, idCol: String,
             indexDir: String, matchDir: String, checkpoint: String,
             k: Int = 3, w: Int = 6, minShared: Long = 2L,
-            maxDf: Int = 10): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val indexPath = new Path(indexDir)
-        val fs = indexPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val cfg = s"k=$k;w=$w;bucketMod=$BucketCount"
-        val done = StreamProtocol.replayGuards(fs, indexPath, checkpoint,
-          cfg, batchId, "_batch_", "StreamingWinnow")
-        if (done) ()
-        else {
-          // the per-batch match output is AUXILIARY state committed
-          // through indexDir's markers — fence it like StreamingDedup's
-          // dup output, or a re-ingest that kept matchDir would mix a
-          // dead run's batch=N verdicts into this run
-          val matchPath = new Path(matchDir)
-          StreamProtocol.claimAuxiliary(
-            matchPath.getFileSystem(spark.sessionState.newHadoopConf()),
-            matchPath, checkpoint, cfg, "StreamingWinnow (match output)")
-          val fps = batch
-            .select(col(idCol).cast("long").as("doc_id"),
-              explode(GraftFunctions.winnowFingerprints(
-                GraftFunctions.tokens(col(textCol)), k, w)).as("_f"))
-            // a fp selected at several positions is ONE posting — the
-            // batch twin's DISTINCT (doc, fp) law
-            .select(col("doc_id"), col("_f").getField("fp").as("fp"))
-            .distinct()
-            .select(col("doc_id"),
-              pmod(col("fp"), lit(BucketCount.toLong)).cast("int")
-                .as("fp_bucket"),
-              col("fp"), lit(batchId).as("ingest_batch"))
-            .cache()
-          try {
-            val index = StreamProtocol.validatedIndex(spark, fs, indexPath,
-                "fp_bucket", IndexSchema, "StreamingWinnow",
-                "partitioned by (fp_bucket)") match {
-              case None =>
-                spark.createDataFrame(spark.sparkContext.emptyRDD[Row], IndexSchema)
-              case Some(reader) =>
-                // ≤ BucketCount values — a tiny, bounded driver collect
-                val touched = fps.select(col("fp_bucket")).distinct()
-                  .collect().map(_.getInt(0)).toSeq
-                val prune =
-                  if (touched.isEmpty) lit(false)
-                  else col("fp_bucket").isin(touched: _*)
-                reader.filter(prune).filter(col("ingest_batch") < batchId)
-            }
-            // df-so-far cut (see class doc). A fp determines its bucket,
-            // so the pruned read holds EVERY indexed posting of every
-            // batch fp — the count is exact, not partition-truncated.
-            // Filtering the BATCH side alone suffices: pairs only form
-            // on fps present on both sides of the equality join.
-            val dfKeep = index.select(col("doc_id"), col("fp"))
-              .unionByName(fps.select(col("doc_id"), col("fp")))
-              .groupBy(col("fp")).agg(count(lit(1)).as("_df"))
-              .filter(col("_df") <= maxDf)
-              .select(col("fp"))
-            val matches = fps.join(dfKeep, Seq("fp"), "left_semi").alias("n")
-              .join(index.alias("i"), Seq("fp"))
-              // same id across batches = a re-ingested doc, not a match
-              .filter(col("n.doc_id") =!= col("i.doc_id"))
-              .select(col("n.doc_id").as("new_id"),
-                col("i.doc_id").as("matched_id"))
-              .groupBy(col("new_id"), col("matched_id"))
-              .agg(count(lit(1)).as("shared_fps"))
-              .filter(col("shared_fps") >= minShared)
-              .cache()
-            try {
-              matches.write.mode(SaveMode.Overwrite)
-                .parquet(s"$matchDir/batch=$batchId")
-              fps
-                .join(matches.select(col("new_id")).distinct(),
-                  col("doc_id") === col("new_id"), "left_anti")
-                .write.mode(SaveMode.Append)
-                .partitionBy("fp_bucket")
-                .parquet(indexDir)
-              StreamProtocol.commit(fs, indexPath, "_batch_", batchId)
-            } finally matches.unpersist() // failed write must not leak the cache
-          } finally fps.unpersist()
+            maxDf: Int = 10): StreamingQuery = {
+    val cfg = s"k=$k;w=$w;bucketMod=$BucketCount"
+    StreamProtocol.sink(docs, indexDir, checkpoint, cfg,
+        "StreamingWinnow") { b =>
+      val spark = b.spark
+      // the per-batch match output is AUXILIARY state committed through
+      // indexDir's markers — fence it like StreamingDedup's dup output,
+      // or a re-ingest that kept matchDir would mix a dead run's
+      // batch=N verdicts into this run
+      StreamProtocol.claimAuxiliary(spark, matchDir, checkpoint, cfg,
+        "StreamingWinnow (match output)")
+      val fps = b.df
+        .select(col(idCol).cast("long").as("doc_id"),
+          explode(GraftFunctions.winnowFingerprints(
+            GraftFunctions.tokens(col(textCol)), k, w)).as("_f"))
+        // a fp selected at several positions is ONE posting — the batch
+        // twin's DISTINCT (doc, fp) law
+        .select(col("doc_id"), col("_f").getField("fp").as("fp"))
+        .distinct()
+        .select(col("doc_id"),
+          pmod(col("fp"), lit(BucketCount.toLong)).cast("int")
+            .as("fp_bucket"),
+          col("fp"), lit(b.id).as("ingest_batch"))
+        .cache()
+      try {
+        val index = StreamProtocol.validatedIndex(spark, b.fs,
+            new Path(indexDir), "fp_bucket", IndexSchema, "StreamingWinnow",
+            "partitioned by (fp_bucket)") match {
+          case None =>
+            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], IndexSchema)
+          case Some(reader) =>
+            // ≤ BucketCount values — a tiny, bounded driver collect
+            val touched = fps.select(col("fp_bucket")).distinct()
+              .collect().map(_.getInt(0)).toSeq
+            val prune =
+              if (touched.isEmpty) lit(false)
+              else col("fp_bucket").isin(touched: _*)
+            reader.filter(prune).filter(col("ingest_batch") < b.id)
         }
-        ()
-      }
-      .start()
+        // df-so-far cut (see class doc). A fp determines its bucket, so
+        // the pruned read holds EVERY indexed posting of every batch
+        // fp — the count is exact, not partition-truncated. Filtering
+        // the BATCH side alone suffices: pairs only form on fps present
+        // on both sides of the equality join.
+        val dfKeep = index.select(col("doc_id"), col("fp"))
+          .unionByName(fps.select(col("doc_id"), col("fp")))
+          .groupBy(col("fp")).agg(count(lit(1)).as("_df"))
+          .filter(col("_df") <= maxDf)
+          .select(col("fp"))
+        val matches = fps.join(dfKeep, Seq("fp"), "left_semi").alias("n")
+          .join(index.alias("i"), Seq("fp"))
+          // same id across batches = a re-ingested doc, not a match
+          .filter(col("n.doc_id") =!= col("i.doc_id"))
+          .select(col("n.doc_id").as("new_id"),
+            col("i.doc_id").as("matched_id"))
+          .groupBy(col("new_id"), col("matched_id"))
+          .agg(count(lit(1)).as("shared_fps"))
+          .filter(col("shared_fps") >= minShared)
+          .cache()
+        try {
+          matches.write.mode(SaveMode.Overwrite)
+            .parquet(s"$matchDir/batch=${b.id}")
+          fps
+            .join(matches.select(col("new_id")).distinct(),
+              col("doc_id") === col("new_id"), "left_anti")
+            .write.mode(SaveMode.Append)
+            .partitionBy("fp_bucket")
+            .parquet(indexDir)
+        } finally matches.unpersist() // failed write must not leak the cache
+      } finally fps.unpersist()
+    }
+  }
 }

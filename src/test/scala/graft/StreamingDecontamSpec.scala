@@ -120,6 +120,47 @@ class StreamingDecontamSpec extends SparkSpec {
       val msgs = Iterator.iterate(ex: Throwable)(_.getCause)
         .takeWhile(_ != null).map(_.getMessage).mkString("\n")
       assert(msgs.contains("prepareEvalIndex"), s"got:\n$msgs")
+      // refused before the results dir claimed anything: fixing the
+      // index (or the stream) later does not meet a stranded claim
+      for (m <- Seq("_stream_checkpoint", "_stream_config"))
+        assert(!java.nio.file.Files.exists(
+          java.nio.file.Paths.get(s"$base/flagged/$m")), m)
+    } finally {
+      q.stop()
+      import scala.jdk.CollectionConverters._
+      val p = java.nio.file.Paths.get(base)
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
+  test("an eval index recorded in the pre-bucketMod rendering is refused " +
+      "with the re-prepare remedy") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_sdecon_oldcfg_").toString
+    StreamingDecontam.prepareEvalIndex(
+      Seq((9L, "some eval doc with several tokens inside it"))
+        .toDF("doc_id", "text"),
+      col("doc_id"), col("text"), s"$base/index")
+    // the config an index prepared before bucketMod was recorded holds
+    val cfg = java.nio.file.Paths.get(s"$base/index/_index_config")
+    java.nio.file.Files.write(cfg, "shingleN=3".getBytes("UTF-8"))
+    val input = MemoryStream[(Long, String)]
+    val q = StreamingDecontam.start(
+      input.toDS().toDF("doc_id", "text"),
+      idCol = "doc_id", textCol = "text",
+      indexDir = s"$base/index", flaggedDir = s"$base/flagged",
+      checkpoint = s"$base/ckpt")
+    try {
+      input.addData((1L, "a b c d e"))
+      val ex = intercept[Exception] { q.processAllAvailable() }
+      val msgs = Iterator.iterate(ex: Throwable)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      assert(msgs.contains("prepared with [shingleN=3]") &&
+        msgs.contains("Re-prepare the index"), s"got:\n$msgs")
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$base/flagged/_stream_config")))
     } finally {
       q.stop()
       import scala.jdk.CollectionConverters._

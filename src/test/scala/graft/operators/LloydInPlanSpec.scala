@@ -18,10 +18,10 @@ import graft.functions.HashUtil
   * early alarm. */
 class LloydInPlanSpec extends SparkSpec {
 
-  private val scale = 10000L
+  private val scale = Clustering.QuantScale
 
   private def quant(v: Seq[Double]): Seq[Double] =
-    v.map(x => math.floor(x * scale.toDouble + 0.5))
+    v.map(x => math.floor(x * scale + 0.5))
 
   private def dot(a: Seq[Double], b: Seq[Double]): Double = {
     var acc = 0.0
@@ -80,7 +80,7 @@ class LloydInPlanSpec extends SparkSpec {
       " exactly (doubles compared bitwise)") {
     val m = 4; val subDim = 2; val k = 4; val iters = 3
     val got = Clustering.kMeansCentroidsFused(
-      mkDf(base), col("id"), col("v"), k, iters, "sp-", m, subDim, scale)
+      mkDf(base), col("id"), col("v"), k, iters, "sp-", m, subDim)
     val want = (0 until m).map { s =>
       refLloyd(base.map { case (id, v) => (id, v.slice(s * subDim, (s + 1) * subDim)) },
         k, iters, id => s"sp-$s$id#graft-kmeans")
@@ -95,7 +95,7 @@ class LloydInPlanSpec extends SparkSpec {
       "reference distance to the reference centroid exactly") {
     val k = 4; val iters = 2
     val out = Clustering.kMeans(mkDf(base), col("id"), col("v"),
-        k, iters, "s9", dim = 8, scale = scale)
+        k, iters, "s9", dim = 8)
       .collect().map(r => (r.getLong(0), r.getInt(1).toLong, r.getDouble(2))).toSeq
     val cents = refLloyd(base, k, iters, id => s"s9$id#graft-kmeans")
     val want = base.map { case (id, v) =>
@@ -112,7 +112,7 @@ class LloydInPlanSpec extends SparkSpec {
   test("n < k input degrades to n seeds, exactly like the reference") {
     val tiny = base.take(3)
     val got = Clustering.kMeansCentroidsFused(
-      mkDf(tiny), col("id"), col("v"), k = 5, iters = 2, "dg-", 2, 4, scale)
+      mkDf(tiny), col("id"), col("v"), k = 5, iters = 2, "dg-", 2, 4)
     val want = (0 until 2).map { s =>
       refLloyd(tiny.map { case (id, v) => (id, v.slice(s * 4, (s + 1) * 4)) },
         5, 2, id => s"dg-$s$id#graft-kmeans")
@@ -125,7 +125,7 @@ class LloydInPlanSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       Clustering.kMeansCentroidsFused(
         mkDf(base).filter(col("id") < 0L), col("id"), col("v"),
-        4, 2, "e-", 2, 4, scale)
+        4, 2, "e-", 2, 4)
     }
     assert(e.getMessage.contains("input is empty"))
   }

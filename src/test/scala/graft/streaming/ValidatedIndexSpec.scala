@@ -56,10 +56,10 @@ class ValidatedIndexSpec extends graft.SparkSpec {
     val dir = new Path(tmp, "index")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     def claim(): Unit =
-      // the stream flow: replayGuards claims _stream_checkpoint in the
+      // the stream flow: guard claims _stream_checkpoint in the
       // state dir before any validatedIndex read — that file's
       // mtime+len is the generation fingerprint the memo keys on
-      StreamProtocol.replayGuards(fs, dir, s"$tmp/ckpt", "w=1", 0L,
+      StreamProtocol.guard(fs, dir, s"$tmp/ckpt", "w=1", 0L,
         "_b_", "S")
 
     // generation 1: valid index + claimed run file — memoizes
@@ -103,7 +103,7 @@ class ValidatedIndexSpec extends graft.SparkSpec {
     Seq((1L, 0L, 0L)).toDF("doc_id", "bucket", "ingest_batch")
       .write.partitionBy("bucket").parquet(dir.toString)
     // markers, checksums and _SUCCESS are not data
-    StreamProtocol.replayGuards(fs, dir, s"$tmp/ckpt", "w=1", 0L, "_b_", "S")
+    StreamProtocol.guard(fs, dir, s"$tmp/ckpt", "w=1", 0L, "_b_", "S")
     StreamProtocol.commit(fs, dir, "_b_", 0L)
     val e = refused()
     assert(e.getMessage.contains("ingest_batch=*") &&
