@@ -1,7 +1,8 @@
 package graft
 
 /** Benchmark main: runs the headline queries (Queries.benchNames) on
-  * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR and prints a JSON detail line with per-query
+  * seconds, then a last JSON line with the totals.
   * Each query is forced with .count() (full plan execution, no result
   * materialization on the driver beyond the count).
   *
@@ -114,9 +115,7 @@ object Bench {
     val results = samples.map { case (n, ts) => n -> toStat(ts) }
     def obj(f: Stat => Double): String = results
       .map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
-    def rd(d: Double, dp: Int): Double =
-      if (d < 0) d else { val p = math.pow(10, dp); math.rint(d * p) / p }
-    def r3(d: Double): Double = rd(d, 3)
+    def r3(d: Double): Double = if (d < 0) d else math.rint(d * 1000) / 1000
     val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // paths and dirs come from env vars — escape them, or a quote/
     // backslash in one breaks exactly the JSON lines this code exists
@@ -132,11 +131,10 @@ object Bench {
     // line got head-truncated there and the headline total was lost
     // (BENCH_r07 `parsed: null`). So: full-precision detail goes to a
     // file + an early line (greppable in full logs), and the LAST line
-    // is guaranteed to fit the tail window — per-query mins at 3dp
-    // when that fits in ~1800 chars, totals-only otherwise. A full run
-    // writes BENCH_DETAIL.json in the working directory; a subset run
-    // writes only where SPARK_GRAFT_BENCH_DETAIL names a path, so it
-    // never overwrites a full run's detail file.
+    // carries totals only. A full run writes BENCH_DETAIL.json in the
+    // working directory; a subset run writes only where
+    // SPARK_GRAFT_BENCH_DETAIL names a path, so it never overwrites a
+    // full run's detail file.
     val detailPath = sys.env.get("SPARK_GRAFT_BENCH_DETAIL")
       .orElse(Option.when(benchOnly.isEmpty)("BENCH_DETAIL.json"))
       .map(p => java.nio.file.Paths.get(p).toAbsolutePath)
@@ -146,25 +144,12 @@ object Bench {
     }
     println(detail)
 
-    // degradation ladder: per-query mins at 3 dp, then 2 dp (57 names
-    // at 3 dp outgrow the budget; 2 dp still fits and sub-10ms
-    // precision is noise at these magnitudes), then totals-only
+    // no per-query mins here: they are in the detail line and the
+    // detail file, and the full set outgrows the tail window even at
+    // 2 dp (107 names serialize to ~3,000 chars)
     val detailField =
       detailPath.fold("")(p => s""","detail":"${js(p.toString)}"""")
-    def summaryLine(queryDp: Int): String = {
-      val q = if (queryDp > 0) {
-        val m = results.map { case (k, v) => "\"" + k + "\":" + rd(v.min, queryDp) }
-          .mkString("{", ",", "}")
-        s""","queries":$m"""
-      } else ""
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_med":${r3(totalMed)},"n_queries":${results.size}$q,"failed":$fs,"sf":"${js(sfDir)}"$subsetField$detailField}"""
-    }
-    // lazy ladder: stop serializing at the first rung that fits (the
-    // dp=0 rung always fits in practice; if even it overflows — an
-    // absurdly long sfDir — print it anyway, the driver just sees a
-    // truncated tail like any oversized line)
-    println(Iterator(3, 2, 0).map(summaryLine).find(_.length <= 1800)
-      .getOrElse(summaryLine(0)))
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_med":${r3(totalMed)},"n_queries":${results.size},"failed":$fs,"sf":"${js(sfDir)}"$subsetField$detailField}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.sources.Tables
-import graft.operators.{Cdc, Clustering, CorpusQuality, Dedup, EventAnalytics, Features, Multimodal, Sessionize, Similarity, TextAnalysis}
+import graft.operators.{Cdc, Clustering, CorpusQuality, Dedup, EventAnalytics, Features, Multimodal, OpUtils, Sessionize, Similarity, TextAnalysis}
 import graft.functions.GraftFunctions._
 
 /** The engine's named query surface — one entry per operator class in
@@ -2188,10 +2188,9 @@ object Queries {
   private val q154 = Q("q154_source_distinct_hll",
     (s, d) => {
       val b = 6
-      val sh = t(s, d, "documents")
+      val sh = OpUtils.barrier(t(s, d, "documents")
         .select(col("source"), explode(shingles(tokens(col("text")), 3)).as("ng"))
-        .select(col("source"), polyHash(col("ng")).as("h")).distinct()
-        .localCheckpoint(false)
+        .select(col("source"), polyHash(col("ng")).as("h")).distinct())
       val est = graft.operators.Sketches.hllEstimate(
         graft.operators.Sketches.hllRegisters(sh, col("source"), col("h"), b), b)
       val exact = sh.groupBy(col("source")).agg(count(lit(1)).as("exact_distinct"))
@@ -2269,13 +2268,12 @@ object Queries {
   private val q157 = Q("q157_source_overlap_hll",
     (s, d) => {
       val b = 8
-      val sh = t(s, d, "documents")
+      val sh = OpUtils.barrier(t(s, d, "documents")
         .select(col("source"), explode(shingles(tokens(col("text")), 3)).as("ng"))
-        .select(col("source"), polyHash(col("ng")).as("h")).distinct()
-        .localCheckpoint(false)
+        .select(col("source"), polyHash(col("ng")).as("h")).distinct())
       // registers feed the per-source AND the pair-union estimates
-      val regs = graft.operators.Sketches.hllRegisters(sh, col("source"), col("h"), b)
-        .localCheckpoint(false)
+      val regs = OpUtils.barrier(
+        graft.operators.Sketches.hllRegisters(sh, col("source"), col("h"), b))
       val sEst = graft.operators.Sketches.hllEstimate(regs, b)
       val uEst = graft.operators.Sketches.hllEstimate(
         graft.operators.Sketches.hllPairUnion(regs), b,
@@ -2975,12 +2973,11 @@ object Queries {
       graft.sources.Sinks.writeParquet(gate(v1), tmp.toString)
       val prior = s.read.parquet(tmp.toString)
       // three consumers (fresh-id filter, carried filter, final join) —
-      // localCheckpoint, or each replans the v1×v2 snapshot diff from
+      // barrier, or each replans the v1×v2 snapshot diff from
       // the scans up (round-8 multi-consumer audit)
-      val diff = Dedup.snapshotDiff(v1, v2, col("doc_id"), col("text"))
+      val diff = OpUtils.barrier(Dedup.snapshotDiff(v1, v2, col("doc_id"), col("text"))
         .filter(col("status") =!= "removed")
-        .select(col("id").as("doc_id"), col("status"))
-        .localCheckpoint(false)
+        .select(col("id").as("doc_id"), col("status")))
       val freshIds = diff.filter(col("status") =!= "unchanged")
         .select(col("doc_id"))
       val fresh = gate(v2.join(freshIds, Seq("doc_id"), "left_semi"))
@@ -3827,10 +3824,9 @@ object Queries {
       // feeds all three consumers (sketch cells, total mass, exact
       // top-k) — without the barrier Catalyst replans the corpus
       // explode+count under each branch (probed: 3 parquet scans)
-      val counts = t(s, d, "documents")
+      val counts = OpUtils.barrier(t(s, d, "documents")
         .select(explode(tokens(col("text"))).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(false)
+        .groupBy(col("tok")).agg(count(lit(1)).as("cnt")))
       val cms = graft.operators.Sketches.cmsFromCounts(
         counts, col("tok"), col("cnt"), width = width)
       val total = broadcast(counts.agg(sum(col("cnt")).cast("double").as("_n")))
@@ -3883,12 +3879,10 @@ object Queries {
       // branches (probed: 5 parquet scans without the barriers); the
       // tiny bottom-k lists barrier too — the pair join consumes them
       // twice (build and probe)
-      val sh = t(s, d, "documents")
+      val sh = OpUtils.barrier(t(s, d, "documents")
         .select(col("source"), explode(shingles(tokens(col("text")), 3)).as("ng"))
-        .select(col("source"), polyHash(col("ng")).as("h")).distinct()
-        .localCheckpoint(false)
-      val lists = graft.operators.Sketches.bottomK(sh, col("source"), col("h"), k)
-        .localCheckpoint(false)
+        .select(col("source"), polyHash(col("ng")).as("h")).distinct())
+      val lists = OpUtils.barrier(graft.operators.Sketches.bottomK(sh, col("source"), col("h"), k))
       val est = graft.operators.Sketches.kmvJaccard(lists, k)
       val sizes = sh.groupBy(col("source")).agg(count(lit(1)).as("n"))
       // exact shared counts via q107's no-self-join projection rewrite
@@ -4022,11 +4016,10 @@ object Queries {
       val k = 1024
       val ps = Seq(0.25, 0.5, 0.75, 0.9, 0.99)
       // ONE lineitem scan feeds sample, N, and the exact-rank gate
-      val li = t(s, d, "lineitem")
+      val li = OpUtils.barrier(t(s, d, "lineitem")
         .select(concat(col("l_orderkey").cast("string"), lit("#"),
             col("l_linenumber").cast("string")).as("rk"),
-          col("l_extendedprice").as("price"))
-        .localCheckpoint(false)
+          col("l_extendedprice").as("price")))
       val sample = graft.operators.Sketches.bottomKSample(
         li, col("rk"), col("price"), k, seed = "q126")
       val est = graft.operators.Sketches.quantilesFromSample(sample, ps)
@@ -4074,10 +4067,9 @@ object Queries {
       val k = 256
       // ONE corpus scan: the distinct posting table feeds sketch and
       // exact branches (same barrier rationale as q124)
-      val sh = t(s, d, "documents")
+      val sh = OpUtils.barrier(t(s, d, "documents")
         .select(col("source"), explode(shingles(tokens(col("text")), 3)).as("ng"))
-        .select(col("source"), polyHash(col("ng")).as("h")).distinct()
-        .localCheckpoint(false)
+        .select(col("source"), polyHash(col("ng")).as("h")).distinct())
       val est = graft.operators.Sketches.kmvDistinct(
         graft.operators.Sketches.bottomK(sh, col("source"), col("h"), k), k)
       val exact = sh.groupBy(col("source")).agg(count(lit(1)).as("exact_distinct"))
@@ -4692,12 +4684,11 @@ object Queries {
   private val q144 = Q("q144_entry_channel",
     (s, d) => {
       // sessionized events feed the entry cut AND the rollup —
-      // localCheckpoint, or each consumer replans the event-scale
+      // barrier, or each consumer replans the event-scale
       // sessionize window (round-8 multi-consumer audit)
-      val sess = graft.operators.Sessionize.withSessions(
+      val sess = OpUtils.barrier(graft.operators.Sessionize.withSessions(
         eventsUs(s, d), Seq(col("user_id")), col("ts_us"), SessionGapUs,
-        tieBreak = Seq(col("event_id")))
-        .localCheckpoint(false)
+        tieBreak = Seq(col("event_id"))))
       val w = Window.partitionBy(col("user_id"), col("session_id"))
         .orderBy(col("ts_us"), col("event_id"))
       val entry = sess.withColumn("_rn", row_number().over(w))
@@ -4747,16 +4738,14 @@ object Queries {
   private val q145 = Q("q145_hhi_concentration",
     (s, d) => {
       // each metric table feeds TWO consumers (its 1-row total and the
-      // share projection) — localCheckpoint, or both replan the
+      // share projection) — barrier, or both replan the
       // event/corpus scan (the round-8 multi-consumer audit's shape)
-      val rev = eventsUs(s, d).filter(col("event_type") === "purchase")
-        .groupBy(col("user_id")).agg(sum(col("value")).as("x"))
-        .localCheckpoint(false)
-      val toks = t(s, d, "documents")
+      val rev = OpUtils.barrier(eventsUs(s, d).filter(col("event_type") === "purchase")
+        .groupBy(col("user_id")).agg(sum(col("value")).as("x")))
+      val toks = OpUtils.barrier(t(s, d, "documents")
         .groupBy(col("source"))
         .agg(sum(size(graft.functions.GraftFunctions.tokens(col("text"))).cast("long"))
-          .as("x"))
-        .localCheckpoint(false)
+          .as("x")))
       def hhi(df: DataFrame, metric: String): DataFrame = {
         val total = df.agg(sum(col("x")).as("t"))
         df.crossJoin(broadcast(total))
@@ -4957,10 +4946,10 @@ object Queries {
     (s, d) => {
       val week = longDiv(col("ts_us") - CohortEpoch0Us, WeekUs)
       // the deduped pair table feeds three consumers (churn anti-join's
-      // both sides + the active rollup) — localCheckpoint, or each
+      // both sides + the active rollup) — barrier, or each
       // replans the event-scale distinct (round-8 multi-consumer audit)
-      val pairs = eventsUs(s, d).select(col("user_id"), week.as("week")).distinct()
-        .localCheckpoint(false)
+      val pairs = OpUtils.barrier(
+        eventsUs(s, d).select(col("user_id"), week.as("week")).distinct())
       val next = pairs.select(col("user_id"), (col("week") - 1).as("week"))
       val churned = pairs.join(next, Seq("user_id", "week"), "left_anti")
         .groupBy(col("week")).agg(count(lit(1)).as("churned"))
@@ -4994,9 +4983,8 @@ object Queries {
     * oracle-pinned TRUE per (group, p). */
   private val q151 = Q("q151_group_quantile_sketch",
     (s, d) => {
-      val ev = eventsUs(s, d)
-        .select(col("event_type"), col("event_id"), col("value"))
-        .localCheckpoint(false)
+      val ev = OpUtils.barrier(eventsUs(s, d)
+        .select(col("event_type"), col("event_id"), col("value")))
       val est = graft.operators.Sketches.groupQuantileSketch(
         ev, group = col("event_type"), key = col("event_id"),
         value = col("value"), k = 128, seed = "q151",
@@ -6037,11 +6025,10 @@ object Queries {
       val est = EventAnalytics.rollingDistinctHll(
         eventsUs(s, d), key = "user_id", ts = "ts_us",
         epoch0Us = CohortEpoch0Us, dayUs = 86400000000L, windowDays = 7)
-      val p = eventsUs(s, d).filter(col("user_id").isNotNull)
+      val p = OpUtils.barrier(eventsUs(s, d).filter(col("user_id").isNotNull)
         .select(col("user_id"),
           longDiv(col("ts_us") - CohortEpoch0Us, 86400000000L).as("day"))
-        .distinct()
-        .localCheckpoint(false)     // feeds exact fan-out + the day list
+        .distinct())     // feeds exact fan-out + the day list
       val exact = p
         .select(col("user_id"), explode(sequence(lit(0L), lit(6L))).as("j"),
           col("day"))
@@ -6655,16 +6642,15 @@ object Queries {
     * an exact decimal (rank ties carry equal x, so any tie order
     * yields the same sum); the closed form
     * 2Σix/(nΣx) − (n+1)/n is a fixed IEEE op sequence, r(6). The
-    * grouped table feeds both metrics — localCheckpoint (the q145
+    * grouped table feeds both metrics — barrier (the q145
     * multi-consumer lesson). */
   private val q200 = Q("q200_source_gini",
     (s, d) => {
-      val g = t(s, d, "documents")
+      val g = OpUtils.barrier(t(s, d, "documents")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("docs"),
           sum(size(graft.functions.GraftFunctions.tokens(col("text")))
-            .cast("long")).as("toks"))
-        .localCheckpoint(false)
+            .cast("long")).as("toks")))
       def gini(x: String, metric: String): DataFrame = {
         val dec = "decimal(38,0)"
         val i = row_number().over(Window.orderBy(col(x)))

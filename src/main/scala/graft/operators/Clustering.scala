@@ -92,8 +92,7 @@ object Clustering {
       df.filter(group.isNotNull && vec.isNotNull)
         .select(group.as("grp"), posexplode(vec).as(Seq("d", "x")))
         .groupBy(col("grp"), col("d"))
-        .agg(sum(floor(col("x") * QuantScale + lit(0.5)).cast("long")).as("s")),
-      reliable = false)
+        .agg(sum(floor(col("x") * QuantScale + lit(0.5)).cast("long")).as("s")))
     val norms = comp.groupBy(col("grp"))
       .agg(sum(col("s") * col("s")).as("n2"))
     val a = comp.select(col("grp").as("grp_a"), col("d"), col("s").as("sa"))
@@ -148,8 +147,7 @@ object Clustering {
     * (label, dim) cell is a 0 component, not a driver NPE), matching
     * the native dot/norm fold's null-as-0.0 law on the scoring side. */
   def labelCoherenceMargin(df: DataFrame, vec: Column, label: Column,
-                           dim: Int,
-                           reliableCheckpoint: Boolean = false): DataFrame = {
+                           dim: Int): DataFrame = {
     val r = graft.functions.GraftFunctions.r _
     // barrier BEFORE the centroid collect (the lloydInput contract): the
     // collect pass and the scoring pass must read the SAME rows — an
@@ -160,8 +158,7 @@ object Clustering {
     val base = OpUtils.barrier(
       df.filter(label.isNotNull && vec.isNotNull)
         .filter(graft.functions.GraftFunctions.vectorDimGuard(vec, dim))
-        .select(label.cast("long").as("_l"), vec.as("_v")),
-      reliableCheckpoint)
+        .select(label.cast("long").as("_l"), vec.as("_v")))
     val comps = base
       .select(col("_l"), posexplode(col("_v")).as(Seq("_d", "_x")))
       .groupBy(col("_l"), col("_d"))
@@ -316,7 +313,7 @@ object Clustering {
     val rows =
       if (dedup) dedupKeyed(quant, "_id", "_xq", "Clustering.kMeans: duplicate id")
       else quant
-    slicedRows(rows, slices, sliceLen).localCheckpoint(false)
+    OpUtils.barrier(slicedRows(rows, slices, sliceLen))
   }
 
   /** The Lloyd loop as ONE Spark action (r15): seeds, every update
@@ -324,7 +321,7 @@ object Clustering {
     * tiny (slice, cid, cvec) frames — the driver collects ONLY the
     * final centroids, instead of one blocking collect per pass with a
     * freshly planned assignment chain each time. Each intermediate
-    * frame is pinned with a lazy `localCheckpoint`, so both of its
+    * frame is pinned behind a lazy [[OpUtils.barrier]], so both of its
     * consumers (the broadcast assignment side and the fallback join's
     * left side) share ONE computed RDD — evaluation stays linear in
     * `iters`, never re-expanding the lineage. Those `iters + 1`
@@ -358,7 +355,7 @@ object Clustering {
       .filter(col("_rn") <= k)
       .select(col("_s"), (col("_rn") - 1).cast("int").as("_cid"),
         col("_xq").as("_cvec"))
-    var cents = seeds.localCheckpoint(false)
+    var cents = OpUtils.barrier(seeds)
     for (_ <- 1 to iters) {
       val cb = cents.groupBy(col("_s"))
         .agg(transform(array_sort(collect_list(struct(col("_cid"), col("_cvec")))),
@@ -372,10 +369,9 @@ object Clustering {
         .groupBy(col("_s"), col("_cid"))
         .agg(transform(array_sort(collect_list(struct(col("_pos"), col("_sm"), col("_n")))),
           t => t.getField("_sm") / t.getField("_n").cast("double")).as("_uvec"))
-      cents = cents.join(updated, Seq("_s", "_cid"), "left")
+      cents = OpUtils.barrier(cents.join(updated, Seq("_s", "_cid"), "left")
         .select(col("_s"), col("_cid"),
-          coalesce(col("_uvec"), col("_cvec")).as("_cvec"))
-        .localCheckpoint(false)
+          coalesce(col("_uvec"), col("_cvec")).as("_cvec")))
     }
     val rows = cents.collect()
     require(rows.nonEmpty,

@@ -244,13 +244,11 @@ object CorpusQuality {
     val counts = OpUtils.barrier(
       df.filter(group.isNotNull && text.isNotNull)
         .select(group.as("src"), explode(tokens(text)).as("tok"))
-        .groupBy(col("src"), col("tok")).agg(count(lit(1)).as("c")),
-      reliable = false)
+        .groupBy(col("src"), col("tok")).agg(count(lit(1)).as("c")))
     val totals = counts.groupBy(col("src")).agg(sum(col("c")).as("t"))
     val probs = OpUtils.barrier(
       counts.join(totals, "src")
-        .select(col("src"), col("tok"), (col("c") / col("t")).as("p")),
-      reliable = false)
+        .select(col("src"), col("tok"), (col("c") / col("t")).as("p")))
     val srcs = probs.select(col("src")).distinct()
     val pairs = broadcast(
       srcs.select(col("src").as("src_a"))
@@ -327,15 +325,13 @@ object CorpusQuality {
     * n_b, d_num, at_tick, ks) — ks r(6), NULL when a side is empty
     * (it cannot be: groups come from observed rows). */
   def ksMatrix(df: DataFrame, group: Column, value: Column,
-               scale: Long = 1L,
-               reliableCheckpoint: Boolean = false): DataFrame = {
+               scale: Long = 1L): DataFrame = {
     require(scale > 0, s"scale must be positive: $scale")
     val cells = graft.operators.OpUtils.barrier(
       df.filter(group.isNotNull && value.isNotNull)
         .select(group.as("_g"),
           floor(value * scale + lit(0.5)).cast("long").as("_x"))
-        .groupBy(col("_g"), col("_x")).agg(count(lit(1)).as("_c")),
-      reliableCheckpoint)
+        .groupBy(col("_g"), col("_x")).agg(count(lit(1)).as("_c")))
     val grid = cells.select(col("_x")).distinct()
     val tots = cells.groupBy(col("_g")).agg(sum(col("_c")).as("_n"))
     // dense per-group CDF over the global grid: groups × ticks rows,
@@ -347,8 +343,7 @@ object CorpusQuality {
         .withColumn("_cum", sum(coalesce(col("_c"), lit(0L)))
           .over(Window.partitionBy(col("_g")).orderBy(col("_x"))
             .rowsBetween(Window.unboundedPreceding, 0)))
-        .join(tots, "_g"),
-      reliableCheckpoint)
+        .join(tots, "_g"))
     val dec = "decimal(19,0)"
     dense.as("a")
       .join(dense.as("b"),
@@ -441,8 +436,7 @@ object CorpusQuality {
       df.agg(max(id).as("m"))
         .select(explode(sequence(lit(1), lit(checkpoints))).as("j"), col("m"))
         .select(floor(col("m") * col("j") / checkpoints).cast("long").as("cp"))
-        .distinct(),
-      reliable = false)
+        .distinct())
     val vocabAt = firstDoc.join(broadcast(cps), col("fd") <= col("cp"))
       .groupBy(col("cp")).agg(count(lit(1)).as("v"))
     val toksAt = docCounts.join(broadcast(cps), col("_doc") <= col("cp"))

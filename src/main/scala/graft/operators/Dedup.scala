@@ -226,8 +226,7 @@ object Dedup {
     * id_a ≠ id_b, containment ≥ threshold. */
   def containmentPairs(df: DataFrame, id: Column, text: Column,
                        shingleN: Int = 3, threshold: Double = 0.8,
-                       maxDf: Int = 50,
-                       reliableCheckpoint: Boolean = false): DataFrame = {
+                       maxDf: Int = 50): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"containment threshold must be in (0,1]: $threshold")
     require(maxDf >= 2, s"maxDf < 2 can never produce a pair: $maxDf")
@@ -236,8 +235,7 @@ object Dedup {
     val posting = OpUtils.barrier(
       df.select(id.as("_id"), explode(shingles(tokens(text), shingleN)).as("sh"))
         .select(col("_id"), polyHash(col("sh")).as("h"))
-        .distinct(),
-      reliableCheckpoint)
+        .distinct())
     // the kept postings carry their document frequency (r15): a
     // SINGLETON hash (df = 1) can never produce a cross-document pair
     // — its one self-match dies on the id_a ≠ id_b filter — but it
@@ -251,7 +249,7 @@ object Dedup {
       .agg(count(lit(1)).as("_df"))
       .filter(col("_df") <= maxDf)
     val kept = OpUtils.barrier(
-      posting.join(dfKeep, Seq("h")), reliableCheckpoint)
+      posting.join(dfKeep, Seq("h")))
     val sizes = kept.groupBy(col("_id")).agg(count(lit(1)).as("_n_kept"))
     val paired = kept.filter(col("_df") >= 2L)
     val a = paired.select(col("h"), col("_id").as("id_a"))
@@ -337,8 +335,7 @@ object Dedup {
       s0.withColumn("_p", concat(lit(pad), col("_s"), lit(pad)))
         .select(col("_id"), length(col("_s")).as("_len"), explode(expr(
           s"array_distinct(transform(sequence(1, length(_p) - ${q - 1}), " +
-            s"i -> substring(_p, i, $q)))")).as("g")),
-      reliable = false)
+            s"i -> substring(_p, i, $q)))")).as("g")))
     val dfreq = posting.groupBy(col("g")).agg(count(lit(1)).as("_df"))
     val sig = OpUtils.barrier(guardBlocks(
       posting.join(dfreq, Seq("g"))
@@ -348,7 +345,7 @@ object Dedup {
         .filter(col("_rn") <= sigSize)
         .select(col("g").as("bk"), col("_id").as("_sid"), col("_len")),
       maxBlock, "editDistancePairs")
-      .select(col("bk").as("g"), col("_sid"), col("_len")), reliable = false)
+      .select(col("bk").as("g"), col("_sid"), col("_len")))
     // candidate join: SIGNATURE ⋈ SIGNATURE, not signature ⋈ full
     // postings (r14) — the standard prefix-filter strengthening
     // (Chaudhuri et al. 2006; Xiao et al. 2008 §3): both signatures
@@ -464,8 +461,7 @@ object Dedup {
     * the correctness baseline but O(block²)). */
   def lshVerifiedPairs(df: DataFrame, id: String, text: Column,
                        k: Int = 16, bands: Int = 4,
-                       shingleN: Int = 3, threshold: Double = 0.8,
-                       reliableCheckpoint: Boolean = false): DataFrame = {
+                       shingleN: Int = 3, threshold: Double = 0.8): DataFrame = {
     // the candidate set is consumed TWICE (id extraction below, final
     // scoring join) and the shingled candidates twice more (sh_a,
     // sh_b) — without a persistence barrier Catalyst replans the whole
@@ -474,11 +470,8 @@ object Dedup {
     // candidate-sized (vanishing vs the corpus), so checkpointing is
     // cheap at any scale; unlike plan-keyed .cache() the barrier dies
     // with this DataFrame (no cross-query cache pollution, and a
-    // re-built query honestly recomputes). `reliableCheckpoint` swaps
-    // in fault-tolerant checkpointing for long-lived clusters
-    // (OpUtils.barrier).
-    def barrier(d: DataFrame): DataFrame = OpUtils.barrier(d, reliableCheckpoint)
-    val cands = barrier(lshCandidates(
+    // re-built query honestly recomputes).
+    val cands = OpUtils.barrier(lshCandidates(
       withLshBands(withMinHash(df, text, k, shingleN), k, bands), id)
       .select(col("id_a"), col("id_b")))
     // shingle ONLY the documents that appear in a candidate pair — the
@@ -490,7 +483,7 @@ object Dedup {
     // OOM-ing the driver on an unconditional broadcast.
     val candIds = cands
       .select(explode(array(col("id_a"), col("id_b"))).as("_cid")).distinct()
-    val sh = barrier(withShingles(
+    val sh = OpUtils.barrier(withShingles(
         df.join(candIds, col(id) === col("_cid"), "left_semi"),
         text, shingleN)
       .select(col(id).as("_sid"), col("sh")))
@@ -637,7 +630,7 @@ object Dedup {
     * Scale: each round is one equi-join + one aggregation, both
     * hash-partitioned on the vertex id; rounds = graph diameter.
     * Near-dup clusters are near-cliques (diameter 1-2), so 2-3 rounds
-    * in practice; per-round `localCheckpoint` keeps the plan flat
+    * in practice; a per-round [[OpUtils.barrier]] keeps the plan flat
     * (no O(rounds)-deep lineage) and the per-round `count` action that
     * detects convergence doubles as the materialization point. For
     * adversarial long-chain graphs the published alternating
@@ -655,13 +648,11 @@ object Dedup {
     val edges = dropNullEdges(pairs, idA, idB)
       .select(col(idA).cast("long").as("src"),
         col(idB).cast("long").as("dst"))
-    val und = edges
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false)
-    var labels = und.groupBy(col("src").as("id"))
+    val und = OpUtils.barrier(edges
+      .union(edges.select(col("dst").as("src"), col("src").as("dst"))))
+    var labels = OpUtils.barrier(und.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("nmin"))
-      .select(col("id"), least(col("id"), col("nmin")).as("label"))
-      .localCheckpoint(false)
+      .select(col("id"), least(col("id"), col("nmin")).as("label")))
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxRounds) {
@@ -670,10 +661,9 @@ object Dedup {
         .groupBy(col("src").as("id"))
         .agg(min(col("dlabel")).as("nlabel"))
       // every vertex came from an edge, so the join is total (inner)
-      val step = labels.join(nbrMin, "id")
+      val step = OpUtils.barrier(labels.join(nbrMin, "id")
         .select(col("id"), col("label"),
-          least(col("label"), col("nlabel")).as("next_label"))
-        .localCheckpoint(false)
+          least(col("label"), col("nlabel")).as("next_label")))
       changed = step.filter(col("next_label") < col("label")).count()
       labels = step.select(col("id"), col("next_label").as("label"))
       round += 1
@@ -707,10 +697,10 @@ object Dedup {
                               maxRounds: Int = 50): DataFrame = {
     requireNumericIds(pairs, idA, idB, "connectedComponentsStar")
     val cleanPairs = dropNullEdges(pairs, idA, idB)
-    val verts = cleanPairs
+    val verts = OpUtils.barrier(cleanPairs
       .select(col(idA).cast("long").as("id"))
       .union(cleanPairs.select(col(idB).cast("long").as("id")))
-      .distinct().localCheckpoint(false)
+      .distinct())
     def bidir(e: DataFrame): DataFrame =
       e.union(e.select(col("v").as("u"), col("u").as("v")))
     // large-star: every edge, processed at its SMALLER endpoint u,
@@ -738,14 +728,14 @@ object Dedup {
         .filter(col("u") =!= col("v"))
         .distinct()
     }
-    var edges = cleanPairs
+    var edges = OpUtils.barrier(cleanPairs
       .select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct().localCheckpoint(false)
+      .distinct())
     var round = 0
     var stable = false
     while (!stable && round < maxRounds) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
+      val next = OpUtils.barrier(smallStar(largeStar(edges)))
       // exact symmetric set-difference convergence check — the edge
       // set is pair-sized, so the two extra jobs are cheap at any SF
       stable = next.except(edges).isEmpty && edges.except(next).isEmpty

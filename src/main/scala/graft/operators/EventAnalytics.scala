@@ -237,8 +237,7 @@ object EventAnalytics {
     * window (the [[Sketches.hllEstimate]] ceiling). */
   def rollingDistinctHll(events: DataFrame, key: String, ts: String,
                          epoch0Us: Long, dayUs: Long, windowDays: Int,
-                         b: Int = 6,
-                         reliableCheckpoint: Boolean = false): DataFrame = {
+                         b: Int = 6): DataFrame = {
     require(windowDays >= 1, s"windowDays must be >= 1: $windowDays")
     require(dayUs > 0, s"dayUs must be positive (µs): $dayUs")
     val day = graft.functions.GraftFunctions.longDiv(col(ts) - epoch0Us, dayUs)
@@ -248,8 +247,7 @@ object EventAnalytics {
     // and is the thing a real deployment would PERSIST (days × m rows)
     val regs = OpUtils.barrier(
       Sketches.hllRegisters(pairs, col("day"),
-        graft.functions.GraftFunctions.polyHash(col("_k").cast("string")), b),
-      reliableCheckpoint)
+        graft.functions.GraftFunctions.polyHash(col("_k").cast("string")), b))
     val rolled = regs
       .select(col("grp"), col("bucket"), col("r"),
         explode(sequence(lit(0), lit(windowDays - 1))).as("_j"))
@@ -343,14 +341,12 @@ object EventAnalytics {
     * O(weeks²) cell table; the per-cohort window runs over that bounded
     * cell table, not over events. */
   def retentionCohorts(events: DataFrame, key: String, ts: String,
-                       epoch0Us: Long, weekUs: Long,
-                       reliableCheckpoint: Boolean = false): DataFrame = {
+                       epoch0Us: Long, weekUs: Long): DataFrame = {
     // exact long floor-div (ts ≥ epoch0) — double division of epoch-scale
     // longs is banned by the engine's portability rules (class doc,
     // Queries.scala)
     val week = graft.functions.GraftFunctions.longDiv(col(ts) - epoch0Us, weekUs)
-    retentionFromPairs(events.select(col(key), week.as("week")).distinct(), key,
-      reliableCheckpoint)
+    retentionFromPairs(events.select(col(key), week.as("week")).distinct(), key)
   }
 
   /** The retention law over an already-DEDUPED `(key, week)` activity
@@ -358,11 +354,10 @@ object EventAnalytics {
     * incremental twin ([[graft.streaming.StreamingEngagement]], whose
     * persisted state IS this pair table). Cohort = each key's min
     * week; the rest is as documented on [[retentionCohorts]]. */
-  private[graft] def retentionFromPairs(active0: DataFrame, key: String,
-                                        reliableCheckpoint: Boolean = false): DataFrame = {
+  private[graft] def retentionFromPairs(active0: DataFrame, key: String): DataFrame = {
     // two consumers (cohort mins + the activity join) — barrier, as in
     // activeUsersFromPairs
-    val active = OpUtils.barrier(active0, reliableCheckpoint)
+    val active = OpUtils.barrier(active0)
     val first = active.groupBy(col(key))
       .agg(min(col("week")).as("cohort_week"))
     val cells = active.join(first, key)
@@ -564,7 +559,7 @@ object EventAnalytics {
     * itself overflows (see the inline note). */
   def rfmSegments(events: DataFrame, key: String, ts: String, typeCol: String,
                   conversionType: String, valueCol: String,
-                  asOfUs: Long, reliableCheckpoint: Boolean = false): DataFrame = {
+                  asOfUs: Long): DataFrame = {
     import graft.functions.GraftFunctions.r
     val conv = events.filter(col(typeCol) === conversionType)
     // per-user metrics feed BOTH the threshold aggregate and the
@@ -573,8 +568,7 @@ object EventAnalytics {
       conv.groupBy(col(key))
         .agg((lit(asOfUs) - max(col(ts))).as("recency"),
           count(lit(1)).as("frequency"),
-          r(sum(col(valueCol)), 2).as("monetary")),
-      reliableCheckpoint)
+          r(sum(col(valueCol)), 2).as("monetary")))
     // rounding is per-metric: monetary thresholds smooth per-user
     // double-sum ulp noise (r6 at magnitude ~1e3 is safe), but recency
     // sits at epoch scale, where r6's floor(x*1e6) OVERFLOWS Spark's
@@ -613,8 +607,7 @@ object EventAnalytics {
     * 1-row basket total (broadcast) — after the per-session distinct,
     * nothing event-scale moves again. */
   def associationRules(events: DataFrame, key: String, ts: String, tie: String,
-                       typeCol: String, gapUs: Long,
-                       reliableCheckpoint: Boolean = false): DataFrame = {
+                       typeCol: String, gapUs: Long): DataFrame = {
     // the basket table feeds FOUR consumers (basket total, item counts,
     // both sides of the pair self-join) — without a persistence barrier
     // Catalyst replans the event-scale sessionize+distinct chain once
@@ -624,8 +617,7 @@ object EventAnalytics {
       Sessionize.withSessions(events, Seq(col(key)), col(ts), gapUs,
           tieBreak = Seq(col(tie)))
         .select(col(key), col("session_id"), col(typeCol).as("item"))
-        .distinct(),
-      reliableCheckpoint)
+        .distinct())
     val nBaskets = items.select(col(key), col("session_id")).distinct()
       .agg(count(lit(1)).as("n_baskets"))
     val itemCounts = items.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
@@ -664,8 +656,7 @@ object EventAnalytics {
     * full group×bin grid is an explode over the group list, and every
     * subsequent join/window touches only |groups|·bins rows. */
   def psiDrift(events: DataFrame, group: String, value: Column,
-               lo: Double, hi: Double, bins: Int,
-               reliableCheckpoint: Boolean = false): DataFrame = {
+               lo: Double, hi: Double, bins: Int): DataFrame = {
     require(bins >= 2 && hi > lo, s"need >= 2 bins and hi > lo: $bins, [$lo, $hi)")
     val width = (hi - lo) / bins
     val bin = least(greatest(floor((value - lo) / width), lit(0.0)),
@@ -687,8 +678,7 @@ object EventAnalytics {
     val cells = OpUtils.barrier(
       events.filter(value.isNotNull && !isnan(value.cast("double")))
         .groupBy(col(group).as("entity"), bin.as("bin"))
-        .agg(count(lit(1)).as("n")),
-      reliableCheckpoint)
+        .agg(count(lit(1)).as("n")))
     val ref = cells.groupBy(col("bin")).agg(sum(col("n")).as("n_ref"))
     val domain = events.sparkSession.range(bins.toLong).select(col("id").as("bin"))
     psiOverCells(cells, ref, domain)
@@ -761,16 +751,14 @@ object EventAnalytics {
     * plain hash aggregations. Days with no events contribute no row;
     * the trailing window still sees activity from prior days. */
   def activeUsers(events: DataFrame, key: String, ts: String,
-                  epoch0Us: Long, dayUs: Long, windowDays: Int = 7,
-                  reliableCheckpoint: Boolean = false): DataFrame = {
+                  epoch0Us: Long, dayUs: Long, windowDays: Int = 7): DataFrame = {
     // exact long floor-div, ts ≥ epoch0 (the retentionCohorts
     // contract): longDiv truncates toward zero, so a pre-epoch0 event
     // would collapse days (−1, 0) into one double-width day-0 bucket —
     // pick epoch0 at or before the table's first event
     val day = graft.functions.GraftFunctions.longDiv(col(ts) - epoch0Us, dayUs)
     activeUsersFromPairs(
-      events.select(col(key), day.as("day")).distinct(), key, windowDays,
-      reliableCheckpoint)
+      events.select(col(key), day.as("day")).distinct(), key, windowDays)
   }
 
   /** The DAU/WAU law over an already-DEDUPED `(key, day)` activity pair
@@ -780,10 +768,9 @@ object EventAnalytics {
     * persistence barrier — otherwise each consumer replans the
     * event-scale distinct from the scan up. */
   private[graft] def activeUsersFromPairs(pairs0: DataFrame, key: String,
-                                          windowDays: Int,
-                                          reliableCheckpoint: Boolean = false): DataFrame = {
+                                          windowDays: Int): DataFrame = {
     require(windowDays >= 1, s"windowDays must be >= 1: $windowDays")
-    val pairs = OpUtils.barrier(pairs0, reliableCheckpoint)
+    val pairs = OpUtils.barrier(pairs0)
     val dau = pairs.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val wau = pairs
       .select(col(key), explode(sequence(col("day"),
@@ -915,10 +902,8 @@ object EventAnalytics {
     * the exact integer numerator at the argmax tick, ks = D, NULL if
     * either sample is empty. */
   def twoSampleKs(df: DataFrame, group: Column, value: Column,
-                  scale: Long = 100L,
-                  reliableCheckpoint: Boolean = false): DataFrame =
-    ksFromCells(drift2Cells(df, group, value, scale, "twoSampleKs"),
-      reliableCheckpoint)
+                  scale: Long = 100L): DataFrame =
+    ksFromCells(drift2Cells(df, group, value, scale, "twoSampleKs"))
 
   /** The shared events → per-tick-cell reduction of the drift suite:
     * (_x, _a0, _a1) counts on the integer value grid. This cell table
@@ -944,10 +929,9 @@ object EventAnalytics {
 
   /** [[twoSampleKs]]'s core over an existing `(_x, _a0, _a1)` cell
     * table (barriered here — totals + cumsums both read it). */
-  private[graft] def ksFromCells(cells0: DataFrame,
-                                 reliableCheckpoint: Boolean = false): DataFrame = {
+  private[graft] def ksFromCells(cells0: DataFrame): DataFrame = {
     val r = graft.functions.GraftFunctions.r _
-    val cells = OpUtils.barrier(cells0, reliableCheckpoint)
+    val cells = OpUtils.barrier(cells0)
     val tot = cells.agg(sum(col("_a0")).as("_n0"), sum(col("_a1")).as("_n1"))
     val w = Window.orderBy(col("_x"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -1005,19 +989,16 @@ object EventAnalytics {
     *
     * Returns ONE row: (n0, n1, u0, auc, z). */
   def mannWhitneyU(df: DataFrame, group: Column, value: Column,
-                   scale: Long = 100L,
-                   reliableCheckpoint: Boolean = false): DataFrame =
+                   scale: Long = 100L): DataFrame =
     mannWhitneyUFromCells(
-      drift2Cells(df, group, value, scale, "mannWhitneyU"),
-      reliableCheckpoint)
+      drift2Cells(df, group, value, scale, "mannWhitneyU"))
 
   /** [[mannWhitneyU]]'s core over an existing `(_x, _a0, _a1)` cell
     * table. */
-  private[graft] def mannWhitneyUFromCells(cells0: DataFrame,
-                                           reliableCheckpoint: Boolean = false): DataFrame = {
+  private[graft] def mannWhitneyUFromCells(cells0: DataFrame): DataFrame = {
     val r = graft.functions.GraftFunctions.r _
     val dec = "decimal(38,0)"
-    val cells = OpUtils.barrier(cells0, reliableCheckpoint)
+    val cells = OpUtils.barrier(cells0)
     val w = Window.orderBy(col("_x"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val agg = cells
@@ -1072,9 +1053,8 @@ object EventAnalytics {
     * everything after is bounded.
     *
     * Returns ONE row: (n, dof, chi2, cramers_v). */
-  def chiSquareIndependence(df: DataFrame, group: Column, cat: Column,
-                            reliableCheckpoint: Boolean = false): DataFrame =
-    chiSquareFromCells(catCells(df, group, cat), reliableCheckpoint)
+  def chiSquareIndependence(df: DataFrame, group: Column, cat: Column): DataFrame =
+    chiSquareFromCells(catCells(df, group, cat))
 
   /** The per-category `(_k, _o0, _o1)` count reduction —
     * [[chiSquareIndependence]]'s sufficient statistic, additive like
@@ -1095,11 +1075,10 @@ object EventAnalytics {
 
   /** [[chiSquareIndependence]]'s core over an existing
     * `(_k, _o0, _o1)` cell table. */
-  private[graft] def chiSquareFromCells(cells0: DataFrame,
-                                        reliableCheckpoint: Boolean = false): DataFrame = {
+  private[graft] def chiSquareFromCells(cells0: DataFrame): DataFrame = {
     val r = graft.functions.GraftFunctions.r _
     val dec = "decimal(19,0)"
-    val cells = OpUtils.barrier(cells0, reliableCheckpoint)
+    val cells = OpUtils.barrier(cells0)
     val tot = cells.agg(sum(col("_o0")).as("_n0"), sum(col("_o1")).as("_n1"),
       count(lit(1)).as("_r"))
     def term(o: Column, colTot: Column, rowTot: Column, n: Column): Column = {
@@ -1146,9 +1125,8 @@ object EventAnalytics {
     * residual over a real margin is −√E, but an absent dow or hour
     * has no defined margin — emitting only observed cells keeps the
     * law uniform). E > 0 for every emitted cell, so √E never ÷0. */
-  def seasonalityProfile(df: DataFrame, tsUs: Column,
-                         reliableCheckpoint: Boolean = false): DataFrame =
-    seasonalityFromCells(seasonCells(df, tsUs), reliableCheckpoint)
+  def seasonalityProfile(df: DataFrame, tsUs: Column): DataFrame =
+    seasonalityFromCells(seasonCells(df, tsUs))
 
   /** The per-(dow, hour) count reduction — [[seasonalityProfile]]'s
     * sufficient statistic, additive like the rest of the drift-suite
@@ -1172,13 +1150,12 @@ object EventAnalytics {
 
   /** [[seasonalityProfile]]'s core over an existing `(_dw, _hr, _n)`
     * cell table. */
-  private[graft] def seasonalityFromCells(cells0: DataFrame,
-                                          reliableCheckpoint: Boolean = false): DataFrame = {
+  private[graft] def seasonalityFromCells(cells0: DataFrame): DataFrame = {
     val r = graft.functions.GraftFunctions.r _
     val dec = "decimal(19,0)"
     // four consumers of the cell table (cells + both margins + N) —
     // barrier, or the upstream aggregation replans once per consumer
-    val cells = OpUtils.barrier(cells0, reliableCheckpoint)
+    val cells = OpUtils.barrier(cells0)
     val rowTot = cells.groupBy(col("_dw")).agg(sum(col("_n")).as("_rt"))
     val colTot = cells.groupBy(col("_hr")).agg(sum(col("_n")).as("_ct"))
     val tot = cells.agg(sum(col("_n")).as("_tot"))
@@ -1255,8 +1232,7 @@ object EventAnalytics {
     * state. */
   def bootstrapUplift(df: DataFrame, key: Column, variant: Column,
                       valueCents: Column, replicates: Int = 200,
-                      alphaPermille: Int = 25,
-                      reliableCheckpoint: Boolean = false): DataFrame = {
+                      alphaPermille: Int = 25): DataFrame = {
     require(replicates >= 2, s"need at least 2 replicates: $replicates")
     require(alphaPermille > 0 && alphaPermille < 500,
       s"alphaPermille must be in (0, 500): $alphaPermille")
@@ -1297,7 +1273,7 @@ object EventAnalytics {
         max(when(col("_v") === 0L, col("_swx"))).as("_swxa"),
         max(when(col("_v") === 1L, col("_sw"))).as("_swb"),
         max(when(col("_v") === 1L, col("_swx"))).as("_swxb"))
-    val barriered = OpUtils.barrier(cells, reliableCheckpoint)
+    val barriered = OpUtils.barrier(cells)
     def meanOf(swx: Column, sw: Column): Column =
       swx.cast("double") / sw.cast("double") / lit(100.0)
     val uplift = meanOf(col("_swxb"), col("_swb")) -
@@ -1453,9 +1429,8 @@ object EventAnalytics {
     * Scale: one map-side count aggregation to ≤ 9 cells (barriered —
     * the grid join and the total both read it); everything after is
     * 9-row arithmetic. */
-  def benfordDigits(df: DataFrame, valueCents: Column,
-                    reliableCheckpoint: Boolean = false): DataFrame =
-    benfordFromCells(digitCells(df, valueCents), reliableCheckpoint)
+  def benfordDigits(df: DataFrame, valueCents: Column): DataFrame =
+    benfordFromCells(digitCells(df, valueCents))
 
   /** The per-first-digit count reduction — [[benfordDigits]]'s
     * sufficient statistic, additive like the rest of the drift-suite
@@ -1470,10 +1445,9 @@ object EventAnalytics {
 
   /** [[benfordDigits]]'s core over an existing `(_d, _o)` cell
     * table. */
-  private[graft] def benfordFromCells(cells: DataFrame,
-                                      reliableCheckpoint: Boolean = false): DataFrame = {
+  private[graft] def benfordFromCells(cells: DataFrame): DataFrame = {
     val r = graft.functions.GraftFunctions.r _
-    val obs = OpUtils.barrier(cells, reliableCheckpoint)
+    val obs = OpUtils.barrier(cells)
     val grid = cells.sparkSession.range(1, 10)
       .select(col("id").as("digit"),
         BenfordP.foldRight(lit(Double.NaN): Column) { case ((d, p), tail) =>
@@ -1515,10 +1489,9 @@ object EventAnalytics {
     * Returns ONE row: (n_days, n, day_star, dev, mean_before,
     * mean_after) — or no row for an empty input. */
   def cusumChangepoint(df: DataFrame, ts: String, valueCol: String,
-                       epoch0Us: Long, dayUs: Long, scale: Long = 100L,
-                       reliableCheckpoint: Boolean = false): DataFrame =
+                       epoch0Us: Long, dayUs: Long, scale: Long = 100L): DataFrame =
     cusumFromDays(dayCells(df, ts, valueCol, epoch0Us, dayUs, scale),
-      scale, reliableCheckpoint)
+      scale)
 
   /** The daily `(_d, _c, _s)` (count, tick-sum) reduction —
     * [[cusumChangepoint]]'s sufficient statistic, additive like the
@@ -1562,21 +1535,18 @@ object EventAnalytics {
     * barriered day table (the q192 argument). */
   def dailyRateAnomaly(df: DataFrame, ts: String, valueCol: String,
                        epoch0Us: Long, dayUs: Long, scale: Long,
-                       k: Int = 7,
-                       reliableCheckpoint: Boolean = false): DataFrame =
+                       k: Int = 7): DataFrame =
     rateAnomalyFromDays(
-      dayCells(df, ts, valueCol, epoch0Us, dayUs, scale), k, scale,
-      reliableCheckpoint)
+      dayCells(df, ts, valueCol, epoch0Us, dayUs, scale), k, scale)
 
   /** [[dailyRateAnomaly]]'s core over an existing `(_d, _c, _s)` day
     * table. */
   private[graft] def rateAnomalyFromDays(days0: DataFrame, k: Int,
-                                         scale: Long,
-                                         reliableCheckpoint: Boolean = false): DataFrame = {
+                                         scale: Long): DataFrame = {
     require(k >= 2, s"baseline needs k >= 2 days: $k")
     val r = graft.functions.GraftFunctions.r _
     val dec = "decimal(38,0)"
-    val days = OpUtils.barrier(days0, reliableCheckpoint)
+    val days = OpUtils.barrier(days0)
     val dense = days.agg(min(col("_d")).as("_lo"), max(col("_d")).as("_hi"))
       .select(explode(sequence(col("_lo"), col("_hi"))).as("_d"))
       .join(days, Seq("_d"), "left")
@@ -1607,11 +1577,10 @@ object EventAnalytics {
 
   /** [[cusumChangepoint]]'s core over an existing `(_d, _c, _s)` day
     * table (barriered here — totals + prefix window both read it). */
-  private[graft] def cusumFromDays(days0: DataFrame, scale: Long,
-                                   reliableCheckpoint: Boolean = false): DataFrame = {
+  private[graft] def cusumFromDays(days0: DataFrame, scale: Long): DataFrame = {
     val r = graft.functions.GraftFunctions.r _
     val dec = "decimal(38,0)"
-    val days = OpUtils.barrier(days0, reliableCheckpoint)
+    val days = OpUtils.barrier(days0)
     val tot = days.agg(sum(col("_c")).as("_cn"), sum(col("_s")).as("_sn"),
       count(lit(1)).as("_nd"))
     val w = Window.orderBy(col("_d"))

@@ -14,19 +14,19 @@ import org.apache.spark.sql.functions._
   * Scale design (the Pregel-on-DataFrames shape):
   *  - The EDGE table — the 100 TB side — is hash-partitioned on `src`
   *    exactly once, fused with the out-degree lookup, and pinned
-  *    behind a `localCheckpoint` barrier. Every iteration reuses that
+  *    behind an [[OpUtils.barrier]]. Every iteration reuses that
   *    layout; the only thing that moves per round is the VERTEX-sized
   *    rank table (shuffled to the edge layout for the contribution
   *    join, then re-aggregated on `dst`).
   *  - N and the per-round dangling mass are 1-row aggregates joined
   *    into the plan (broadcast), never driver actions — the loop runs
   *    without collecting anything.
-  *  - Each round ends in a `localCheckpoint` so lineage stays flat
+  *  - Each round ends in an [[OpUtils.barrier]] so lineage stays flat
   *    (no O(iterations)-deep plan for Catalyst to re-derive). Lazy
-  *    checkpoints: materialization happens when the round's frame is
-  *    first consumed, and executor loss re-runs from the previous
-  *    barrier. On long-lived clusters swap `reliable = true` barriers
-  *    (see [[OpUtils.barrier]]) for replayable rounds.
+  *    barriers: materialization happens when the round's frame is
+  *    first consumed. A session with a checkpoint dir set gets
+  *    replayable rounds; without one a lost executor's rounds are
+  *    gone with it.
   */
 object Graph {
 
@@ -101,18 +101,17 @@ object Graph {
     // per-round joins broadcast too), while at 100 TB deg is
     // vertex-scale, the join is forced sort-merge, and the pinned
     // src layout claim stands.
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("out_deg"))
-      .localCheckpoint(false)
-    val ed = e.join(deg, "src").localCheckpoint(false)
+    val deg = OpUtils.barrier(
+      e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("out_deg")))
+    val ed = OpUtils.barrier(e.join(deg, "src"))
 
-    val verts = e.select(col("src").as("id"))
+    val verts = OpUtils.barrier(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
     // N as an in-plan 1-row broadcast (checkpointed so each consumer
     // does not replan the distinct behind it).
-    val nRow = verts.agg(count(lit(1)).cast("double").as("n")).localCheckpoint(false)
-    val srcIds = deg.select(col("src").as("id")).localCheckpoint(false)
+    val nRow = OpUtils.barrier(verts.agg(count(lit(1)).cast("double").as("n")))
+    val srcIds = OpUtils.barrier(deg.select(col("src").as("id")))
 
     // Per-vertex teleport probability, seeded mode only: 1/|S| on
     // seeds, 0 elsewhere (vertex-sized, computed once, pinned).
@@ -122,19 +121,17 @@ object Graph {
       // iteration (each absent seed's share simply vanishes). The
       // semi-join is vertex-sized; an empty intersection means every
       // rank would be 0.0, which is a caller error, not a result.
-      val sids = sd.select(col(sd.columns.head).cast("long").as("id"))
+      val sids = OpUtils.barrier(sd.select(col(sd.columns.head).cast("long").as("id"))
         .distinct()
-        .join(verts, Seq("id"), "left_semi")
-        .localCheckpoint(false)
+        .join(verts, Seq("id"), "left_semi"))
       require(!sids.isEmpty,
         "Graph.pageRank: teleportTo has no seeds present in the graph's " +
           "vertex set — every rank would be 0.0")
-      val sCount = sids.agg(count(lit(1)).cast("double").as("ns")).localCheckpoint(false)
-      verts.join(sids.withColumn("_s", lit(1)), Seq("id"), "left")
+      val sCount = OpUtils.barrier(sids.agg(count(lit(1)).cast("double").as("ns")))
+      OpUtils.barrier(verts.join(sids.withColumn("_s", lit(1)), Seq("id"), "left")
         .crossJoin(broadcast(sCount))
         .select(col("id"),
-          when(col("_s").isNotNull, lit(1.0) / col("ns")).otherwise(lit(0.0)).as("tele"))
-        .localCheckpoint(false)
+          when(col("_s").isNotNull, lit(1.0) / col("ns")).otherwise(lit(0.0)).as("tele")))
     }
 
     var ranks = teleOpt match {
@@ -153,7 +150,7 @@ object Graph {
         else df.crossJoin(broadcast(
           ranks.join(srcIds, Seq("id"), "left_anti")
             .agg(coalesce(sum(col("rank")), lit(0.0)).as("dangling_mass"))))
-      ranks = (teleOpt match {
+      ranks = OpUtils.barrier(teleOpt match {
         case Some(tele) => withDangling(base.join(tele, Seq("id")))
           .select(col("id"),
             ((lit(1.0 - damping) * col("tele")) + lit(damping) *
@@ -164,7 +161,7 @@ object Graph {
             ((lit(1.0 - damping) / col("n")) + lit(damping) *
               (coalesce(col("in_mass"), lit(0.0)) + col("dangling_mass") / col("n")))
               .as("rank"))
-      }).localCheckpoint(false)
+      })
     }
     ranks
       .join(deg.select(col("src").as("id"), col("out_deg")), Seq("id"), "left")
@@ -194,9 +191,8 @@ object Graph {
     * (a,b) pair — every join an equality hash join, never all-pairs.
     * Output is ONE row: `n_edges, n_wedges, n_triangles,
     * clustering_coeff`. */
-  def triangleStats(edges: DataFrame, src: Column, dst: Column,
-                    reliableCheckpoint: Boolean = false): DataFrame =
-    trianglesFromCanonical(canonicalEdges(edges, src, dst), reliableCheckpoint)
+  def triangleStats(edges: DataFrame, src: Column, dst: Column): DataFrame =
+    trianglesFromCanonical(canonicalEdges(edges, src, dst))
 
   /** [[triangleStats]]'s core over an ALREADY-canonical `(a, b)` edge
     * set — shared with the incremental twin
@@ -204,9 +200,8 @@ object Graph {
     * running triangle census from its persisted canonical edge state
     * through this same core, so batch/stream parity is by
     * construction — the histogram/alpha core pattern). */
-  private[graft] def trianglesFromCanonical(
-      e: DataFrame, reliable: Boolean = false): DataFrame = {
-    val (u, deg, closed) = closedWedgesFromCanonical(e, reliable)
+  private[graft] def trianglesFromCanonical(e: DataFrame): DataFrame = {
+    val (u, deg, closed) = closedWedgesFromCanonical(e)
     val triangles = closed.agg(count(lit(1)).as("n_triangles"))
     val edgeCount = u.agg(count(lit(1)).as("n_edges"))
     // all-integer: deg*(deg-1) is even, so summing the halved LONG
@@ -233,20 +228,17 @@ object Graph {
     * Only vertices with ≥ 2 neighbors (a defined coefficient) are
     * ranked; the cut is a TakeOrderedAndProject over the vertex-sized
     * coefficient table. */
-  def localClustering(edges: DataFrame, src: Column, dst: Column, k: Int,
-                      reliableCheckpoint: Boolean = false): DataFrame =
-    localClusteringFromCanonical(canonicalEdges(edges, src, dst), k,
-      reliableCheckpoint)
+  def localClustering(edges: DataFrame, src: Column, dst: Column, k: Int): DataFrame =
+    localClusteringFromCanonical(canonicalEdges(edges, src, dst), k)
 
   /** [[localClustering]]'s core over an ALREADY-canonical edge set —
     * shared with the incremental twin
     * ([[graft.streaming.StreamingGraph.localClustering]]), completing
     * the family: every batch graph reader now has a FromCanonical
     * core, so the persisted canonical edge state serves all of them. */
-  private[graft] def localClusteringFromCanonical(e: DataFrame, k: Int,
-      reliable: Boolean = false): DataFrame = {
+  private[graft] def localClusteringFromCanonical(e: DataFrame, k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val (_, deg, closed) = closedWedgesFromCanonical(e, reliable)
+    val (_, deg, closed) = closedWedgesFromCanonical(e)
     val perVertex = closed
       .select(explode(array(col("v"), col("a"), col("b"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("n_tri"))
@@ -272,23 +264,22 @@ object Graph {
     * (both edge endpoints against the keep set) plus one degree
     * aggregation, all equality joins on the edge table's own keys. The
     * surviving edge set shrinks monotonically and is re-barriered per
-    * round (`localCheckpoint`, lineage stays flat); the ONLY driver
+    * round ([[OpUtils.barrier]], lineage stays flat); the ONLY driver
     * traffic is one 1-row edge count per round for the convergence
     * test — the same loop discipline as [[Dedup.connectedComponents]].
     * Rounds are bounded by the peeling depth (≤ the degeneracy
     * ordering's span, 3-6 in practice); `maxRounds` fails LOUDLY
     * rather than returning a half-peeled "core". */
   def kCore(edges: DataFrame, src: Column, dst: Column, k: Int,
-            maxRounds: Int = 50, reliableCheckpoint: Boolean = false): DataFrame =
-    kcoreFromCanonical(canonicalEdges(edges, src, dst), k, maxRounds,
-      reliableCheckpoint)
+            maxRounds: Int = 50): DataFrame =
+    kcoreFromCanonical(canonicalEdges(edges, src, dst), k, maxRounds)
 
   /** [[kCore]]'s peel over an ALREADY-canonical edge set — shared with
     * the incremental twin ([[graft.streaming.StreamingGraph.kCore]]). */
   private[graft] def kcoreFromCanonical(e: DataFrame, k: Int,
-      maxRounds: Int = 50, reliable: Boolean = false): DataFrame = {
+      maxRounds: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    var u = OpUtils.barrier(e, reliable)
+    var u = OpUtils.barrier(e)
     var nEdges = u.count()
     var round = 0
     var converged = nEdges == 0L
@@ -297,7 +288,7 @@ object Graph {
       val pruned = OpUtils.barrier(
         u.join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
-          .select(col("a"), col("b")), reliable)
+          .select(col("a"), col("b")))
       val n = pruned.count()
       converged = n == nEdges
       u = pruned; nEdges = n; round += 1
@@ -315,12 +306,7 @@ object Graph {
     * triangle with `v` the lowest-degree corner and `a < b` its other
     * two corners). Degree-ordered orientation bounds the wedge
     * self-join's per-key fan-out at O(√m) on any graph. */
-  private def closedWedges(edges: DataFrame, src: Column, dst: Column,
-                           reliable: Boolean)
-      : (DataFrame, DataFrame, DataFrame) =
-    closedWedgesFromCanonical(canonicalEdges(edges, src, dst), reliable)
-
-  private def closedWedgesFromCanonical(canon: DataFrame, reliable: Boolean)
+  private def closedWedgesFromCanonical(canon: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     // the canonical edge set feeds FOUR consumers (degrees, both sides
     // of the wedge self-join via the orientation, the closing semi-join,
@@ -328,8 +314,8 @@ object Graph {
     // distinct from the source (probed: a 237-operator plan collapses
     // to ExistingRDD leaves). Same for the oriented table (both wedge
     // sides) and the vertex-sized degree table (three consumers).
-    val u = OpUtils.barrier(canon, reliable)
-    val deg = OpUtils.barrier(degrees(u), reliable)
+    val u = OpUtils.barrier(canon)
+    val deg = OpUtils.barrier(degrees(u))
     // orient by (deg, id): lo = the endpoint that sorts first
     val withDeg = u
       .join(deg.select(col("v").as("a"), col("deg").as("deg_a")), "a")
@@ -339,7 +325,7 @@ object Graph {
         struct(col("a").as("lo"), col("b").as("hi")))
         .otherwise(struct(col("b").as("lo"), col("a").as("hi")))
         .as("e"))
-      .select(col("e.lo").as("lo"), col("e.hi").as("hi")), reliable)
+      .select(col("e.lo").as("lo"), col("e.hi").as("hi")))
     val wedges = oriented.as("e1")
       .join(oriented.as("e2"), col("e1.lo") === col("e2.lo"))
       .filter(col("e1.hi") < col("e2.hi"))
@@ -384,10 +370,10 @@ object Graph {
   def labelPropagation(edges: DataFrame, src: Column, dst: Column,
                        rounds: Int = 4): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val u = canonicalEdges(edges, src, dst).localCheckpoint(false)
-    val und = u.select(col("a").as("u"), col("b").as("v"))
+    val u = OpUtils.barrier(canonicalEdges(edges, src, dst))
+    val und = OpUtils.barrier(u.select(col("a").as("u"), col("b").as("v"))
       .unionAll(u.select(col("b").as("u"), col("a").as("v")))
-      .repartition(col("v")).localCheckpoint(false) // pinned on the join key
+      .repartition(col("v"))) // pinned on the join key
     if (rounds == 0)
       return und.select(col("u").as("id")).distinct()
         .select(col("id"), col("id").as("label"))
@@ -402,16 +388,14 @@ object Graph {
     // next label table.
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("u")).orderBy(col("c").desc, col("lab"))
-    var labels = und.groupBy(col("u").as("id")).agg(min(col("v")).as("label"))
-      .localCheckpoint(false)
+    var labels = OpUtils.barrier(und.groupBy(col("u").as("id")).agg(min(col("v")).as("label")))
     for (_ <- 2 to rounds) {
-      labels = und
+      labels = OpUtils.barrier(und
         .join(labels.select(col("id").as("v"), col("label").as("lab")), "v")
         .groupBy(col("u"), col("lab")).agg(count(lit(1)).as("c"))
         .withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1)
-        .select(col("u").as("id"), col("lab").as("label"))
-        .localCheckpoint(false)
+        .select(col("u").as("id"), col("lab").as("label")))
     }
     labels
   }
@@ -446,9 +430,9 @@ object Graph {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     // same NULL-endpoint law as pageRank: a NULL vertex would surface
     // in the output with hub = auth = 0 while its edges match nothing
-    val e = edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
+    val e = OpUtils.barrier(edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint(false)
+      .distinct())
     // SPARSE iterations (r14): a zero score contributes nothing to the
     // next contribution join and exactly 0.0 to the L1 sum (x + 0.0 is
     // exact in IEEE), so the per-round dense re-anchoring join against
@@ -460,7 +444,7 @@ object Graph {
     // 1-row broadcast sum — one barrier per half-iteration, none of
     // them vertex-joined.
     def l1Normalize(scores: DataFrame, c: String): DataFrame = {
-      val s = scores.localCheckpoint(false)
+      val s = OpUtils.barrier(scores)
       s.crossJoin(broadcast(s.agg(sum(col(c)).as("_s"))))
         .select(col("id"), (col(c) / col("_s")).as(c))
     }
@@ -486,9 +470,9 @@ object Graph {
           .groupBy(col("src").as("id")).agg(sum(col("auth")).as("hub")),
         "hub")
     }
-    val verts = e.select(col("src").as("id"))
+    val verts = OpUtils.barrier(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
-      .distinct().localCheckpoint(false)
+      .distinct())
     verts
       .join(hub, Seq("id"), "left")
       .join(auth, Seq("id"), "left")
@@ -597,14 +581,13 @@ object Graph {
     * aa rounded to 6 dp (the ln float-order mask every ln-based
     * metric here wears). */
   def adamicAdar(edges: DataFrame, src: Column, dst: Column,
-                 minCommon: Int = 2, maxCenterDegree: Int = 1000,
-                 reliableCheckpoint: Boolean = false): DataFrame = {
+                 minCommon: Int = 2, maxCenterDegree: Int = 1000): DataFrame = {
     require(minCommon >= 1, s"minCommon must be >= 1: $minCommon")
     require(maxCenterDegree >= 2,
       s"maxCenterDegree must be >= 2 (a center needs two neighbors): $maxCenterDegree")
     // the canonical edge set feeds adjacency, the degree table, and
-    // the final anti join — barrier it (the closedWedges lesson)
-    val u = OpUtils.barrier(canonicalEdges(edges, src, dst), reliableCheckpoint)
+    // the final anti join — barrier it (the closedWedgesFromCanonical lesson)
+    val u = OpUtils.barrier(canonicalEdges(edges, src, dst))
     val adj = u.select(col("a").as("c"), col("b").as("n"))
       .unionAll(u.select(col("b").as("c"), col("a").as("n")))
     val centers = degrees(u)
@@ -612,7 +595,7 @@ object Graph {
       .select(col("v").as("c"), col("deg"))
     // both wedge sides read this — barrier, or the adjacency union +
     // degree join replans per side
-    val adjC = OpUtils.barrier(adj.join(centers, "c"), reliableCheckpoint)
+    val adjC = OpUtils.barrier(adj.join(centers, "c"))
     val scored = adjC.as("x")
       .join(adjC.as("y"),
         col("x.c") === col("y.c") && col("x.n") < col("y.n"))

@@ -28,17 +28,9 @@ private[graft] object OpUtils {
     * The input spread is unconditional: probing the actual layout
     * (`df.rdd.getNumPartitions`) costs a full extra physical-planning
     * pass per call — measured +50% on the q37/q39 chains — which
-    * outweighs the shuffle it occasionally saves. A 100 TB corpus
-    * whose scan is already thousands of splits can skip the spread
-    * explicitly with `derivedPreSpread`. */
+    * outweighs the shuffle it occasionally saves. */
   def derived(df: DataFrame)(add: DataFrame => DataFrame): DataFrame =
     materialize(add(materialize(df)))
-
-  /** [[derived]] for inputs already spread across the cluster (e.g. a
-    * many-split parquet scan): only the post-compute barrier, saving a
-    * corpus-sized shuffle of the raw input columns. */
-  def derivedPreSpread(df: DataFrame)(add: DataFrame => DataFrame): DataFrame =
-    materialize(add(df))
 
   /** Cosine from a precomputed norm product; 0.0 for zero norms (the
     * guarded form every SQL oracle mirrors). */
@@ -67,19 +59,18 @@ private[graft] object OpUtils {
     dt == ByteType || dt == ShortType || dt == IntegerType || dt == LongType
   }
 
-  /** Persistence barrier for a multiply-consumed, intermediate-sized
-    * frame (candidate pairs, vocab tables): without one Catalyst
-    * replans the whole upstream chain under every consumer. Default
-    * `localCheckpoint` (executor-local blocks, dies with the
-    * DataFrame) cannot replay on executor loss — `reliable = true`
-    * writes the barrier to `spark.sparkContext.setCheckpointDir`'s
-    * fault-tolerant filesystem instead, the right mode on long-lived
-    * clusters; it requires that dir to be set. */
-  def barrier(df: DataFrame, reliable: Boolean): DataFrame =
-    if (reliable) {
-      require(df.sparkSession.sparkContext.getCheckpointDir.nonEmpty,
-        "reliable barrier needs spark.sparkContext.setCheckpointDir " +
-          "(a fault-tolerant location, e.g. HDFS/S3)")
-      df.checkpoint(eager = false)
-    } else df.localCheckpoint(false)
+  /** The engine's one persistence barrier, for a multiply-consumed or
+    * per-round frame (candidate pairs, vocab tables, iteration state):
+    * without one Catalyst replans the whole upstream chain under every
+    * consumer, and iterative plans grow a round per round.
+    *
+    * The session decides what survives executor loss: with
+    * `spark.sparkContext.setCheckpointDir` set (a fault-tolerant
+    * location, e.g. HDFS/S3) the barrier is a replayable
+    * `df.checkpoint`; without one it is an executor-local
+    * `localCheckpoint`, which dies with its executor. Lazy unless
+    * `eager`, which materializes the frame before returning. */
+  def barrier(df: DataFrame, eager: Boolean = false): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.nonEmpty) df.checkpoint(eager)
+    else df.localCheckpoint(eager)
 }

@@ -231,8 +231,7 @@ object Sampling {
     val counts = OpUtils.barrier(
       df.filter(stratum.isNotNull)
         .groupBy(stratum.as("stratum"))
-        .agg(count(lit(1)).as("n_docs")),
-      reliable = false)
+        .agg(count(lit(1)).as("n_docs")))
     val wsum = counts
       .agg(sum(pow(col("n_docs").cast("double"), alpha)).as("_wsum"))
     val w = pow(col("n_docs").cast("double"), alpha) / col("_wsum")
@@ -398,14 +397,12 @@ object Sampling {
     * sketch is the 100 TB approximation path). The input is barriered
     * (three consumers: ranks, the pooled index, N). */
   def quantileNormalize(df: DataFrame, id: Column, stratum: Column,
-                        score: Column,
-                        reliableCheckpoint: Boolean = false): DataFrame = {
+                        score: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = OpUtils.barrier(
       df.filter(score.isNotNull)
         .select(id.as("_id"), stratum.as("_g"),
-          score.cast("double").as("_x")),
-      reliableCheckpoint)
+          score.cast("double").as("_x")))
     val pooled = base.select(col("_x").as("_q"))
       .withColumn("_idx", row_number().over(Window.orderBy(col("_q"))) - 1)
     val n = base.agg(count(lit(1)).as("_n"))
@@ -463,11 +460,10 @@ object Sampling {
     * has no defined percentile — NULL pct/normalized, row kept. */
   def quantileNormalizeBinned(df: DataFrame, id: Column, stratum: Column,
                               score: Column, scale: Long = 100L,
-                              indexBinWidth: Double = 4096.0,
-                              reliableCheckpoint: Boolean = false): DataFrame = {
+                              indexBinWidth: Double = 4096.0): DataFrame = {
     require(scale >= 1L, s"scale must be >= 1: $scale")
     val base = OpUtils.barrier(
-      tickedRows(df, id, stratum, score, scale), reliableCheckpoint)
+      tickedRows(df, id, stratum, score, scale))
     normalizeAgainstCells(base,
       base.groupBy(col("_g"), col("_t")).agg(count(lit(1)).as("_n")),
       scale, indexBinWidth)
@@ -507,7 +503,7 @@ object Sampling {
     import org.apache.spark.sql.expressions.Window
     // bounded cell table, THREE consumers (rank cum-sums, pooled CDF,
     // N) — barrier it (the q206 multiple-consumer lesson)
-    val cellsB = OpUtils.barrier(gCells, reliable = false)
+    val cellsB = OpUtils.barrier(gCells)
     val wg = Window.partitionBy(col("_g")).orderBy(col("_t"))
     val gCum = OpUtils.barrier(
       cellsB
@@ -515,8 +511,7 @@ object Sampling {
           wg.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
         .withColumn("_ng",
           sum(col("_n")).over(Window.partitionBy(col("_g"))))
-        .drop("_n"),
-      reliable = false)
+        .drop("_n"))
     // bounded pooled tick cells: [cum, cum + n) index ranges + the
     // lead tick (the upper interpolation value at a cell boundary);
     // barriered — the range join's bin explode is its only consumer
@@ -527,8 +522,7 @@ object Sampling {
         .withColumn("_ccum", coalesce(sum(col("_cn")).over(
           wp.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
         .withColumn("_cnext", lead(col("_t"), 1).over(wp))
-        .withColumnRenamed("_t", "_ct"),
-      reliable = false)
+        .withColumnRenamed("_t", "_ct"))
     val n = cellsB.agg(sum(col("_n")).as("_N"))
     val base = rows
     // singleton strata have no defined percentile (the exact twin's

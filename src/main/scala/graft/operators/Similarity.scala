@@ -82,8 +82,8 @@ object Similarity {
     * ([[GraftFunctions.vectorDimGuard]] — the native dot would
     * otherwise fold it to the shorter length, on the corpus AND the
     * query side); exact replicas collapse and CONFLICTING same-id
-    * vectors refuse ([[Clustering.dedupKeyed]]); then an EAGER local
-    * checkpoint. NOTE the API consequence for every public caller
+    * vectors refuse ([[Clustering.dedupKeyed]]); then an EAGER
+    * [[OpUtils.barrier]]. NOTE the API consequence for every public caller
     * (pqTopK / ivfPqTopK / ivfTopKQuant / pqRecall / ivfRecall /
     * pqRerankTopK): building their DataFrame runs Spark jobs — and
     * fires the guard and the conflicting-vector assert — at
@@ -114,7 +114,7 @@ object Similarity {
       val deduped = Clustering.dedupKeyed(
         df.filter(col(vec).isNotNull).filter(vectorDimGuard(col(vec), dim)),
         id, vec, s"Similarity.$op: duplicate $id")
-      (if (spread) materialize(deduped) else deduped).localCheckpoint()
+      OpUtils.barrier(if (spread) materialize(deduped) else deduped, eager = true)
     }
     val corp = prep(corpus, "c_id", "c_vec", spread = true)
     (prep(queries, "q_id", "q_vec", spread = false), corp)

@@ -131,18 +131,15 @@ object TextAnalysis {
     * stays a DataFrame end to end, so the same code trains on a
     * trillion tokens. Returns (id, n_tokens, avg_logprob) per doc. */
   def unigramLogProb(df: DataFrame, id: Column, text: Column,
-                     alpha: Double = 1.0,
-                     reliableCheckpoint: Boolean = false): DataFrame = {
+                     alpha: Double = 1.0): DataFrame = {
     val toks = df.select(id.as("_doc"), explode(tokens(text)).as("tok"))
     // barrier the vocab-sized count table: it feeds BOTH the T/V totals
     // and the scoring join, and without it Catalyst replans the full
     // corpus scan+explode+aggregate under each consumer (measured: a
     // third corpus scan and no AQE exchange reuse). Vocab-sized, so
-    // the checkpoint is cheap at any corpus scale; `reliableCheckpoint`
-    // swaps in fault-tolerant checkpointing for long-lived clusters
-    // (OpUtils.barrier, same knob as Dedup.lshVerifiedPairs).
+    // the checkpoint is cheap at any corpus scale.
     val counts = OpUtils.barrier(
-      toks.groupBy(col("tok")).agg(count(lit(1)).as("c")), reliableCheckpoint)
+      toks.groupBy(col("tok")).agg(count(lit(1)).as("c")))
     val totals = counts.agg(
       sum(col("c")).cast("double").as("t"),
       count(lit(1)).cast("double").as("v"))
@@ -178,14 +175,13 @@ object TextAnalysis {
     * broadcast as one row. The scoring join shuffles postings once on
     * `tok`. */
   def dsirLogRatio(df: DataFrame, id: Column, text: Column,
-                   isTarget: Column, alpha: Double = 1.0,
-                   reliableCheckpoint: Boolean = false): DataFrame = {
+                   isTarget: Column, alpha: Double = 1.0): DataFrame = {
     val toks = df.select(id.as("_doc"), isTarget.cast("boolean").as("_tgt"),
       explode(tokens(text)).as("tok"))
     val counts = OpUtils.barrier(
       toks.groupBy(col("tok")).agg(
         count(lit(1)).as("_cr"),
-        sum(when(col("_tgt"), 1L).otherwise(0L)).as("_ct")), reliableCheckpoint)
+        sum(when(col("_tgt"), 1L).otherwise(0L)).as("_ct")))
     val totals = counts.agg(
       sum(col("_cr")).cast("double").as("_tr"),
       sum(col("_ct")).cast("double").as("_tt"),
@@ -471,16 +467,14 @@ object TextAnalysis {
     * window partitions by source over that bounded table, never over
     * corpus rows. */
   def sourceKeyness(df: DataFrame, group: Column, text: Column,
-                    minCount: Long = 5L, topN: Int = 10,
-                    reliableCheckpoint: Boolean = false): DataFrame = {
+                    minCount: Long = 5L, topN: Int = 10): DataFrame = {
     require(minCount >= 1 && topN >= 1,
       s"need minCount, topN >= 1: $minCount/$topN")
     val r = graft.functions.GraftFunctions.r _
     val dec = "decimal(38,0)"
     val cells = OpUtils.barrier(
       df.select(group.as("_g"), explode(tokens(text)).as("_w"))
-        .groupBy(col("_g"), col("_w")).agg(count(lit(1)).as("_c")),
-      reliableCheckpoint)
+        .groupBy(col("_g"), col("_w")).agg(count(lit(1)).as("_c")))
     val gTot = cells.groupBy(col("_g")).agg(sum(col("_c")).as("_cg"))
     val wTot = cells.groupBy(col("_w")).agg(sum(col("_c")).as("_cw"))
     val tot = cells.agg(sum(col("_c")).as("_nt"))
@@ -536,8 +530,7 @@ object TextAnalysis {
     *
     * Output: (term_a, term_b, df_ab, pmi) with term_a < term_b. */
   def tokenPmi(df: DataFrame, id: Column, text: Column,
-               minPairDocs: Long = 2L,
-               reliableCheckpoint: Boolean = false): DataFrame = {
+               minPairDocs: Long = 2L): DataFrame = {
     val nullTerm = lit(null).cast("string")
     val gen = OpUtils.derived(
       df.select(text.as("_text")))(
@@ -551,7 +544,7 @@ object TextAnalysis {
             b => struct(a.as("term_a"), b.as("term_b"))))))).as("p"))
     val counts = OpUtils.barrier(gen
       .groupBy(col("p.term_a").as("term_a"), col("p.term_b").as("term_b"))
-      .agg(count(lit(1)).as("c")), reliableCheckpoint)
+      .agg(count(lit(1)).as("c")))
     val nRow = counts.filter(col("term_a").isNull)
       .select(col("c").cast("double").as("n"))
     val dfT = counts.filter(col("term_a").isNotNull && col("term_b").isNull)
@@ -599,8 +592,7 @@ object TextAnalysis {
     *
     * Output: (doc_id, n_tokens, n_removed, text_clean). */
   def pruneFrequentNgrams(df: DataFrame, id: Column, text: Column,
-                          n: Int = 3, minDocs: Long = 3L,
-                          reliableCheckpoint: Boolean = false): DataFrame = {
+                          n: Int = 3, minDocs: Long = 3L): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     val docs = OpUtils.derived(df.select(id.as("doc_id"), text.as("_text")))(
@@ -610,7 +602,7 @@ object TextAnalysis {
       docs.select(explode(shingles(col("_tk"), n)).as("ng"))
         .groupBy(col("ng")).agg(count(lit(1)).as("df"))
         .filter(col("df") >= minDocs)
-        .select(col("ng")), reliableCheckpoint)
+        .select(col("ng")))
     val posting = docs.select(col("doc_id"),
       explode(positionedShingles(col("_tk"), n)).as("p"))
       .select(col("doc_id"), col("p.pos").as("pos"), col("p.ng").as("ng"))
@@ -654,8 +646,7 @@ object TextAnalysis {
     *
     * Returns (doc_id, n_bigrams, avg_logprob). */
   def bigramLogProb(df: DataFrame, id: Column, text: Column,
-                    lambda: Double = 0.7, alpha: Double = 1.0,
-                    reliableCheckpoint: Boolean = false): DataFrame = {
+                    lambda: Double = 0.7, alpha: Double = 1.0): DataFrame = {
     require(lambda > 0.0 && lambda <= 1.0, s"lambda must be in (0,1]: $lambda")
     val docs = df.select(id.as("_doc"), text.as("_text"))
     val bigrams = docs.select(col("_doc"),
@@ -667,8 +658,7 @@ object TextAnalysis {
     // the vocab-sized barrier — without it Catalyst re-plans the full
     // corpus explode under every consumer (the unigramLogProb lesson).
     val c2 = OpUtils.barrier(
-      bigrams.groupBy(col("pair")).agg(count(lit(1)).as("c2")),
-      reliableCheckpoint)
+      bigrams.groupBy(col("pair")).agg(count(lit(1)).as("c2")))
     // context count from the bigram table itself (= occurrences of w1
     // in bigram-first position), NOT the raw unigram count — doc-final
     // tokens never open a bigram, and only this definition makes
@@ -677,8 +667,7 @@ object TextAnalysis {
       .groupBy(substring_index(col("pair"), " ", 1).as("w1"))
       .agg(sum(col("c2")).as("c1"))
     val cu = OpUtils.barrier(
-      toks.groupBy(col("tok")).agg(count(lit(1)).as("cu")),
-      reliableCheckpoint)
+      toks.groupBy(col("tok")).agg(count(lit(1)).as("cu")))
     val model = c2
       .withColumn("w1", substring_index(col("pair"), " ", 1))
       .withColumn("w2", substring_index(col("pair"), " ", -1))
@@ -738,8 +727,7 @@ object TextAnalysis {
     *
     * Returns (doc_id, n_bigrams, avg_logprob). */
   def kneserNeyLogProb(df: DataFrame, id: Column, text: Column,
-                       discount: Double = 0.75,
-                       reliableCheckpoint: Boolean = false): DataFrame = {
+                       discount: Double = 0.75): DataFrame = {
     require(discount > 0.0 && discount < 1.0,
       s"absolute discount must be in (0,1): $discount")
     val docs = df.select(id.as("_doc"), text.as("_text"))
@@ -747,8 +735,7 @@ object TextAnalysis {
         explode(positionedShingles(tokens(col("_text")), 2)).as("p"))
       .select(col("_doc"), col("p.ng").as("pair"))
     val c2 = OpUtils.barrier(
-      bigrams.groupBy(col("pair")).agg(count(lit(1)).as("c2")),
-      reliableCheckpoint)
+      bigrams.groupBy(col("pair")).agg(count(lit(1)).as("c2")))
     val sp = c2.select(col("pair"), col("c2"),
       substring_index(col("pair"), " ", 1).as("w1"),
       substring_index(col("pair"), " ", -1).as("w2"))
@@ -794,8 +781,7 @@ object TextAnalysis {
     *
     * Returns topN rows (w1, w2, c12, llr) by (llr desc, w1, w2). */
   def bigramLlr(df: DataFrame, id: Column, text: Column,
-                minCount: Long = 5L, topN: Int = 25,
-                reliableCheckpoint: Boolean = false): DataFrame = {
+                minCount: Long = 5L, topN: Int = 25): DataFrame = {
     require(minCount >= 1 && topN >= 1,
       s"need minCount, topN >= 1: $minCount/$topN")
     val docs = df.select(id.as("_doc"), text.as("_text"))
@@ -803,8 +789,7 @@ object TextAnalysis {
         explode(positionedShingles(tokens(col("_text")), 2)).as("p"))
       .select(col("p.ng").as("pair"))
     val c2 = OpUtils.barrier(
-      bigrams.groupBy(col("pair")).agg(count(lit(1)).as("c12")),
-      reliableCheckpoint)
+      bigrams.groupBy(col("pair")).agg(count(lit(1)).as("c12")))
     val sp = c2.select(col("pair"), col("c12"),
       substring_index(col("pair"), " ", 1).as("w1"),
       substring_index(col("pair"), " ", -1).as("w2"))
@@ -856,8 +841,7 @@ object TextAnalysis {
     * is an exact small-integer ratio (sum of 0/1 doubles), so engines
     * cannot disagree on it — or on the boolean gate. */
   def oovRate(df: DataFrame, id: Column, text: Column,
-              vocabSize: Int, maxOovRate: Double,
-              reliableCheckpoint: Boolean = false): DataFrame = {
+              vocabSize: Int, maxOovRate: Double): DataFrame = {
     require(vocabSize > 0, s"vocabSize must be positive: $vocabSize")
     require(maxOovRate >= 0.0 && maxOovRate <= 1.0,
       s"maxOovRate must be in [0,1]: $maxOovRate")
@@ -916,13 +900,11 @@ object TextAnalysis {
     * merge table (merge_rank, w1, w2, pair, occurrences) — w1/w2 kept
     * structurally because `pair` is not splittable once symbols
     * themselves contain spaces. */
-  def learnBpeMerges(df: DataFrame, text: Column, nMerges: Int,
-                     reliableCheckpoint: Boolean = false): DataFrame = {
+  def learnBpeMerges(df: DataFrame, text: Column, nMerges: Int): DataFrame = {
     require(nMerges > 0, s"nMerges must be positive: $nMerges")
     val spark = df.sparkSession
     import spark.implicits._
-    var corpus = OpUtils.barrier(df.select(tokens(text).as("_tk")),
-      reliableCheckpoint)
+    var corpus = OpUtils.barrier(df.select(tokens(text).as("_tk")))
     val merges = Seq.newBuilder[(Long, String, String, String, Long)]
     var round = 1
     var exhausted = false
@@ -940,8 +922,7 @@ object TextAnalysis {
           top(0).getLong(2))
         merges += ((round.toLong, w1, w2, s"$w1 $w2", c))
         corpus = OpUtils.barrier(
-          corpus.select(mergePair(col("_tk"), w1, w2).as("_tk")),
-          reliableCheckpoint)
+          corpus.select(mergePair(col("_tk"), w1, w2).as("_tk")))
         round += 1
       }
     }
@@ -995,8 +976,7 @@ object TextAnalysis {
     val dfreq = fp.groupBy(col("_fp")).agg(count(lit(1)).as("_df"))
       .filter(col("_df") <= maxDf)
     val kept = OpUtils.barrier(
-      fp.join(dfreq.select(col("_fp")), Seq("_fp"), "left_semi"),
-      reliable = false)
+      fp.join(dfreq.select(col("_fp")), Seq("_fp"), "left_semi"))
     kept.select(col("_fp"), col("_id").as("id_a"))
       .join(kept.select(col("_fp"), col("_id").as("id_b")), Seq("_fp"))
       .filter(col("id_a") < col("id_b"))
@@ -1038,8 +1018,7 @@ object TextAnalysis {
     * n_grams, span_text), one row per maximal span with
     * `span_tokens >= minSpanTokens`. */
   def sharedSpans(df: DataFrame, id: Column, text: Column,
-                  n: Int = 5, minDocs: Long = 2L, minSpanTokens: Int = 0,
-                  reliableCheckpoint: Boolean = false): DataFrame = {
+                  n: Int = 5, minDocs: Long = 2L, minSpanTokens: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(n >= 2, s"n must be >= 2 (a 1-gram span chain is every word), got $n")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
@@ -1056,7 +1035,7 @@ object TextAnalysis {
       docs.select(explode(shingles(col("_tk"), n)).as("ng"))
         .groupBy(col("ng")).agg(count(lit(1)).as("df"))
         .filter(col("df") >= minDocs)
-        .select(col("ng")), reliableCheckpoint)
+        .select(col("ng")))
     val posting = docs.select(col("doc_id"),
         explode(positionedShingles(col("_tk"), n)).as("p"))
       .select(col("doc_id"), col("p.pos").as("pos"), col("p.ng").as("ng"))
@@ -1115,10 +1094,8 @@ object TextAnalysis {
     * stays NULL (n_tokens/n_removed NULL too, the q103 law). */
   def scrubSharedSpans(df: DataFrame, id: Column, text: Column,
                        n: Int = 5, minDocs: Long = 2L,
-                       minSpanTokens: Int = 0,
-                       reliableCheckpoint: Boolean = false): DataFrame = {
-    val spans = sharedSpans(df, id, text, n, minDocs, minSpanTokens,
-      reliableCheckpoint)
+                       minSpanTokens: Int = 0): DataFrame = {
+    val spans = sharedSpans(df, id, text, n, minDocs, minSpanTokens)
     val covered = spans.groupBy(col("doc_id"))
       .agg(collect_list(struct(col("start_pos"), col("span_tokens")))
         .as("_spans"))

@@ -81,8 +81,7 @@ object StreamingQuantile {
     // vs '1' can silently misalign) and the output stratum type would
     // differ from the ingested key
     val rows = graft.operators.OpUtils.barrier(
-      Sampling.tickedRows(df, id, stratum.cast("string"), score, cfg.scale),
-      reliable = false)
+      Sampling.tickedRows(df, id, stratum.cast("string"), score, cfg.scale))
     Sampling.normalizeAgainstCells(rows, cells(spark, dir),
       cfg.scale, cfg.indexBinWidth)
   }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Similarity}
 import graft.sources.Tables
+import org.apache.spark.CheckpointDirs.withCheckpointDir
 
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -62,33 +63,15 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("H2 LSH-verified pairs: reliable checkpoint mode matches local mode") {
     val real = Tables.documents(spark, sf("sf0.001"))
-    val local = Dedup.lshVerifiedPairs(real, "doc_id", col("text"),
+    def pairs() = Dedup.lshVerifiedPairs(real, "doc_id", col("text"),
         k = 16, bands = 4, shingleN = 3, threshold = 0.8)
       .select("id_a", "id_b", "n_common", "jaccard")
       .as[(Long, Long, Long, Double)].collect().toSet
-
-    // no checkpoint dir yet → reliable mode must refuse loudly
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      val e = intercept[IllegalArgumentException] {
-        Dedup.lshVerifiedPairs(real, "doc_id", col("text"),
-          reliableCheckpoint = true).count()
-      }
-      assert(e.getMessage.contains("setCheckpointDir"))
-    }
-
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val reliable = Dedup.lshVerifiedPairs(real, "doc_id", col("text"),
-          k = 16, bands = 4, shingleN = 3, threshold = 0.8,
-          reliableCheckpoint = true)
-        .select("id_a", "id_b", "n_common", "jaccard")
-        .as[(Long, Long, Long, Double)].collect().toSet
-      assert(reliable === local)
-      assert(local.nonEmpty)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    val local = pairs()
+    // a session checkpoint dir turns the barriers reliable
+    val reliable = withCheckpointDir(spark)(_ => pairs())
+    assert(reliable === local)
+    assert(local.nonEmpty)
   }
 
   test("H2 SimHash: identical docs at Hamming 0; near-dup within 6") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Graph
 import graft.sources.Tables
+import org.apache.spark.CheckpointDirs.{rddCheckpoints, withCheckpointDir}
 
 /** [[graft.operators.Graph.pageRank]]: hand-computed ranks on tiny
   * graphs (including the dangling-mass path the q96 oracle's graph
@@ -205,36 +206,24 @@ class GraphSpec extends SparkSpec {
     assert(pr.map(_._3).distinct.length > 1)
   }
 
-  test("reliable barriers: kCore under df.checkpoint matches localCheckpoint; " +
-      "missing checkpoint dir fails loudly") {
+  test("reliable barriers: kCore under a checkpoint dir matches localCheckpoint") {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L), (0L, 2L), (3L, 4L))
-    def core(reliable: Boolean) =
-      Graph.kCore(edges.toDF("s", "t"), col("s"), col("t"), k = 2,
-          reliableCheckpoint = reliable)
-        .orderBy("id").as[(Long, Long)].collect().toSeq
-
-    // the long-lived-cluster mode requires an explicit fault-tolerant
-    // checkpoint dir — running without one must fail, not silently
-    // degrade to executor-local blocks
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      val e = intercept[IllegalArgumentException] { core(reliable = true) }
-      assert(e.getMessage.contains("setCheckpointDir"))
+    def core() = Graph.kCore(edges.toDF("s", "t"), col("s"), col("t"), k = 2)
+      .orderBy("id").as[(Long, Long)].collect().toSeq
+    val local = core()
+    withCheckpointDir(spark) { dir =>
+      assert(core() === local)
+      // the barriers actually MATERIALIZED through the checkpoint dir
+      assert(rddCheckpoints(dir).nonEmpty)
     }
+  }
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      assert(core(reliable = true) === core(reliable = false))
-      // the reliable barrier actually MATERIALIZED through the
-      // checkpoint dir: setCheckpointDir itself pre-creates a UUID
-      // subdirectory, so listing the top level would pass vacuously —
-      // look for the rdd-* checkpoint data inside it
-      val rdds = new java.io.File(dir).listFiles()
-        .flatMap(u => Option(u.listFiles()).getOrElse(Array.empty))
-        .filter(_.getName.startsWith("rdd-"))
-      assert(rdds.nonEmpty)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  test("reliable barriers: PageRank's per-round barriers replay from a checkpoint dir") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (1L, 3L))
+    val local = ranksOf(edges, iters = 3)
+    withCheckpointDir(spark) { dir =>
+      assert(ranksOf(edges, iters = 3) === local)
+      assert(rddCheckpoints(dir).nonEmpty)
     }
   }
 
