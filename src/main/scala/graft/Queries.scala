@@ -6072,22 +6072,20 @@ object Queries {
       ORDER BY act.day"""))
 
   /** H2+/G8: edit-distance similarity JOIN
-    * ([[Dedup.editDistancePairs]], Ed-Join-style k·q+1 rarest-gram
-    * signatures + exact levenshtein verify) — the fuzzy join behind
+    * ([[Dedup.editDistancePairs]], a self-join on one-deletion
+    * variants + exact levenshtein verify) — the fuzzy join behind
     * entity resolution, without the n² cross product. The oracle
     * computes the ground truth DIRECTLY from the definition (every
-    * pair within distance 1), no gram mechanics — so the hash check
-    * itself proves the prefilter lossless on this corpus. q = 4
-    * (r12): the customer corpus is ADVERSARIAL for gram signatures —
-    * structured names differing in one digit (262,500 genuine
-    * matches at sf0.1), so every 2-gram is hot and q = 2 signatures
-    * admitted 16.1M candidates; 4-gram signatures cut that to 3.8M
-    * (measured), near the collision floor, with the oracle —
-    * ground truth by definition — unchanged. */
+    * pair within distance 1), no variant mechanics — so the hash check
+    * itself proves the candidate join lossless on this corpus. The
+    * customer names are structured and differ in one digit (262,500
+    * genuine matches at sf0.1); names that become equal after one
+    * deletion each (…139 and …196) also share a variant, so the verify
+    * drops about three in four candidates. */
   private val q185 = Q("q185_edit_distance_join",
     (s, d) => Dedup.editDistancePairs(
         t(s, d, "customer"), col("c_custkey"), col("c_name"),
-        maxDist = 1, q = 4)
+        maxDist = 1)
       .orderBy(col("id_a"), col("id_b")),
     Some("""SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
         CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist

@@ -146,26 +146,13 @@ object GraftFunctions {
         s"explicitly)")), lit(true))
 
   /** Dot product of two numeric arrays — the native codegen'd
-    * sequential left-fold (`HashExpressions.dotNative`), bit-identical
-    * to [[dotProductDeclarative]] and the DuckDB list_reduce oracle ON
+    * sequential left-fold (`HashExpressions.dotNative`), elements cast
+    * to double first, bit-identical to the DuckDB list_reduce oracle ON
     * EQUAL-LENGTH, NON-NULL-ELEMENT inputs (every engine vector path).
-    * Outside that domain the two forms diverge by design: the native
-    * fold reads null elements as 0.0 and ignores positions beyond the
-    * shorter array, while the declarative zip_with null-pads both
-    * cases to a NULL result — see each form's own contract. */
+    * Outside that domain the fold reads null elements as 0.0 and
+    * ignores positions beyond the shorter array. */
   def dotProduct(a: Column, b: Column): Column =
     HashExpressions.dotNative(a, b)
-
-  /** Declarative (built-ins only) specification of [[dotProduct]]:
-    * sequential accumulation, elements cast to double first. Kept as
-    * the readable spec; interpreted, so slower per pair. Equal-length
-    * inputs only: `zip_with` null-pads ragged pairs (fold → NULL)
-    * where the native form folds to the shorter length. */
-  def dotProductDeclarative(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v)
 
   /** L2 norm via the same sequential fold. */
   def l2Norm(a: Column): Column = sqrt(dotProduct(a, a))

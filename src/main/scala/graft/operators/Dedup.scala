@@ -266,118 +266,54 @@ object Dedup {
         r(col("containment"), 6).as("containment"))
   }
 
-  /** Scalable edit-distance similarity JOIN (Ed-Join-style signature
-    * prefilter, Xiao et al. 2008): all id pairs whose strings are
-    * within `maxDist` Levenshtein edits — the fuzzy join behind
-    * entity resolution / near-identical-name linkage, without the
-    * |n|² cross product. Correctness rests on the q-gram count
-    * argument: ONE edit destroys at most `q` distinct padded q-gram
-    * TYPES, so two strings within k edits differ in ≤ k·q types —
-    * any (k·q + 1)-subset of a string's types must intersect the
-    * other string's FULL type set. Each string therefore signs with
-    * its k·q + 1 RAREST grams (global df, gram tie — rare grams keep
-    * the join selective), the signature side joins the full posting
-    * side by gram equality, and the surviving candidates take the
-    * exact `levenshtein` verify (plus the free |len Δ| ≤ k cut). The
-    * prefilter is LOSSLESS by the theorem — and the SQL oracle
-    * proves it run for run by computing the ground truth directly
-    * from the definition, no gram mechanics at all: a lossy filter
-    * could not hash-match it.
+  /** Scalable edit-distance similarity JOIN: all id pairs whose
+    * strings are within `maxDist` Levenshtein edits — the fuzzy join
+    * behind entity resolution / near-identical-name linkage, without
+    * the |n|² cross product. Candidates come from the deletion
+    * neighbourhood (FastSS, Bocek et al. 2007): each string emits its
+    * distinct variants with up to `maxDist` characters deleted
+    * (itself included), and the variant table joins itself on the
+    * variant. The join is LOSSLESS at every length, "" included: if
+    * ed(a, b) ≤ k, deleting from `a` the characters an optimal
+    * alignment deletes or substitutes, and from `b` the ones it
+    * inserts or substitutes, leaves the same string after ≤ k
+    * deletions on each side, so the two neighbourhoods share a key.
+    * The join also keeps only |len Δ| ≤ k (a necessary condition),
+    * and the surviving candidates dedup to unordered pairs and take
+    * ONE exact `levenshtein` verify each. The SQL oracle computes the
+    * ground truth directly from the definition, so a lossy join could
+    * not hash-match it.
     *
-    * Shape at 100 TB: the candidate join is SIGNATURE ⋈ SIGNATURE —
-    * (k·q + 1)·n postings on deliberately RARE keys on BOTH sides,
-    * lossless by the prefix-filter theorem (both signatures are the
-    * k·q+1 smallest grams under ONE global total order — see the
-    * candidate-join comment); the full posting table exists only to
-    * rank grams by document frequency. Candidates dedup to unordered
-    * pairs before the verify join (levenshtein runs once per
-    * candidate, never per gram match).
-    * `q` is the selectivity lever: candidates ≈ signature collisions
-    * on each string's k·q+1 rarest grams, so on STRUCTURED corpora
-    * where even rare short grams are hot (serial-numbered names:
-    * every 2-gram is shared by thousands) raise q until the rarest
-    * grams are actually rare — q185 measured 16.1M candidates at
-    * q = 2 vs 3.8M at q = 4 under the old signature ⋈ full-posting
-    * join on 15k near-identical customer names, same (lossless)
-    * answer; the r14 prefix-filter join cuts below that again.
-    * Degenerate corpora (everything near-identical → even the rare
-    * grams are hot) fail fast via the signature-side block guard.
-    * Strings too short to own k·q + 1 padded grams would evade the
-    * pigeonhole (a pair could match with NO shared gram) — refused
-    * loudly in-plan rather than silently dropped. NULL strings drop
-    * (nothing to match).
+    * Cost: a string of length L emits Σ_{j≤k} C(L, j) variant keys —
+    * L + 1 at k = 1, but growing as L^k, so k ≥ 2 on long strings
+    * multiplies the key table accordingly. Degenerate corpora (one
+    * variant shared by more than `maxBlock` strings) fail fast via the
+    * block guard on the variant key. NULL strings drop (nothing to
+    * match).
     *
     * Returns (id_a, id_b, dist), id_a < id_b, dist ≤ maxDist. */
   def editDistancePairs(df: DataFrame, id: Column, str: Column,
-                        maxDist: Int, q: Int = 2,
+                        maxDist: Int,
                         maxBlock: Int = DefaultMaxBlock): DataFrame = {
-    require(maxDist >= 1 && q >= 1, s"need maxDist, q >= 1: $maxDist/$q")
-    val sigSize = maxDist * q + 1
-    val minLen = maxDist * q - q + 2   // padded grams = len + q - 1 >= sigSize
-    val pad = "\u0001".repeat(q - 1)   // out-of-alphabet pad char
-    val s0 = df.filter(str.isNotNull)
-      .select(id.as("_id"), str.as("_s"))
-      .filter(coalesce(assert_true(length(col("_s")) >= minLen,
-        concat(lit(s"editDistancePairs: string of id "),
-          col("_id").cast("string"),
-          lit(s" is shorter than $minLen chars — it cannot own the " +
-            s"${sigSize} signature grams the lossless prefilter needs " +
-            s"(raise q, lower maxDist, or filter short strings upstream)"))),
-        lit(true)))
-    // the signature rows carry the string LENGTH (one int per posting
-    // row — r15): |len(a) − len(b)| ≤ maxDist is a necessary edit-
-    // distance condition, so applying it ON THE CANDIDATE JOIN OUTPUT
-    // (before the pair-dedup exchange and the two verify joins) drops
-    // never-verifiable pairs at the earliest possible point — guide §3
-    // (shrink the join's fan-in); the later exact levenshtein verify
-    // is untouched, so the output is exact either way
-    val posting = OpUtils.barrier(
-      s0.withColumn("_p", concat(lit(pad), col("_s"), lit(pad)))
-        .select(col("_id"), length(col("_s")).as("_len"), explode(expr(
-          s"array_distinct(transform(sequence(1, length(_p) - ${q - 1}), " +
-            s"i -> substring(_p, i, $q)))")).as("g")))
-    val dfreq = posting.groupBy(col("g")).agg(count(lit(1)).as("_df"))
-    val sig = OpUtils.barrier(guardBlocks(
-      posting.join(dfreq, Seq("g"))
-        .withColumn("_rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("_id")).orderBy(col("_df"), col("g"))))
-        .filter(col("_rn") <= sigSize)
-        .select(col("g").as("bk"), col("_id").as("_sid"), col("_len")),
-      maxBlock, "editDistancePairs")
-      .select(col("bk").as("g"), col("_sid"), col("_len")))
-    // candidate join: SIGNATURE ⋈ SIGNATURE, not signature ⋈ full
-    // postings (r14) — the standard prefix-filter strengthening
-    // (Chaudhuri et al. 2006; Xiao et al. 2008 §3): both signatures
-    // are each string's k·q+1 SMALLEST grams under the same global
-    // total order (df, then gram), and two gram sets within the
-    // k·q-type edit bound must collide inside those prefixes. Proof:
-    // suppose sig(A) ∩ sig(B) = ∅ with both full-sized, and wlog
-    // max(sig(A)) ≤ max(sig(B)) in the order. Every gram of sig(A)
-    // that B owns would sort into sig(B) (it precedes sig(B)'s max),
-    // so sig(A) ∩ B = ∅ — all k·q+1 grams of sig(A) are in A∖B,
-    // contradicting |A∖B| ≤ k·q. An UNDERSIZED signature is the whole
-    // gram set (array_distinct can collapse a repetitive string below
-    // k·q+1 types), and the same argument runs one-sided: a full
-    // sig(B) disjoint from A = sig(A) forces |B∖A| ≥ k·q+1 — exactly
-    // the cases the old signature ⋈ full-posting join covered (both
-    // undersized reduces to A ∩ B = ∅ under ≤ k edits, unreachable at
-    // maxDist = 1 where the 2(q−1) distinct pad-boundary grams alone
-    // fill the signature). Candidates drop from Σ_sig df(g) to
-    // signature-signature collisions on the deliberately-rare grams —
-    // q185 measured the old join emitting 3.8M pre-distinct rows, one
-    // 4.0 s job of its 6.5 s total. The barrier above keeps the
-    // df-rank chain computed once under the self-join's two consumers.
-    // `<` instead of `=!=` + least/greatest (r15): the symmetric
-    // self-join emitted every unordered pair TWICE (once per
-    // orientation) and canonicalized after — joining strictly
-    // id-ascending emits each (min, max) pair once per shared
-    // signature gram, HALVING the join output feeding the pair-dedup
-    // exchange; the pair set is identical by symmetry of the collision
-    // relation.
-    val cand = sig
-      .join(sig.select(col("g"), col("_sid").as("_fid"),
-        col("_len").as("_flen")), Seq("g"))
+    require(maxDist >= 1, s"need maxDist >= 1: $maxDist")
+    val s0 = df.filter(str.isNotNull).select(id.as("_id"), str.as("_s"))
+    // one round deletes one more character from every variant so far;
+    // array_union keeps the earlier variants and dedups the new ones
+    // (for "" Spark's sequence(1, 0) is [1, 0]; both indices yield ""
+    // again, which the union drops)
+    val variants = (1 to maxDist).foldLeft("array(_s)") { (vs, _) =>
+      s"array_union($vs, flatten(transform($vs, v -> transform(" +
+        "sequence(1, length(v)), i -> concat(substring(v, 1, i - 1), " +
+        "substring(v, i + 1))))))"
+    }
+    val keys = s0.select(explode(expr(variants)).as("bk"),
+      col("_id").as("_sid"), length(col("_s")).as("_len"))
+    // `<` emits each unordered pair once per shared variant; the
+    // length cut drops never-verifiable pairs before the pair-dedup
+    // exchange and the two verify joins
+    val cand = guardBlocks(keys, maxBlock, "editDistancePairs")
+      .join(keys.select(col("bk"), col("_sid").as("_fid"),
+        col("_len").as("_flen")), Seq("bk"))
       .filter(col("_sid") < col("_fid") &&
         abs(col("_len") - col("_flen")) <= maxDist)
       .select(col("_sid").as("id_a"), col("_fid").as("id_b"))

@@ -551,7 +551,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(!all.keys.exists { case (a, b) => a >= 4L && b >= 4L })
   }
 
-  test("editDistancePairs: exact fuzzy join; short strings refuse loudly") {
+  test("editDistancePairs: exact fuzzy join; short strings match like any other") {
     import graft.operators.Dedup
     val rows = Seq(
       (1L, "kitten"), (2L, "sitten"),      // dist 1: pair
@@ -560,23 +560,21 @@ class DedupSimilaritySpec extends SparkSpec {
       (5L, "absolutely unrelated"),
       (6L, null.asInstanceOf[String]))      // null: dropped
     val out = Dedup.editDistancePairs(
-        rows.toDF("id", "s"), col("id"), col("s"), maxDist = 1, q = 2)
+        rows.toDF("id", "s"), col("id"), col("s"), maxDist = 1)
       .as[(Long, Long, Long)].collect().toSet
     assert(out === Set((1L, 2L, 1L), (1L, 3L, 1L), (2L, 3L, 1L)))
     // maxDist 2 admits kitchen (insert h + substitute? kitten->kitchen = 2)
     val out2 = Dedup.editDistancePairs(
-        rows.toDF("id", "s"), col("id"), col("s"), maxDist = 2, q = 2)
+        rows.toDF("id", "s"), col("id"), col("s"), maxDist = 2)
       .as[(Long, Long, Long)].collect().toSet
     assert(out2.contains((1L, 4L, 2L)))
-    // a string too short for the k·q+1 signature pigeonhole is refused
-    // loudly, never silently unable to match
-    val boom = intercept[Exception] {
-      Dedup.editDistancePairs(
+    // strings shorter than maxDist still meet in the deletion
+    // neighbourhood: "ab" and "a" share the variant "a"
+    val short = Dedup.editDistancePairs(
         Seq((1L, "ab"), (2L, "a")).toDF("id", "s"),
-        col("id"), col("s"), maxDist = 2, q = 2).count()
-    }
-    assert(Iterator.iterate(boom: Throwable)(_.getCause).takeWhile(_ != null)
-      .flatMap(t => Option(t.getMessage)).mkString.contains("signature"))
+        col("id"), col("s"), maxDist = 2)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(short === Set((1L, 2L, 1L)))
   }
 
   test("winnow guarantee: a shared run of >= w+k-1 tokens shares a fingerprint") {

@@ -544,4 +544,18 @@ class PlanRegressionSpec extends SparkSpec {
           s"literal (got $nested) and no array<double> literal (got $flat):\n$plan")
     }
   }
+
+  test("q185 edit-distance join: one variant self-join seen whole — no " +
+      "Window, no gram-frequency aggregate, no barrier") {
+    val p = plan("q185_edit_distance_join")
+    assert(!p.contains("Window"), s"no per-string ranking Window may return:\n$p")
+    assert(!p.contains("Scan ExistingRDD") && p.contains("Scan parquet"),
+      s"no barrier may cut the plan above the customer scan:\n$p")
+    // the only aggregates are the block guard's count per variant key
+    // and the unordered-pair distinct
+    val aggKeys = "HashAggregate\\(keys=\\[([^\\]]*)\\]".r.findAllMatchIn(p)
+      .map(_.group(1).replaceAll("#\\d+L?", "")).toSet
+    assert(aggKeys === Set("bk", "id_a, id_b"),
+      s"unexpected aggregate keys $aggKeys:\n$p")
+  }
 }
