@@ -430,14 +430,17 @@ object Queries {
       WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
       GROUP BY c_mktsegment ORDER BY c_mktsegment"""))
 
-  /** Custom Catalyst operator (`plans.TopK`): bounded-heap per-group
-    * top-k — same ClusteredDistribution as the window formulation but
-    * O(n log k) with groups×k resident rows instead of a full sort.
-    * Output is (group, score) only: the score multiset is deterministic
-    * even when ties at the k-boundary make the row choice arbitrary. */
+  /** Per-group top-k as the `row_number() <= k` filter: Spark's
+    * `InferWindowGroupLimit` plans a Partial `WindowGroupLimit` below
+    * the exchange and a Final one above it, so the shuffle carries
+    * per-partition survivors only. Output is (group, score) only: the
+    * score multiset is deterministic even when ties at the k-boundary
+    * make the row choice arbitrary. */
   private val q28 = Q("q28_topk_custom_operator",
-    (s, d) => graft.plans.TopK.perGroup(
-        t(s, d, "orders"), Seq("o_orderpriority"), "o_totalprice", k = 3)
+    (s, d) => t(s, d, "orders")
+      .withColumn("rn", row_number().over(Window
+        .partitionBy(col("o_orderpriority")).orderBy(col("o_totalprice").desc)))
+      .filter(col("rn") <= 3)
       .select(col("o_orderpriority"), col("o_totalprice"))
       .orderBy(col("o_orderpriority"), col("o_totalprice").desc),
     Some("""SELECT o_orderpriority, o_totalprice FROM (
@@ -1083,10 +1086,11 @@ object Queries {
       FROM reach GROUP BY src ORDER BY doc_id"""),
     bench = true)
 
-  /** H4 + G3 + the top-k rewrite on a corpus query: per-language token
-    * heavy hitters — explode → count → row_number ≤ 5, which
-    * `TopKRewrite` plans as the bounded-heap operator (no Window, no
-    * per-group sort). Deterministic tie-break: (count desc, token). */
+  /** H4 + G3 + per-group top-k on a corpus query: per-language token
+    * heavy hitters — explode → count → row_number ≤ 5, which Spark's
+    * `InferWindowGroupLimit` plans as a Partial `WindowGroupLimit`
+    * below the exchange and a Final one above it. Deterministic
+    * tie-break: (count desc, token). */
   private val q68 = Q("q68_token_heavy_hitters",
     (s, d) => {
       val counts = t(s, d, "documents")
@@ -1307,9 +1311,9 @@ object Queries {
 
   /** H4 curation: per-source document caps (domain caps) — keep the 20
     * highest-quality docs per source, rank ties broken by doc_id. The
-    * row_number filter plans through `TopKRewrite` as the bounded-heap
-    * operator: domain caps over a trillion-row crawl never sort a
-    * source's documents. */
+    * row_number filter plans as a Partial/Final `WindowGroupLimit`
+    * pair: the shuffle carries each map partition's top 20 per source,
+    * never a source's whole document set. */
   private val q76 = Q("q76_source_caps",
     (s, d) => {
       val scored = TextAnalysis.withTextStats(t(s, d, "documents"), col("text"))
@@ -3859,8 +3863,8 @@ object Queries {
 
   /** D+/H1+ sketches: KMV-estimated source overlap — q107's exact
     * shared-shingle matrix re-answered from bottom-k(128) distinct
-    * sketches ([[graft.operators.Sketches.bottomK]], riding the
-    * engine's own bounded-heap TopK operator) with the exact Jaccard
+    * sketches ([[graft.operators.Sketches.bottomK]], a per-source
+    * `row_number` cut) with the exact Jaccard
     * computed alongside and an accuracy gate pinned TRUE by the
     * oracle (measured max |est − exact| ≈ 0.15 across SFs; gate 0.2).
     * At 100 TB the exact matrix shuffles every distinct (source,
@@ -4678,9 +4682,10 @@ object Queries {
   /** E+ entry-channel analysis: sessions grouped by their FIRST event
     * type — session count, purchase-conversion share, and revenue per
     * entry channel. The "first event per session" cut is the
-    * `row_number() = 1` filter, which the TopKRewrite plans as the
-    * bounded-heap operator (no Window, no per-session sort); the
-    * per-session rollup reuses the same session partitioning. */
+    * `row_number() = 1` filter, which plans as a Partial/Final
+    * `WindowGroupLimit` pair (the shuffle carries one candidate row
+    * per session and map partition); the per-session rollup reuses
+    * the same session partitioning. */
   private val q144 = Q("q144_entry_channel",
     (s, d) => {
       // sessionized events feed the entry cut AND the rollup —
@@ -4976,8 +4981,9 @@ object Queries {
 
   /** D+ sketches: PER-GROUP quantile sketch (q126's global sample run
     * inside every event_type at once — [[graft.operators.Sketches
-    * .groupQuantileSketch]]): the per-group cut rides the TopKRewrite
-    * (bounded heap, k rows of state per group), estimates are
+    * .groupQuantileSketch]]): the per-group cut is a `row_number ≤ k`
+    * filter (a Partial `WindowGroupLimit` keeps k rows per group and
+    * map partition before the shuffle), estimates are
     * nearest-rank over ≤ k values, and the exact-rank gate
     * |frac(est) − p| ≤ 0.12 (k=128 ⇒ DKW ≈ 0.12 at 95%) is
     * oracle-pinned TRUE per (group, p). */
@@ -5489,7 +5495,7 @@ object Queries {
     * ≈ −1; boilerplate flattens it, degenerate repetition steepens
     * it). Closed-form OLS over (ln rank, ln count), the op sequence
     * spelled out on both sides — never native regr_slope. The top-N
-    * cut is a rank-≤-k window the TopK rewrite bounds; slope and
+    * cut is a `row_number ≤ k` window group limit; slope and
     * intercept go through r(4) (ln sums are the one float-order
     * exposure). */
   private val q171 = Q("q171_zipf_fit",

@@ -239,8 +239,8 @@ object Clustering {
     * codebooks over contiguous `sliceLen` sub-vectors of the same
     * corpus): instead of m sequential loops of (seed pass + `iters`
     * update passes) each, the slices ride ONE exploded (slice, subvec)
-    * table, the seed pass is one bounded-heap top-k per slice (the
-    * TopKRewrite plans the row_number ≤ k window as TopKPerGroup), and
+    * table, the seed pass is one `row_number ≤ k` cut per slice
+    * (planned as a Partial/Final `WindowGroupLimit` pair), and
     * each update pass is one job whose (slice, cid, pos) integral sums
     * cover every codebook — 3 jobs total instead of 3·m (r14 bench:
     * the PQ family's dominant cost). Per-slice arithmetic is UNCHANGED:

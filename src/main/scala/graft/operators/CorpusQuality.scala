@@ -290,9 +290,10 @@ object CorpusQuality {
     *
     * Shape at 100 TB: one explode → (group, token) count with
     * map-side combine (the same corpus-sized shuffle as every unigram
-    * model here), then the per-group top-N cut — a rank-≤-k window
-    * the TopK rewrite turns into bounded per-partition heaps, so the
-    * vocab-sized count table never sorts — and a group-bounded
+    * model here), then the per-group top-N cut — a `row_number ≤ k`
+    * filter that plans as a Partial `WindowGroupLimit` below the
+    * exchange, so only each map partition's top N per group
+    * shuffles — and a group-bounded
     * 5-sum aggregation. Output is |groups| rows. NULL groups/texts
     * are excluded (not a corpus); a group with fewer than 2 ranked
     * terms drops (a 1-point line is undefined; ranks are distinct so

@@ -67,9 +67,9 @@ object Dedup {
     // partition and all but one be flagged — a dirty corpus would
     // silently lose every failed-extraction row to the standard
     // !is_dup filter. Each null row gets its own window group (rn=1,
-    // never a dup) while `is_dup` stays the pure rn>1 comparison the
-    // TopKRewrite recognizes (the keeper filter plans as the bounded
-    // heap, not a Window). The _rowid third fallback covers rows where
+    // never a dup) while `is_dup` stays the pure rn>1 comparison, so a
+    // keeper filter (!is_dup) plans as a window group limit. The
+    // _rowid third fallback covers rows where
     // the ID is null too (the id-based sentinel would be NULL and all
     // such rows would collapse into one group, flagging all but one):
     // the fallback value differs across runs, but the OUTPUT doesn't —

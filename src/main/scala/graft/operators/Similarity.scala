@@ -138,9 +138,11 @@ object Similarity {
         }))
 
   /** The per-query top-k cut every ANN variant shares: rank by
-    * (score desc, candidate id) inside the query partition — the exact
-    * shape the TopKRewrite plans as the bounded-heap TopKPerGroup exec
-    * (no Window, no per-group sort) — and keep ranks ≤ k. */
+    * (score desc, candidate id) inside the query partition and keep
+    * ranks ≤ k. Spark's `InferWindowGroupLimit` plans the filter as a
+    * Partial `WindowGroupLimit` below the exchange and a Final one
+    * above it, so the shuffle carries at most k candidates per query
+    * and map partition. */
   private def rankTopK(pairs: DataFrame, qId: String, cId: String,
                        score: Column, k: Int,
                        rankCol: String = "rank"): DataFrame = {
@@ -179,7 +181,7 @@ object Similarity {
     * runs over m-byte codes instead of 4·dim-byte vectors (the
     * compression is the win), the LUT join is a broadcast equality
     * join, and the per-pair aggregation map-side-combines down to
-    * |Q|·|C| partials before the per-query bounded-heap top-k cut.
+    * |Q|·|C| partials before the per-query top-k cut ([[rankTopK]]).
     * Compose with IVF coarse lists ([[ivfTopK]]) to prune the scan
     * itself. Self-matches are excluded.
     *
@@ -298,7 +300,7 @@ object Similarity {
     * for probed lists only (~nProbe/nLists of the corpus per query);
     * the query side broadcasts (queries are the small side by
     * contract); distance is one fused dot-product chain per pair; the
-    * per-query cut rides the bounded-heap top-k. Self-matches are
+    * per-query cut is [[rankTopK]]. Self-matches are
     * excluded.
     *
     * Both sides are prepped at construction: NULL vectors drop, any

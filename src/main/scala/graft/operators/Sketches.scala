@@ -93,32 +93,22 @@ object Sketches {
     * hash and delivers the textbook √(J(1−J)/k) accuracy.
     *
     * Plan shape: one distinct over (group, hash), then the per-group
-    * ascending cut rides the engine's own bounded-heap
-    * [[graft.plans.TopK]] operator (partial heaps below the exchange:
-    * the shuffle carries ≤ partitions × groups × k candidate longs,
-    * never the set), then a groups-sized list aggregation. Returns
-    * (grp, hs) with `hs` ascending.
-    *
-    * CONTRACT: |hash| must stay below 2^53 — the TopK cut orders on a
-    * double cast, which collides distinct longs beyond that (a
-    * full-range xxhash64 would silently produce a WRONG bottom-k
-    * set). The family's own [[graft.functions.GraftFunctions.polyHash]]
-    * (< 2^30) is fine; an in-plan assert fails loudly otherwise. */
+    * ascending `row_number() <= k` cut on the hash itself (a Partial
+    * `WindowGroupLimit` below the exchange: the shuffle carries
+    * ≤ partitions × groups × k candidates, never the set), then a
+    * groups-sized list aggregation. Any integral hash width works,
+    * full-range 64-bit included. Returns (grp, hs) with `hs` ascending.
+    * A NULL hash means a null-keyed input row and fails in-plan. */
   def bottomK(df: DataFrame, group: Column, hash: Column, k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val dist = df.select(group.as("grp"), hash.as("h")).distinct()
-      // the condition must name BOTH failure modes: a NULL hash makes
-      // the < comparison NULL, and assert_true(NULL) throws — without
-      // the isNotNull clause the error text would blame 2^53 overflow
-      // for what is actually a null-keyed input row (caller bug)
-      .filter(coalesce(assert_true(
-        col("h").isNotNull && abs(col("h")) < lit(1L << 53),
-        lit("bottomK: hash is NULL or |hash| >= 2^53 — null hashes mean " +
-          "a null-keyed input row (fix the caller); oversized hashes " +
-          "collide under the bounded-heap cut's double ordering; " +
-          "rescale (e.g. polyHash) first")), lit(true)))
-    graft.plans.TopK.perGroup(
-        dist.withColumn("_neg", -col("h")), Seq("grp"), "_neg", k)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("grp")).orderBy(col("h"))
+    df.select(group.as("grp"), hash.as("h")).distinct()
+      .filter(coalesce(assert_true(col("h").isNotNull,
+        lit("bottomK: hash is NULL — a null-keyed input row (fix the caller)")),
+        lit(true)))
+      .withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") <= k)
       .groupBy(col("grp")).agg(array_sort(collect_list(col("h"))).as("hs"))
   }
 
@@ -211,12 +201,12 @@ object Sketches {
 
   /** Per-GROUP quantile sketch: [[bottomKSample]]'s uniform draw run
     * inside every group at once, plus nearest-rank estimates. The
-    * per-group cut is written as the `row_number() <= k` pattern over
-    * the total (hash, key, value) order, so the TopKRewrite plans it as
-    * the bounded-heap operator — per-group state is k rows however
-    * large the group, the shuffle carries survivors only, and the
-    * sample is deterministic across engines and layouts (the hash
-    * decides membership; ties break on key then value). Returns one
+    * per-group cut is the `row_number() <= k` filter over the total
+    * (hash, key, value) order, which plans as a Partial
+    * `WindowGroupLimit` below the exchange — the shuffle carries k
+    * rows per group and map partition — and the sample is
+    * deterministic across engines and layouts (the hash decides
+    * membership; ties break on key then value). Returns one
     * row per (group, p): `grp, p, est` — `est` is NULL only for a
     * group whose sampled values are ALL NULL (no observations; groups
     * themselves always exist, coming from their own rows). */

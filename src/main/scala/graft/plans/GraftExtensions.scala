@@ -3,18 +3,16 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 import org.apache.spark.sql.types.StringType
 
 import graft.functions.{ArrayEqCount, BandHashes, BpeMergeFold, DotProduct, DyadicFold, LshBucket, NfcNormalize, PolyHash, PositionedShingles, ShingleMinHash, ShingleSimHash, Shingles, WinnowFingerprints}
 
-/** SparkSessionExtensions entry point — the injection seam `SURVEY.md`
-  * §4.3 calls for. Registers the engine's native expressions as SQL
-  * functions so `spark.sql("SELECT graft_polyhash(text) ...")` works,
-  * and keeps a place to inject optimizer rules / planner strategies as
-  * the engine grows custom operators.
+/** SparkSessionExtensions entry point: registers the engine's native
+  * expressions as SQL functions so
+  * `spark.sql("SELECT graft_polyhash(text) ...")` works. It injects no
+  * optimizer rule or planner strategy; every plan is built-in Catalyst.
   *
   * Use: `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions` on a cluster;
@@ -26,8 +24,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach { case (ident, info, builder) =>
       e.injectFunction((ident, info, builder))
     }
-    e.injectPlannerStrategy(_ => TopKStrategy)
-    e.injectOptimizerRule(_ => TopKRewrite)
   }
 }
 
@@ -35,15 +31,23 @@ object GraftExtensions {
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
 
+  /** The Int value of any integral literal (byte/short/int/in-range
+    * long), so SQL literals like `2S` and `2L` count as integers. */
+  private def intVal(l: Literal): Option[Int] = l.value match {
+    case i: Int => Some(i)
+    case v: Long if v <= Int.MaxValue && v >= Int.MinValue => Some(v.toInt)
+    case s: Short => Some(s.toInt)
+    case b: Byte => Some(b.toInt)
+    case _ => None
+  }
+
   /** n/k/planes/dim-style arguments must be integer literals — a clear
     * error beats the UnsupportedOperationException a bare eval() on a
-    * non-literal column throws. Integral extraction is shared with
-    * [[TopKRewrite.intVal]] (byte/short/int/in-range long), so SQL
-    * short literals like `2S` count as integer literals here too. */
+    * non-literal column throws. */
   private def intLit(e: Expression, fn: String, name: String): Int = {
     val v = e match {
-      case l: org.apache.spark.sql.catalyst.expressions.Literal =>
-        TopKRewrite.intVal(l).getOrElse(throw new IllegalArgumentException(
+      case l: Literal =>
+        intVal(l).getOrElse(throw new IllegalArgumentException(
           l.value match {
             case _: Long => s"$fn: $name is out of int range: ${l.value}"
             case _ => s"$fn: $name must be an integer literal, got $l"
@@ -74,8 +78,7 @@ object GraftExtensions {
   /** Merge-symbol arguments must be string literals — same rationale
     * as [[intLit]]. */
   private def strLit(e: Expression, fn: String, name: String): String = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(
-        v: org.apache.spark.unsafe.types.UTF8String, StringType) => v.toString
+    case Literal(v: org.apache.spark.unsafe.types.UTF8String, StringType) => v.toString
     case other => throw new IllegalArgumentException(
       s"$fn: $name must be a string literal, got $other")
   }

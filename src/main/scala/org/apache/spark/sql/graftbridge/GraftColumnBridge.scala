@@ -11,23 +11,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Build a DataFrame from a (possibly custom) logical plan — the
-    * `Dataset.ofRows` constructor, package-private to sql. */
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Canonicalize float/double grouping keys (-0.0 → 0.0, NaN bit
-    * patterns → the canonical NaN) exactly as the optimizer's
-    * `NormalizeFloatingNumbers` does for Window/Aggregate/Join keys.
-    * That rule only rewrites the nodes it knows about, so a CUSTOM
-    * grouping operator must apply the same normalization itself or
-    * -0.0/0.0 silently split into two byte-distinct groups (and hash
-    * to two different partitions). `normalize` is private[sql] —
-    * hence this forwarder; it is a no-op on non-float types. */
-  def normalizeFloatKey(e: Expression): Expression =
-    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 }

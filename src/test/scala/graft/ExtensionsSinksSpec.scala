@@ -120,6 +120,19 @@ class ExtensionsSinksSpec extends SparkSpec {
     assert(msgs(planesErr).exists(_.contains("[1, 62]")), planesErr.getMessage)
   }
 
+  test("SQL function arity and short-literal args error/work at analysis time") {
+    GraftExtensions.register(spark)
+    // wrong arity: a named error, not NoSuchElementException
+    val e = intercept[Throwable] { spark.sql("SELECT graft_dot(array(1.0))").collect() }
+    def msgs(t: Throwable): Seq[String] = Option(t).toSeq
+      .flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    assert(msgs(e).exists(_.contains("requires exactly 2 arguments")), e.toString)
+    // a SQL short literal (2S) IS an integer literal
+    val r = spark.sql("SELECT graft_shingles(array('a','b','c'), 2S) AS s")
+      .collect().head.getSeq[String](0)
+    assert(r.toSet === Set("a b", "b c"))
+  }
+
   test("epochMicros on int64 nanos FLOOR-divides: pre-epoch sub-us " +
       "remainders land in the earlier microsecond, like DuckDB epoch_us") {
     import graft.functions.GraftFunctions

@@ -51,13 +51,75 @@ class PlanRegressionSpec extends SparkSpec {
     assert(hashExchanges === 1, s"exact dedup is one shuffle by definition:\n$p")
   }
 
-  test("q68/q76: corpus top-k queries plan through the rewrite (no Window, no group sort)") {
+  /** Every query with a per-group top-k (`row_number`/`rank` ≤ k over
+    * a partitioned window). Spark's `InferWindowGroupLimit` plans each
+    * as a `WindowGroupLimit`. `true`: the child needs an exchange, and
+    * a Partial limit must sit directly below it so the shuffle carries
+    * per-partition survivors only. `false`: the child is already
+    * clustered on the group keys, so only the Final limit plans. */
+  private val windowGroupLimits: Seq[(String, Boolean)] = Seq(
+    "q08_window_topk_per_group" -> true, "q25_moving_avg" -> false,
+    "q28_topk_custom_operator" -> true, "q35_similarity_topk" -> true,
+    "q36_similarity_lsh_topk" -> true, "q38_similarity_ivf_topk" -> true,
+    "q39_curation_pipeline" -> true, "q63_first_last_nth" -> false,
+    "q65_similarity_multiprobe_topk" -> true, "q68_token_heavy_hitters" -> true,
+    "q76_source_caps" -> true, "q78_curation_clustered" -> true,
+    "q87_tfidf_topterms" -> true, "q110_rrf_hybrid" -> true,
+    "q112_similarity_quantized_topk" -> true, "q116_cluster_balanced_sample" -> true,
+    "q117_corpus_manifest" -> true, "q122_hard_negatives" -> true,
+    "q127_source_distinct_kmv" -> true, "q144_entry_channel" -> true,
+    "q151_group_quantile_sketch" -> true, "q160_top_ngram_repetition" -> true,
+    "q171_zipf_fit" -> true, "q179_pq_adc_topk" -> true,
+    "q180_ivfpq_topk" -> true, "q181_pq_recall" -> true,
+    "q186_pq_rerank_topk" -> true, "q199_ann_label_ndcg" -> true,
+    "q206_source_keyness" -> true, "q209_cluster_keywords" -> true,
+    "q212_ivf_recall" -> true)
+
+  test("top-k queries plan WindowGroupLimit, Partial below the exchange") {
+    // tree lines print `+- ` / `:- ` prefixes; a node's parent is the
+    // nearest line above it that starts further left
+    def indent(l: String): Int = l.indexWhere(c => !" +-:".contains(c))
+    windowGroupLimits.foreach { case (name, exchanged) =>
+      val p = plan(name)
+      assert(p.contains("WindowGroupLimit") && !p.contains("TopKPerGroup"),
+        s"$name must plan Spark's WindowGroupLimit:\n$p")
+      val lines = p.linesIterator.toIndexedSeq
+      val partials = lines.indices.filter(i =>
+        lines(i).contains("WindowGroupLimit") && lines(i).endsWith(", Partial"))
+      if (exchanged) {
+        assert(partials.nonEmpty, s"$name must plan a Partial limit:\n$p")
+        partials.foreach { i =>
+          val parent = lines.take(i).reverse.find(l => indent(l) < indent(lines(i)))
+          assert(parent.exists(_.contains("Exchange hashpartitioning")),
+            s"$name: the Partial limit must feed the hash exchange:\n$p")
+        }
+      } else {
+        assert(partials.isEmpty && p.contains(", Final"),
+          s"$name reuses its child's partitioning: Final limit only:\n$p")
+      }
+    }
+  }
+
+  /** The Window that numbers the rows reads the Final limit directly, so
+    * it sorts and numbers per-group survivors only, never the whole
+    * group. */
+  private def windowOverFinalLimit(p: String): Boolean =
+    p.linesIterator.sliding(2).exists {
+      case Seq(window, child) => window.contains("Window [") &&
+        child.contains("WindowGroupLimit") && child.endsWith(", Final")
+      case _ => false
+    }
+
+  test("q68/q76: corpus top-k plans WindowGroupLimit; the Window sees survivors") {
     Seq("q68_token_heavy_hitters", "q76_source_caps").foreach { name =>
       val p = plan(name)
-      assert(p.contains("TopKPerGroupPartial") && p.contains("TopKPerGroup "),
-        s"$name must plan as the two-stage bounded-heap operator:\n$p")
-      assert(!p.contains("Window"), s"$name must not plan a Window:\n$p")
+      assert(windowOverFinalLimit(p), s"$name: the Window must read the Final limit:\n$p")
     }
+  }
+
+  test("q171 zipf fit: the per-source top-N cut plans WindowGroupLimit") {
+    val p = plan("q171_zipf_fit")
+    assert(windowOverFinalLimit(p), s"the Window must read the Final limit:\n$p")
   }
 
   test("q69 decontamination: native shingle extraction, no interpreted chain") {
@@ -94,10 +156,6 @@ class PlanRegressionSpec extends SparkSpec {
       s"exactly one scan may read text (postings); got schemas $reads:\n$p")
     assert(reads.count(_.isEmpty) === 1,
       s"the doc-count scan must read ZERO columns (metadata count); got $reads:\n$p")
-    assert(p.contains("TopKPerGroupPartial"),
-      s"per-doc ranking must ride the bounded-heap rewrite:\n$p")
-    assert("Window".r.findAllIn(p).length === 1,
-      s"exactly one Window (df over term) may remain:\n$p")
   }
 
   test("q91 BM25: query-term filter sits below the first exchange; bounded-heap cut") {
@@ -155,23 +213,14 @@ class PlanRegressionSpec extends SparkSpec {
 
   test("q117 corpus manifest: dedup keeper rides the top-k rewrite; pruned shuffle diet") {
     val p = plan("q117_corpus_manifest")
-    assert(p.contains("TopKPerGroupPartial"),
-      s"the exact-dedup keeper (rn=1 per digest) must plan as the " +
-        s"bounded-heap operator, not a Window:\n$p")
-    assert(!p.contains("Window"),
-      s"no Window may survive — the unused epoch-shuffle position must be " +
-        s"pruned along with its sort:\n$p")
     val hashExchanges = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(hashExchanges === 2,
       s"gate and split are projections; only the dedup digest exchange and " +
         s"the shard aggregation may shuffle (got $hashExchanges):\n$p")
   }
 
-  test("q122 hard negatives: bucket equality join + bounded-heap cut, no Window") {
+  test("q122 hard negatives: bucket equality join, never all-pairs") {
     val p = plan("q122_hard_negatives")
-    assert(p.contains("TopKPerGroupPartial") && p.contains("TopKPerGroup "),
-      s"the per-query cut must ride the two-stage bounded heap:\n$p")
-    assert(!p.contains("Window"), s"no per-query sort window may survive:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"mining must stay a bucket equality join, never all-pairs:\n$p")
   }
@@ -186,18 +235,6 @@ class PlanRegressionSpec extends SparkSpec {
         s"$name must read only the barriered table above the checkpoint:\n$p")
       assert(p.contains("Scan ExistingRDD"), s"$name barrier missing:\n$p")
     }
-    // the bottom-k cut itself (below q124's lists barrier) rides the
-    // two-stage bounded heap — inspect the operator's own plan
-    import org.apache.spark.sql.functions._
-    val docs = graft.sources.Tables.documents(spark, sf("sf0.001"))
-    val pBot = graft.operators.Sketches.bottomK(
-        docs.select(col("source"),
-          graft.functions.GraftFunctions.polyHash(col("text")).as("h")),
-        col("source"), col("h"), k = 8)
-      .queryExecution.executedPlan.toString
-    assert(pBot.contains("TopKPerGroupPartial") && pBot.contains("TopKPerGroup "),
-      s"bottom-k must plan as the bounded-heap operator:\n$pBot")
-    assert(!pBot.contains("Window"), s"bottom-k must not plan a Window:\n$pBot")
   }
 
   test("q126 quantile sketch: heap cut via TakeOrderedAndProject, no Window, barriered scan") {
@@ -325,11 +362,6 @@ class PlanRegressionSpec extends SparkSpec {
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"$name must stay equality-join shaped:\n$p")
     }
-    // the top-gram cut must ride the TopKRewrite (k=1 bounded heap),
-    // not a per-doc Window sort over the full gram set
-    val pTop = plan("q160_top_ngram_repetition")
-    assert(pTop.contains("TopKPerGroup") && !pTop.contains("Window"),
-      s"q160's rn=1 filter must plan as the bounded-heap operator:\n$pTop")
   }
 
   test("q164 JS divergence: count table barriered, pair table broadcast onto vocab postings") {
@@ -388,14 +420,6 @@ class PlanRegressionSpec extends SparkSpec {
         s"sum table, not re-explode the corpus (got $scans scans):\n$p")
     assert(!p.contains("CartesianProduct"),
       s"the dim join must stay an equality join:\n$p")
-  }
-
-  test("q171 zipf fit: the per-source top-N cut rides the bounded-heap rewrite") {
-    val p = plan("q171_zipf_fit")
-    assert(p.contains("TopKPerGroupPartial") && p.contains("TopKPerGroup "),
-      s"the top-N cut must plan as the two-stage bounded heap:\n$p")
-    assert(!p.contains("Window"),
-      s"no vocab-wide Window sort may remain:\n$p")
   }
 
   test("q174 funnel latency: the window chain + aggregation share ONE event exchange") {

@@ -149,17 +149,30 @@ class SketchesSpec extends SparkSpec {
     assert(got === Seq((0.5, None), (1.0, None)))
   }
 
-  test("bottomK: a hash beyond the double-exact range fails loudly, not wrongly") {
-    val bad = Seq(("g", (1L << 53) + 1L)).toDF("grp", "h")
+  test("bottomK: hashes near 2^60 return the exact k smallest per group") {
+    // neighbours 1 apart collide as doubles above 2^53: the cut must
+    // order on the long itself
+    val base = 1L << 60
+    val rows = (0L until 8L).map(i => ("g", base + i)) ++
+      Seq(("g", base + 3L), ("h", -base), ("h", -base + 1L), ("h", base))
+    val got = Sketches.bottomK(rows.toDF("grp", "h"), col("grp"), col("h"), k = 3)
+      .as[(String, Seq[Long])].collect().toMap
+    assert(got === Map(
+      "g" -> Seq(base, base + 1L, base + 2L),
+      "h" -> Seq(-base, -base + 1L, base)))
+  }
+
+  test("bottomK: a NULL hash fails loudly and names the null-keyed row") {
+    val bad = Seq(("g", Option.empty[Long]), ("g", Some(1L))).toDF("grp", "h")
     val e = intercept[Throwable] {
       Sketches.bottomK(bad, col("grp"), col("h"), k = 2).collect()
     }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("2^53")))
+    assert(msgs(e).exists(_.contains("hash is NULL")))
   }
 
-  test("groupQuantileSketch: sub-k groups are exact; cut rides the TopK rewrite") {
+  test("groupQuantileSketch: sub-k groups are exact") {
     val rows = (1 to 10).map(i => ("a", i.toLong, i.toDouble)) ++
       Seq(("b", 100L, 5.0), ("b", 101L, 15.0))
     val df = rows.toDF("grp", "id", "v")
@@ -170,10 +183,6 @@ class SketchesSpec extends SparkSpec {
     // groups smaller than k: the sample IS the group → exact nearest-rank
     assert(got(("a", 0.5)) === 5.0 && got(("a", 1.0)) === 10.0)
     assert(got(("b", 0.5)) === 5.0 && got(("b", 1.0)) === 15.0)
-    // the row_number()<=k cut must plan as the bounded-heap operator
-    val plan = est.queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerGroup"), plan)
-    assert(!plan.contains("Window"), s"rewrite must remove the Window:\n$plan")
   }
 
   test("kmvDistinct: sub-k groups are exact; full sketches estimate within theory") {

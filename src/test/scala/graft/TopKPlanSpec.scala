@@ -2,286 +2,137 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.plans.TopK
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import graft.sources.Tables
 
-/** The custom bounded-heap top-k operator vs the built-in
-  * row_number+filter formulation: same per-group score sets, and the
-  * physical plan contains the custom exec with NO sort. */
+/** Per-group top-k written as the `row_number() <= k` filter: Spark's
+  * `InferWindowGroupLimit` plans it as a Partial `WindowGroupLimit`
+  * below the exchange and a Final one above it, and the answers match
+  * a pure-Scala reference. */
 class TopKPlanSpec extends SparkSpec {
   import spark.implicits._
 
-  test("TopK.perGroup matches row_number over each group (score sets)") {
-    val orders = Tables.orders(spark, sf("sf0.001"))
-    val got = TopK.perGroup(orders,
-        Seq("o_orderpriority"), "o_totalprice", k = 3)
-      .select("o_orderpriority", "o_totalprice")
-      .as[(String, Double)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-
-    val w = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    val expected = orders.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select("o_orderpriority", "o_totalprice")
-      .as[(String, Double)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-
-    assert(got === expected)
-  }
-
-  test("plan: custom exec present, no per-partition Sort below it") {
-    val orders = Tables.orders(spark, sf("sf0.001"))
-    val df = TopK.perGroup(orders, Seq("o_orderpriority"),
-      "o_totalprice", k = 3)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerGroup"), plan)
-    assert(!plan.contains("Sort "), s"heap operator must not sort:\n$plan")
-  }
+  private def topK(df: org.apache.spark.sql.DataFrame, group: String,
+                   score: String, k: Int) =
+    df.withColumn("rn", row_number().over(
+        Window.partitionBy(col(group)).orderBy(col(score).desc)))
+      .filter(col("rn") <= k)
 
   test("plan: partial pass below the exchange, final above (shuffle carries survivors)") {
     val orders = Tables.orders(spark, sf("sf0.001"))
-    val plan = TopK.perGroup(orders, Seq("o_orderpriority"),
-      "o_totalprice", k = 3).queryExecution.executedPlan.toString
-    val iPartial = plan.indexOf("TopKPerGroupPartial")
+    val plan = topK(orders, "o_orderpriority", "o_totalprice", k = 3)
+      .queryExecution.executedPlan.toString
+    val iFinal = plan.indexOf(", Final")
     val iExchange = plan.indexOf("Exchange hashpartitioning(o_orderpriority")
-    val iFinal = plan.indexOf("TopKPerGroup ")
-    assert(iPartial >= 0 && iExchange >= 0 && iFinal >= 0, plan)
+    val iPartial = plan.indexOf(", Partial")
+    assert(iFinal >= 0 && iExchange >= 0 && iPartial >= 0, plan)
     // plan trees print top-down: final < exchange < partial
     assert(iFinal < iExchange && iExchange < iPartial,
       s"expected final → exchange → partial ordering:\n$plan")
   }
 
-  test("rewrite: filter(row_number <= k) plans as TopKPerGroup — no Window, no Sort") {
-    val orders = Tables.orders(spark, sf("sf0.001"))
-    val w = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    def query = orders.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 3)
-      .select("o_orderpriority", "rn", "o_orderkey", "o_totalprice")
-
+  /** Runs `query` with and without `InferWindowGroupLimit` (threshold -1
+    * switches the rule off): the limited plan must carry the Partial and
+    * Final limits, the unlimited one none, and both must return the same
+    * rows. */
+  private def matchesUnlimited(query: => org.apache.spark.sql.DataFrame): Unit = {
     val plan = query.queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerGroup"), plan)
-    assert(!plan.contains("Window"), s"rewrite must remove the Window:\n$plan")
-    assert(!plan.contains("Sort "), s"rewrite must remove the per-group sort:\n$plan")
-
-    // identical rows (incl. rank values) to the un-rewritten plan — the
-    // ordering is total, so this is exact row equality
+    assert(plan.contains(", Partial") && plan.contains(", Final"), plan)
     val got = query.collect().map(_.toSeq).sortBy(_.toString)
-    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.TopKRewrite")
+    spark.conf.set("spark.sql.optimizer.windowGroupLimitThreshold", "-1")
     try {
       val vanilla = query.queryExecution.executedPlan.toString
-      assert(vanilla.contains("Window"), s"exclusion must restore the Window:\n$vanilla")
+      assert(!vanilla.contains("WindowGroupLimit"), s"the rule must be off:\n$vanilla")
       val expected = query.collect().map(_.toSeq).sortBy(_.toString)
       assert(got.toSeq === expected.toSeq)
-    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+    } finally spark.conf.unset("spark.sql.optimizer.windowGroupLimitThreshold")
   }
 
-  test("rewrite: the rn = 1 latest-record-per-key pattern plans as TopKPerGroup") {
-    val events = Tables.events(spark, sf("sf0.001"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("event_id"))
-    def latest = events.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select("user_id", "event_id", "ts")
-    val plan = latest.queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerGroup"), plan)
-    assert(!plan.contains("Window"), plan)
-    val got = latest.collect().map(_.toSeq).sortBy(_.toString)
-    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.TopKRewrite")
-    try {
-      val expected = latest.collect().map(_.toSeq).sortBy(_.toString)
-      assert(got.toSeq === expected.toSeq)
-    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
-  }
-
-  test("rewrite guard: k above the ceiling keeps the spillable Window plan") {
+  test("rewrite: filter(row_number <= k) plans as WindowGroupLimit, exact vs no limit") {
     val orders = Tables.orders(spark, sf("sf0.001"))
     val w = Window.partitionBy(col("o_orderpriority"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    val plan = orders.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= graft.plans.TopKRewrite.MaxRewriteK + 1)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("TopKPerGroup"), plan)
-    assert(plan.contains("Window"), plan)
-  }
-
-  test("rewrite guard: rank()/dense_rank() filters keep the Window (ties exceed k rows)") {
-    val orders = Tables.orders(spark, sf("sf0.001"))
-    val w = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("o_totalprice").desc)
-    val plan = orders.withColumn("rk", rank().over(w))
-      .filter(col("rk") <= 3)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("TopKPerGroup"), plan)
-    assert(plan.contains("Window"), plan)
-  }
-
-  test("conf flag spark.graft.topk.rewrite=false keeps the spillable Window plan") {
-    val orders = Tables.orders(spark, sf("sf0.001"))
-    val w = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    def query = orders.withColumn("rn", row_number().over(w))
+    // the ordering is total, so this is exact row equality, rn included
+    matchesUnlimited(orders.withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= 3)
-    spark.conf.set(graft.plans.TopKRewrite.RewriteEnabledKey, "false")
-    try {
-      val plan = query.queryExecution.executedPlan.toString
-      assert(!plan.contains("TopKPerGroup"), plan)
-      assert(plan.contains("Window"), plan)
-    } finally spark.conf.unset(graft.plans.TopKRewrite.RewriteEnabledKey)
+      .select("o_orderpriority", "rn", "o_orderkey", "o_totalprice"))
   }
 
-  test("partial pass flushes at the resident-row cap and stays exact") {
-    // one input partition holding all 200 groups (resident would reach
-    // 200 x k without flushing) against a cap of 100: the partial pass
-    // must flush mid-stream; the final tasks (4 shuffle partitions,
-    // ~50 groups each) stay under the cap and merge the flushed
-    // candidate supersets back to the exact per-group maxima
-    val df = (1 to 4000).map(i => (i % 200, i)).toDF("g", "v").repartition(1)
-    spark.conf.set(graft.plans.TopKPerGroupExec.MaxResidentRowsKey, "100")
-    // keep the 4 shuffle partitions: AQE would coalesce this tiny
-    // shuffle into ONE final task holding all 200 groups — at real
-    // scale the shuffle is large and final tasks stay plentiful
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try {
-      val got = TopK.perGroup(df, Seq("g"), "v", k = 1)
-        .select("g", "v").as[(Int, Int)].collect().toMap
-      val expected = (0 until 200)
-        .map(g => g -> (if (g == 0) 4000 else 3800 + g)).toMap
-      assert(got === expected)
-    } finally {
-      spark.conf.unset(graft.plans.TopKPerGroupExec.MaxResidentRowsKey)
-      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
-    }
-  }
-
-  test("final pass over the cap spills sorted runs and stays exact") {
-    // cap of 10 against 200 groups: the final pass must spill ~20 runs
-    // per task and recombine groups split across runs in the merge —
-    // exact results regardless of how AQE carves the shuffle
-    val df = (1 to 4000).map(i => (i % 200, i)).toDF("g", "v")
-    spark.conf.set(graft.plans.TopKPerGroupExec.MaxResidentRowsKey, "10")
-    try {
-      val got = TopK.perGroup(df, Seq("g"), "v", k = 3)
-        .select("g", "v").as[(Int, Int)].collect()
-        .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-      val expected = (0 until 200).map { g =>
-        val top = (1 to 4000).filter(_ % 200 == g).sorted.takeRight(3)
-        g -> top
-      }.toMap
-      assert(got === expected)
-    } finally spark.conf.unset(graft.plans.TopKPerGroupExec.MaxResidentRowsKey)
-  }
-
-  test("rewritten rn query over the cap spills and matches the window plan exactly") {
+  test("rewrite: the rn = 1 latest-record-per-key pattern plans as WindowGroupLimit") {
     val events = Tables.events(spark, sf("sf0.001"))
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").desc, col("event_id"))
-    def latest = events.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 2)
-      .select("user_id", "event_id", "ts", "rn")
-    spark.conf.set(graft.plans.TopKPerGroupExec.MaxResidentRowsKey, "7")
-    try {
-      val got = latest.collect().map(_.toSeq).sortBy(_.toString)
-      spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.TopKRewrite")
-      try {
-        val expected = latest.collect().map(_.toSeq).sortBy(_.toString)
-        assert(got.toSeq === expected.toSeq)
-      } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
-    } finally spark.conf.unset(graft.plans.TopKPerGroupExec.MaxResidentRowsKey)
+    matchesUnlimited(events.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select("user_id", "event_id", "ts"))
   }
 
   test("property: spilled top-k equals a pure-Scala reference on seeded random data") {
-    val rnd = new scala.util.Random(7)
-    for (trial <- 1 to 3) {
-      val n = 500 + trial * 300
-      val groups = 40 * trial
-      val data = (1 to n).map(i => (rnd.nextInt(groups), rnd.nextDouble(), i))
-      val k = 1 + rnd.nextInt(5)
-      // tiny cap: every trial forces partial flushes AND final spills
-      spark.conf.set(graft.plans.TopKPerGroupExec.MaxResidentRowsKey,
-        (5 + trial * 7).toString)
-      try {
-        val got = TopK.perGroup(data.toDF("g", "s", "id"), Seq("g"), "s", k)
+    // a 1-row window buffer forces the Window above the Final limit to
+    // spill every group of more than one row to disk
+    val spill = Seq("spark.sql.windowExec.buffer.in.memory.threshold",
+      "spark.sql.windowExec.buffer.spill.threshold")
+    spill.foreach(spark.conf.set(_, "1"))
+    val spilled = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => spilled.addAndGet(m.diskBytesSpilled))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val rnd = new scala.util.Random(7)
+      for (trial <- 1 to 3) {
+        val n = 500 + trial * 300
+        val groups = 40 * trial
+        val data = (1 to n).map(i => (rnd.nextInt(groups), rnd.nextDouble(), i))
+        val k = 1 + rnd.nextInt(5)
+        val got = topK(data.toDF("g", "s", "id"), "g", "s", k)
           .select("g", "s").as[(Int, Double)].collect()
           .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
         val expected = data.groupBy(_._1).view
           .mapValues(_.map(_._2).sortBy(-_).take(k).sorted.toSeq).toMap
         assert(got === expected, s"trial $trial k=$k")
-      } finally spark.conf.unset(graft.plans.TopKPerGroupExec.MaxResidentRowsKey)
+      }
+      // task-end events arrive on the listener bus asynchronously
+      eventually(timeout(Span(10, Seconds))) { assert(spilled.get > 0) }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spill.foreach(spark.conf.unset)
     }
   }
 
   test("k larger than any group returns everything") {
     val df = Seq((1L, "a", 1.0), (2L, "a", 2.0), (3L, "b", 3.0))
       .toDF("id", "g", "s")
-    val out = TopK.perGroup(df, Seq("g"), "s", k = 10)
-    assert(out.count() === 3)
+    assert(topK(df, "g", "s", k = 10).count() === 3)
   }
 
   test("float group keys: -0.0 and 0.0 are ONE group, matching the window plan") {
-    // the optimizer's NormalizeFloatingNumbers only rewrites the nodes
-    // it knows (Window/Aggregate/Join); the strategy must canonicalize
-    // the keys itself or the two zero encodings hash-partition apart
-    // AND byte-compare apart — two rn=1 rows where the window plan
-    // emits one
+    // both zero encodings must hash-partition and compare as one key:
+    // one rn=1 row for the zero group, not two
     val df = Seq((0.0, 1L, 10.0), (-0.0, 2L, 20.0), (1.5, 3L, 30.0))
       .toDF("key", "id", "s")
-    val w = Window.partitionBy(col("key")).orderBy(col("s").desc, col("id"))
-    def q = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 1)
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerGroup"), plan)
-    val got = q.select("id").as[Long].collect().toSet
-    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.TopKRewrite")
-    try {
-      val expected = q.select("id").as[Long].collect().toSet
-      assert(got === expected)
-      assert(got === Set(2L, 3L))   // one zero group: id 2 (s=20) wins
-    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
-    // same law through the direct API
-    val api = TopK.perGroup(df, Seq("key"), "s", k = 1)
-      .select("id").as[Long].collect().toSet
-    assert(api === Set(2L, 3L))
+    val got = topK(df, "key", "s", k = 1).select("id").as[Long].collect().toSet
+    assert(got === Set(2L, 3L))   // one zero group: id 2 (s=20) wins
   }
 
-  test("wide rows trip the BYTE cap long before the row cap — exact with spills") {
-    // 400 rows x ~10 KB strings ≈ 4 MB resident if nothing flushed; a
-    // 1 MB byte cap must force final-pass spills while the row cap
-    // (default 4M) never trips. Results stay exact.
-    val wide = (1 to 400).map(i => (i % 20, "x" * 10000 + i.toString, i))
-      .toDF("g", "payload", "v")
-    spark.conf.set(graft.plans.TopKPerGroupExec.MaxResidentBytesKey,
-      (1L << 20).toString)
-    try {
-      val got = TopK.perGroup(wide, Seq("g"), "v", k = 2)
-        .select("g", "v").as[(Int, Int)].collect()
-        .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-      val expected = (0 until 20).map { g =>
-        g -> (1 to 400).filter(_ % 20 == g).sorted.takeRight(2)
-      }.toMap
-      assert(got === expected)
-    } finally spark.conf.unset(graft.plans.TopKPerGroupExec.MaxResidentBytesKey)
-  }
-
-  test("TopK.perGroup refuses an empty group list with a named error") {
-    val df = Seq((1L, 1.0)).toDF("id", "s")
-    val e = intercept[IllegalArgumentException] {
-      TopK.perGroup(df, Seq.empty, "s", k = 1)
-    }
-    assert(e.getMessage.contains("group column"), e.getMessage)
-  }
-
-  test("SQL function arity and short-literal args error/work at analysis time") {
-    import graft.plans.GraftExtensions
-    GraftExtensions.register(spark)
-    // wrong arity: a named error, not NoSuchElementException
-    val e = intercept[Throwable] { spark.sql("SELECT graft_dot(array(1.0))").collect() }
-    def msgs(t: Throwable): Seq[String] = Option(t).toSeq
-      .flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
-    assert(msgs(e).exists(_.contains("requires exactly 2 arguments")), e.toString)
-    // a SQL short literal (2S) IS an integer literal
-    val r = spark.sql("SELECT graft_shingles(array('a','b','c'), 2S) AS s")
-      .collect().head.getSeq[String](0)
-    assert(r.toSet === Set("a b", "b c"))
+  test("rewrite guard: rank()/dense_rank() filters keep the Window (ties exceed k rows)") {
+    // group a: scores 9, 7, 7, 7, 5, 3 — rank <= 2 keeps the 9 and all
+    // three tied 7s (4 rows for k = 2); dense_rank <= 2 keeps the
+    // same four; dense_rank <= 3 adds the 5
+    val df = (Seq(9, 7, 7, 7, 5, 3).zipWithIndex
+      .map { case (s, i) => ("a", i.toLong, s) } ++
+      Seq(("b", 10L, 1), ("b", 11L, 1))).toDF("g", "id", "s")
+    val w = Window.partitionBy(col("g")).orderBy(col("s").desc)
+    def ids(fn: org.apache.spark.sql.Column, k: Int): Set[Long] =
+      df.withColumn("rk", fn.over(w)).filter(col("rk") <= k)
+        .select("id").as[Long].collect().toSet
+    assert(ids(rank(), 2) === Set(0L, 1L, 2L, 3L, 10L, 11L))
+    assert(ids(dense_rank(), 2) === Set(0L, 1L, 2L, 3L, 10L, 11L))
+    assert(ids(dense_rank(), 3) === Set(0L, 1L, 2L, 3L, 4L, 10L, 11L))
+    val plan = df.withColumn("rk", rank().over(w)).filter(col("rk") <= 2)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("WindowGroupLimit") && plan.contains("Window ["), plan)
   }
 }
