@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
+
 /** Plan-inspection utility: `runMain graft.Explain [queryName ...]`
   * prints the formatted physical plan of each named query (all bench
   * queries when none given) against SPARK_GRAFT_SF_DIR. Used to audit
@@ -14,8 +17,19 @@ object Explain {
     val names = if (args.nonEmpty) args.toSeq else Queries.benchNames
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      Queries.queries(n)(spark, sfDir).explain("formatted")
+      println(formatted(Queries.queries(n)(spark, sfDir)))
     }
     spark.stop()
   }
+
+  /** The formatted physical plan, with every control character other
+    * than newline and tab written as a six-character unicode escape
+    * (backslash, `u`, four hex digits): plan literals may hold them
+    * (`Dedup.exact`'s NUL sentinels), and raw they would make a pasted
+    * plan a binary file. */
+  def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode).flatMap {
+      case c if c < ' ' && c != '\n' && c != '\t' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
 }

@@ -948,8 +948,8 @@ object Queries {
     s"list_reduce(list_prepend(0.0, list_transform(range(1,${dim + 1}), i -> $a[i]::DOUBLE * $b[i]::DOUBLE)), (x,y) -> x+y)"
 
   /** SQL fragment: random-hyperplane LSH bucket id of a `dim`-dim
-    * float list — mirrors `Similarity.lshBucket` / the native
-    * `graft.functions.LshBucket` expression fold for fold. */
+    * float list — mirrors the native `GraftFunctions.lshBucket`
+    * (`graft_lsh_bucket`) fold for fold. */
   private def sqlLshBucket(v: String, planes: Int = 8, dim: Int = 64): String =
     s"""CAST(list_sum(list_transform(range(0, $planes), p -> CASE WHEN
       list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), d ->

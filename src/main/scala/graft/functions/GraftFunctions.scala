@@ -1,15 +1,25 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftColumnBridge
 
-/** Column-level helpers shared across graft operators.
+/** Column-level helpers shared across graft operators, and the one
+  * Column entry point of the engine's 13 native functions.
   *
-  * Everything here composes built-in (codegen'd) Catalyst expressions —
-  * no Scala UDFs in hot paths, so whole-stage codegen spans stay wide
-  * and the DuckDB oracle can reproduce each computation exactly.
+  * Everything here is a built-in (codegen'd) Catalyst expression or a
+  * native function from `HashExpressions.scala` — no Scala UDFs in hot
+  * paths, so whole-stage codegen spans stay wide and the DuckDB oracle
+  * can reproduce each computation exactly. A native function has one
+  * implementation, its [[HashUtil]] kernel, which the optimizer calls
+  * through Spark's `StaticInvoke` (compiled or interpreted alike); the
+  * same 13 functions are registered for SQL as `graft_*` by
+  * [[graft.plans.GraftExtensions]].
   */
 object GraftFunctions {
+  private def native(e: Expression): Column = GraftColumnBridge.column(e)
+  private def toExpr(c: Column): Expression = GraftColumnBridge.expression(c)
 
   /** Exact integral division (SQL `div`, Catalyst `IntegralDivide`).
     * `a / b` on Columns is double division, which silently loses
@@ -59,28 +69,14 @@ object GraftFunctions {
     * reproducible in SQL). 31*h + c stays < 2^35, far from long
     * overflow. Empty string hashes to 0. */
   val HashMod = 1000000007L
-  def polyHash(s: Column): Column = HashExpressions.polyHashNative(s)
+  def polyHash(s: Column): Column = native(PolyHash(toExpr(s)))
 
-  /** Unicode NFC canonical composition (native codegen'd
-    * `graft.functions.NfcNormalize`) — normalize BEFORE exact dedup /
-    * fingerprinting so byte-different, visually-identical texts
-    * collapse; identical to DuckDB's `nfc_normalize` (both implement
-    * Unicode canonical composition). NULL in, NULL out. */
-  def nfc(s: Column): Column = HashExpressions.nfcNative(s)
-
-  /** The declarative (built-ins only) form of [[polyHash]], kept as
-    * the readable specification. EQUIVALENT ON THE BASIC MULTILINGUAL
-    * PLANE ONLY: this form folds per UTF-16 code unit (`split` +
-    * `ascii`), while the native expression and the DuckDB oracle fold
-    * per Unicode CODE POINT — for supplementary-plane characters
-    * (emoji, rare CJK) the two diverge, and the code-point form is the
-    * portable one. Interpreted per char, so ~100× slower on hot paths;
-    * never use on a query path. */
-  def polyHashDeclarative(s: Column): Column =
-    aggregate(
-      transform(split(s, ""), c => ascii(c)),
-      lit(0L),
-      (h, c) => pmod(h * lit(31L) + c.cast("long"), lit(HashMod)))
+  /** Unicode NFC canonical composition (`graft_nfc`) — normalize
+    * BEFORE exact dedup / fingerprinting so byte-different,
+    * visually-identical texts collapse; identical to DuckDB's
+    * `nfc_normalize` (both implement Unicode canonical composition).
+    * NULL in, NULL out. */
+  def nfc(s: Column): Column = native(NfcNormalize(toExpr(s)))
 
   /** Cross-engine-deterministic rounding to `d` decimals:
     * floor(x·10^d + 0.5) / 10^d. Unlike `round`, whose tie-breaking
@@ -145,14 +141,13 @@ object GraftFunctions {
         s"the shorter length (fix the upstream embedder or filter " +
         s"explicitly)")), lit(true))
 
-  /** Dot product of two numeric arrays — the native codegen'd
-    * sequential left-fold (`HashExpressions.dotNative`), elements cast
-    * to double first, bit-identical to the DuckDB list_reduce oracle ON
-    * EQUAL-LENGTH, NON-NULL-ELEMENT inputs (every engine vector path).
-    * Outside that domain the fold reads null elements as 0.0 and
-    * ignores positions beyond the shorter array. */
-  def dotProduct(a: Column, b: Column): Column =
-    HashExpressions.dotNative(a, b)
+  /** Dot product of two float/double arrays — the native sequential
+    * left-fold (`graft_dot`), elements cast to double first,
+    * bit-identical to the DuckDB list_reduce oracle ON EQUAL-LENGTH,
+    * NON-NULL-ELEMENT inputs (every engine vector path). Outside that
+    * domain the fold reads null elements as 0.0 and ignores positions
+    * beyond the shorter array. */
+  def dotProduct(a: Column, b: Column): Column = native(DotProduct(toExpr(a), toExpr(b)))
 
   /** L2 norm via the same sequential fold. */
   def l2Norm(a: Column): Column = sqrt(dotProduct(a, a))
@@ -173,30 +168,17 @@ object GraftFunctions {
     * decontamination. A document with fewer than `n` tokens has NO
     * shingles (empty array) — the same law the SQL oracles'
     * comprehension yields, so short documents cannot silently diverge
-    * between engines. Native codegen'd expression
-    * (`graft.functions.Shingles`), element-identical to
-    * [[shinglesDeclarative]]. */
-  def shingles(toks: Column, n: Int): Column =
-    HashExpressions.shinglesNative(toks, n)
-
-  /** Declarative (built-ins only) specification of [[shingles]] — kept
-    * as the readable spec and differential-test twin; interpreted
-    * per shingle, so never on a query path. */
-  def shinglesDeclarative(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      array_distinct(
-        transform(
-          sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
-      .otherwise(array().cast("array<string>"))
+    * between engines. A NULL array has none either. Native function
+    * `graft_shingles`, element-identical to the declarative
+    * `array_distinct(transform(…))` form the tests keep as its twin. */
+  def shingles(toks: Column, n: Int): Column = native(Shingles(toExpr(toks), n))
 
   /** Every word-`n`-gram occurrence with its 0-based start position —
     * the positional, NON-distinct twin of [[shingles]] (the posting
     * generator for occurrence-level corpus scans, e.g. frequent-n-gram
-    * pruning). Native codegen'd expression
-    * (`graft.functions.PositionedShingles`). */
+    * pruning). Native function `graft_pos_shingles`. */
   def positionedShingles(toks: Column, n: Int): Column =
-    HashExpressions.positionedShinglesNative(toks, n)
+    native(PositionedShingles(toExpr(toks), n))
 
   /** Winnowing fingerprints (Schleimer et al. 2003): per document,
     * the position-sorted (pos, fp) selections of the rightmost
@@ -205,44 +187,56 @@ object GraftFunctions {
     * shared run of ≥ w + k − 1 tokens shares ≥ 1 fingerprint at
     * expected density 2/(w+1)) sits between [[withFingerprints]]'
     * 1-hash sketch and [[TextAnalysis.sharedSpans]]' exact scan.
-    * Native codegen'd expression (`graft.functions
-    * .WinnowFingerprints`); NULL/short input → empty array. */
+    * Native function `graft_winnow`; NULL/short input → empty array. */
   def winnowFingerprints(toks: Column, k: Int, w: Int): Column =
-    HashExpressions.winnowNative(toks, k, w)
+    native(WinnowFingerprints(toExpr(toks), k, w))
 
-  /** Declarative (built-ins only) specification of
-    * [[winnowFingerprints]] — the readable spec and differential-test
-    * twin; interpreted, never on a query path. Same selection law:
-    * per window slice, keep the LAST element whose fp equals the
-    * window minimum (rightmost min), then collapse the consecutive
-    * repeats (array_distinct is exact here — selections are
-    * non-decreasing in pos, so duplicates are only ever adjacent). */
-  def winnowFingerprintsDeclarative(toks: Column, k: Int, w: Int): Column = {
-    val grams = positionedShinglesDeclarative(toks, k)
-    val hs = transform(grams,
-      g => struct(g.getField("pos").as("pos"),
-        polyHashDeclarative(g.getField("ng")).as("fp")))
-    val nw = greatest(size(hs) - lit(w - 1), lit(1))
-    val wins = transform(sequence(lit(0), nw - 1), i => {
-      val win = slice(hs, i + 1, lit(w))
-      val minFp = array_min(transform(win, x => x.getField("fp")))
-      element_at(filter(win, x => x.getField("fp") === minFp), -1)
-    })
-    // coalesce carries the NULL-input law: size(hs) is NULL for NULL
-    // toks, and the bare === 0 branch would fall through to a NULL
-    // result where the native expression returns the empty array
-    when(coalesce(size(hs), lit(0)) === 0, array().cast(
-      "array<struct<pos:int,fp:bigint>>"))
-      .otherwise(array_distinct(wins))
-  }
+  /** Fused word-`n`-gram shingle → `k`-position MinHash signature
+    * (`graft_shingle_minhash`): position t is the minimum over the
+    * document's shingle polyhashes of the affine hash t. A document
+    * with no shingles gets k NULL positions; a NULL array, NULL. */
+  def shingleMinHash(toks: Column, n: Int, k: Int): Column =
+    native(ShingleMinHash(toExpr(toks), n, k))
 
-  /** Declarative (built-ins only) specification of
-    * [[positionedShingles]] — readable spec and differential-test
-    * twin; interpreted, never on a query path. */
-  def positionedShinglesDeclarative(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(
-        sequence(lit(0), size(toks) - n),
-        i => struct(i.as("pos"), concat_ws(" ", slice(toks, i + 1, lit(n))).as("ng"))))
-      .otherwise(array().cast("array<struct<pos:int,ng:string>>"))
+  /** Fused word-`n`-gram shingle → `bits`-bit SimHash
+    * (`graft_shingle_simhash`): bit b is the majority vote of bit b
+    * over the distinct shingles' polyhashes. NULL for shingle-less
+    * documents (an all-zero signature would collide them all). */
+  def shingleSimHash(toks: Column, n: Int, bits: Int): Column =
+    native(ShingleSimHash(toExpr(toks), n, bits))
+
+  /** Per-band 31-polynomial hashes of a MinHash signature
+    * (`graft_band_hashes`); a NULL position nulls its band's hash. */
+  def bandHashes(minhash: Column, bands: Int): Column =
+    native(BandHashes(toExpr(minhash), bands))
+
+  /** Count of positions where two bigint arrays are both non-NULL and
+    * equal, over the shorter length (`graft_array_eq_count`) — the
+    * signature-agreement count of LSH candidate scoring. */
+  def arrayEqCount(a: Column, b: Column): Column = native(ArrayEqCount(toExpr(a), toExpr(b)))
+
+  /** Sign-of-projection LSH bucket id over `planes` deterministic
+    * hyperplanes (`graft_lsh_bucket`): bit p = [vec · plane_p > 0] —
+    * bit-identical to the declarative nested-`aggregate` spec the
+    * tests keep and to the DuckDB oracle's `list_reduce` form,
+    * INCLUDING the null case: a NULL vector buckets to 0, never NULL. */
+  def lshBucket(vec: Column, planes: Int, dim: Int): Column =
+    native(LshBucket(toExpr(vec), planes, dim))
+
+  /** One greedy left-to-right, non-overlapping merge pass of the
+    * adjacent pair (`w1`,`w2`) over a token array — BPE's rewrite step
+    * (merged token = space-joined pair, which later rounds treat as
+    * one symbol). "a a a" under (a,a) → ["a a", "a"]: after a merge
+    * the new symbol is what the next comparison sees, so overlaps
+    * cannot double-merge — the standard BPE scan order, and exactly
+    * the fold the SQL oracle replays. Native function
+    * `graft_bpe_merge` — it runs 2× per merge over the whole corpus,
+    * the trainer's hot loop. */
+  def bpeMerge(toks: Column, w1: String, w2: String): Column =
+    native(BpeMergeFold(toExpr(toks), w1, w2))
+
+  /** Normalized dyadic weighted fold `(Σ xs[i]·2^i) / (2^n − 1)` of a
+    * bigint array (`graft_dyadic_fold`); NULL for a NULL or empty
+    * array or any NULL element. */
+  def dyadicFold(xs: Column): Column = native(DyadicFold(toExpr(xs)))
 }

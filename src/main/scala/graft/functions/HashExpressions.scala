@@ -1,23 +1,27 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, Literal, RuntimeReplaceable, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.graftbridge.GraftColumnBridge
+import org.apache.spark.sql.graftbridge.GraftColumnBridge.FloatOrDoubleArray
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native codegen'd Catalyst expressions for the portable hashing hot
-  * paths. The pure-`functions._` forms (nested `transform`/`aggregate`
-  * lambdas) are semantically identical but interpreted — measured
-  * ~25 ms/doc for a MinHash signature; these compile to a tight Java
-  * loop inside whole-stage codegen (~1000× less per-row overhead).
-  * Semantics are EXACTLY the documented portable forms, so the DuckDB
-  * oracles are unchanged: 31-polynomial over Unicode code points mod
-  * 1e9+7; affine family (2i+1)·h + 1000003·(i+1) mod p; word-n-gram
-  * shingles joined by a single space.
+/** The kernels behind the engine's 13 native SQL functions: one static
+  * Java-callable loop per function, which Spark's `StaticInvoke` calls
+  * directly from whole-stage codegen and by reflection when a plan runs
+  * interpreted — one execution path either way. The pure-`functions._`
+  * forms (nested `transform`/`aggregate` lambdas) are semantically
+  * identical but interpreted — measured ~25 ms/doc for a MinHash
+  * signature; these are one tight loop per row (~1000× less per-row
+  * overhead). Semantics are EXACTLY the documented portable forms, so
+  * the DuckDB oracles are unchanged: 31-polynomial over Unicode code
+  * points mod 1e9+7; affine family (2i+1)·h + 1000003·(i+1) mod p;
+  * word-n-gram shingles joined by a single space. A kernel that is
+  * called with a NULL argument ([[shingles]], [[positionedShingles]],
+  * [[winnow]], [[lshBucket]]) states its own NULL law; every other
+  * kernel only ever sees non-NULL inputs.
   */
 object HashUtil {
   val Mod = 1000000007L
@@ -113,7 +117,7 @@ object HashUtil {
     * declarative `shingles()` + transform form — dedup by hash would
     * shift votes on the rare collision). Returns null (boxed) for
     * shingle-less documents — the no-clique law. */
-  def shingleSimHash(toks: ArrayData, n: Int, bits: Int): Any = {
+  def shingleSimHash(toks: ArrayData, n: Int, bits: Int): java.lang.Long = {
     val size = toks.numElements()
     if (size < n) return null
     val seen = new java.util.HashSet[String]()
@@ -159,21 +163,22 @@ object HashUtil {
   /** Shared empty result for shingle-less / null-input documents —
     * one immutable instance, never a per-row allocation (consumers
     * copy; nothing mutates it). Element-type-agnostic: an empty array
-    * holds no elements, so the string-shingle and posting-struct
-    * producers share it. */
-  private val EmptyStringArray: ArrayData = new GenericArrayData(Array.empty[Any])
-  def emptyStringArray(): ArrayData = EmptyStringArray
+    * holds no elements, so the string-shingle and struct producers
+    * share it. */
+  private val EmptyArray: ArrayData = new GenericArrayData(Array.empty[Any])
 
   /** Distinct word-n-gram shingles joined by a single space, in first-
-    * occurrence order — EXACTLY `GraftFunctions.shinglesDeclarative`
-    * (`array_distinct` + `transform`/`slice`/`concat_ws`) and the SQL
-    * oracles' `list_distinct` comprehension: fewer than n tokens → an
-    * EMPTY array (the short-document law); null ELEMENTS are skipped
-    * inside their window exactly like `concat_ws` skips nulls (the
-    * window still counts toward position). */
+    * occurrence order — EXACTLY the declarative `array_distinct` +
+    * `transform`/`slice`/`concat_ws` form and the SQL oracles'
+    * `list_distinct` comprehension: fewer than n tokens, or a NULL
+    * array, → an EMPTY array (the short-document law; the declarative
+    * `when(size(toks) >= n, …).otherwise(array())` falls through on a
+    * NULL condition); null ELEMENTS are skipped inside their window
+    * exactly like `concat_ws` skips nulls (the window still counts
+    * toward position). */
   def shingles(toks: ArrayData, n: Int): ArrayData = {
+    if (toks == null || toks.numElements() < n) return EmptyArray
     val size = toks.numElements()
-    if (size < n) return emptyStringArray()
     val seen = new java.util.LinkedHashSet[UTF8String]()
     val sb = new java.lang.StringBuilder()
     val last = size - n
@@ -200,11 +205,11 @@ object HashUtil {
   /** EVERY word-n-gram occurrence with its 0-based start position (the
     * positional, non-distinct twin of [[shingles]]): the posting
     * generator for occurrence-level scans. Same concat_ws law (null
-    * tokens skip inside their window, single-space join); < n tokens →
-    * empty array. */
+    * tokens skip inside their window, single-space join); < n tokens
+    * or a NULL array → empty array. */
   def positionedShingles(toks: ArrayData, n: Int): ArrayData = {
+    if (toks == null || toks.numElements() < n) return EmptyArray
     val size = toks.numElements()
-    if (size < n) return emptyStringArray()
     val out = new Array[AnyRef](size - n + 1)
     val sb = new java.lang.StringBuilder()
     val last = size - n
@@ -222,8 +227,7 @@ object HashUtil {
         }
         j += 1
       }
-      out(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](i, UTF8String.fromString(sb.toString)))
+      out(i) = new GenericInternalRow(Array[Any](i, UTF8String.fromString(sb.toString)))
       i += 1
     }
     new GenericArrayData(out)
@@ -243,10 +247,11 @@ object HashUtil {
     * window's rightmost min never moves left as the window slides),
     * so the output is position-sorted and duplicate-free by
     * construction. Returns array<struct<pos:int, fp:bigint>> with
-    * 0-based gram positions; fewer than `k` tokens → empty array. */
+    * 0-based gram positions; fewer than `k` tokens or a NULL array →
+    * empty array. */
   def winnow(toks: ArrayData, k: Int, w: Int): ArrayData = {
+    if (toks == null || toks.numElements() < k) return EmptyArray
     val size = toks.numElements()
-    if (size < k) return new GenericArrayData(Array.empty[AnyRef])
     val m = size - k + 1
     val hs = new Array[Long](m)
     var i = 0
@@ -285,8 +290,7 @@ object HashUtil {
         j += 1
       }
       if (best != lastPos) {
-        buf += new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](best, hs(best)))
+        buf += new GenericInternalRow(Array[Any](best, hs(best)))
         lastPos = best
       }
       wi += 1
@@ -344,8 +348,8 @@ object HashUtil {
     * adjacent (`w1`, `w2`) occurrence collapses to `merged`, and the
     * freshly merged symbol is what the NEXT comparison sees (so
     * "a a a" under (a,a) gives ["a a", "a"], never a double merge).
-    * Bit-identical to `TextAnalysis.mergePairDeclarative`'s aggregate
-    * fold, including null handling: null elements never match and pass
+    * Bit-identical to the declarative `aggregate` fold, including null
+    * handling: null elements never match and pass
     * through. Element strings are cloned out of the (possibly reused)
     * scan buffers before being stored. */
   def bpeMergeFold(toks: ArrayData, w1: UTF8String, w2: UTF8String,
@@ -370,13 +374,15 @@ object HashUtil {
   /** Random-hyperplane LSH bucket id: bit p = [vec · plane_p > 0] over
     * `planes` deterministic pseudo-random hyperplanes whose component d
     * is ((p·37 + d·101 + 17) mod 1000)/500 − 1 ∈ [−1, 1). EXACTLY the
-    * declarative nested-fold spec (`Similarity.lshBucketDeclarative`)
-    * and the DuckDB `list_reduce` oracle: per plane, a sequential
+    * declarative nested-`aggregate` spec and the DuckDB `list_reduce`
+    * oracle: per plane, a sequential
     * left-fold from 0.0 of double(vec[d])·component(p,d) for d = 1..dim
     * — same IEEE ops in the same order, so bucket ids are bit-identical
-    * across all three forms. A vector with a NULL element yields
-    * bucket 0, matching the declarative form's null-propagated
-    * projections (every plane's `when` falls through). A vector
+    * across all three forms. A NULL vector, or one with a NULL
+    * element, yields bucket 0 (never NULL), matching the declarative
+    * form's null-propagated projections (every plane's `when` falls
+    * through to `otherwise(0L)`) — so null-vector rows bucket (and
+    * join) the same way through both forms. A vector
     * SHORTER than `dim` also yields bucket 0 — that matches the
     * declarative twin only pre-ANSI (under ANSI, the default here,
     * its `element_at` throws on the out-of-bounds index); the
@@ -384,7 +390,7 @@ object HashUtil {
     * callers that admit them should length-filter up front
     * (DedupSimilaritySpec pins the bucket-0 law). */
   def lshBucket(vec: ArrayData, isFloat: Boolean, planes: Int, dim: Int): Long = {
-    if (vec.numElements() < dim) return 0L
+    if (vec == null || vec.numElements() < dim) return 0L
     var d0 = 0
     while (d0 < dim) {                   // null element → all planes null
       if (vec.isNullAt(d0)) return 0L
@@ -472,351 +478,182 @@ object HashUtil {
   }
 }
 
+/** A graft SQL function: a `RuntimeReplaceable` whose replacement is a
+  * `StaticInvoke` of one [[HashUtil]] kernel, called with the
+  * function's children followed by its literal parameters. Spark runs
+  * that one call compiled inside whole-stage codegen and by reflection
+  * when a plan runs interpreted, so the function has exactly one
+  * implementation. The expression itself stays in the analyzed plan
+  * (SQL name, input-type refusal at analysis via `ExpectsInputTypes`);
+  * the optimizer swaps in the call, so executed plans show
+  * `static_invoke(graft.functions.HashUtil.<kernel>(…))`.
+  * Nullability follows from the two flags: a NULL input yields NULL
+  * unless [[nullInput]] hands it to the kernel, and the result is
+  * NULL-free unless [[nullResult]] says the kernel may return a boxed
+  * NULL. */
+sealed abstract class HashKernelCall extends RuntimeReplaceable with ExpectsInputTypes {
+  protected def kernel: String
+  protected def params: Seq[Any] = Nil
+  /** true: the kernel receives NULL inputs and defines their result. */
+  protected def nullInput: Boolean = false
+  /** true: the kernel may return a boxed NULL for non-NULL inputs. */
+  protected def nullResult: Boolean = false
+
+  /** Element type of a type-checked float/double array argument. */
+  protected def isFloat(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override lazy val replacement: Expression =
+    StaticInvoke(HashUtil.getClass, dataType, kernel, children ++ params.map(Literal(_)),
+      propagateNull = !nullInput, returnNullable = nullResult)
+}
+
 /** `graft_polyhash(string) -> long` — see [[HashUtil.polyHash]]. */
-case class PolyHash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
+case class PolyHash(child: Expression) extends HashKernelCall with UnaryLike[Expression] {
   override def prettyName: String = "graft_polyhash"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string input, got ${other.simpleString}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.polyHash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.polyHash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PolyHash =
-    copy(child = newChild)
+  override def dataType: DataType = LongType
+  override def inputTypes = Seq(StringType)
+  protected def kernel = "polyHash"
+  override protected def withNewChildInternal(c: Expression): PolyHash = copy(child = c)
 }
 
 /** `graft_nfc(str) -> str` — Unicode NFC canonical composition, see
   * [[HashUtil.nfc]]. NULL in, NULL out. */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
+case class NfcNormalize(child: Expression) extends HashKernelCall with UnaryLike[Expression] {
   override def prettyName: String = "graft_nfc"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string input, got ${other.simpleString}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.nfc(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.nfc($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
+  override def dataType: DataType = StringType
+  override def inputTypes = Seq(StringType)
+  protected def kernel = "nfc"
+  override protected def withNewChildInternal(c: Expression): NfcNormalize = copy(child = c)
 }
 
 /** `graft_shingle_minhash(array<string>, n, k) -> array<long>` — see
   * [[HashUtil.shingleMinHash]]. */
 case class ShingleMinHash(child: Expression, n: Int, k: Int)
-    extends UnaryExpression {
+    extends HashKernelCall with UnaryLike[Expression] {
   // count params guard HERE, not only in the SQL registry's intLit:
   // the Scala engine path constructs these directly, and n=0 would
   // silently emit size+1 empty-string shingles (nonsense signatures)
   require(n >= 1, s"graft_shingle_minhash: n must be >= 1, got $n")
   require(k >= 1, s"graft_shingle_minhash: k must be >= 1, got $k")
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "graft_shingle_minhash"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires an array<string> input, got ${other.simpleString}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.shingleMinHash(input.asInstanceOf[ArrayData], n, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.shingleMinHash($c, $n, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleMinHash =
-    copy(child = newChild)
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def inputTypes = Seq(ArrayType(StringType))
+  protected def kernel = "shingleMinHash"
+  override protected def params = Seq(n, k)
+  override protected def withNewChildInternal(c: Expression): ShingleMinHash = copy(child = c)
 }
 
-/** `graft_shingle_simhash(array<string>, n, bits) -> long` (nullable:
+/** `graft_shingle_simhash(array<string>, n, bits) -> long` (NULL for
   * shingle-less docs) — see [[HashUtil.shingleSimHash]]. */
 case class ShingleSimHash(child: Expression, n: Int, bits: Int)
-    extends UnaryExpression {
+    extends HashKernelCall with UnaryLike[Expression] {
   require(n >= 1, s"graft_shingle_simhash: n must be >= 1, got $n")
   require(bits >= 1 && bits <= 64,
     s"graft_shingle_simhash: bits must be in [1, 64], got $bits")
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
   override def prettyName: String = "graft_shingle_simhash"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires an array<string> input, got ${other.simpleString}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.shingleSimHash(input.asInstanceOf[ArrayData], n, bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // fresh per-instance local: with a non-nullable child nullSafeExec
-    // emits this block UNWRAPPED, so a fixed name would collide when
-    // two SimHash instances land in one generated function
-    val boxed = ctx.freshName("simBoxed")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      Object $boxed = graft.functions.HashUtil.shingleSimHash($c, $n, $bits);
-      if ($boxed == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ((java.lang.Long) $boxed).longValue(); }
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleSimHash =
-    copy(child = newChild)
+  override def dataType: DataType = LongType
+  override def inputTypes = Seq(ArrayType(StringType))
+  protected def kernel = "shingleSimHash"
+  override protected def params = Seq(n, bits)
+  override protected def nullResult = true
+  override protected def withNewChildInternal(c: Expression): ShingleSimHash = copy(child = c)
 }
 
 /** `graft_shingles(array<string>, n) -> array<string>` — see
   * [[HashUtil.shingles]]. One tight loop per document instead of an
   * interpreted `transform`/`slice`/`concat_ws`/`array_distinct` chain
   * (measured ~6 s for 260k shingles at sf0.1 — the decontamination and
-  * exact-verify hot path). A NULL input array yields an EMPTY array
-  * (never NULL), exactly like the declarative twin's
-  * `when(size(toks) >= n, ...).otherwise(array())` — a null condition
-  * falls through to the empty-array branch. */
-case class Shingles(child: Expression, n: Int) extends UnaryExpression {
+  * exact-verify hot path). A NULL input array yields an EMPTY array,
+  * never NULL. */
+case class Shingles(child: Expression, n: Int) extends HashKernelCall with UnaryLike[Expression] {
   require(n >= 1, s"graft_shingles: n must be >= 1, got $n")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_shingles"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires an array<string> input, got ${other.simpleString}")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) HashUtil.emptyStringArray()
-    else HashUtil.shingles(v.asInstanceOf[ArrayData], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${childGen.code}
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = ${childGen.isNull}
-        ? graft.functions.HashUtil.emptyStringArray()
-        : graft.functions.HashUtil.shingles(${childGen.value}, $n);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Shingles =
-    copy(child = newChild)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def inputTypes = Seq(ArrayType(StringType))
+  protected def kernel = "shingles"
+  override protected def params = Seq(n)
+  override protected def nullInput = true
+  override protected def withNewChildInternal(c: Expression): Shingles = copy(child = c)
 }
 
 /** `graft_pos_shingles(array<string>, n) -> array<struct<pos:int,ng:string>>`
   * — every word-n-gram occurrence with its 0-based start position: the
   * positional, NON-distinct twin of [[Shingles]], generating the
   * posting rows occurrence-level scans explode (frequent-n-gram
-  * pruning). Same null-token concat_ws law; < n tokens → empty array.
-  * Replaces the interpreted `transform(sequence)` + `slice` +
-  * `concat_ws` generator stack with one codegen'd Java loop. */
+  * pruning). Same null-token concat_ws law; < n tokens or a NULL array
+  * → empty array. See [[HashUtil.positionedShingles]]. */
 case class PositionedShingles(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends HashKernelCall with UnaryLike[Expression] {
   require(n >= 1, s"graft_pos_shingles: n must be >= 1, got $n")
+  override def prettyName: String = "graft_pos_shingles"
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("pos", IntegerType, nullable = false),
       StructField("ng", StringType, nullable = false))),
     containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_pos_shingles"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires an array<string> input, got ${other.simpleString}")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) HashUtil.emptyStringArray()
-    else HashUtil.positionedShingles(v.asInstanceOf[ArrayData], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${childGen.code}
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = ${childGen.isNull}
-        ? graft.functions.HashUtil.emptyStringArray()
-        : graft.functions.HashUtil.positionedShingles(${childGen.value}, $n);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PositionedShingles =
-    copy(child = newChild)
+  override def inputTypes = Seq(ArrayType(StringType))
+  protected def kernel = "positionedShingles"
+  override protected def params = Seq(n)
+  override protected def nullInput = true
+  override protected def withNewChildInternal(c: Expression): PositionedShingles =
+    copy(child = c)
 }
 
 /** `graft_winnow(array<string>, k, w) -> array<struct<pos:int,fp:bigint>>`
-  * — see [[HashUtil.winnow]]. One tight Java loop per document (gram
+  * — see [[HashUtil.winnow]]. One tight loop per document (gram
   * hashing fused with window minima) instead of an interpreted
-  * transform/slice/array_min/filter stack; NULL input array yields an
-  * EMPTY array, the [[Shingles]] law. */
+  * transform/slice/array_min/filter stack; a NULL input array yields
+  * an EMPTY array, the [[Shingles]] law. */
 case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+    extends HashKernelCall with UnaryLike[Expression] {
   require(k >= 1, s"graft_winnow: k must be >= 1, got $k")
   require(w >= 1, s"graft_winnow: w must be >= 1, got $w")
+  override def prettyName: String = "graft_winnow"
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("pos", IntegerType, nullable = false),
       StructField("fp", LongType, nullable = false))),
     containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_winnow"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires an array<string> input, got ${other.simpleString}")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) new GenericArrayData(Array.empty[AnyRef])
-    else HashUtil.winnow(v.asInstanceOf[ArrayData], k, w)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${childGen.code}
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = ${childGen.isNull}
-        ? new org.apache.spark.sql.catalyst.util.GenericArrayData(new Object[0])
-        : graft.functions.HashUtil.winnow(${childGen.value}, $k, $w);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFingerprints =
-    copy(child = newChild)
+  override def inputTypes = Seq(ArrayType(StringType))
+  protected def kernel = "winnow"
+  override protected def params = Seq(k, w)
+  override protected def nullInput = true
+  override protected def withNewChildInternal(c: Expression): WinnowFingerprints =
+    copy(child = c)
 }
 
 /** `graft_bpe_merge(array<string>, 'w1', 'w2') -> array<string>` — one
   * greedy left-to-right, non-overlapping BPE merge pass (the rewrite
   * step of `TextAnalysis.learnBpeMerges`, run 2× per learned merge
-  * over the whole corpus — the trainer's hot loop). Identical to the
-  * declarative `aggregate` fold (`TextAnalysis.mergePairDeclarative`,
-  * kept as the differential twin) but a single Java pass instead of an
+  * over the whole corpus — the trainer's hot loop), identical to the
+  * declarative `aggregate` fold but a single pass instead of an
   * interpreted per-token lambda allocating an array per step. Null
   * input → null (the aggregate-fold contract); null elements pass
-  * through unmerged. */
+  * through unmerged. See [[HashUtil.bpeMergeFold]]. */
 case class BpeMergeFold(child: Expression, w1: String, w2: String)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+    extends HashKernelCall with UnaryLike[Expression] {
   override def prettyName: String = "graft_bpe_merge"
-
-  private lazy val w1U = UTF8String.fromString(w1)
-  private lazy val w2U = UTF8String.fromString(w2)
-  private lazy val mergedU = UTF8String.fromString(w1 + " " + w2)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires an array<string> input, got ${other.simpleString}")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    HashUtil.bpeMergeFold(v.asInstanceOf[ArrayData], w1U, w2U, mergedU)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = "org.apache.spark.unsafe.types.UTF8String"
-    val w1Ref = ctx.addReferenceObj("bpeW1", w1U, cls)
-    val w2Ref = ctx.addReferenceObj("bpeW2", w2U, cls)
-    val mRef = ctx.addReferenceObj("bpeMerged", mergedU, cls)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashUtil.bpeMergeFold($c, $w1Ref, $w2Ref, $mRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeMergeFold =
-    copy(child = newChild)
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+  override def inputTypes = Seq(ArrayType(StringType))
+  protected def kernel = "bpeMergeFold"
+  override protected def params = Seq(w1, w2, w1 + " " + w2)
+  override protected def withNewChildInternal(c: Expression): BpeMergeFold = copy(child = c)
 }
 
 /** `graft_dyadic_fold(array<bigint>) -> double` — see
   * [[HashUtil.dyadicFold]]. Replaces the interpreted
   * `aggregate(transform(xs, (x,i) -> x·shiftleft(1,i)), 0, +)` HOF
   * chain on the EWMA query path (the engine bans interpreted folds on
-  * query paths) with one codegen'd Java loop. NULL list → NULL; the
-  * caller bounds the frame at ≤ 62 elements (shift exactness). */
-case class DyadicFold(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true   // null list OR null element
+  * query paths) with one loop. NULL list, empty list or a NULL element
+  * → NULL; the caller bounds the frame at ≤ 62 elements. */
+case class DyadicFold(child: Expression) extends HashKernelCall with UnaryLike[Expression] {
   override def prettyName: String = "graft_dyadic_fold"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires an array<bigint> input, got ${other.simpleString}")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    HashUtil.dyadicFold(v.asInstanceOf[ArrayData])   // boxed; null on null elem
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val boxed = ctx.freshName("dyadicBoxed")
-      s"""
-        java.lang.Double $boxed = graft.functions.HashUtil.dyadicFold($c);
-        if ($boxed == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $boxed.doubleValue(); }
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): DyadicFold =
-    copy(child = newChild)
+  override def dataType: DataType = DoubleType
+  override def inputTypes = Seq(ArrayType(LongType))
+  protected def kernel = "dyadicFold"
+  override protected def nullResult = true
+  override protected def withNewChildInternal(c: Expression): DyadicFold = copy(child = c)
 }
 
 /** `graft_dot(array<float|double>, array<float|double>) -> double` —
@@ -827,53 +664,26 @@ case class DyadicFold(child: Expression) extends UnaryExpression {
   * (zip semantics). Only float/double element types are accepted —
   * enforced at analysis (reading other widths as doubles would
   * silently reinterpret bits). Null ELEMENTS read as 0.0 (the
-  * declarative form would instead null the whole result). */
+  * declarative form would instead null the whole result). See
+  * [[HashUtil.dot]]. */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
+    extends HashKernelCall with BinaryLike[Expression] {
   override def prettyName: String = "graft_dot"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float> or array<double> inputs, " +
-          s"got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashUtil.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      left.dataType.asInstanceOf[ArrayType].elementType == FloatType,
-      right.dataType.asInstanceOf[ArrayType].elementType == FloatType)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lf = left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    val rf = right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashUtil.dot($a, $b, $lf, $rf)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
+  override def dataType: DataType = DoubleType
+  override def inputTypes = Seq(FloatOrDoubleArray, FloatOrDoubleArray)
+  protected def kernel = "dot"
+  override protected def params = Seq(isFloat(left), isFloat(right))
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
+    copy(left = l, right = r)
 }
 
 /** `graft_lsh_bucket(array<float|double>, planes, dim) -> long` — see
-  * [[HashUtil.lshBucket]]. Replaces the interpreted nested
-  * `aggregate` fold (8 planes × 64 dims of lambda dispatch per row)
-  * with one codegen'd Java loop — the corpus-side bucket computation
-  * is the ANN hot path at scale. A NULL input vector yields bucket 0
-  * (never NULL), exactly like the declarative twin, where the null
-  * projection makes every plane's `when` fall through to
-  * `otherwise(0L)` — so null-vector rows bucket (and join) the same
-  * way through both forms. */
+  * [[HashUtil.lshBucket]]. Replaces the interpreted nested `aggregate`
+  * fold (8 planes × 64 dims of lambda dispatch per row) with one loop
+  * — the corpus-side bucket computation is the ANN hot path at scale.
+  * A NULL input vector yields bucket 0, never NULL. */
 case class LshBucket(child: Expression, planes: Int, dim: Int)
-    extends UnaryExpression {
+    extends HashKernelCall with UnaryLike[Expression] {
   // planes caps at 62: `1L << p` wraps mod 64 at p = 64 (plane 64's
   // vote would OR into bit 0 under a DIFFERENT hyperplane — silent
   // bucket corruption), and the declarative twin's pow(2, p) cast
@@ -881,135 +691,38 @@ case class LshBucket(child: Expression, planes: Int, dim: Int)
   require(planes >= 1 && planes <= 62,
     s"graft_lsh_bucket: planes must be in [1, 62], got $planes")
   require(dim >= 1, s"graft_lsh_bucket: dim must be >= 1, got $dim")
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_lsh_bucket"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires an array<float> or array<double> input, " +
-            s"got ${other.simpleString}")
-    }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) 0L
-    else HashUtil.lshBucket(v.asInstanceOf[ArrayData], isFloat, planes, dim)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val f = isFloat
-    val childGen = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${childGen.code}
-      long ${ev.value} = ${childGen.isNull} ? 0L :
-        graft.functions.HashUtil.lshBucket(${childGen.value}, $f, $planes, $dim);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LshBucket =
-    copy(child = newChild)
+  override def dataType: DataType = LongType
+  override def inputTypes = Seq(FloatOrDoubleArray)
+  protected def kernel = "lshBucket"
+  override protected def params = Seq(isFloat(child), planes, dim)
+  override protected def nullInput = true
+  override protected def withNewChildInternal(c: Expression): LshBucket = copy(child = c)
 }
 
 /** `graft_band_hashes(array<long>, bands) -> array<long>` — see
   * [[HashUtil.bandHashes]]. One loop per signature instead of an
   * interpreted fold per exploded band row. */
 case class BandHashes(child: Expression, bands: Int)
-    extends UnaryExpression {
+    extends HashKernelCall with UnaryLike[Expression] {
   require(bands >= 1, s"graft_band_hashes: bands must be >= 1, got $bands")
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "graft_band_hashes"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires an array<bigint> input, got ${other.simpleString}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.bandHashes(input.asInstanceOf[ArrayData], bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.bandHashes($c, $bands)")
-
-  override protected def withNewChildInternal(newChild: Expression): BandHashes =
-    copy(child = newChild)
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def inputTypes = Seq(ArrayType(LongType))
+  protected def kernel = "bandHashes"
+  override protected def params = Seq(bands)
+  override protected def withNewChildInternal(c: Expression): BandHashes = copy(child = c)
 }
 
 /** `graft_array_eq_count(array<long>, array<long>) -> int` — see
   * [[HashUtil.arrayEqCount]]. The signature-agreement kernel of LSH
-  * candidate scoring, codegen'd. */
+  * candidate scoring. */
 case class ArrayEqCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
+    extends HashKernelCall with BinaryLike[Expression] {
   override def prettyName: String = "graft_array_eq_count"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<bigint> inputs, " +
-          s"got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashUtil.arrayEqCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashUtil.arrayEqCount($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ArrayEqCount =
-    copy(left = newLeft, right = newRight)
-}
-
-object HashExpressions {
-  /** Column wrappers over the native expressions. */
-  def polyHashNative(c: Column): Column =
-    GraftColumnBridge.column(PolyHash(GraftColumnBridge.expression(c)))
-  def shinglesNative(tokens: Column, n: Int): Column =
-    GraftColumnBridge.column(Shingles(GraftColumnBridge.expression(tokens), n))
-  def positionedShinglesNative(tokens: Column, n: Int): Column =
-    GraftColumnBridge.column(PositionedShingles(GraftColumnBridge.expression(tokens), n))
-  def nfcNative(c: Column): Column =
-    GraftColumnBridge.column(NfcNormalize(GraftColumnBridge.expression(c)))
-  def winnowNative(tokens: Column, k: Int, w: Int): Column =
-    GraftColumnBridge.column(WinnowFingerprints(GraftColumnBridge.expression(tokens), k, w))
-  def shingleMinHashNative(tokens: Column, n: Int, k: Int): Column =
-    GraftColumnBridge.column(ShingleMinHash(GraftColumnBridge.expression(tokens), n, k))
-  def shingleSimHashNative(tokens: Column, n: Int, bits: Int): Column =
-    GraftColumnBridge.column(ShingleSimHash(GraftColumnBridge.expression(tokens), n, bits))
-  def dotNative(a: Column, b: Column): Column =
-    GraftColumnBridge.column(DotProduct(GraftColumnBridge.expression(a),
-      GraftColumnBridge.expression(b)))
-  def lshBucketNative(vec: Column, planes: Int, dim: Int): Column =
-    GraftColumnBridge.column(LshBucket(GraftColumnBridge.expression(vec), planes, dim))
-  def bandHashesNative(mh: Column, bands: Int): Column =
-    GraftColumnBridge.column(BandHashes(GraftColumnBridge.expression(mh), bands))
-  def arrayEqCountNative(a: Column, b: Column): Column =
-    GraftColumnBridge.column(ArrayEqCount(GraftColumnBridge.expression(a),
-      GraftColumnBridge.expression(b)))
-  def bpeMergeFoldNative(toks: Column, w1: String, w2: String): Column =
-    GraftColumnBridge.column(BpeMergeFold(GraftColumnBridge.expression(toks), w1, w2))
-  def dyadicFoldNative(xs: Column): Column =
-    GraftColumnBridge.column(DyadicFold(GraftColumnBridge.expression(xs)))
+  override def dataType: DataType = IntegerType
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
+  protected def kernel = "arrayEqCount"
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrayEqCount =
+    copy(left = l, right = r)
 }

@@ -341,14 +341,14 @@ object Dedup {
     // shuffles or writes — a trailing repartition would shuffle the
     // full text+signature rows a second time for nothing
     materialize(df).withColumn("minhash",
-      graft.functions.HashExpressions.shingleMinHashNative(tokens(text), shingleN, k))
+      shingleMinHash(tokens(text), shingleN, k))
 
   /** LSH banding: split the k-length signature into `bands` bands of
     * k/bands rows each; a band key is the (bandIdx, polyhash-of-band)
     * pair. Docs sharing ANY band key become candidates — the classic
     * s-curve trade-off. Returns one row per (doc, band). All band
     * hashes come from ONE codegen'd pass over the signature
-    * (`graft.functions.BandHashes`) and are then position-exploded —
+    * (`GraftFunctions.bandHashes`) and are then position-exploded —
     * no interpreted fold per band row. A document whose `minhash`
     * column is NULL (null text) produces NO band rows (there is
     * nothing to index or match); shingle-less documents keep their
@@ -357,8 +357,7 @@ object Dedup {
     require(k % bands == 0,
       s"bands ($bands) must divide the signature length k ($k) — " +
         "trailing positions would otherwise be silently excluded from banding")
-    df.withColumn("_bhs",
-        graft.functions.HashExpressions.bandHashesNative(col("minhash"), bands))
+    df.withColumn("_bhs", bandHashes(col("minhash"), bands))
       .select(col("*"), posexplode(col("_bhs")).as(Seq("band_idx", "band_hash")))
       .drop("_bhs")
   }
@@ -382,9 +381,8 @@ object Dedup {
         // mis-scale the estimate (agreement/32 reported over 16 reaches
         // 2.0) — reading it from the data keeps the estimate
         // self-consistent by construction
-        r(graft.functions.HashExpressions
-            .arrayEqCountNative(col("mh_a"), col("mh_b"))
-          .cast("double") / size(col("mh_a")), 4).as("est_jaccard"))
+        r(arrayEqCount(col("mh_a"), col("mh_b")).cast("double") / size(col("mh_a")), 4)
+          .as("est_jaccard"))
       .distinct()
   }
 
@@ -697,14 +695,12 @@ object Dedup {
     * [[withMinHash]]). Near-dups have small Hamming distance. */
   def withSimHash(df: DataFrame, text: Column, bits: Int = 24,
                   shingleN: Int = 3): DataFrame = derived(df)(
-    // native fused expression (graft.functions.ShingleSimHash):
+    // native fused function (GraftFunctions.shingleSimHash):
     // majority vote per bit over DISTINCT shingle hashes; shingle-less
     // (sub-n-token) documents get a NULL signature — an all-zero
     // simhash would collide every short document into one
     // false-positive near-dup clique
-    _.withColumn("simhash",
-      graft.functions.HashExpressions.shingleSimHashNative(
-        tokens(text), shingleN, bits)))
+    _.withColumn("simhash", shingleSimHash(tokens(text), shingleN, bits)))
 
   /** SimHash near-dup pairs within blocks: Hamming distance via
     * bit_count(xor) ≤ maxHamming. Blocks larger than `maxBlock` fail
@@ -727,7 +723,7 @@ object Dedup {
   }
 
   /** H2d at scale: embedding near-dup with LSH-BUCKET blocking — the
-    * random-hyperplane bucket (`Similarity.lshBucket`, codegen'd)
+    * random-hyperplane bucket (`GraftFunctions.lshBucket`, native)
     * replaces the caller-chosen attribute as the block key, so block
     * sizes are ~n/2^planes regardless of any skewed natural attribute
     * and the pair join is a pure equality join on bucket ids. This is
@@ -740,8 +736,7 @@ object Dedup {
                         planes: Int, dim: Int, threshold: Double,
                         maxBlock: Int = DefaultMaxBlock): DataFrame =
     embeddingPairs(
-      df.withColumn("_lsh_bk",
-        graft.functions.HashExpressions.lshBucketNative(col(vec), planes, dim)),
+      df.withColumn("_lsh_bk", lshBucket(col(vec), planes, dim)),
       id, vec, "_lsh_bk", threshold, maxBlock)
 
   /** Multi-probe twin of [[embeddingPairsLsh]]: one side probes its own
@@ -757,8 +752,7 @@ object Dedup {
                                   planes: Int, dim: Int, threshold: Double,
                                   maxBlock: Int = DefaultMaxBlock): DataFrame = {
     val base = derived(df)(_
-      .withColumn("_bk0",
-        graft.functions.HashExpressions.lshBucketNative(col(vec), planes, dim))
+      .withColumn("_bk0", lshBucket(col(vec), planes, dim))
       .withColumn("_norm", l2Norm(col(vec))))
     val a = base
       .withColumn("bk", OpUtils.hamming1Probes(col("_bk0"), planes))

@@ -399,24 +399,11 @@ object EventAnalytics {
   def dyadicEwma(events: DataFrame, key: String, ts: String, tie: String,
                  valueCol: String, frameRows: Int = 8, scale: Int = 100): DataFrame =
     dyadicEwmaWith(events, key, ts, tie, valueCol, frameRows, scale,
-      xs => graft.functions.HashExpressions.dyadicFoldNative(xs))
+      graft.functions.GraftFunctions.dyadicFold)
 
-  /** Declarative twin of the native fold — the readable spec,
-    * differential-tested against [[dyadicEwma]] (the engine keeps every
-    * replaced interpreted form alive as a test oracle). */
-  private[graft] def dyadicEwmaDeclarative(events: DataFrame, key: String,
-      ts: String, tie: String, valueCol: String,
-      frameRows: Int = 8, scale: Int = 100): DataFrame =
-    dyadicEwmaWith(events, key, ts, tie, valueCol, frameRows, scale, xs =>
-      // size 0 -> NULL, not 0.0/0 = NaN — matches the native fold's
-      // empty-frame rule (an empty frame has no observations; frames
-      // CAN be empty because collect_list drops null values)
-      when(size(xs) === 0, lit(null).cast("double")).otherwise(
-        expr("aggregate(transform(_xs, (x, i) -> x * shiftleft(CAST(1 AS BIGINT), i)), " +
-          "CAST(0 AS BIGINT), (a, x) -> a + x)").cast("double")
-          / (expr("shiftleft(CAST(1 AS BIGINT), size(_xs))") - lit(1L))))
-
-  private def dyadicEwmaWith(events: DataFrame, key: String, ts: String,
+  /** [[dyadicEwma]] with the frame-list fold as a parameter: the tests
+    * run it with the declarative fold as the differential twin. */
+  private[graft] def dyadicEwmaWith(events: DataFrame, key: String, ts: String,
       tie: String, valueCol: String, frameRows: Int, scale: Int,
       fold: Column => Column): DataFrame = {
     require(frameRows >= 1 && frameRows <= 62, s"frameRows out of range: $frameRows")

@@ -28,8 +28,8 @@ import graft.functions.GraftFunctions._
   * one dot product.
   *
   * Both per-row kernels — the dot product and the LSH bucket — are
-  * native codegen'd Catalyst expressions (`graft.functions.DotProduct`
-  * / `LshBucket`): tight Java loops inside whole-stage codegen,
+  * native functions (`GraftFunctions.dotProduct` / `lshBucket`): tight
+  * loops called from whole-stage codegen,
   * bit-identical to their declarative higher-order-function specs and
   * the DuckDB oracles. No interpreted expression remains on any ANN
   * query path.
@@ -619,33 +619,6 @@ object Similarity {
         r(col("_dcg"), 6).as("dcg"),
         r(when(col("n_rel") > 0, col("_dcg") / col("_idcg")), 6).as("ndcg"))
   }
-
-  /** Deterministic pseudo-random hyperplane component d of plane p:
-    * integer-derived value in [-1, 1) with exact decimal construction —
-    * identical in any engine. */
-  private def planeComponent(p: Column, d: Column): Column =
-    (pmod(p * 37L + d * 101L + 17L, lit(1000L)).cast("double") / 500.0) - 1.0
-
-  /** Sign-of-projection LSH bucket id over `planes` hyperplanes:
-    * bit p = [vec · plane_p > 0]. Native codegen'd expression
-    * (`graft.functions.LshBucket`) — one tight Java loop per row inside
-    * whole-stage codegen; bit-identical to [[lshBucketDeclarative]]
-    * (the readable spec) and the DuckDB oracle's `list_reduce` form,
-    * INCLUDING the null case: a NULL vector buckets to 0 in both forms
-    * (the declarative null projection falls through every `when` to
-    * `otherwise(0L)`), never to NULL. */
-  def lshBucket(vec: Column, planes: Int, dim: Int): Column =
-    graft.functions.HashExpressions.lshBucketNative(vec, planes, dim)
-
-  /** Declarative (built-ins only) specification of [[lshBucket]] —
-    * identical semantics, nested interpreted `aggregate` folds, kept as
-    * the readable spec and differential-test twin. */
-  def lshBucketDeclarative(vec: Column, planes: Int, dim: Int): Column =
-    aggregate(sequence(lit(0), lit(planes - 1)), lit(0L), (acc, p) => {
-      val proj = aggregate(sequence(lit(1), lit(dim)), lit(0.0), (s, d) =>
-        s + element_at(vec, d).cast("double") * planeComponent(p.cast("long"), d.cast("long")))
-      acc + when(proj > 0.0, pow(lit(2.0), p.cast("double")).cast("long")).otherwise(0L)
-    })
 
   /** IVF (inverted-file) ANN: a k-means coarse quantizer buckets the
     * corpus; each query probes its `nProbe` nearest centroids and

@@ -859,34 +859,11 @@ object TextAnalysis {
       .withColumnRenamed("_doc", "doc_id")
   }
 
-  /** One greedy left-to-right, non-overlapping merge pass of the
-    * adjacent pair (`w1`,`w2`) over a token array — BPE's rewrite step
-    * (merged token = space-joined pair, which later rounds treat as
-    * one symbol). "a a a" under (a,a) → ["a a", "a"]: after a merge
-    * the new symbol is what the next comparison sees, so overlaps
-    * cannot double-merge — the standard BPE scan order, and exactly
-    * the fold the SQL oracle replays. Native codegen'd expression
-    * (`graft_bpe_merge`) — this runs 2× per merge over the whole
-    * corpus, the trainer's hot loop; [[mergePairDeclarative]] is the
-    * readable spec and differential twin. */
-  def mergePair(toks: Column, w1: String, w2: String): Column =
-    graft.functions.HashExpressions.bpeMergeFoldNative(toks, w1, w2)
-
-  /** Declarative (built-ins only) specification of [[mergePair]] —
-    * interpreted, never on a query path. */
-  def mergePairDeclarative(toks: Column, w1: String, w2: String): Column =
-    aggregate(toks, array().cast("array<string>"), (acc, t) =>
-      when(size(acc) > 0 &&
-          element_at(acc, -1) === lit(w1) && t === lit(w2),
-        concat(slice(acc, lit(1), size(acc) - 1),
-          array(lit(w1 + " " + w2))))
-        .otherwise(concat(acc, array(t))))
-
   /** Iterative BPE vocabulary induction (Sennrich et al. 2016, over
     * whitespace tokens): `nMerges` rounds of count-all-adjacent-pairs →
     * take the single most frequent pair (count desc, then (w1, w2) —
     * a total order, so the learned vocabulary is engine-stable) →
-    * greedily rewrite the corpus with [[mergePair]]. q106 mined ONE
+    * greedily rewrite the corpus with [[bpeMerge]]. q106 mined ONE
     * round of candidates; this is the actual trainer.
     *
     * Scale honesty: each merge is genuinely two corpus passes (a
@@ -922,7 +899,7 @@ object TextAnalysis {
           top(0).getLong(2))
         merges += ((round.toLong, w1, w2, s"$w1 $w2", c))
         corpus = OpUtils.barrier(
-          corpus.select(mergePair(col("_tk"), w1, w2).as("_tk")))
+          corpus.select(bpeMerge(col("_tk"), w1, w2).as("_tk")))
         round += 1
       }
     }
@@ -930,12 +907,12 @@ object TextAnalysis {
   }
 
   /** Tokenizer "encode": apply a learned merge list in order — one
-    * [[mergePair]] fold per merge, all stacked into a single
+    * [[bpeMerge]] fold per merge, all stacked into a single
     * projection. Zero shuffles, zero driver state beyond the merge
     * literals: the classic deploy shape (vocabulary learned once on
     * the corpus, applied as a broadcast-free map everywhere). */
   def applyBpeMerges(toks: Column, merges: Seq[(String, String)]): Column =
-    merges.foldLeft(toks) { case (c, (w1, w2)) => mergePair(c, w1, w2) }
+    merges.foldLeft(toks) { case (c, (w1, w2)) => bpeMerge(c, w1, w2) }
 
   /** Adjacent-pair structs (w1, w2) of a token array — order-exact,
     * no string re-joining ambiguity (symbols may contain spaces after

@@ -102,8 +102,8 @@ object StreamingDedup {
           .join(index.alias("i"), Seq("band_idx", "band_hash"))
           .filter(col("n.doc_id") =!= col("i.doc_id"))
           .withColumn("agreement",
-            graft.functions.HashExpressions
-              .arrayEqCountNative(col("n.minhash"), col("i.minhash"))
+            graft.functions.GraftFunctions
+              .arrayEqCount(col("n.minhash"), col("i.minhash"))
               .cast("double") / k.toDouble)
           .filter(col("agreement") >= minAgreement)
           .select(col("n.doc_id").as("new_id"),

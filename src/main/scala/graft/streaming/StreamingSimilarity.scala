@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-import graft.functions.GraftFunctions.{dotProduct, r}
+import graft.functions.GraftFunctions.{dotProduct, lshBucket, r}
 import graft.operators.Similarity
 
 /** Incremental (streaming) similarity search: a `foreachBatch`
@@ -117,7 +117,7 @@ object StreamingSimilarity {
         // rather than index dead rows
         .filter(col(vecCol).isNotNull)
         .select(col(idCol).cast("long").as("vec_id"),
-          Similarity.lshBucket(col(vecCol), planes, dim).as("bucket"),
+          lshBucket(col(vecCol), planes, dim).as("bucket"),
           col(vecCol).cast(ArrayType(FloatType)).as("vec"))
         .withColumn("norm", sqrt(dotProduct(col("vec"), col("vec"))))
         .withColumn("ingest_batch", lit(b.id))

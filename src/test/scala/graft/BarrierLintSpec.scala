@@ -12,7 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * anywhere else would silently opt out of that rule.
   *
   * The engine has no session options of its own: every plan is
-  * built-in Catalyst, tuned by Spark's own confs. */
+  * built-in Catalyst, tuned by Spark's own confs.
+  *
+  * A native function has one implementation, its `HashUtil` kernel,
+  * which Spark's `StaticInvoke` runs compiled and interpreted alike; an
+  * interpreted `nullSafeEval` beside a hand-written `doGenCode` would
+  * be a second copy that must agree with the first. */
 class BarrierLintSpec extends AnyFunSuite {
 
   // sbt runs the forked suites from the project root
@@ -42,5 +47,9 @@ class BarrierLintSpec extends AnyFunSuite {
 
   test("main source defines no spark.graft.* session option") {
     assert(offenders("\"spark\\.graft\\.".r).isEmpty)
+  }
+
+  test("main source hand-writes no second execution path for an expression") {
+    assert(offenders("""doGenCode\(|nullSafeEval\(""".r).isEmpty)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 import graft.operators.{Dedup, Similarity}
 import graft.sources.Tables
 import org.apache.spark.CheckpointDirs.withCheckpointDir
@@ -99,8 +100,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val sigs = Dedup.withMinHash(docs, col("text"), k = 16)
     // band hashes: native array vs the aggregate(slice(...)) fold per band
     val diff = sigs
-      .withColumn("nat", graft.functions.HashExpressions
-        .bandHashesNative(col("minhash"), 4))
+      .withColumn("nat", GraftFunctions.bandHashes(col("minhash"), 4))
       .withColumn("dec", transform(sequence(lit(0), lit(3)), b =>
         aggregate(slice(col("minhash"), b * 4 + 1, lit(4)), lit(0L),
           (h, v) => pmod(h * lit(31L) + v, lit(HashMod)))))
@@ -114,8 +114,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // agreement count: native vs zip_with filter size
     val pairs = sigs.select(col("doc_id"), col("minhash").as("a"))
       .crossJoin(sigs.select(col("minhash").as("b")))
-      .withColumn("nat", graft.functions.HashExpressions
-        .arrayEqCountNative(col("a"), col("b")))
+      .withColumn("nat", GraftFunctions.arrayEqCount(col("a"), col("b")))
       .withColumn("dec", size(filter(zip_with(col("a"), col("b"),
         (x, y) => when(x === y, lit(1))), c => c.isNotNull)))
       .filter(col("nat") =!= col("dec"))
@@ -193,8 +192,8 @@ class DedupSimilaritySpec extends SparkSpec {
   test("H3 LSH: native bucket expression matches the declarative spec on real embeddings") {
     val emb = graft.sources.Tables.embeddings(spark, sf("sf0.001"))
     val diff = emb
-      .withColumn("nat", Similarity.lshBucket(col("embedding"), planes = 8, dim = 64))
-      .withColumn("dec", Similarity.lshBucketDeclarative(col("embedding"), planes = 8, dim = 64))
+      .withColumn("nat", GraftFunctions.lshBucket(col("embedding"), planes = 8, dim = 64))
+      .withColumn("dec", DeclarativeTwins.lshBucket(col("embedding"), planes = 8, dim = 64))
       .filter(col("nat") =!= col("dec"))
     assert(diff.count() === 0L)
     // short/null-element vectors take the declarative null-propagation path: bucket 0
@@ -203,7 +202,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (1L, (1 to 64).map(_.toFloat))                // full length
     ).toDF("vec_id", "embedding")
     val b = degenerate.withColumn("nat",
-        Similarity.lshBucket(col("embedding"), planes = 8, dim = 64))
+        GraftFunctions.lshBucket(col("embedding"), planes = 8, dim = 64))
       .select("vec_id", "nat").as[(Long, Long)].collect().toMap
     assert(b(0L) === 0L)
     assert(b(1L) !== 0L)
@@ -215,7 +214,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val diff = docs
       .withColumn("nat", GraftFunctions.shingles(
         GraftFunctions.tokens(col("text")), 3))
-      .withColumn("dec", GraftFunctions.shinglesDeclarative(
+      .withColumn("dec", DeclarativeTwins.shingles(
         GraftFunctions.tokens(col("text")), 3))
       // null-safe compare: a plain === would null out (and silently
       // drop) exactly the rows where one side diverged to NULL
@@ -237,7 +236,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val diff = docs
       .withColumn("nat", GraftFunctions.positionedShingles(
         GraftFunctions.tokens(col("text")), 3))
-      .withColumn("dec", GraftFunctions.positionedShinglesDeclarative(
+      .withColumn("dec", DeclarativeTwins.positionedShingles(
         GraftFunctions.tokens(col("text")), 3))
       .filter(not(col("nat") <=> col("dec")))
     assert(diff.count() === 0L)
@@ -270,7 +269,7 @@ class DedupSimilaritySpec extends SparkSpec {
     ).toDF("id", "toks")
     val rows = edge
       .withColumn("nat", GraftFunctions.shingles(col("toks"), 3))
-      .withColumn("dec", GraftFunctions.shinglesDeclarative(col("toks"), 3))
+      .withColumn("dec", DeclarativeTwins.shingles(col("toks"), 3))
       .select("id", "nat", "dec")
       .as[(Long, Seq[String], Seq[String])].collect()
       .map(r => r._1 -> r).toMap
@@ -283,22 +282,19 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("fused minhash/simhash kernels skip null tokens like shingles() (no NPE)") {
-    import graft.functions.HashExpressions
     val toks = Seq((1L, Seq("a", null, "b", "c"))).toDF("id", "toks")
     // shingle windows of [a, NULL, b, c] at n=3: "a b", "b c"
     def ph(s: String) = s.foldLeft(0L)((a, c) => (a * 31 + c) % 1000000007L)
     val hs = Seq("a b", "b c").map(ph)
     val expectedSig = (0 until 4).map(t =>
       hs.map(h => (h * (2 * t + 1) + 1000003L * (t + 1)) % 1000000007L).min)
-    val sig = toks.select(HashExpressions
-        .shingleMinHashNative(col("toks"), 3, 4).as("s"))
+    val sig = toks.select(GraftFunctions.shingleMinHash(col("toks"), 3, 4).as("s"))
       .as[Seq[Long]].collect().head
     assert(sig === expectedSig)
     val expectedSim = (0 until 24).map { b =>
       if (2 * hs.count(h => ((h >> b) & 1L) == 1L) > hs.size) 1L << b else 0L
     }.sum
-    val sim = toks.select(HashExpressions
-        .shingleSimHashNative(col("toks"), 3, 24).as("s"))
+    val sim = toks.select(GraftFunctions.shingleSimHash(col("toks"), 3, 24).as("s"))
       .as[Long].collect().head
     assert(sim === expectedSim)
   }
@@ -379,8 +375,8 @@ class DedupSimilaritySpec extends SparkSpec {
       (1L, Some((1 to 64).map(_.toFloat).toSeq))
     ).toDF("vec_id", "embedding")
     val rows = df
-      .withColumn("nat", Similarity.lshBucket(col("embedding"), planes = 8, dim = 64))
-      .withColumn("dec", Similarity.lshBucketDeclarative(col("embedding"), planes = 8, dim = 64))
+      .withColumn("nat", GraftFunctions.lshBucket(col("embedding"), planes = 8, dim = 64))
+      .withColumn("dec", DeclarativeTwins.lshBucket(col("embedding"), planes = 8, dim = 64))
       .select("vec_id", "nat", "dec").collect()
     rows.foreach { r =>
       assert(!r.isNullAt(1), s"native bucket must never be NULL: $r")
@@ -393,7 +389,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("H3 LSH: bucket assignment is deterministic and locality-preserving") {
     def buckets = vecs.withColumn("bucket",
-        Similarity.lshBucket(col("embedding"), planes = 8, dim = 3))
+        GraftFunctions.lshBucket(col("embedding"), planes = 8, dim = 3))
       .select("vec_id", "bucket").as[(Long, Long)].collect().toMap
     // deterministic across independent evaluations
     assert(buckets === buckets)
@@ -499,7 +495,7 @@ class DedupSimilaritySpec extends SparkSpec {
       val diff = docs
         .withColumn("nat", GraftFunctions.winnowFingerprints(
           GraftFunctions.tokens(col("text")), k, w))
-        .withColumn("dec", GraftFunctions.winnowFingerprintsDeclarative(
+        .withColumn("dec", DeclarativeTwins.winnowFingerprints(
           GraftFunctions.tokens(col("text")), k, w))
         .filter(not(col("nat") <=> col("dec")))
       assert(diff.count() === 0L, s"k=$k w=$w")
@@ -512,7 +508,7 @@ class DedupSimilaritySpec extends SparkSpec {
     ).toDF("id", "toks")
     val rows = edge
       .withColumn("nat", GraftFunctions.winnowFingerprints(col("toks"), 3, 2))
-      .withColumn("dec", GraftFunctions.winnowFingerprintsDeclarative(col("toks"), 3, 2))
+      .withColumn("dec", DeclarativeTwins.winnowFingerprints(col("toks"), 3, 2))
       .select("id", "nat", "dec")
       .as[(Long, Seq[(Int, Long)], Seq[(Int, Long)])].collect()
       .map(r => r._1 -> r).toMap

@@ -257,7 +257,7 @@ class EventAnalyticsSpec extends SparkSpec {
         .orderBy("user_id", "ts_us", "event_id")
         .select("event_id", "ewma").as[(Long, Double)].collect().toSeq
     val native = run(EventAnalytics.dyadicEwma(_, _, _, _, _))
-    val decl = run(EventAnalytics.dyadicEwmaDeclarative(_, _, _, _, _))
+    val decl = run(DeclarativeTwins.dyadicEwma(_, _, _, _, _))
     assert(native === decl)   // exact ==, not a tolerance
   }
 

@@ -98,14 +98,18 @@ class ExtensionsSinksSpec extends SparkSpec {
     val zeroErr = intercept[Exception](spark.sql(
       "SELECT graft_band_hashes(array(1L, 2L), 0)").collect())
     assert(msgs(zeroErr).exists(_.contains("must be >= 1")), zeroErr.getMessage)
-    // misuse: wrongly-typed input fails analysis, not at runtime with
-    // a ClassCastException or garbage offsets
-    val mhTypeErr = intercept[Exception](spark.sql(
-      "SELECT graft_shingle_minhash(array(1, 2, 3), 1, 4)").collect())
-    assert(msgs(mhTypeErr).exists(_.contains("array<string>")), mhTypeErr.getMessage)
-    val polyTypeErr = intercept[Exception](spark.sql(
-      "SELECT graft_polyhash(123)").collect())
-    assert(msgs(polyTypeErr).exists(_.contains("string")), polyTypeErr.getMessage)
+    // misuse: wrongly-typed input fails analysis (Spark's own input-type
+    // check, naming the function and the required type), not at runtime
+    // with a ClassCastException or garbage offsets
+    def typeRefusal(sql: String, fn: String, required: String): Unit = {
+      val err = intercept[org.apache.spark.sql.AnalysisException](spark.sql(sql))
+      assert(err.getCondition === "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", err.getMessage)
+      assert(err.getMessage.contains(fn) && err.getMessage.contains(s"\"$required\""),
+        err.getMessage)
+    }
+    typeRefusal("SELECT graft_shingle_minhash(array(1, 2, 3), 1, 4)",
+      "graft_shingle_minhash", "ARRAY<STRING>")
+    typeRefusal("SELECT graft_polyhash(123)", "graft_polyhash", "STRING")
     // misuse: dyadic-fold elements that overflow the exact 2^i
     // weighting fail LOUDLY (a silent wrap would be a sign-flipped
     // wrong answer; the ANSI declarative twin throws on the same row)

@@ -10,6 +10,10 @@ class PlanRegressionSpec extends SparkSpec {
     Queries.queries(name)(spark, sf("sf0.001"))
       .queryExecution.executedPlan.toString
 
+  /** How an executed plan shows a native function: the optimizer has
+    * replaced it with a `StaticInvoke` of its `HashUtil` kernel. */
+  private def kernel(name: String): String = s"static_invoke(graft.functions.HashUtil.$name("
+
   test("q20 feature pipeline: ONE hash exchange feeds windows + aggregate") {
     val p = plan("q20_feature_pipeline")
     val hashExchanges = "Exchange hashpartitioning".r.findAllIn(p).length
@@ -39,8 +43,10 @@ class PlanRegressionSpec extends SparkSpec {
 
   test("ANN paths carry the native bucket/dot expressions, no interpreted folds") {
     val p = plan("q36_similarity_lsh_topk")
-    assert(p.contains("graft_lsh_bucket"), s"native bucket expression missing:\n$p")
-    assert(p.contains("graft_dot"), s"native dot product missing:\n$p")
+    assert(p.contains(kernel("lshBucket")),
+      s"native bucket kernel missing:\n$p")
+    assert(p.contains(kernel("dot")),
+      s"native dot product kernel missing:\n$p")
     assert(!p.contains("aggregate(sequence"),
       s"no interpreted HOF fold may remain on the ANN path:\n$p")
   }
@@ -49,6 +55,14 @@ class PlanRegressionSpec extends SparkSpec {
     val p = plan("q30_dedup_exact")
     val hashExchanges = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(hashExchanges === 1, s"exact dedup is one shuffle by definition:\n$p")
+  }
+
+  test("Explain prints the exact-dedup NUL sentinels as escapes, never raw") {
+    val p = Explain.formatted(Queries.queries("q30_dedup_exact")(spark, sf("sf0.001")))
+    val raw = p.filter(c => c < ' ' && c != '\n' && c != '\t')
+    assert(raw.isEmpty, s"raw control characters ${raw.map(_.toInt)} in:\n$p")
+    assert(p.contains("\\u0000null:") && p.contains("\\u0000row:"),
+      s"the sentinels must print escaped:\n$p")
   }
 
   /** Every query with a per-group top-k (`row_number`/`rank` ≤ k over
@@ -124,7 +138,8 @@ class PlanRegressionSpec extends SparkSpec {
 
   test("q69 decontamination: native shingle extraction, no interpreted chain") {
     val p = plan("q69_decontaminate")
-    assert(p.contains("graft_shingles"), s"native shingles expression missing:\n$p")
+    assert(p.contains(kernel("shingles")),
+      s"native shingles kernel missing:\n$p")
     assert(!p.contains("array_distinct(transform"),
       s"no interpreted shingle chain may remain on the decontamination path:\n$p")
   }
@@ -198,8 +213,8 @@ class PlanRegressionSpec extends SparkSpec {
     assert(scans === 1,
       s"the scoring join must read the checkpointed bigram/unigram models, " +
         s"leaving one corpus scan for the posting side (got $scans):\n$p")
-    assert(p.contains("graft_pos_shingles"),
-      s"bigram generation must stay on the native expression:\n$p")
+    assert(p.contains(kernel("positionedShingles")),
+      s"bigram generation must stay on the native kernel:\n$p")
   }
 
   test("q115 OOV rate: vocab cut is a bounded heap that BROADCASTS to the token stream") {
@@ -321,8 +336,8 @@ class PlanRegressionSpec extends SparkSpec {
     assert(scans === 1,
       s"the posting side is the only corpus read — the document-frequency " +
         s"side must come through its barrier (got $scans):\n$p")
-    assert(p.contains("graft_pos_shingles"),
-      s"posting generation must stay on the native expression:\n$p")
+    assert(p.contains(kernel("positionedShingles")),
+      s"posting generation must stay on the native kernel:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"the shared-gram filter must stay an equality (semi) join:\n$p")
   }
@@ -352,8 +367,8 @@ class PlanRegressionSpec extends SparkSpec {
   test("q160/q161 gram-count repetition: ONE corpus scan (explode_outer, no null-law re-join)") {
     Seq("q160_top_ngram_repetition", "q161_dup_ngram_repetition").foreach { name =>
       val p = plan(name)
-      assert(p.contains("graft_pos_shingles"),
-        s"$name must generate occurrences via the native expression:\n$p")
+      assert(p.contains(kernel("positionedShingles")),
+        s"$name must generate occurrences via the native kernel:\n$p")
       val scans = "Scan parquet".r.findAllIn(p).length
       assert(scans === 1,
         s"$name must cover gramless/null docs from the SAME scan " +
@@ -381,8 +396,8 @@ class PlanRegressionSpec extends SparkSpec {
 
   test("q169 NFC basis: native normalization, zero hash exchanges behind the scan") {
     val p = plan("q169_nfc_dedup_basis")
-    assert(p.contains("graft_nfc"),
-      s"normalization must stay on the native expression:\n$p")
+    assert(p.contains(kernel("nfc")),
+      s"normalization must stay on the native kernel:\n$p")
     val hashExchanges = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(hashExchanges === 0,
       s"the basis is a pure per-row map, got $hashExchanges hash exchanges:\n$p")
@@ -390,8 +405,8 @@ class PlanRegressionSpec extends SparkSpec {
 
   test("q167 winnowing digest: native kernel, zero hash exchanges behind the scan") {
     val p = plan("q167_winnowing_digest")
-    assert(p.contains("graft_winnow"),
-      s"fingerprint selection must stay on the native expression:\n$p")
+    assert(p.contains(kernel("winnow")),
+      s"fingerprint selection must stay on the native kernel:\n$p")
     val hashExchanges = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(hashExchanges === 0,
       s"the digest is a pure per-row map (only the output sort may " +
@@ -537,7 +552,7 @@ class PlanRegressionSpec extends SparkSpec {
   test("q38 quant IVF: equality joins only (probes broadcast), native dot, " +
       "no cross product") {
     val p = plan("q38_similarity_ivf_topk")
-    assert(p.contains("graft_dot"), s"native dot product missing:\n$p")
+    assert(p.contains(kernel("dot")), s"native dot product kernel missing:\n$p")
     assert(p.contains("BroadcastHashJoin"),
       s"the probe/query sides must broadcast onto the candidates:\n$p")
     assert(!p.contains("CartesianProduct") &&

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 import graft.operators.{Sampling, TextAnalysis}
 import graft.sources.Tables
 
@@ -292,7 +293,7 @@ class Round6OpsSpec extends SparkSpec {
   test("mergePair: greedy left-to-right, non-overlapping") {
     val df = Seq(Tuple1(Seq("a", "a", "a")), Tuple1(Seq("a", "a", "a", "a")))
       .toDF("tk")
-    val out = df.select(TextAnalysis.mergePair(col("tk"), "a", "a").as("m"))
+    val out = df.select(GraftFunctions.bpeMerge(col("tk"), "a", "a").as("m"))
       .as[Seq[String]].collect().toSeq
     assert(out == Seq(Seq("a a", "a"), Seq("a a", "a a")))
   }
@@ -306,8 +307,8 @@ class Round6OpsSpec extends SparkSpec {
     val df = cases.map(Tuple1(_)).toDF("tk")
     for ((w1, w2) <- Seq(("a", "b"), ("a", "a"), ("a b", "a b"), ("a b", "c"))) {
       val got = df.select(
-          TextAnalysis.mergePair(col("tk"), w1, w2).as("n"),
-          TextAnalysis.mergePairDeclarative(col("tk"), w1, w2).as("d"))
+          GraftFunctions.bpeMerge(col("tk"), w1, w2).as("n"),
+          DeclarativeTwins.mergePair(col("tk"), w1, w2).as("d"))
         .collect()
       got.zipWithIndex.foreach { case (r, i) =>
         assert(r.getSeq[String](0) == r.getSeq[String](1),
@@ -316,7 +317,7 @@ class Round6OpsSpec extends SparkSpec {
     }
     // null array → null, matching the fold
     val nr = Seq(Tuple1(null.asInstanceOf[Seq[String]])).toDF("tk")
-      .select(TextAnalysis.mergePair(col("tk"), "a", "b")).collect()
+      .select(GraftFunctions.bpeMerge(col("tk"), "a", "b")).collect()
     assert(nr(0).isNullAt(0))
   }
 
